@@ -199,8 +199,9 @@ object Bench {
         timings(n) += (if (warmed(n)) runOnce(n) else -1.0)
     }
 
-    /** Min of the 3 interleaved runs (any failure reports -1, not a
-      * statistic over garbage). */
+    /** Min of the timed runs — the 3 interleaved ones, plus the 2 extra
+      * for the skew pair (min of 5) — any failure reports -1, not a
+      * statistic over garbage. */
     val results = selected.map { n =>
       val ts = timings(n).toSeq
       n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)

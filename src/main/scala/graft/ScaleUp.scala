@@ -56,8 +56,11 @@ object ScaleUp {
     def stride(space: String): Long = strides.getOrElseUpdate(space, {
       val Array(t, c) = space.split("\\.")
       val m = spark.read.parquet(s"$src/$t.parquet")
-        .agg(max(col(c))).head.getLong(0)
-      m + 1
+        .agg(max(col(c).cast("long"))).head
+      require(!m.isNullAt(0),
+        s"scaleup: $t.$c has no non-null key — cannot derive a key stride " +
+          s"from an empty table at $src/$t.parquet")
+      m.getLong(0) + 1
     })
 
     offsetCols.keys.toSeq.sorted.foreach { t =>

@@ -90,11 +90,20 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   * sidecar discipline is identical) with the delegate swapped for
   * [[NioRawLocalFileSystem]]. Wired via
   * `spark.hadoop.fs.AbstractFileSystem.file.impl` in
-  * [[graft.GraftSession]] — like the round-16 fix, strictly the
-  * native-lib behavior on `file://`, nothing else. */
+  * [[graft.GraftSession]] — like the round-16 fix, the native-lib
+  * behavior on `file://` for everything the engine does, with the one
+  * symlink deviation documented on [[FastRawLocalFs]]. */
 class FastLocalFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
     extends org.apache.hadoop.fs.ChecksumFs(new FastRawLocalFs(uri, conf))
 
+/** Raw delegate of [[FastLocalFs]]. DEVIATION from Hadoop's `RawLocalFs`:
+  * its symlink overrides (`supportsSymlinks`, `createSymlink`,
+  * `getLinkTarget`, `getFileLinkStatus`) are not ported, so through
+  * `FileContext` a symlink under `file://` reads as the file or
+  * directory it points to (never reported as a link) and
+  * `createSymlink` is unsupported where stock `LocalFs` supported it.
+  * The engine never creates or inspects symlinks; user data that relies
+  * on FileContext symlink semantics sees the resolved target instead. */
 class FastRawLocalFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
     extends org.apache.hadoop.fs.DelegateToFileSystem(
       org.apache.hadoop.fs.FsConstants.LOCAL_FS_URI,

@@ -519,11 +519,6 @@ object ManifestChangeFeed {
   def readerFactory(fs: FileSystem, dir: Path, at: Option[Int],
       fullSchema: StructType, required: StructType,
       conf: SerializableHadoopConf): PartitionReaderFactory = {
-    val lines = ManifestFiles.linesOf(fs, dir,
-      at.orElse {
-        val v = ManifestFiles.latestComplete(fs, dir)
-        if (v > 0) Some(v) else None
-      })
     // import maps ride each snapshot WITH their file entry, but a feed's
     // delete legs read PRE-IMAGE files a later commit unlisted — union
     // the mappings across every still-present version (a mapping is
@@ -532,8 +527,6 @@ object ManifestChangeFeed {
     val imports = importsThrough(fs, dir,
       at.getOrElse(ManifestFiles.latestComplete(fs, dir)))
     new ManifestChangeReaderFactory(fullSchema, required, conf,
-      ManifestReaderFactory.maxPhysArity(fullSchema,
-        ManifestFiles.droppedFromLines(lines)),
       ManifestChecks.existsDefaults(
         org.apache.spark.sql.SparkSession.active, fullSchema),
       imports)
@@ -677,7 +670,6 @@ private[sources] class ManifestChangeFeedStream(path: String, startAt: Int,
   * feeds are diff-sized, not scan-sized. */
 private[sources] class ManifestChangeReaderFactory(fullSchema: StructType,
     required: StructType, conf: SerializableHadoopConf,
-    maxPhysArity: Int,
     defaults: Seq[(String, Any)] = Seq.empty,
     imports: Map[String, ManifestFiles.ImportMap] = Map.empty)
     extends PartitionReaderFactory {
@@ -689,7 +681,7 @@ private[sources] class ManifestChangeReaderFactory(fullSchema: StructType,
     val dataReq0 = stripCdf(required)
     val needPos = part.keepOrdinals.nonEmpty
     // an all-constant projection (count over the feed) still needs one
-    // driver column to iterate rows by — `_pos` works on both payloads
+    // driver column to iterate rows by: `_pos`
     val innerReq0 =
       if ((needPos || dataReq0.isEmpty) && !dataReq0.fieldNames.contains("_pos"))
         dataReq0.add("_pos", LongType, nullable = false)
@@ -706,7 +698,7 @@ private[sources] class ManifestChangeReaderFactory(fullSchema: StructType,
     val keepProbe = part.keepEq.map(st =>
       new ManifestEqDeletes.Probe(Seq(st), innerReq)).orNull
     val inner = new ManifestReaderFactory(fullSchema, innerReq, conf,
-      columnar = false, maxPhysArity = maxPhysArity, defaults = defaults,
+      columnar = false, defaults = defaults,
       imports = imports,
       rowIds =
         if (part.firstRow >= 0 || part.ridCol)

@@ -4,31 +4,31 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Specialized per-column min/max trackers for the parquet write path.
+/** Specialized per-column min/max trackers for the write path.
   *
-  * The generic `trackStats` paid, per value: one box from `r.get`, one
+  * A generic tracker would pay, per value: one box from `r.get`, one
   * `Option` from `ManifestSkip.normalize`, a runtime-type dispatch in
   * `ManifestSkip.cmp` (×2), and for strings an unconditional
   * `UTF8String.clone`. On a wide fact append that is tens of millions of
   * allocations doing nothing but comparing primitives (guide §1.2 step 2:
   * per-task work, after the job shape is right). These trackers dispatch
   * ONCE per column at writer construction and keep primitive state; the
-  * recorded semantics mirror the generic path bit-for-bit:
+  * recorded bounds agree with the skip evaluator's generic ordering
+  * (`ManifestSkip.cmp` over `normalize`) bit-for-bit:
   *
   *   - comparison happens on [[ManifestSkip.normalize]]'s canonical form
   *     (integrals widen to long, float/double squash -0.0 to 0.0 and
   *     order NaN greatest via `Double.compare`, strings order by binary
   *     UTF-8, decimals by scale-insensitive `BigDecimal.compareTo`);
   *   - updates are STRICT (`<` / `>`), so ties keep the first-seen raw
-  *     string exactly as `ordered(kept, mins(i)) < 0` did (a file of
-  *     `-0.0` then `0.0` records rawMin "-0.0", not "0.0");
+  *     string (a file of `-0.0` then `0.0` records rawMin "-0.0", not
+  *     "0.0");
   *   - the recorded raw string is `String.valueOf` of the ORIGINAL value
   *     (a float min records "0.1", never the widened
   *     "0.10000000149011612").
   *
-  * The CSV path keeps the generic `trackStats` (it needs the raw string
-  * of EVERY value for the row codec anyway). Non-stats-capable types get
-  * no tracker (null slot) — same as `normalize` returning None.
+  * Non-stats-capable types get no tracker (null slot) — same as
+  * `normalize` returning None.
   */
 private[sources] object ManifestColTrackers {
 

@@ -23,7 +23,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - UPDATE and MERGE updates split into delete + insert
   *     (`representUpdateAsDeleteAndInsert`): deleted ordinals land in
   *     the delete file, replacement/new rows land in fresh data files
-  *     through the SAME staged writers as any append (stats, formats,
+  *     through the SAME staged writers as any append (stats, payload,
   *     two-phase commit all shared);
   *   - scans apply delete files at plan time (`ManifestScan.deleteMap` →
   *     per-partition sorted ordinals, skipped as rows stream); `CALL
@@ -39,10 +39,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * every DDL intent. Copy-on-write remains the default.
   */
 private[sources] class ManifestDeltaOperation(
-    cmd: RowLevelOperation.Command, path: String, tableSchema: StructType,
-    // payload format of this table's data files ("parquet" default /
-    // "csv") — MOR insert files honor the same pinning any append does
-    tableFormat: String = "parquet")
+    cmd: RowLevelOperation.Command, path: String, tableSchema: StructType)
     extends RowLevelOperation with SupportsDelta {
 
   override def command(): RowLevelOperation.Command = cmd
@@ -86,8 +83,6 @@ private[sources] class ManifestDeltaOperation(
           if (tableSchema.nonEmpty) tableSchema else info.schema(),
           new SerializableHadoopConf(
             SparkSession.active.sessionState.newHadoopConf()),
-          // same precedence as any append: write option, then table pin
-          Option(info.options.get("format")).getOrElse(tableFormat),
           carryRowIds = lineage)
       }
     }
@@ -103,7 +98,6 @@ private[sources] case class DeltaCommitted(
   * whole point of merge-on-read. */
 private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
     schema: StructType, conf: SerializableHadoopConf,
-    format: String = "parquet",
     // row lineage: updates carry their target row's id into `#ridcol`
     // insert files (see ManifestDeltaOperation.requiredMetadataAttributes)
     carryRowIds: Boolean = false) extends DeltaBatchWrite {
@@ -118,8 +112,7 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
     val checks = ManifestChecks.bind(
       org.apache.spark.sql.SparkSession.active, schema,
       ManifestFiles.checksFromLines(lines))
-    new ManifestDeltaWriterFactory(path, stagingName, schema, conf, format,
-      checks,
+    new ManifestDeltaWriterFactory(path, stagingName, schema, conf, checks,
       histPos = ManifestFiles.histDeclFromLines(lines)
         .flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray,
       ndvPos = (ManifestFiles.ndvFromLines(lines) ++
@@ -189,7 +182,6 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
 private[sources] class ManifestDeltaWriterFactory(path: String,
     stagingName: String, schema: StructType,
     conf: SerializableHadoopConf,
-    format: String = "parquet",
     // bound CHECK constraints: a merge-on-read UPDATE/MERGE can insert
     // brand-new rows, so the delta route validates like every other
     checks: Seq[(String, String,
@@ -215,7 +207,7 @@ private[sources] class ManifestDeltaWriterFactory(path: String,
       private var dataName: String = _
       private def data(): DataWriter[InternalRow] = {
         if (dataWriter == null) {
-          dataName = f"part-$partitionId%05d-$taskId${ManifestWriters.ext(format)}.tmp"
+          dataName = f"part-$partitionId%05d-$taskId.parquet.tmp"
           dataWriter = ManifestChecks.wrap(
             ManifestWriters.create(path, stagingName, dataName,
               schema, conf, injectFailure = false, ndvPos = ndvPos,
@@ -232,7 +224,7 @@ private[sources] class ManifestDeltaWriterFactory(path: String,
         if (updWriter == null) {
           updWriter = ManifestChecks.wrap(
             ManifestWriters.create(path, stagingName,
-              f"part-u$partitionId%05d-$taskId${ManifestWriters.ext(format)}.tmp",
+              f"part-u$partitionId%05d-$taskId.parquet.tmp",
               schema, conf, injectFailure = false, ndvPos = ndvPos,
               histPos = histPos,
               ridFromMeta = true),

@@ -75,7 +75,7 @@ private[sources] object ManifestEqDeletes {
 
   private def parseComponent(dt: DataType, s: String): Any = dt match {
     case StringType => UTF8String.fromString(unb64(s))
-    case _ => ManifestCsv.parse(s, dt)
+    case _ => ManifestFiles.parseInternal(s, dt)
   }
 
   /** Read ONE delete file into its resolved set: key field names/types

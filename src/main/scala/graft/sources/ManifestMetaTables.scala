@@ -249,8 +249,7 @@ private[sources] class ManifestMetaTable(kind: String, dir: Path,
             else fileKey(stats.get(file), specs3, unsafeKeyPositions(lines))
           new GenericInternalRow(Array[Any](
             UTF8String.fromString(file),
-            UTF8String.fromString(
-              if (ManifestParquet.isParquet(file)) "parquet" else "csv"),
+            UTF8String.fromString("parquet"),
             rows,
             stats.get(file).map(s => s.bytes: Any).orNull,
             buckets.get(file).map(b => b._3: Any).orNull,

@@ -10,10 +10,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
-/** PARQUET data layer for the manifest table format (round 11; until now
-  * rows serialized as CSV lines — the metadata layer was Iceberg-class
-  * while the data layer parsed text). New files land as real parquet
-  * through Spark's own `ParquetWriteSupport` and read back through its
+/** PARQUET data layer for the manifest table format — its one data-file
+  * payload. Files land as real parquet through Spark's own
+  * `ParquetWriteSupport` and read back through its
   * `VectorizedParquetRecordReader` — the exact scan stack the reference
   * builds on (`sql/core/.../parquet/ParquetFileFormat.scala:51`,
   * `VectorizedParquetRecordReader.java:48`) — so column pruning is real
@@ -22,19 +21,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * scan path hands the engine the reader's own 4K-row batches with zero
   * re-parsing.
   *
-  * Format is a PER-FILE property, decided by the entry name's extension
-  * (`.parquet` vs anything else = CSV): old snapshots stay readable
-  * forever, and a table whose history mixes CSV commits with parquet
-  * commits reads both in one scan. New writes default to parquet;
-  * `option("format", "csv")` pins the legacy payload.
+  * A `format` write option or table property other than `parquet` is
+  * refused at plan/DDL time ([[requireFormat]]); a snapshot entry whose
+  * name lacks the `.parquet` extension fails its scan loudly
+  * (`ManifestInputPartition`).
   *
   * Columns are stored under POSITIONAL names (`c<physical position>`),
   * never the schema names: `RENAME COLUMN` stays a metadata-only commit
   * (the reader maps requested schema fields to positional names at plan
   * time), and a column added by `ALTER TABLE ADD COLUMN` is simply
   * missing from pre-evolution files — the vectorized reader null-fills
-  * missing requested fields, the same add-column semantics the CSV
-  * reader implements with positional null-fill.
+  * missing requested fields.
   */
 private[sources] object ManifestParquet {
 
@@ -55,6 +52,16 @@ private[sources] object ManifestParquet {
   }
 
   def isParquet(entryName: String): Boolean = entryName.endsWith(".parquet")
+
+  /** Parquet is the only data-file payload: a `format` write option or
+    * table property must be absent or `parquet`. Checked before anything
+    * is staged. */
+  def requireFormat(format: Option[String]): Unit =
+    format.filterNot(_ == "parquet").foreach { f =>
+      throw new IllegalArgumentException(
+        s"graft-manifest: format '$f' is not supported — parquet is " +
+          "the only data-file payload")
+    }
 
   /** Positional storage type, applied RECURSIVELY (round 12): struct
     * fields at every nesting level store under `c<index>` names, so a

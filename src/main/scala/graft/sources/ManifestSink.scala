@@ -36,10 +36,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * session's Hadoop configuration (serialized to executors the way
   * FileFormatWriter ships its job conf), so any `fs.*` scheme works —
   * local paths in tests, HDFS/object stores in production. Rows land as
-  * PARQUET by default (round 11 — Spark's own ParquetWriteSupport /
-  * VectorizedParquetRecordReader, see ManifestParquet.scala);
-  * `option("format", "csv")` keeps the legacy line payload, and format
-  * is a per-file property so mixed-history tables read fine.
+  * PARQUET, the one data-file payload (Spark's own ParquetWriteSupport /
+  * VectorizedParquetRecordReader, see ManifestParquet.scala).
   * `failPartition` injects a first-attempt task failure for
   * ManifestSinkSpec's abort/atomicity proofs. Usage:
   * `df.write.format("graft-manifest").option("path", p)`.
@@ -302,7 +300,7 @@ private[sources] class ManifestTable(schema0: StructType,
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
   override def name(): String = "graft_manifest_sink"
   override def schema(): StructType = schema0
-  // surface the catalog-resolved properties (format, delete.mode,
+  // surface the catalog-resolved properties (delete.mode,
   // bloom.columns, layout) for DESCRIBE EXTENDED / SHOW TBLPROPERTIES
   override def properties(): JMap[String, String] = properties0
   private def properties0: JMap[String, String] = properties
@@ -448,11 +446,9 @@ private[sources] class ManifestTable(schema0: StructType,
     // take the DELTA path: positional delete files instead of rewriting
     // whole data files (ManifestDelta.scala)
     if (Option(properties.get("delete.mode")).contains("merge-on-read"))
-      () => new ManifestDeltaOperation(info.command(), path, schema0,
-        Option(properties.get("format")).getOrElse("parquet"))
+      () => new ManifestDeltaOperation(info.command(), path, schema0)
     else
-      () => new ManifestRowLevelOperation(info.command(), path, schema0,
-        Option(properties.get("format")).getOrElse("parquet"))
+      () => new ManifestRowLevelOperation(info.command(), path, schema0)
   }
   override def capabilities(): java.util.Set[TableCapability] = {
     val caps = java.util.EnumSet.of(TableCapability.BATCH_WRITE,
@@ -559,24 +555,10 @@ private[sources] class ManifestTable(schema0: StructType,
         throw new IllegalArgumentException(
           s"graft-manifest sink: malformed path '$raw': ${e.getMessage}", e)
       }
-    // payload format: write option, then table property, default parquet
-    // (validated eagerly — a typo'd format must fail at plan time, not in
-    // a task); the extension on each committed file is what readers key on
-    val format = Option(info.options.get("format"))
-      .orElse(Option(properties.get("format"))).getOrElse("parquet")
-    ManifestWriters.ext(format)
-    // The CSV line payload carries primitives only; arrays / binary /
-    // nested types (round 12) are PARQUET-ONLY. Refuse at plan time —
-    // a task-side failure would leave staged garbage behind.
-    if (format == "csv")
-      info.schema().fields.find(f => !ManifestSkip.statsCapable(f.dataType))
-        .foreach { f =>
-          throw new UnsupportedOperationException(
-            s"graft-manifest csv payload cannot store column " +
-              s"'${f.name}' of type ${f.dataType.sql} — these are " +
-              "parquet-only types; drop the format=csv option/property " +
-              "(parquet is the default payload)")
-        }
+    // payload: write option, then table property — refused at plan
+    // time unless parquet (a task-side failure would stage garbage)
+    ManifestParquet.requireFormat(Option(info.options.get("format"))
+      .orElse(Option(properties.get("format"))))
     new WriteBuilder with org.apache.spark.sql.connector.write.SupportsTruncate {
       private var truncateRequested = false
       override def truncate(): WriteBuilder = { truncateRequested = true; this }
@@ -908,7 +890,6 @@ private[sources] class ManifestTable(schema0: StructType,
                       incoming.fieldIndex(c2))))
                 }.toArray
               else Array.empty),
-            format = format,
             branch = branch,
             upsertKeys = upsertKeys,
             replaceConf = replaceConf.isDefined,
@@ -963,7 +944,7 @@ private[sources] class ManifestTable(schema0: StructType,
           }
           new ManifestStreamingWrite(path.toString, info.queryId(),
             existing.getOrElse(ManifestTable.nullableSchema(incoming)), hconf,
-            format, branch, upsertKeys = upsertKeys)
+            branch, upsertKeys = upsertKeys)
         }
       }
     }
@@ -978,10 +959,7 @@ private[sources] class ManifestTable(schema0: StructType,
   * the operation builder stays cheap at analysis time. */
 private[sources] class ManifestRowLevelOperation(
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-    path: String, tableSchema: StructType,
-    // payload format of rewrite files — honors the table's pin the same
-    // way plain appends and the MOR delta path do
-    tableFormat: String = "parquet")
+    path: String, tableSchema: StructType)
     extends org.apache.spark.sql.connector.write.RowLevelOperation {
 
   @volatile private var scanned: Array[String] = Array.empty
@@ -1032,7 +1010,6 @@ private[sources] class ManifestRowLevelOperation(
             new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
             dropFromPrevious = () => scanned.toSet,
             scannedDeleteState = () => Some(scannedDeleteState),
-            format = Option(info.options.get("format")).getOrElse(tableFormat),
             // ROW LINEAGE through copy-on-write: the operation asked for
             // `_row_id` (see requiredMetadataAttributes), so Spark's
             // DataAndMetadataWritingSparkTask hands each replacement row's
@@ -1205,9 +1182,6 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     // DDL `#tableconf` lines to guarantee in the committed snapshot
     // (appends inherit them from the predecessor; truncate must re-emit)
     confLines: Array[String] = Array.empty,
-    // payload format of THIS commit's files ("parquet" default / "csv");
-    // a per-file property, so mixed-format history reads fine
-    format: String = "parquet",
     // write-audit-publish: commit onto this branch's chain, not main's
     branch: Option[String] = None,
     // CDC upsert (equality deletes): schema indices of the key columns;
@@ -1257,7 +1231,7 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     ManifestParquet.setBloomCols(conf.value,
       ManifestFiles.bloomFromLines(lines))
     new ManifestWriterFactory(path, stagingName, failPartition, schema, conf,
-      recordBucket = bucketSpec.isDefined, sortPos = sortPos, format = format,
+      recordBucket = bucketSpec.isDefined, sortPos = sortPos,
       partSpec = partSpec,
       checks = ManifestChecks.bind(SparkSession.active, schema,
         ManifestFiles.checksFromLines(lines)),
@@ -1438,20 +1412,11 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
 /** Task-side staged data-file writer, shared by the batch and streaming
   * factories — only the staged file NAME differs (streaming prefixes
   * the epoch so retried epochs never collide with committed files).
-  * Payload format is per file: `parquet` (the default — real columnar
-  * storage through Spark's ParquetWriteSupport, see ManifestParquet) or
-  * the legacy `csv` lines. Stats/sort tracking is format-independent:
-  * min/max/null counts stream through the SAME canonical comparator the
-  * skip evaluator uses, whatever lands on disk. */
+  * Files are parquet (real columnar storage through Spark's
+  * ParquetWriteSupport, see ManifestParquet); staged names end in
+  * `.parquet.tmp`. Min/max/null counts stream through the SAME canonical
+  * ordering the skip evaluator uses. */
 private[sources] object ManifestWriters {
-  /** Staged-file extension for a format ("" = CSV lines; the final name
-    * keeps it, which is how readers pick the per-file decoder). */
-  def ext(format: String): String = format match {
-    case "parquet" => ".parquet"
-    case "csv" => ""
-    case other => throw new IllegalArgumentException(
-      s"graft-manifest format must be 'parquet' or 'csv', got '$other'")
-  }
 
   def create(path: String, stagingName: String, name: String,
       schema: StructType, conf: SerializableHadoopConf,
@@ -1486,18 +1451,10 @@ private[sources] object ManifestWriters {
     new DataWriter[InternalRow] {
       private val file = new Path(new Path(path, stagingName), name)
       private val fs: FileSystem = file.getFileSystem(conf.value)
-      private val parquet = ManifestParquet.isParquet(name.stripSuffix(".tmp"))
       private val withRid = ridIdx >= 0 || ridFromMeta
       private val withLuv = luvIdx >= 0 || ridFromMeta
-      require((!withRid && !withLuv) || parquet,
-        "row-id materialization needs the parquet payload (lineage " +
-          "tables pin it at enable time)")
-      private val csvOut =
-        if (parquet) null else new java.io.PrintWriter(fs.create(file, true))
-      private val pqOut =
-        if (parquet) ManifestParquet.createWriter(file, schema, conf.value,
-          withRid = withRid, withLuv = withLuv)
-        else null
+      private val pqOut = ManifestParquet.createWriter(file, schema,
+        conf.value, withRid = withRid, withLuv = withLuv)
       // projection [data columns…, carried _row_id, carried _luv] → the
       // writer's (stored schema + _rid [+ _luv]) layout
       private val ridProj: org.apache.spark.sql.catalyst.ProjectingInternalRow =
@@ -1513,24 +1470,15 @@ private[sources] object ManifestWriters {
           ((0 until schema.length) :+ ridIdx) ++
             (if (luvIdx >= 0) Seq(luvIdx) else Seq.empty))
       private var closed = false
-      private val csvArity =
-        schema.indices.map(ManifestFiles.physPos(schema, _))
-          .foldLeft(-1)(math.max) + 1
       private var rows = 0L
       private val attempt = org.apache.spark.TaskContext.get().attemptNumber()
 
       // Per-column stats tracked AS ROWS STREAM THROUGH (no second pass):
-      // min/max in the column's canonical comparison domain + null count.
-      // Stats raw values are ALWAYS `String.valueOf` of the field (the
-      // `#stats` codec), independent of the payload format.
+      // null counts here, min/max in the column's canonical comparison
+      // domain through specialized per-column trackers (no boxing/Option/
+      // type-dispatch per value — see ManifestColTrackers). Raw bounds are
+      // `String.valueOf` of the field (the `#stats` codec).
       private val nulls = new Array[Long](schema.length)
-      private val mins = new Array[Any](schema.length)
-      private val maxs = new Array[Any](schema.length)
-      private val rawMins = new Array[String](schema.length)
-      private val rawMaxs = new Array[String](schema.length)
-      // parquet path: specialized per-column trackers (no boxing/Option/
-      // type-dispatch per value — see ManifestColTrackers); the CSV path
-      // keeps trackStats, whose raw strings its row codec needs anyway
       private val colTrackers: Array[ManifestColTrackers.Tracker] =
         schema.fields.map(f => ManifestColTrackers.forType(f.dataType))
 
@@ -1697,31 +1645,6 @@ private[sources] object ManifestWriters {
       private var seenNonNullSortKey = false
       private var seenNullSortKey = false
 
-      /** Track column i's stats for value `v`; returns the raw stat
-        * string (computed lazily for parquet — only CSV needs it per
-        * row, stats only on a min/max update). */
-      private def trackStats(i: Int, v: Any, dt: DataType,
-          needRaw: Boolean): String = {
-        val s0 = if (needRaw) String.valueOf(v) else null
-        ManifestSkip.normalize(dt, v).foreach { nv =>
-          // UTF8String from an UnsafeRow points into a REUSED buffer —
-          // normalize returns it as-is, so clone before retaining.
-          val kept = nv match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-            case other => other
-          }
-          if (mins(i) == null || ordered(kept, mins(i)) < 0) {
-            mins(i) = kept
-            rawMins(i) = if (s0 != null) s0 else String.valueOf(v)
-          }
-          if (maxs(i) == null || ordered(kept, maxs(i)) > 0) {
-            maxs(i) = kept
-            rawMaxs(i) = if (s0 != null) s0 else String.valueOf(v)
-          }
-        }
-        s0
-      }
-
       // carried-id holder for the COW metadata path: [data…] ++ [rid]
       private val ridHolder =
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
@@ -1760,38 +1683,16 @@ private[sources] object ManifestWriters {
       private def writeRow(r: InternalRow, out: InternalRow): Unit = {
         if (injectFailure && attempt == 0 && rows == 2)
           throw new RuntimeException("injected write failure")
-        if (parquet) {
-          var i = 0
-          while (i < schema.length) {
-            if (r.isNullAt(i)) nulls(i) += 1
-            else {
-              val t = colTrackers(i)
-              if (t != null) t.add(r, i)
-            }
-            i += 1
+        var i = 0
+        while (i < schema.length) {
+          if (r.isNullAt(i)) nulls(i) += 1
+          else {
+            val t = colTrackers(i)
+            if (t != null) t.add(r, i)
           }
-          pqOut.write(out)
-        } else {
-          // One slot per PHYSICAL position (== schema index until a DROP
-          // diverges them; a dropped column's slot stays `\N` so old and
-          // new files agree on the layout). NULL encodes as `\N` (never
-          // a legal numeric/boolean token; a real STRING that looks like
-          // the marker gains one backslash, stripped symmetrically at
-          // read — ManifestCsv.encode/parse).
-          val slots = Array.fill(csvArity)(ManifestCsv.NullToken)
-          var i = 0
-          while (i < schema.length) {
-            val dt = schema(i).dataType
-            if (r.isNullAt(i)) nulls(i) += 1
-            else {
-              val v = r.get(i, dt)
-              slots(ManifestFiles.physPos(schema, i)) =
-                ManifestCsv.encode(trackStats(i, v, dt, needRaw = true), dt)
-            }
-            i += 1
-          }
-          csvOut.println(slots.mkString(","))
+          i += 1
         }
+        pqOut.write(out)
         if (leaves.nonEmpty) trackLeaves(r)
         if (ndvPos.nonEmpty) trackNdv(r)
         if (histPos.nonEmpty) trackHist(r)
@@ -1832,38 +1733,29 @@ private[sources] object ManifestWriters {
 
       private def closeOut(): Unit = if (!closed) {
         closed = true
-        if (parquet) pqOut.close() else csvOut.close()
+        pqOut.close()
       }
 
       override def commit(): WriterCommitMessage = {
         closeOut()
-        // fold the parquet path's specialized trackers into the shared
-        // raw-bound arrays the stats assembly below reads
-        if (parquet) {
-          var i = 0
-          while (i < schema.length) {
-            val t = colTrackers(i)
-            if (t != null) { rawMins(i) = t.rawMin; rawMaxs(i) = t.rawMax }
-            i += 1
-          }
-        }
         val bytes = fs.getFileStatus(file).getLen
-        // Non-orderable columns (arrays / binary / structs — parquet
-        // payload only) get NO stats entry: bounds are meaningless and
-        // a (nulls, absent, absent) record would collide with the
-        // all-null pattern. Absent stats = never skipped, the format's
-        // standing conservative contract.
+        // Non-orderable columns (arrays / binary / structs) get NO stats
+        // entry: bounds are meaningless and a (nulls, absent, absent)
+        // record would collide with the all-null pattern. Absent stats =
+        // never skipped, the format's standing conservative contract.
         val stats = schema.indices
           .filter(i => ManifestSkip.statsCapable(schema(i).dataType))
           .map { i =>
           // String bounds truncate (Iceberg's prefix / prefix+increment
           // rule — ManifestFiles.truncLower/truncUpper) so the manifest
           // scales with file count, not value size; numerics are exact.
+          // (statsCapable types are exactly those with a column tracker)
+          val t = colTrackers(i)
           val (mn, mx) =
             if (schema(i).dataType == StringType)
-              (Option(rawMins(i)).map(ManifestFiles.truncLower),
-                Option(rawMaxs(i)).flatMap(ManifestFiles.truncUpper))
-            else (Option(rawMins(i)), Option(rawMaxs(i)))
+              (Option(t.rawMin).map(ManifestFiles.truncLower),
+                Option(t.rawMax).flatMap(ManifestFiles.truncUpper))
+            else (Option(t.rawMin), Option(t.rawMax))
           ManifestFiles.physPos(schema, i) ->
             ManifestFiles.ColStats(nulls(i), mn, mx)
         }
@@ -1907,7 +1799,6 @@ private[sources] object ManifestWriters {
 
 private[sources] class ManifestStreamWriterFactory(path: String,
     stagingName: String, schema: StructType, conf: SerializableHadoopConf,
-    format: String,
     // declared days/months/identity layout: 24/7 streaming ingest lands
     // value-pure files too, so retention deletes stay metadata-only on
     // streamed history (round 12; the epoch prefix keeps the abort
@@ -1925,11 +1816,11 @@ private[sources] class ManifestStreamWriterFactory(path: String,
     val base =
       if (partSpec.isEmpty)
         ManifestWriters.create(path, stagingName,
-          f"part-e$epochId-$partitionId%05d-$taskId${ManifestWriters.ext(format)}.tmp",
+          f"part-e$epochId-$partitionId%05d-$taskId.parquet.tmp",
           schema, conf, injectFailure = false, ndvPos = ndvPos,
           histPos = histPos, shred = shred)
       else
-        new PartitionSplitWriter(path, stagingName, schema, conf, format,
+        new PartitionSplitWriter(path, stagingName, schema, conf,
           f"part-e$epochId-$partitionId%05d-$taskId",
           partSpec.map { case (idx, kind) =>
             (idx, kind, schema(idx).dataType) },
@@ -1951,7 +1842,6 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
     // required distribution pinned partitioning to pmod(murmur3(col), n))
     recordBucket: Boolean = false,
     sortPos: Option[(Int, Boolean, Boolean)] = None,
-    format: String = "parquet",
     // (schema index, kind) per declared days/months/identity transform,
     // in declared order: the task splits its rows into one staged file
     // per COMPOSITE partition value
@@ -1982,7 +1872,7 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
     val base =
       if (partSpec.isEmpty)
         ManifestWriters.create(path, stagingName,
-          f"part-$partitionId%05d-$taskId${ManifestWriters.ext(format)}.tmp",
+          f"part-$partitionId%05d-$taskId.parquet.tmp",
           schema, conf,
           injectFailure = partitionId == failPartition,
           bucket = if (recordBucket) partitionId else -1,
@@ -1990,7 +1880,7 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
           ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx,
           shred = shred)
       else
-        new PartitionSplitWriter(path, stagingName, schema, conf, format,
+        new PartitionSplitWriter(path, stagingName, schema, conf,
           f"part-$partitionId%05d-$taskId",
           partSpec.map { case (idx, kind) =>
             (idx, kind, schema(idx).dataType) },
@@ -2018,12 +1908,11 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
   * INSERT lands ~one file per day regardless of parallelism, which is
   * exactly the layout `DELETE WHERE ts < cutoff` needs to stay
   * metadata-only. Rows with a NULL partition value get their own file.
-  * Each inner writer is the standard staged writer (stats, format,
+  * Each inner writer is the standard staged writer (stats, payload,
   * abort semantics all shared); the task's commit message carries every
   * file it produced. */
 private[sources] class PartitionSplitWriter(path: String, stagingName: String,
-    schema: StructType, conf: SerializableHadoopConf, format: String,
-    namePrefix: String,
+    schema: StructType, conf: SerializableHadoopConf, namePrefix: String,
     specs: Seq[(Int, String, DataType)],
     // declared write.sort-order's leading column: rows arrive ordered
     // (partition cols, sort cols), so each per-value inner file streams
@@ -2108,7 +1997,7 @@ private[sources] class PartitionSplitWriter(path: String, stagingName: String,
     writers.getOrElseUpdate(key(row), {
       val seq = writers.size
       ManifestWriters.create(path, stagingName,
-        s"$namePrefix-s$seq${ManifestWriters.ext(format)}.tmp",
+        s"$namePrefix-s$seq.parquet.tmp",
         schema, conf, injectFailure = false, bucket = bucket,
         sortPos = sortPos, ndvPos = ndvPos, histPos = histPos,
         ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx,
@@ -2144,7 +2033,6 @@ private[sources] class PartitionSplitWriter(path: String, stagingName: String,
   * of double-committing. Append output mode only. */
 private[sources] class ManifestStreamingWrite(path: String, queryId: String,
     schema: StructType, conf: SerializableHadoopConf,
-    format: String = "parquet",
     // 24/7 WRITE-AUDIT-PUBLISH: a stream staged on a branch keeps main
     // clean while an auditor periodically fast_forwards the vetted
     // prefix; the `#txn` exactly-once markers ride the branch chain
@@ -2174,8 +2062,7 @@ private[sources] class ManifestStreamingWrite(path: String, queryId: String,
         ManifestFiles.fieldAtPhys(schema, pos).map(idx => (idx, kind)) }
     ManifestParquet.setBloomCols(conf.value,
       ManifestFiles.bloomFromLines(lines))
-    new ManifestStreamWriterFactory(path, stagingName, schema, conf, format,
-      partSpec,
+    new ManifestStreamWriterFactory(path, stagingName, schema, conf, partSpec,
       checks = ManifestChecks.bind(SparkSession.active, schema,
         ManifestFiles.checksFromLines(lines)),
       upsertKeys = upsertKeys.toArray,

@@ -624,11 +624,10 @@ object ManifestFiles {
     * `.../parquet/ParquetFileFormat.scala:51`) lifted to the FILE level —
     * Iceberg-class manifest stats: a pushed predicate can prove a file
     * irrelevant before it is ever opened. Keys are PHYSICAL positions
-    * (CSV slot / parquet `c<pos>` name), so RENAME COLUMN keeps stats
-    * valid; a column added by ALTER TABLE has no stats in pre-evolution
-    * files (never skipped); values are Base64 of the field's
-    * `String.valueOf` (whatever the payload format), so no comma/colon
-    * escaping issues arise. Files committed before
+    * (parquet `c<pos>` names), so RENAME COLUMN keeps stats valid; a
+    * column added by ALTER TABLE has no stats in pre-evolution files
+    * (never skipped); values are Base64 of the field's `String.valueOf`,
+    * so no comma/colon escaping issues arise. Files committed before
     * this feature simply have no `#stats` line and are never skipped. */
   def statsFromLines(lines: Array[String]): Map[String, FileStats] =
     lines.filter(_.startsWith("#stats,")).flatMap(parseStatsLine).toMap
@@ -648,7 +647,7 @@ object ManifestFiles {
   /** PHYSICAL storage position of schema field `i`: the `gpos` field
     * metadata when present (stamped by schema evolution once positions
     * and indices diverge — see DROP COLUMN), else the field's own index.
-    * Every position-keyed artifact (CSV slots, parquet `c<pos>` names,
+    * Every position-keyed artifact (parquet `c<pos>` names,
     * `#stats`/`#bucket`/`#sorted` keys) is keyed by THIS, so renames and
     * drops never re-key old files' metadata. */
   def physPos(schema: StructType, i: Int): Int =
@@ -719,6 +718,23 @@ object ManifestFiles {
     java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
   private def unb64(s: String): String =
     new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
+
+  /** A value in the `#stats` convention — `String.valueOf` of its
+    * INTERNAL representation (date = epoch days, timestamp = epoch
+    * micros) — parsed back to that form. Strict: a malformed value
+    * throws. Covers the exact-equality types that equality-delete keys
+    * and `add_files` partition constants carry; NULL never reaches it
+    * (both encode NULL out of band). */
+  def parseInternal(s: String, dt: DataType): Any = dt match {
+    case StringType => UTF8String.fromString(s)
+    case LongType | TimestampType | TimestampNTZType => s.toLong
+    case IntegerType | DateType => s.toInt
+    case ShortType => s.toShort
+    case ByteType => s.toByte
+    case BooleanType => s.toBoolean
+    case other => throw new IllegalArgumentException(
+      s"graft-manifest: no internal-value decoding for ${other.sql}")
+  }
 
   def statsLine(name: String, bytes: Long,
       cols: Seq[(Int, ColStats)],
@@ -1026,17 +1042,6 @@ object ManifestFiles {
         case _ => None
       }
     }
-
-  /** Payload-format pin: `#tableconf,format,<parquet|csv>` — written by
-    * `CREATE TABLE … TBLPROPERTIES('format'='csv')`, re-surfaced as a
-    * table property at load so EVERY write path (INSERT INTO appends,
-    * COW rewrites, merge-on-read insert files) lands files in the pinned
-    * format without the writer passing options. Absent = parquet. */
-  def formatLine(f: String): String = s"#tableconf,format,$f"
-
-  def formatFromLines(lines: Array[String]): Option[String] =
-    lines.find(_.startsWith("#tableconf,format,"))
-      .map(_.stripPrefix("#tableconf,format,"))
 
   /** Retired physical positions: `#tableconf,dropped,<pos>` lines, one
     * per DROP COLUMN, accumulated forever (truncate preserves #tableconf
@@ -1767,61 +1772,6 @@ object ManifestFiles {
   }
 }
 
-/** The manifest payload's value codec, shared by the row reader and the
-  * stats evaluator: column i of each CSV line ↔ schema(i), values encoded
-  * with `String.valueOf`. */
-private[sources] object ManifestCsv {
-  /** NULL storage token. Unambiguous: no numeric/boolean parses as it,
-    * and a real string of the colliding shape (`\…\N`) is escaped by
-    * one extra backslash at write and stripped here. */
-  val NullToken = "\\N"
-  private val collides = "\\\\+N".r
-
-  /** Storage encoding of a NON-null field (strings escape the marker
-    * shape; every other type is its String.valueOf verbatim). */
-  def encode(s: String, dt: DataType): String = dt match {
-    case StringType if collides.matches(s) => "\\" + s
-    case _ => s
-  }
-
-  def parse(s: String, dt: DataType): Any =
-    if (s == NullToken) null
-    else dt match {
-      case StringType =>
-        if (collides.matches(s)) UTF8String.fromString(s.substring(1))
-        else UTF8String.fromString(s)
-      // Legacy tolerance: pre-fix commits stored nulls as "null", which
-      // made numeric columns UNREADABLE (toLong threw) — decode it as
-      // null; the token can never be real data for these types. STRING
-      // columns get no such branch by design: a legacy string null reads
-      // back as the literal "null" (indistinguishable from real data —
-      // that snapshot's #stats null counts disagree with the decoded
-      // rows), an accepted limitation of pre-fix snapshots.
-      case _ if s == "null" => null
-      case LongType => s.toLong
-      case IntegerType => s.toInt
-      case ShortType => s.toShort
-      case ByteType => s.toByte
-      case DoubleType => s.toDouble
-      case FloatType => s.toFloat
-      case BooleanType => s.toBoolean
-      // temporal/decimal (round 11): values store as their INTERNAL
-      // representation's String.valueOf — date = days-since-epoch int,
-      // timestamp (tz'd and NTZ) = epoch micros long, decimal = plain
-      // decimal string re-scaled to the column's declared type
-      case DateType => s.toInt
-      case TimestampType | TimestampNTZType => s.toLong
-      case d: DecimalType =>
-        val dec = org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(s))
-        if (dec.changePrecision(d.precision, d.scale)) dec
-        else throw new IllegalArgumentException(
-          s"stored decimal '$s' exceeds ${d.sql}")
-      case other => throw new UnsupportedOperationException(
-        s"graft-manifest csv payload supports primitive column types, " +
-          s"got $other — arrays/binary/nested types are parquet-only")
-    }
-}
-
 /** Min/max file pruning: decides whether a pushed filter PROVES a data
   * file can contain no matching row, from the `#stats` line the commit
   * recorded. Strictly conservative — any value that fails to coerce, any
@@ -1913,12 +1863,10 @@ private[sources] object ManifestSkip {
       case i => Some(i)
     }
 
-  /** Stored stats values are RAW (`String.valueOf` at write — the sink
-    * records `s0`, not the row codec's escaped form), so decoding here
-    * must NOT run `ManifestCsv.parse`: a string column whose true
-    * min/max is the literal `\N` would decode to null and make the file
-    * look all-null — provably row-free under any value predicate — and
-    * silently skip rows. Strings read back verbatim; numerics parse
+  /** Stored stats values are RAW (`String.valueOf` at write). Strings
+    * read back verbatim — a string min/max of the literal `\N` is a
+    * value, never a null marker (an all-null reading would make the file
+    * look provably row-free and silently skip rows); numerics parse
     * tolerantly, and a bound that fails to decode poisons the column's
     * stats entirely (no skip) instead of masquerading as absent. */
   private def parseStat(s: String, dt: DataType): Option[Any] = dt match {
@@ -2156,10 +2104,9 @@ private[sources] class ManifestScanBuilder(path: String, version: Option[Int],
     // inclusive, default latest): the rows commits ADDED in the version
     // range — the backfill twin of the streaming source.
     changes: Option[(Int, Option[Int])] = None,
-    // Vectorized read preference: Some(true) forces batches (CSV files
-    // too), Some(false) forces row reads, None = auto (batches when the
-    // planned snapshot is all-parquet). Bucket splits and streaming stay
-    // row either way.
+    // Vectorized read preference: Some(true) forces batches, Some(false)
+    // forces row reads, None = auto (batches whenever files are planned).
+    // Bucket splits and streaming stay row either way.
     columnar: Option[Boolean] = None,
     // Stats-based file skipping MUST be off for row-level COPY_ON_WRITE
     // scans: their pushed predicate is the SURVIVOR condition, and the
@@ -3157,34 +3104,25 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
       override def value(): Long = v
     }
 
-  /** Columnar by DEFAULT when every planned file is parquet (the
-    * vectorized reader's batches feed codegen through one ColumnarToRow
-    * transition — asking for row reads would re-box what the reader
-    * already decoded vectorized); CSV payloads batch only on explicit
-    * `option("columnar", true)`. Runtime filters only shrink the planned
-    * set, so an all-parquet decision never flips mid-scan. */
-  private lazy val allParquet: Boolean = {
-    val (kept, _, _) = staticPlan
-    kept.nonEmpty && kept.forall(ManifestParquet.isParquet)
-  }
-
   override def createReaderFactory(): PartitionReaderFactory =
     // batches only when every split is a plain file split — a bucket
     // split concatenates files and Spark requires a uniform reader kind;
     // the pushed filters ride along for parquet ROW-GROUP skipping
     // inside each surviving file
     new ManifestReaderFactory(fullSchema, required, conf,
+      // columnar by DEFAULT whenever files are planned: the vectorized
+      // reader's batches feed codegen through one ColumnarToRow
+      // transition — row reads would re-box what it already decoded.
       // merge-on-read deletes force row reads (the batch paths carry no
       // delete vectors) — scan-level, so the answer stays uniform;
       // grouped layouts (bucket / value groups) read row-wise through
       // their sequential multi-file splits
       // equality deletes force row reads too (the wrapping filter is a
       // row filter) — scan-level, so the reader kind stays uniform
-      columnar = columnar.getOrElse(allParquet) && bucketLayout.isEmpty &&
-        partGroups.isEmpty && !hasDeletes && eqDeleteMap.isEmpty,
-      filters = rowGroupFilters, parquetOnly = allParquet,
-      maxPhysArity = ManifestReaderFactory.maxPhysArity(fullSchema,
-        ManifestFiles.droppedFromLines(snapshotLines)),
+      columnar = columnar.getOrElse(staticPlan._1.nonEmpty) &&
+        bucketLayout.isEmpty && partGroups.isEmpty && !hasDeletes &&
+        eqDeleteMap.isEmpty,
+      filters = rowGroupFilters,
       defaults = ManifestChecks.existsDefaults(
         org.apache.spark.sql.SparkSession.active, required),
       imports = ManifestFiles.importsFromLines(snapshotLines),
@@ -3420,8 +3358,6 @@ private[sources] class ManifestMicroBatchStream(path: String,
   override def createReaderFactory(): PartitionReaderFactory = {
     val latest = ManifestFiles.latestLines(fs, dir)
     new ManifestReaderFactory(fullSchema, required, conf,
-      maxPhysArity = ManifestReaderFactory.maxPhysArity(fullSchema,
-        ManifestFiles.droppedFromLines(latest)),
       defaults = ManifestChecks.existsDefaults(
         org.apache.spark.sql.SparkSession.active, required),
       imports = ManifestFiles.importsFromLines(latest))
@@ -3443,7 +3379,13 @@ private[sources] case class ManifestInputPartition(file: String, name: String,
     // `_last_updated_version`: the file's `#luv` default and whether it
     // carries a materialized `_luv` column
     luv: Int = -1, luvCol: Boolean = false)
-  extends InputPartition
+  extends InputPartition {
+  // every read route builds its file splits here: an entry that is not
+  // parquet (the one data-file payload) fails the scan by name
+  if (!ManifestParquet.isParquet(name)) throw new IllegalStateException(
+    s"graft-manifest: data file '$name' is not a parquet file — parquet " +
+      "is the only data-file payload")
+}
 
 /** One bucket of a bucketed snapshot: every file whose rows satisfy
   * `pmod(murmur3(col), n) == bucket`. */
@@ -3467,15 +3409,19 @@ private[sources] case class ManifestGroupPartition(key: List[Any],
 }
 
 private[sources] object ManifestReaderFactory {
-  /** Largest physical slot count ANY file of this table can carry: the
-    * max physical position across live fields AND retired (dropped)
-    * positions, plus one. A CSV row splitting into MORE slots than this
-    * proves a comma-bearing string field was fragmented (only possible
-    * post-evolution, where the full split is in force) — readers fail
-    * loudly on such rows instead of silently truncating the value. */
-  def maxPhysArity(schema: StructType, dropped: Set[Int]): Int =
-    ((schema.indices.map(ManifestFiles.physPos(schema, _)) ++ dropped)
-      .maxOption.getOrElse(-1)) + 1
+  /** Types the vectorized parquet reader hands over as batches —
+    * primitives, decimals, and (round 12) arrays, binary, maps and
+    * structs through the reader's own nested column vectors. */
+  def parquetSupports(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | ByteType | DoubleType |
+         FloatType | BooleanType | StringType | BinaryType => true
+    case DateType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case ArrayType(et, _) => parquetSupports(et)
+    case st: StructType => st.fields.forall(f => parquetSupports(f.dataType))
+    case MapType(k, v, _) => parquetSupports(k) && parquetSupports(v)
+    case _ => false
+  }
 
   /** Row-lineage resolution map for one snapshot — built only when the
     * projection actually asks for `_row_id` (every other scan pays
@@ -3509,14 +3455,6 @@ private[sources] class ManifestReaderFactory(fullSchema: StructType,
     // skipping already happened at plan time; Spark re-evaluates all of
     // them as residual row filters)
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    // every planned file is parquet: the batching decision may use the
-    // wider parquet type set (decimals batch); a scan with any CSV file
-    // must gate on the CSV vector writer's set — and the answer must be
-    // UNIFORM across partitions (Spark refuses mixed reader kinds)
-    parquetOnly: Boolean = false,
-    // see ManifestReaderFactory.maxPhysArity; Int.MaxValue disables the
-    // over-split check (pre-evolution layouts never full-split anyway)
-    maxPhysArity: Int = Int.MaxValue,
     // EXISTS_DEFAULT values (field name → INTERNAL value, evaluated
     // driver-side): files written before the column existed surface the
     // default instead of NULL (see ManifestChecks.existsDefaults)
@@ -3556,17 +3494,13 @@ private[sources] class ManifestReaderFactory(fullSchema: StructType,
       !required.fieldNames.contains("_row_id") &&
       !required.fieldNames.contains("_last_updated_version") &&
       required.fields.forall(f =>
-        if (parquetOnly) ManifestColumnarReader.parquetSupports(f.dataType)
-        else ManifestColumnarReader.supports(f.dataType))
+        ManifestReaderFactory.parquetSupports(f.dataType))
 
   override def createColumnarReader(p: InputPartition):
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val part = p.asInstanceOf[ManifestInputPartition]
-    if (ManifestParquet.isParquet(part.name))
-      ManifestParquet.columnarReader(part, fullSchema, required, conf, filters,
-        imports.get(part.name).map(_.names).getOrElse(Map.empty))
-    else new ManifestColumnarReader(part, fullSchema, required, conf,
-      maxPhysArity)
+    ManifestParquet.columnarReader(part, fullSchema, required, conf, filters,
+      imports.get(part.name).map(_.names).getOrElse(Map.empty))
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -3612,15 +3546,15 @@ private[sources] class ManifestReaderFactory(fullSchema: StructType,
       override def close(): Unit = if (cur != null) cur.close()
     }
 
-  /** Parquet files written BEFORE a defaulted column existed lack its
-    * physical `c<pos>` field entirely (one footer probe per file). The
-    * inner read projects only the PRESENT columns (a projection of
-    * nothing-but-missing columns gives the vectorized reader no rows to
-    * iterate), the wrapper splices in the default constants; when no
-    * real column remains, the footer's row count drives a synthetic
-    * constant-row reader. Post-add files carry the field — explicit
-    * NULLs stay NULL. */
-  private def withParquetDefaults(part: ManifestInputPartition,
+  /** Row read of one data file. Files written BEFORE a defaulted column
+    * existed lack its physical `c<pos>` field entirely (one footer probe
+    * per file). The inner read projects only the PRESENT columns (a
+    * projection of nothing-but-missing columns gives the vectorized
+    * reader no rows to iterate), the wrapper splices in the default
+    * constants; when no real column remains, the footer's row count
+    * drives a synthetic constant-row reader. Post-add files carry the
+    * field — explicit NULLs stay NULL. */
+  private def createFileReader(part: ManifestInputPartition,
       req: StructType): PartitionReader[InternalRow] = {
     val im = imports.getOrElse(part.name,
       ManifestFiles.ImportMap(Map.empty, Map.empty))
@@ -3633,7 +3567,7 @@ private[sources] class ManifestReaderFactory(fullSchema: StructType,
         val i = req.fieldNames.indexOf(fullSchema(idx).name)
         if (i < 0) None
         else Some(i -> raw.map(r =>
-          ManifestCsv.parse(r, req.fields(i).dataType)).orNull)
+          ManifestFiles.parseInternal(r, req.fields(i).dataType)).orNull)
       }
     }
     val (rid0, ridCol0) =
@@ -3736,219 +3670,6 @@ private[sources] class ManifestReaderFactory(fullSchema: StructType,
       }
     }
   }
-
-  private def createFileReader(part: ManifestInputPartition,
-      req: StructType): PartitionReader[InternalRow] = {
-    if (ManifestParquet.isParquet(part.name))
-      return withParquetDefaults(part, req)
-    val defAt = defaultsFor(req)
-    val file = new Path(part.file)
-    val fs = file.getFileSystem(conf.value)
-    val reader = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(file), "UTF-8"))
-    // CSV slot = the field's PHYSICAL position (== its index until a
-    // DROP diverges them); parse only required. Index -1 = the `_file`
-    // metadata column (this partition's manifest entry name — the group
-    // identity row-level COW plans join on); -2 = `_pos` (the row's
-    // ordinal in its file — the row identity delta plans key on).
-    val picks: Array[(Int, DataType)] = req.fields.map { f =>
-      if (f.name == "_file") (-1, StringType)
-      else if (f.name == "_pos") (-2, LongType)
-      else if (f.name == "_row_id") (-3, LongType)
-      else if (f.name == "_last_updated_version") (-4, IntegerType)
-      else (ManifestFiles.physPos(fullSchema,
-        fullSchema.fieldIndex(f.name)), f.dataType)
-    }
-    // CSV files never materialize `_rid`/`_luv` (rewrites on lineage
-    // tables are parquet-only by the enable-time format guard);
-    // position math / the per-file constant is all a CSV file needs
-    val csvRid =
-      if (part.firstRow >= 0) part.firstRow
-      else rowIds.getOrElse(part.name, (-1L, false))._1
-    val csvLuv =
-      if (part.luv >= 0) part.luv
-      else luvs.getOrElse(part.name, (-1, false))._1
-    val fileName = UTF8String.fromString(part.name)
-    // With a clean layout (no drops) the split limit is the arity, which
-    // tolerates commas in a LAST string field; once positions diverge the
-    // file may carry more physical slots than the schema has fields, so
-    // split fully (the comma-in-last-field caveat already excludes
-    // evolution — documented at splitCsv).
-    val splitLimit =
-      if (fullSchema.indices.forall(i => ManifestFiles.physPos(fullSchema, i) == i))
-        fullSchema.length
-      else -1
-    new PartitionReader[InternalRow] {
-      private var line: String = _
-      private var ordinal = -1L
-      private val dels = part.deletes
-      private var di = 0
-      override def next(): Boolean = {
-        while ({ line = reader.readLine(); line != null }) {
-          ordinal += 1
-          // merge-on-read: rows whose ordinal a delete file lists are
-          // invisible (dels is sorted; di only moves forward)
-          while (di < dels.length && dels(di) < ordinal) di += 1
-          if (di >= dels.length || dels(di) != ordinal) return true
-        }
-        false
-      }
-      override def get(): InternalRow = {
-        val cols = splitCsv(line, splitLimit)
-        // post-evolution full split: more slots than any schema version
-        // ever had = a comma-bearing last string field was fragmented;
-        // fail loudly rather than surface a silently-truncated value
-        if (splitLimit < 0 && cols.length > maxPhysArity)
-          throw new IllegalStateException(
-            s"graft-manifest: row ${ordinal} of ${part.name} splits into " +
-              s"${cols.length} slots but the table never had more than " +
-              s"$maxPhysArity physical columns — a comma inside its last " +
-              "string field cannot be decoded after schema evolution on " +
-              "the CSV payload; rewrite the table with the parquet " +
-              "payload (CALL system.compact) to recover")
-        val out = new GenericInternalRow(picks.length)
-        var i = 0
-        while (i < picks.length) {
-          val (src, dt) = picks(i)
-          // src beyond the row's arity = a column added by ALTER TABLE
-          // after this file was written — old rows surface the column's
-          // EXISTS_DEFAULT (NULL when none was declared)
-          out.update(i,
-            if (src == -1) fileName
-            else if (src == -2) ordinal
-            else if (src == -3) { if (csvRid >= 0) csvRid + ordinal else null }
-            else if (src == -4) { if (csvLuv >= 0) csvLuv else null }
-            else if (src >= cols.length) defAt.getOrElse(i, null)
-            else parse(cols(src), dt))
-          i += 1
-        }
-        out
-      }
-      override def close(): Unit = reader.close()
-    }
-  }
-
-  /** The sink joins String.valueOf(field) with ','. Only the LAST field
-    * could legally contain commas in our payloads (we refuse string
-    * fields elsewhere at parse if the shape is off), so split at most
-    * n-1 times. Caveat after ALTER TABLE ADD COLUMN: `n` is the CURRENT
-    * arity, so a pre-evolution file whose last string field contained
-    * commas would over-split — comma-bearing last fields and schema
-    * evolution don't mix (documented limitation of the CSV payload). */
-  private def splitCsv(line: String, n: Int): Array[String] =
-    line.split(",", n)
-
-  private def parse(s: String, dt: DataType): Any = ManifestCsv.parse(s, dt)
-}
-
-/** Vectorized read of one manifest file (the DSv2 columnar contract on
-  * the real table format, mirroring sources/SynthSource.scala's path):
-  * CSV lines are parsed straight into `OnHeapColumnVector`s in
-  * 4096-row batches, so the scan feeds whole-stage codegen through ONE
-  * `ColumnarToRow` transition instead of allocating a GenericInternalRow
-  * per row. Null tokens, the `_file` metadata column, and positional
-  * null-fill for post-evolution columns behave exactly as the row
-  * reader. */
-private[sources] object ManifestColumnarReader {
-  def supports(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType | DoubleType |
-         FloatType | BooleanType | StringType => true
-    case DateType | TimestampType | TimestampNTZType => true
-    case _ => false
-  }
-
-  /** Types the PARQUET vectorized path additionally batches (the CSV
-    * vector writer has no decimal/array/binary case; such columns simply
-    * keep CSV scans on the row path). Arrays, binary, and structs
-    * (round 12) batch through the reader's own nested column vectors. */
-  def parquetSupports(dt: DataType): Boolean = dt match {
-    case BinaryType => true
-    case ArrayType(et, _) => parquetSupports(et)
-    case st: StructType => st.fields.forall(f => parquetSupports(f.dataType))
-    case MapType(k, v, _) => parquetSupports(k) && parquetSupports(v)
-    case _ => supports(dt) || dt.isInstanceOf[DecimalType]
-  }
-}
-
-private[sources] class ManifestColumnarReader(part: ManifestInputPartition,
-    fullSchema: StructType, required: StructType,
-    conf: SerializableHadoopConf,
-    maxPhysArity: Int = Int.MaxValue)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
-
-  private val capacity = 4096
-  private val file = new Path(part.file)
-  private val reader = {
-    val fs = file.getFileSystem(conf.value)
-    new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(file), "UTF-8"))
-  }
-  private val picks: Array[(Int, DataType)] = required.fields.map { f =>
-    if (f.name == "_file") (-1, StringType)
-    else (ManifestFiles.physPos(fullSchema,
-      fullSchema.fieldIndex(f.name)), f.dataType)
-  }
-  private val splitLimit =
-    if (fullSchema.indices.forall(i => ManifestFiles.physPos(fullSchema, i) == i))
-      fullSchema.length
-    else -1
-  private val fileNameBytes = part.name.getBytes("UTF-8")
-  private var batch: ColumnarBatch = _
-
-  override def next(): Boolean = {
-    val vectors = OnHeapColumnVector.allocateColumns(capacity, required)
-    var n = 0
-    var line: String = null
-    while (n < capacity && { line = reader.readLine(); line != null }) {
-      val cols = line.split(",", splitLimit)
-      // same over-split guard as the row reader (see createFileReader)
-      if (splitLimit < 0 && cols.length > maxPhysArity)
-        throw new IllegalStateException(
-          s"graft-manifest: a row of ${part.name} splits into " +
-            s"${cols.length} slots but the table never had more than " +
-            s"$maxPhysArity physical columns — a comma inside its last " +
-            "string field cannot be decoded after schema evolution on " +
-            "the CSV payload; rewrite the table with the parquet " +
-            "payload (CALL system.compact) to recover")
-      var i = 0
-      while (i < picks.length) {
-        val (src, dt) = picks(i)
-        val v = vectors(i)
-        if (src == -1) v.putByteArray(n, fileNameBytes)
-        else if (src >= cols.length) v.putNull(n) // post-evolution column
-        else ManifestCsv.parse(cols(src), dt) match {
-          case null => v.putNull(n)
-          case x: java.lang.Long => v.putLong(n, x)
-          case x: java.lang.Integer => v.putInt(n, x)
-          case x: java.lang.Short => v.putShort(n, x)
-          case x: java.lang.Byte => v.putByte(n, x)
-          case x: java.lang.Double => v.putDouble(n, x)
-          case x: java.lang.Float => v.putFloat(n, x)
-          case x: java.lang.Boolean => v.putBoolean(n, x)
-          case x: UTF8String => v.putByteArray(n, x.getBytes)
-          case other => throw new IllegalStateException(other.toString)
-        }
-        i += 1
-      }
-      n += 1
-    }
-    if (batch != null) batch.close()
-    batch = null
-    if (n == 0) { vectors.foreach(_.close()); false }
-    else {
-      batch = new ColumnarBatch(vectors.toArray[
-        org.apache.spark.sql.vectorized.ColumnVector], n)
-      true
-    }
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = {
-    if (batch != null) batch.close()
-    reader.close()
-  }
 }
 
 /** `TableCatalog` over a root directory of manifest tables. Provides the
@@ -4035,7 +3756,6 @@ class GraftManifestCatalog extends TableCatalog
     })
     if (ManifestFiles.isMergeOnRead(confLines))
       props.put("delete.mode", "merge-on-read")
-    ManifestFiles.formatFromLines(confLines).foreach(props.put("format", _))
     val bloomNames = ManifestFiles.bloomFromLines(confLines)
       .flatMap(ManifestFiles.fieldAtPhys(schema, _)).map(schema(_).name)
     if (bloomNames.nonEmpty)
@@ -4214,9 +3934,11 @@ class GraftManifestCatalog extends TableCatalog
     require(!ManifestViews.exists(f, dir),
       s"'${ident.name}' is a VIEW in catalog $catalogName — DROP it first")
     val (bucket, part) = parseTransforms(schema, partitions)
+    // validated BEFORE the publish touches the directory
+    val confLines = createConfLines(schema, bucket, part, properties)
     ManifestFiles.publishSnapshot(f,
       SparkSession.active.sessionState.newHadoopConf(), dir,
-      _ => createConfLines(schema, bucket, part, properties), schema)
+      _ => confLines, schema)
     load(ident, None)
   }
 
@@ -4309,7 +4031,7 @@ class GraftManifestCatalog extends TableCatalog
       propertyConfLines(schema, properties, bucketLaid = bucket.isDefined)
 
   /** DDL properties → their persisted `#tableconf` lines (delete.mode,
-    * format, CHECK constraints, bloom columns, write sort order) —
+    * CHECK constraints, bloom columns, write sort order) —
     * shared by CREATE TABLE and the staged REPLACE. */
   private def propertyConfLines(schema: StructType,
       properties: JMap[String, String], bucketLaid: Boolean): Array[String] = {
@@ -4319,10 +4041,7 @@ class GraftManifestCatalog extends TableCatalog
       case Some(other) => throw new IllegalArgumentException(
         s"delete.mode must be 'copy-on-write' or 'merge-on-read', got '$other'")
     }
-    val fmt = Option(properties.get("format")).map { f =>
-      ManifestWriters.ext(f) // validates parquet|csv at DDL time
-      ManifestFiles.formatLine(f)
-    }.toArray
+    ManifestParquet.requireFormat(Option(properties.get("format")))
     val checks = properties.entrySet().iterator().asScala.toSeq
       .filter(_.getKey.startsWith("check."))
       .map(e => (e.getKey.stripPrefix("check."), e.getValue))
@@ -4371,11 +4090,7 @@ class GraftManifestCatalog extends TableCatalog
       ManifestFiles.histConfLine(positions)
     }.toArray
     val lineage = Option(properties.get("row.lineage")) match {
-      case Some("true") =>
-        require(!Option(properties.get("format")).contains("csv"),
-          "row.lineage needs the parquet payload — rewrites preserve ids " +
-            "through a materialized _rid column the CSV codec cannot carry")
-        Array(ManifestFiles.LineageLine)
+      case Some("true") => Array(ManifestFiles.LineageLine)
       case Some("false") | None => Array.empty[String]
       case Some(other) => throw new IllegalArgumentException(
         s"row.lineage must be 'true', got '$other'")
@@ -4400,7 +4115,7 @@ class GraftManifestCatalog extends TableCatalog
       case Some(other) => throw new IllegalArgumentException(
         s"write.distribution-mode must be 'none' or 'range', got '$other'")
     }
-    mor ++ fmt ++ bloom ++ ndv ++ hist ++ shred ++ lineage ++ sortOrder ++
+    mor ++ bloom ++ ndv ++ hist ++ shred ++ lineage ++ sortOrder ++
       distMode ++ checks
   }
 
@@ -4433,7 +4148,6 @@ class GraftManifestCatalog extends TableCatalog
     val confLines = createConfLines(schema, bucket, part, properties)
     val props = new java.util.HashMap[String, String]()
     props.put("path", dir.toString)
-    Option(properties.get("format")).foreach(props.put("format", _))
     props.put("replaceConfLines", confLines.mkString("\n"))
     props.put("requireFreshTable", "true")
     // a bucket layout clusters the CTAS write itself (the recorded
@@ -4500,7 +4214,6 @@ class GraftManifestCatalog extends TableCatalog
     val confLines = propertyConfLines(schema, properties, bucketLaid = false)
     val props = new java.util.HashMap[String, String]()
     props.put("path", dir.toString)
-    Option(properties.get("format")).foreach(props.put("format", _))
     // presence of the key IS the replace marker (old #tableconf drops)
     props.put("replaceConfLines", confLines.mkString("\n"))
     val hconf = SparkSession.active.sessionState.newHadoopConf()
@@ -4713,8 +4426,7 @@ class GraftManifestCatalog extends TableCatalog
       // COLUMN ... TYPE is METADATA-ONLY for widening casts. Positional
       // storage makes it read-side: old files decode at their stored
       // narrow type and upcast (Spark 4's parquet converters promote
-      // INT32→long etc. natively; the CSV codec parses text under the
-      // CURRENT type). Stats bounds re-decode in the new canonical
+      // INT32→long etc. natively). Stats bounds re-decode in the new canonical
       // domain — exactly for integral/decimal promotions, so skipping
       // survives; float→double bounds do NOT survive text round-trip and
       // the widened marker suppresses them (see widenedLine). Narrowing
@@ -4868,9 +4580,6 @@ class GraftManifestCatalog extends TableCatalog
         require(sp.value.trim == "true",
           "row.lineage can only be enabled ('true'); ids already handed " +
             "to readers cannot be revoked")
-        require(!ManifestFiles.formatFromLines(priorLines).contains("csv"),
-          "row.lineage needs the parquet payload — rewrites preserve ids " +
-            "through a materialized _rid column the CSV codec cannot carry")
         lineageFlip = true
       // NDV evolution: future files carry (or stop carrying) sketches;
       // the scan reports distinctCount only while EVERY kept file has
@@ -5942,7 +5651,6 @@ private[sources] object ManifestProcedures {
         ManifestFiles.partConfs(lines).flatMap { case (pos, kind) =>
           ManifestFiles.fieldAtPhys(schemaNow, pos)
             .map(i => (i, kind, schemaNow(i).dataType)) }
-      val fmt = ManifestFiles.formatFromLines(lines).getOrElse("parquet")
       val serConf = new SerializableHadoopConf(hconf)
       ManifestParquet.setBloomCols(serConf.value,
         ManifestFiles.bloomFromLines(lines))
@@ -5962,11 +5670,11 @@ private[sources] object ManifestProcedures {
             val w =
               if (partSpec.isEmpty)
                 ManifestWriters.create(dirStr, stagingName,
-                  f"part-cw$token-$pid%05d${ManifestWriters.ext(fmt)}.tmp",
+                  f"part-cw$token-$pid%05d.parquet.tmp",
                   schemaB, serConf, injectFailure = false, ndvPos = ndvPos,
                   histPos = histPosC, ridIdx = ridAt, luvIdx = luvAt)
               else new PartitionSplitWriter(dirStr, stagingName, schemaB,
-                serConf, fmt, f"part-cw$token-$pid%05d", partSpec,
+                serConf, f"part-cw$token-$pid%05d", partSpec,
                 ndvPos = ndvPos, histPos = histPosC,
                 ridIdx = ridAt, luvIdx = luvAt)
             try {

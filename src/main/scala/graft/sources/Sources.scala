@@ -585,18 +585,16 @@ object Sources extends QueryModule {
         AND strftime(o_orderdate, '%Y-%m-%d') < '1996-01-01'
       GROUP BY 1 ORDER BY 1"""))
 
-  /** PARQUET data layer of the manifest format, MIXED with CSV history
-    * (round 11; ManifestParquet.scala — Spark's own ParquetWriteSupport
-    * on write, VectorizedParquetRecordReader on read, the reference's
-    * scan stack `sql/core/.../parquet/ParquetFileFormat.scala:51` /
+  /** PARQUET data layer of the manifest format across two commits
+    * (ManifestParquet.scala — Spark's own ParquetWriteSupport on write,
+    * VectorizedParquetRecordReader on read, the reference's scan stack
+    * `sql/core/.../parquet/ParquetFileFormat.scala:51` /
     * `VectorizedParquetRecordReader.java:48` behind the manifest's
-    * snapshot isolation): one commit lands as legacy CSV lines, a second
-    * as parquet (the new default), and one scan reads BOTH — format is a
-    * per-file property keyed on the entry name, so a table's history
-    * never needs rewriting to adopt the new payload. The aggregate spans
-    * the format boundary; the oracle recomputes it from raw orders, so a
-    * row lost, doubled, or mis-typed on either side fails the hash. At
-    * 100 TB the parquet payload is what makes column pruning REAL I/O
+    * snapshot isolation): two appends land disjoint halves of orders and
+    * one scan reads both. The aggregate spans the commit boundary; the
+    * oracle recomputes it from raw orders, so a row lost, doubled, or
+    * mis-typed in either commit fails the hash. At 100 TB the parquet
+    * payload is what makes column pruning REAL I/O
     * pruning (unread columns are never fetched) and hands scans
     * dictionary/RLE-compressed pages instead of text to parse. */
   val qManifestParquetMixed: QueryDef = QueryDef(
@@ -608,11 +606,9 @@ object Sources extends QueryModule {
       dir.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dir, true)
       val src = Tables.df(s, d, "orders")
         .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
-      // history: a CSV-era commit …
       src.filter($"o_orderkey" % 2 === 0)
         .write.mode("append").format("graft-manifest")
-        .option("path", path).option("format", "csv").save()
-      // … then the parquet default takes over
+        .option("path", path).save()
       src.filter($"o_orderkey" % 2 =!= 0)
         .write.mode("append").format("graft-manifest")
         .option("path", path).save()

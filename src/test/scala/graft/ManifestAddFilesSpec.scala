@@ -298,6 +298,28 @@ class ManifestAddFilesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("k=v"), e.getMessage)
   }
 
+  test("string partition directories import verbatim: %5CN is the " +
+    "string \\N, only __HIVE_DEFAULT_PARTITION__ is NULL") {
+    import spark.implicits._
+    val root = tmpDir()
+    val cat = register(root)
+    val landing = s"$root/landing"
+    Seq(("\\N", 1L), ("\\\\N", 2L), (null, 3L)).toDF("s", "v")
+      .write.partitionBy("s").mode("overwrite").parquet(landing)
+    assert(Set("s=%5CN", "s=%5C%5CN", "s=__HIVE_DEFAULT_PARTITION__")
+      .subsetOf(new java.io.File(landing).list().toSet))
+    spark.sql(s"CREATE TABLE $cat.lake (s STRING, v BIGINT)")
+    spark.sql(s"CALL $cat.system.add_files('lake', '$landing', " +
+      "'s=*/*.parquet')").collect()
+    val got = spark.table(s"$cat.lake").collect()
+      .map(r => r.getLong(1) -> Option(r.getString(0))).toMap
+    assert(got == Map(1L -> Some("\\N"), 2L -> Some("\\\\N"), 3L -> None),
+      got.toString)
+    // the constants' lifted stats agree: value predicates find each row
+    assert(spark.table(s"$cat.lake").filter($"s" === "\\N").count() == 1L)
+    assert(spark.table(s"$cat.lake").filter($"s".isNull).count() == 1L)
+  }
+
   test("lifted stats align metadata-level operations: a delete aligned " +
     "on imported day-pure files stays metadata-only") {
     import spark.implicits._

@@ -15,13 +15,7 @@ import graft.GraftSession
   *     loudly instead of silently no-op'ing the deletes;
   *   - `rewrite_position_deletes` lands a FRESH merged-file name per
   *     rebase attempt, so losing a claim race retries cleanly instead of
-  *     aborting on rename-to-existing;
-  *   - MOR insert files honor the table's payload-format pin
-  *     (`TBLPROPERTIES('format'='csv')`, persisted as a
-  *     `#tableconf,format` line) the way plain appends do;
-  *   - post-DROP-COLUMN CSV reads detect an over-split row (a
-  *     comma-bearing last string field fragmented by the full split) and
-  *     fail loudly instead of surfacing a silently-truncated value.
+  *     aborting on rename-to-existing.
   */
 class ManifestAdviceFixesSpec extends AnyFunSuite {
 
@@ -127,59 +121,6 @@ class ManifestAdviceFixesSpec extends AnyFunSuite {
     assert(mergedFiles() == secondMerged,
       "vacuum must age out the superseded merged delete file")
     assert(spark.sql(s"SELECT count(*) FROM $cat.t").head().getLong(0) == 37L)
-  }
-
-  test("MOR UPDATE insert files honor the table's csv format pin") {
-    val (cat, root) = freshCat("fmt")
-    spark.sql(s"CREATE TABLE $cat.t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES('delete.mode'='merge-on-read', 'format'='csv')")
-    import spark.implicits._
-    spark.range(0, 20).select($"id".as("k"), concat(lit("v"), $"id").as("s"))
-      .coalesce(1).writeTo(s"$cat.t").append()
-    val dir = s"$root/t"
-    assert(dataFiles(dir).forall(!_.endsWith(".parquet")),
-      s"format pin must route plain appends to csv, got ${dataFiles(dir)}")
-    val before = dataFiles(dir)
-    spark.sql(s"UPDATE $cat.t SET s = 'up' WHERE k < 5")
-    val fresh = dataFiles(dir) -- before
-    assert(fresh.nonEmpty, "UPDATE must land replacement rows in a fresh file")
-    assert(fresh.forall(!_.endsWith(".parquet")),
-      s"MOR insert files must honor the csv pin, got $fresh")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.t WHERE s = 'up'")
-      .head().getLong(0) == 5L)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.t").head().getLong(0) == 20L)
-  }
-
-  test("post-DROP csv read fails loudly on a fragmented comma-bearing " +
-    "last field instead of truncating it; comma-free data still reads") {
-    val (cat, root) = freshCat("csv")
-    spark.sql(s"CREATE TABLE $cat.t (a BIGINT, gone BIGINT, c STRING) " +
-      "TBLPROPERTIES('format'='csv')")
-    import spark.implicits._
-    Seq((1L, 10L, "with,comma"), (2L, 20L, "plain"))
-      .toDF("a", "gone", "c").coalesce(1).writeTo(s"$cat.t").append()
-    // pre-evolution the arity-limited split tolerates the comma
-    assert(spark.sql(s"SELECT c FROM $cat.t WHERE a = 1").head().getString(0)
-      == "with,comma")
-    spark.sql(s"ALTER TABLE $cat.t DROP COLUMN gone")
-    val err = intercept[Exception] {
-      spark.sql(s"SELECT c FROM $cat.t ORDER BY a").collect()
-    }
-    def chain(t: Throwable): Seq[String] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(x => Option(x.getMessage).getOrElse("")).toSeq
-    assert(chain(err).exists(_.contains("comma inside its last string field")),
-      s"expected the over-split diagnostic, got: ${chain(err).mkString(" | ")}")
-
-    // comma-free history reads fine after the same drop
-    spark.sql(s"CREATE TABLE $cat.u (a BIGINT, gone BIGINT, c STRING) " +
-      "TBLPROPERTIES('format'='csv')")
-    Seq((1L, 10L, "x"), (2L, 20L, "y"))
-      .toDF("a", "gone", "c").coalesce(1).writeTo(s"$cat.u").append()
-    spark.sql(s"ALTER TABLE $cat.u DROP COLUMN gone")
-    assert(spark.sql(s"SELECT a, c FROM $cat.u ORDER BY a").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-      == Seq((1L, "x"), (2L, "y")))
   }
 
   // ---- round 14 advice fixes ----

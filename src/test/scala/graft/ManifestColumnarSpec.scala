@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSession
 
 /** Vectorized manifest reads (`option("columnar", true)` →
-  * `supportColumnarReads` → 4096-row `OnHeapColumnVector` batches): same
-  * rows as the row path bit for bit — including NULL tokens, `_file`,
-  * and post-evolution null-fill — through ONE codegen'd `ColumnarToRow`
+  * `supportColumnarReads` → the parquet reader's 4096-row batches): same
+  * rows as the row path bit for bit — including NULLs, `_file`, and
+  * post-evolution null-fill — through ONE codegen'd `ColumnarToRow`
   * transition, with pruning, stats skipping, and the scan metrics
   * unchanged. Bucketed snapshots ignore the option (bucket splits
   * concatenate files; the reader kind must be uniform).
@@ -47,10 +47,8 @@ class ManifestColumnarSpec extends AnyFunSuite {
         when($"id" % 5 === 0, concat(lit("s"), $"id")).as("s"),
         ($"id" % 2 === 0).as("b"))
       .repartition(3)
-      // format=csv pinned: this spec exercises the LEGACY CSV columnar
-      // reader (ManifestParquetSpec covers the parquet twin)
       .write.mode("append").format("graft-manifest").option("path", path)
-      .option("format", "csv").save()
+      .save()
     def read(columnar: Boolean) =
       spark.read.format("graft-manifest").option("path", path)
         .option("columnar", columnar).load()
@@ -69,7 +67,7 @@ class ManifestColumnarSpec extends AnyFunSuite {
     spark.range(100000).select($"id".as("key"), ($"id" % 7).as("m"))
       .repartitionByRange(8, $"key")
       .write.mode("append").format("graft-manifest").option("path", path)
-      .option("format", "csv").save()
+      .save()
     val q = spark.read.format("graft-manifest").option("path", path)
       .option("columnar", true).load()
       .filter($"key" >= 90000L)

@@ -9,7 +9,7 @@ import graft.GraftSession
   * DEFAULT <lit>`): the frozen literal's SQL text rides Spark's own
   * CURRENT_DEFAULT / EXISTS_DEFAULT metadata keys in the published
   * schema. Files written BEFORE the column existed surface the default
-  * (a per-file footer probe on parquet, a per-row arity check on CSV);
+  * (a per-file footer probe finds the column missing);
   * rows written after — including explicit NULLs — are untouched; and
   * INSERTs that omit the column (or say DEFAULT) resolve through
   * Spark's own analysis because the catalog declares
@@ -59,11 +59,10 @@ class ManifestDefaultsSpec extends AnyFunSuite {
       .count() == 40L)
   }
 
-  test("CSV payload: per-row arity fallback surfaces defaults for " +
-    "pre-evolution rows only; typed defaults (date) cast exactly") {
-    val (cat, _) = freshCat("csv")
-    spark.sql(s"CREATE TABLE $cat.t (k BIGINT) " +
-      "TBLPROPERTIES('format'='csv')")
+  test("typed defaults (date) cast exactly for pre-evolution rows and " +
+    "survive a COW rewrite") {
+    val (cat, _) = freshCat("date")
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT)")
     spark.range(0, 20).select($"id".as("k")).writeTo(s"$cat.t").append()
     spark.sql(s"ALTER TABLE $cat.t ADD COLUMN d DATE " +
       "DEFAULT DATE'2024-03-01'")

@@ -83,22 +83,6 @@ class ManifestDropColumnSpec extends AnyFunSuite {
     assert(got == expect)
   }
 
-  test("drop works across payload formats (CSV history + parquet tail)") {
-    import spark.implicits._
-    val (cat, root) = freshCat()
-    spark.range(0, 6).select($"id".as("k"), ($"id" + 100).as("gone"),
-        ($"id" * 3).as("v"))
-      .coalesce(1).write.mode("append").format("graft-manifest")
-      .option("path", s"$root/t").option("format", "csv").save()
-    spark.sql(s"ALTER TABLE $cat.t DROP COLUMN gone")
-    // parquet append post-drop (default format)
-    spark.sql(s"INSERT INTO $cat.t VALUES (50, 999)")
-    val got = spark.sql(s"SELECT k, v FROM $cat.t ORDER BY k").collect().toSeq
-    assert(got == (0L until 6L).map(i => Row(i, i * 3)) :+ Row(50L, 999L))
-    assert(spark.sql(s"SELECT sum(v) FROM $cat.t").head().getLong(0) ==
-      (0L until 6L).map(_ * 3).sum + 999L)
-  }
-
   test("guard rails: dropping the bucket-layout column or the last " +
     "column is refused; DROP COLUMN IF EXISTS tolerates absence") {
     import spark.implicits._

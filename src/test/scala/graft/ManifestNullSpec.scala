@@ -6,11 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
 
-/** NULL round-trip through the manifest format (the storage token is
-  * `\N`; colliding strings escape — ManifestCsv.encode/parse): before
-  * round 10's fix a numeric NULL made the table UNREADABLE
-  * (NumberFormatException on "null") and a string NULL silently became
-  * the literal "null".
+/** NULL round-trip through the manifest format's parquet payload:
+  * NULLs of every primitive type stay NULL, and strings that look like
+  * null markers (`"null"`, `\N`, `\\N`) stay the strings they are — in
+  * the rows and in the `#stats` bounds that skipping decides on.
   */
 class ManifestNullSpec extends AnyFunSuite {
 
@@ -65,8 +64,8 @@ class ManifestNullSpec extends AnyFunSuite {
     import spark.implicits._
     val path = tmp()
     // File A's string min/max is literally \N, file B's is \\N — the
-    // stored stats are RAW values, and decoding them through the row
-    // codec would turn A's bounds into null (file looks all-null ⇒
+    // stored stats are RAW values, and decoding them as null markers
+    // would turn A's bounds into null (file looks all-null ⇒
     // skipped for ANY value predicate) and strip one backslash from
     // B's (shrunken max). Both lose rows silently.
     Seq((1L, "\\N"), (2L, "\\N")).toDF("k", "s").coalesce(1)

@@ -6,12 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
 
-/** Parquet data layer of the manifest format (round 11): payload format
-  * is a PER-FILE property keyed on the entry name's extension, so CSV
-  * history and parquet commits coexist in one table; the parquet read
-  * path is Spark's own VectorizedParquetRecordReader (real columnar I/O
-  * — pruned columns are never fetched), and the row path must agree with
-  * it bit for bit.
+/** Parquet data layer of the manifest format: the read path is Spark's
+  * own VectorizedParquetRecordReader (real columnar I/O — pruned columns
+  * are never fetched), and the row path must agree with it bit for bit.
   */
 class ManifestParquetSpec extends AnyFunSuite {
 
@@ -23,34 +20,6 @@ class ManifestParquetSpec extends AnyFunSuite {
   private def dataFiles(path: String): Seq[String] =
     new java.io.File(path).listFiles().map(_.getName)
       .filter(_.startsWith("part-")).toSeq
-
-  test("mixed-format history: CSV commit + parquet commit read as one " +
-    "table — filters, projection, _file, count all exact") {
-    import spark.implicits._
-    val path = tmp()
-    spark.range(0, 50).select($"id".as("k"), concat(lit("v"), $"id").as("s"))
-      .coalesce(1).write.mode("append").format("graft-manifest")
-      .option("path", path).option("format", "csv").save()
-    spark.range(50, 100).select($"id".as("k"), concat(lit("v"), $"id").as("s"))
-      .coalesce(1).write.mode("append").format("graft-manifest")
-      .option("path", path).save() // default parquet
-    val files = dataFiles(path)
-    assert(files.exists(_.endsWith(".parquet")) &&
-      files.exists(!_.endsWith(".parquet")),
-      s"expected mixed formats, got $files")
-    val t = spark.read.format("graft-manifest").option("path", path).load()
-    assert(t.count() == 100L)
-    assert(t.agg(sum($"k")).as[Long].head() == (0L until 100L).sum)
-    // a filter crossing both formats
-    assert(t.filter($"k" >= 25 && $"k" < 75).count() == 50L)
-    // _file distinguishes the two payloads
-    val byFile = t.select(col("_file"), $"k").groupBy("_file").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(byFile.size == 2 && byFile.values.forall(_ == 50L))
-    // string values identical across formats
-    assert(t.filter($"k" === 49).select($"s").as[String].head() == "v49")
-    assert(t.filter($"k" === 99).select($"s").as[String].head() == "v99")
-  }
 
   test("row path ≡ columnar path on parquet payload, bit for bit " +
     "(nulls, all primitive types, _file)") {

@@ -8,7 +8,7 @@ import graft.GraftSession
 
 /** Temporal + decimal columns in the manifest format (round 11): DATE
   * (days int), TIMESTAMP / TIMESTAMP_NTZ (epoch micros), DECIMAL(p,s) —
-  * round-tripped through BOTH payload formats, stats-skipped, and
+  * round-tripped through the parquet payload, stats-skipped, and
   * row-level-operated on. Before this the format refused every
   * non-primitive type, which no real table survives.
   */
@@ -33,20 +33,20 @@ class ManifestTypesSpec extends AnyFunSuite {
       when($"id" % 2 === 0, ($"id" * 10 + 0.25).cast("decimal(12,2)")).as("m"))
   }
 
-  private def roundTrip(format: String): Unit = {
+  test("date/timestamp/ntz/decimal round-trip through the parquet payload") {
     import spark.implicits._
     val path = tmp()
     val src = typed(spark)
     src.repartition(3).write.mode("append").format("graft-manifest")
-      .option("path", path).option("format", format).save()
+      .option("path", path).save()
     val back = spark.read.format("graft-manifest").option("path", path).load()
     assert(back.schema == src.schema ||
       back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
         src.schema.fields.map(f => (f.name, f.dataType)).toSeq)
     val a = src.orderBy($"k").collect().toSeq
     val b = back.orderBy($"k").collect().toSeq
-    assert(a == b, s"$format payload round-trip mismatch")
-    // typed predicates cross the format correctly
+    assert(a == b, "parquet payload round-trip mismatch")
+    // typed predicates cross the payload correctly
     assert(back.filter($"d" >= java.sql.Date.valueOf("2020-03-01")).count() ==
       src.filter($"d" >= java.sql.Date.valueOf("2020-03-01")).count())
     assert(back.filter($"m" === new java.math.BigDecimal("240.25")).count() == 1L)
@@ -55,14 +55,6 @@ class ManifestTypesSpec extends AnyFunSuite {
       .collect()(0)
     val exp = src.agg(sum($"m"), count($"ts"), max($"tn")).collect()(0)
     assert(sums == exp)
-  }
-
-  test("date/timestamp/ntz/decimal round-trip through the parquet payload") {
-    roundTrip("parquet")
-  }
-
-  test("date/timestamp/ntz/decimal round-trip through the csv payload") {
-    roundTrip("csv")
   }
 
   test("stats skipping works on DATE bounds: a date-range predicate " +

@@ -13,8 +13,9 @@ import graft.GraftSession
   * travel, schema evolution, and row-level ops WITHOUT pre-shredding.
   * Storage is the parquet variant pair (value+metadata binary) under
   * the positional `c<pos>` name; `#stats` carries NO bounds for the
-  * column (variants are non-orderable — the standing contract), and the
-  * CSV payload refuses at plan time. */
+  * column (variants are non-orderable — the standing contract), and a
+  * `format=csv` write refuses at plan time (parquet is the only
+  * payload). */
 class ManifestVariantSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.local(4)
@@ -136,6 +137,6 @@ class ManifestVariantSpec extends AnyFunSuite {
         .write.mode("append").format("graft-manifest")
         .option("path", s"$root/csvdocs").option("format", "csv").save()
     }
-    assert(e.getMessage.contains("parquet-only"))
+    assert(e.getMessage.contains("parquet is the only data-file payload"))
   }
 }

@@ -13,8 +13,9 @@ import graft.GraftSession
   * travel / row-level ops):
   *
   *   - the parquet payload stores them natively (ParquetWriteSupport /
-  *     VectorizedParquetRecordReader both handle nested types); the CSV
-  *     payload REFUSES them at plan time with a pointer;
+  *     VectorizedParquetRecordReader both handle nested types); a
+  *     `format=csv` write refuses at plan time (parquet is the only
+  *     payload);
   *   - `#stats` records NO bounds for them — there is no total order to
   *     record, and a `(nulls, absent, absent)` entry would collide with
   *     the all-null pattern and let a value predicate "prove" a
@@ -148,11 +149,12 @@ class ManifestVectorSpec extends AnyFunSuite {
 
   test("csv payload refuses non-primitive columns at plan time") {
     val (_, root) = freshCat("csvref")
-    val err = intercept[UnsupportedOperationException] {
+    val err = intercept[IllegalArgumentException] {
       seed(10).write.mode("append").format("graft-manifest")
         .option("path", s"$root/t").option("format", "csv").save()
     }
-    assert(err.getMessage.contains("parquet-only"), err.getMessage)
+    assert(err.getMessage.contains("parquet is the only data-file payload"),
+      err.getMessage)
     assert(!new java.io.File(s"$root/t").exists() ||
       new java.io.File(s"$root/t").listFiles().isEmpty,
       "plan-time refusal must leave nothing behind")

@@ -14,7 +14,7 @@ import graft.GraftSession
   * promotions): INT→BIGINT, FLOAT→DOUBLE, DECIMAL precision-up are
   * METADATA-ONLY. Positional storage makes the change read-side: old
   * files decode at their stored narrow type and upcast (Spark 4's
-  * parquet converters; the CSV codec parses under the current type).
+  * parquet converters).
   * Stats skipping survives integral/decimal promotions exactly;
   * float→double bounds are text-inexact and suppressed until a rewrite
   * clears the marker. Narrowing refuses with a pointer. At 100 TB this
@@ -146,11 +146,10 @@ class ManifestWidenSpec extends AnyFunSuite {
     assert(ManifestFiles.entries(fs, dir, None).length == 1)
   }
 
-  test("DECIMAL precision-up and CSV payloads widen too; narrowing and " +
-    "cross-family changes refuse with pointers") {
+  test("DECIMAL precision-up widens too; narrowing and cross-family " +
+    "changes refuse with pointers") {
     val (cat, root) = freshCat("dc")
-    spark.sql(s"CREATE TABLE $cat.d (amt DECIMAL(9,2), k INT) " +
-      "TBLPROPERTIES('format'='csv')")
+    spark.sql(s"CREATE TABLE $cat.d (amt DECIMAL(9,2), k INT)")
     spark.range(0, 500).select(($"id".cast("decimal(9,2)") / 4).as("amt"),
         $"id".cast("int").as("k"))
       .writeTo(s"$cat.d").append()
@@ -160,7 +159,7 @@ class ManifestWidenSpec extends AnyFunSuite {
     val t = spark.table(s"$cat.d")
     assert(t.schema("amt").dataType.sql == "DECIMAL(20,2)")
     assert(t.agg(sum($"amt")).head().getDecimal(0)
-      .compareTo(total0) == 0, "pre-widen CSV decimals must re-decode exact")
+      .compareTo(total0) == 0, "pre-widen decimals must re-decode exact")
     // a value needing the wider precision lands fine
     spark.sql(s"INSERT INTO $cat.d VALUES (123456789012345678.99, 1)")
     assert(t.filter($"amt" > lit("1e17").cast("decimal(20,2)")).count() == 1L)
