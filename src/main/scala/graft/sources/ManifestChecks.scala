@@ -11,10 +11,15 @@ import org.apache.spark.sql.types.StructType
 /** CHECK CONSTRAINTS (round 12 — Delta's `delta.constraints.*`):
   * `TBLPROPERTIES('check.<name>'='<boolean sql expr>')` persists a
   * `#tableconf,check` line (expression text base64'd — it may contain
-  * commas); EVERY write route validates each incoming row and FAILS THE
-  * COMMIT on the first violation (the staged files abort, the table
-  * never sees a half-applied batch). SQL semantics: TRUE and NULL pass,
-  * only FALSE violates (the standard CHECK three-valued rule).
+  * commas); every write route that brings rows in (appends, INSERT
+  * OVERWRITE, streaming epochs, copy-on-write and merge-on-read
+  * row-level writes) validates each incoming row and FAILS THE COMMIT
+  * on the first violation (the staged files abort, the table never
+  * sees a half-applied batch). Row-preserving maintenance rewrites
+  * (full and scoped compact, Z-order — the `#maint` commits) evaluate
+  * no CHECK: like ADD CONSTRAINT, they never retro-validate rows that
+  * already committed. SQL semantics: TRUE and NULL pass, only FALSE
+  * violates (the standard CHECK three-valued rule).
   *
   * Binding happens ONCE, driver-side, at write planning: the expression
   * text parses and analyzes against the table schema (so unknown
@@ -26,7 +31,8 @@ import org.apache.spark.sql.types.StructType
   * Reference seam: constraint enforcement in SplitServe's Spark lineage
   * lives in the analyzer's DML checks (`sql/core`); the versioned
   * format moves it to the commit boundary, where ALL ingest routes
-  * (batch, streaming epochs, COW rewrites, MOR insert files) converge. */
+  * (batch, streaming epochs, COW rewrites, MOR insert files) converge
+  * on one write spec (WriteSpec.of). */
 private[sources] object ManifestChecks {
 
   def encode(expr: String): String =

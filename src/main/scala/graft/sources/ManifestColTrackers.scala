@@ -29,6 +29,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Non-stats-capable types get no tracker (null slot) — same as
   * `normalize` returning None.
+  *
+  * The same trackers fold every bound the writer records: top-level
+  * columns read the data row, nested struct leaves read the walked
+  * struct, and shredded variant paths read a one-slot row holding the
+  * extracted value.
   */
 private[sources] object ManifestColTrackers {
 
@@ -37,6 +42,9 @@ private[sources] object ManifestColTrackers {
     def add(r: InternalRow, i: Int): Unit
     def rawMin: String
     def rawMax: String
+    /** This column's `#stats` entry; numeric bounds are exact. */
+    def stats(nulls: Long): ManifestFiles.ColStats =
+      ManifestFiles.ColStats(nulls, Option(rawMin), Option(rawMax))
   }
 
   private final class LongTracker(get: (InternalRow, Int) => Long)
@@ -118,6 +126,12 @@ private[sources] object ManifestColTrackers {
     }
     override def rawMin: String = rawMn
     override def rawMax: String = rawMx
+    // string bounds truncate (Iceberg's prefix / prefix+increment rule —
+    // ManifestFiles.truncLower/truncUpper), so the manifest scales with
+    // file count, not value size
+    override def stats(nulls: Long): ManifestFiles.ColStats =
+      ManifestFiles.ColStats(nulls, Option(rawMn).map(ManifestFiles.truncLower),
+        Option(rawMx).flatMap(ManifestFiles.truncUpper))
   }
 
   private final class DecimalTracker(precision: Int, scale: Int)

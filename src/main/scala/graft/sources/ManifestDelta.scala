@@ -23,8 +23,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - UPDATE and MERGE updates split into delete + insert
   *     (`representUpdateAsDeleteAndInsert`): deleted ordinals land in
   *     the delete file, replacement/new rows land in fresh data files
-  *     through the SAME staged writers as any append (stats, payload,
-  *     two-phase commit all shared);
+  *     through the SAME staged writers and write spec as any append
+  *     (stats, payload, two-phase commit, CHECKs, NDV/histogram
+  *     sketches, shredded-variant stats and bloom filters all shared;
+  *     only the partition split is skipped — see
+  *     ManifestDeltaBatchWrite);
   *   - scans apply delete files at plan time (`ManifestScan.deleteMap` →
   *     per-partition sorted ordinals, skipped as rows stream); `CALL
   *     compact` MATERIALIZES deletes — the rewrite reads through the
@@ -106,18 +109,16 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory = {
+    // no catch: an unreadable table or a bind failure must fail the
+    // write, not skip validation
     val lines = ManifestFiles.latestLines(
       new Path(path).getFileSystem(conf.value), new Path(path))
-    // no catch: a bind failure must fail the write, not skip validation
-    val checks = ManifestChecks.bind(
-      org.apache.spark.sql.SparkSession.active, schema,
-      ManifestFiles.checksFromLines(lines))
-    new ManifestDeltaWriterFactory(path, stagingName, schema, conf, checks,
-      histPos = ManifestFiles.histDeclFromLines(lines)
-        .flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray,
-      ndvPos = (ManifestFiles.ndvFromLines(lines) ++
-          ManifestFiles.histDeclFromLines(lines)).distinct
-        .flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray,
+    // Insert files land UNSPLIT on a partitioned table: the delta write
+    // requests no clustered distribution, so splitting would open one
+    // file per partition value in every task.
+    val spec = WriteSpec.of(lines, schema, conf.value, maintenance = false)
+      .copy(partSpec = Seq.empty)
+    new ManifestDeltaWriterFactory(path, stagingName, schema, conf, spec,
       carryRowIds = carryRowIds)
   }
 
@@ -125,22 +126,9 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf.value)
     val staging = new Path(dir, stagingName)
-    def land(tmp: String): String = {
-      val fin = tmp.stripSuffix(".tmp")
-      val ok = fs.rename(new Path(staging, tmp), new Path(dir, fin))
-      require(ok, s"staged file $tmp vanished before commit")
-      fin
-    }
     val fresh = messages.flatMap { case DeltaCommitted(data, del, _) =>
-      data.flatMap { (m: FileCommitted) =>
-        val fin = land(m.name)
-        Seq(s"$fin,${m.rows}",
-          ManifestFiles.statsLine(fin, m.bytes, m.stats, m.nestedStats)) ++
-          (if (m.ndv.nonEmpty) Seq(ManifestNdv.line(fin, m.ndv)) else Nil) ++
-          (if (m.hist.nonEmpty) Seq(ManifestHist.line(fin, m.hist)) else Nil) ++
-          (if (m.ridCol) Seq(ManifestFiles.ridColLine(fin)) else Nil) ++
-          (if (m.luvCol) Seq(ManifestFiles.luvColLine(fin)) else Nil)
-      } ++ del.map(d => s"#dels,${land(d)}")
+      data.flatMap(ManifestWriters.land(fs, dir, staging, _)) ++
+        del.map(d => s"#dels,${ManifestWriters.rename(fs, dir, staging, d)}")
     }
     // Data files the staged delete vectors point INTO (the Iceberg
     // RowDelta validation): read once driver-side — delete files are
@@ -182,16 +170,12 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
 private[sources] class ManifestDeltaWriterFactory(path: String,
     stagingName: String, schema: StructType,
     conf: SerializableHadoopConf,
-    // bound CHECK constraints: a merge-on-read UPDATE/MERGE can insert
-    // brand-new rows, so the delta route validates like every other
-    checks: Seq[(String, String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Seq.empty,
-    // declared stats.ndv.columns — MOR insert files carry sketches like
-    // every other write route, or CBO's forall-coverage gate would
-    // silently suppress distinctCount after the first upsert
-    ndvPos: Array[Int] = Array.empty,
-    // declared stats.histogram.columns, same coverage rationale
-    histPos: Array[Int] = Array.empty,
+    // the table's write spec, as every route applies it: a merge-on-read
+    // UPDATE/MERGE can insert brand-new rows, so CHECKs validate them,
+    // and insert files carry the declared sketches, shred stats and
+    // blooms — or CBO's forall-coverage gate would silently suppress
+    // distinctCount after the first upsert
+    spec: WriteSpec,
     // row lineage: update() carries the target row's [_file, _row_id]
     // metadata into a second, `#ridcol` insert file
     carryRowIds: Boolean = false)
@@ -204,16 +188,10 @@ private[sources] class ManifestDeltaWriterFactory(path: String,
       // uses (stats tracking, parquet payload, abort semantics shared);
       // opened lazily — a pure DELETE task writes no data file at all.
       private var dataWriter: DataWriter[InternalRow] = _
-      private var dataName: String = _
       private def data(): DataWriter[InternalRow] = {
-        if (dataWriter == null) {
-          dataName = f"part-$partitionId%05d-$taskId.parquet.tmp"
-          dataWriter = ManifestChecks.wrap(
-            ManifestWriters.create(path, stagingName, dataName,
-              schema, conf, injectFailure = false, ndvPos = ndvPos,
-              histPos = histPos),
-            checks, schema)
-        }
+        if (dataWriter == null)
+          dataWriter = ManifestWriters.task(path, stagingName,
+            f"part-$partitionId%05d-$taskId", schema, conf, spec)
         dataWriter
       }
       // UPDATE legs on a lineage table: replacement rows land in their
@@ -221,15 +199,10 @@ private[sources] class ManifestDeltaWriterFactory(path: String,
       // row is [_file, _row_id] — exactly the 2-arg writer's contract)
       private var updWriter: DataWriter[InternalRow] = _
       private def upd(): DataWriter[InternalRow] = {
-        if (updWriter == null) {
-          updWriter = ManifestChecks.wrap(
-            ManifestWriters.create(path, stagingName,
-              f"part-u$partitionId%05d-$taskId.parquet.tmp",
-              schema, conf, injectFailure = false, ndvPos = ndvPos,
-              histPos = histPos,
-              ridFromMeta = true),
-            checks, schema)
-        }
+        if (updWriter == null)
+          updWriter = ManifestWriters.task(path, stagingName,
+            f"part-u$partitionId%05d-$taskId", schema, conf, spec,
+            ridFromMeta = true)
         updWriter
       }
       // Deleted (file, ordinal) pairs stage as a tiny line file.

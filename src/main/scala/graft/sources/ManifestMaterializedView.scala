@@ -354,9 +354,17 @@ object ManifestMaterializedView {
     }.distinct
     val typeOf: Map[String, DataType] =
       if (typedExprs.isEmpty) Map.empty
-      else typedExprs.zip(
-        df.select(typedExprs.map(e => expr(e)): _*).schema.map(_.dataType))
-        .toMap
+      else {
+        val types = df.select(typedExprs.map(e => expr(e)): _*)
+          .schema.map(_.dataType)
+        // positional pairing: an expression expanding to several output
+        // columns would shift every later type onto the wrong aggregate
+        require(types.length == typedExprs.length,
+          s"MV aggregate typing: ${typedExprs.length} expressions " +
+            s"resolved to ${types.length} columns (${typedExprs.mkString(", ")})" +
+            " — each aggregate input must be a single-column expression")
+        typedExprs.zip(types).toMap
+      }
     def exprType(e: String): DataType = typeOf(e)
     val cols = scala.collection.mutable.LinkedHashMap.empty[String, Column]
     cols(CntCol) = sum(sgn).cast(LongType).as(CntCol)
@@ -554,6 +562,12 @@ object ManifestMaterializedView {
       val analyzedExprs = joined
         .select(checked.map { case (_, sql) => expr(sql) }: _*)
         .queryExecution.analyzed.expressions
+      // positional pairing: an expression expanding to several output
+      // columns would check the rest against the wrong analyzed form
+      require(analyzedExprs.length == checked.length,
+        s"MV stability gate: ${checked.length} expressions resolved to " +
+          s"${analyzedExprs.length} (${checked.map(_._2).mkString(", ")})" +
+          " — each filter/aggregate input must be a single-column expression")
       checked.zip(analyzedExprs).foreach { case ((what, sql), e) =>
         checkStable(what, sql, e)
       }

@@ -722,8 +722,12 @@ private[sources] object ManifestImport {
     Some(dt match {
       case LongType =>
         decoded.toLongOption.getOrElse(fail("BIGINT")).toString
-      case IntegerType | ShortType | ByteType =>
-        decoded.toIntOption.getOrElse(fail(dt.sql)).toString
+      case IntegerType =>
+        decoded.toIntOption.getOrElse(fail("INT")).toString
+      case ShortType =>
+        decoded.toShortOption.getOrElse(fail("SMALLINT")).toString
+      case ByteType =>
+        decoded.toByteOption.getOrElse(fail("TINYINT")).toString
       case BooleanType =>
         decoded.toBooleanOption.getOrElse(fail("BOOLEAN")).toString
       case DateType =>

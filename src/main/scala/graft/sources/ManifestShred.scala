@@ -160,8 +160,8 @@ object ManifestShred extends PredicateHelper {
 
   /** Declared shred paths whose variant column exists in THIS write's
     * schema, as the writer's spec tuples (schema idx, spec index, path,
-    * typed domain) — shared by the batch and streaming factories. A
-    * rewrite of a pre-shred file set simply lacks them. */
+    * typed domain) — part of the one write spec every data-file write
+    * route applies (WriteSpec.of). */
   def writerSpecs(lines: Array[String], schema: StructType):
       Array[(Int, Int, String, DataType)] =
     fromLines(lines).flatMap(sp =>

@@ -1131,7 +1131,10 @@ private[sources] class RowLevelMetaAdapter(
 
 private[sources] case class FileCommitted(name: String, rows: Long,
     bytes: Long = -1L, stats: Seq[(Int, ManifestFiles.ColStats)] = Nil,
-    bucket: Int = -1, sortedOk: Boolean = false,
+    bucket: Int = -1,
+    // (physical position, desc, nullsLast) of the sort key this file was
+    // VERIFIED ordered on — the commit marks it `#sorted`
+    sorted: Option[(Int, Boolean, Boolean)] = None,
     // struct LEAF stats, keyed by dotted position paths (round 12)
     nestedStats: Seq[(String, ManifestFiles.ColStats)] = Nil,
     // per-file HLL registers for declared stats.ndv.columns, keyed by
@@ -1151,6 +1154,61 @@ private[sources] case class FileCommitted(name: String, rows: Long,
   * the task saw (days/months/identity layouts). */
 private[sources] case class FilesCommitted(files: Seq[FileCommitted])
   extends WriterCommitMessage
+
+/** A governed table's declared write behaviour, derived from its
+  * `#tableconf` lines by ONE function that every write route calls
+  * (batch / copy-on-write / full compact, streaming epochs,
+  * merge-on-read inserts, scoped compact), so a declaration cannot
+  * reach one route and miss another. Schema indices throughout:
+  *   - `partSpec`: (index, kind) per declared days/months/identity/…
+  *     transform, in declared order — the task splits its rows into
+  *     one staged file per composite partition value;
+  *   - `checks`: bound CHECK constraints (see ManifestChecks);
+  *   - `ndvPos`: stats.ndv.columns ∪ stats.histogram.columns — each
+  *     tracks a per-file HLL (ManifestNdv);
+  *   - `histPos`: stats.histogram.columns — each tracks a per-file
+  *     sample (ManifestHist);
+  *   - `shred`: declared variant.shred paths as (index of the variant
+  *     column, spec index for the synthetic #stats position, JSON path,
+  *     typed extraction domain) — see ManifestShred.
+  * Declared bloom columns ride the task conf instead (see [[WriteSpec.of]]). */
+private[sources] final case class WriteSpec(
+    partSpec: Seq[(Int, String)],
+    checks: Seq[(String, String,
+      org.apache.spark.sql.catalyst.expressions.Expression)],
+    ndvPos: Array[Int],
+    histPos: Array[Int],
+    shred: Array[(Int, Int, String, DataType)])
+
+private[sources] object WriteSpec {
+  /** The write spec of `lines` against the write's `schema`. Sets the
+    * declared bloom columns on `conf` (physical `c<pos>` names, the
+    * parquet writer's column identifiers), so call it driver-side
+    * before the conf ships to the tasks. A row-preserving `maintenance`
+    * rewrite re-lands rows that already committed and evaluates no
+    * CHECK — the same "existing rows are not retro-validated" rule
+    * ADD CONSTRAINT follows. */
+  def of(lines: Array[String], schema: StructType, conf: Configuration,
+      maintenance: Boolean): WriteSpec = {
+    ManifestParquet.setBloomCols(conf, ManifestFiles.bloomFromLines(lines))
+    def indices(positions: Seq[Int]): Array[Int] =
+      positions.flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray
+    val hist = ManifestFiles.histDeclFromLines(lines)
+    WriteSpec(
+      partSpec = ManifestFiles.partConfs(lines).flatMap { case (pos, kind) =>
+        ManifestFiles.fieldAtPhys(schema, pos).map(idx => (idx, kind)) },
+      checks =
+        if (maintenance) Seq.empty
+        else ManifestChecks.bind(SparkSession.active, schema,
+          ManifestFiles.checksFromLines(lines)),
+      // histogram columns track NDV sketches too: catalyst's
+      // FilterEstimation refuses a histogram without count stats
+      // (hasCountStats), so a histogram-only declaration would never fire
+      ndvPos = indices((ManifestFiles.ndvFromLines(lines) ++ hist).distinct),
+      histPos = indices(hist),
+      shred = ManifestShred.writerSpecs(lines, schema))
+  }
+}
 
 private[sources] class ManifestBatchWrite(path: String, queryId: String,
     failPartition: Int, schema: StructType, truncate: Boolean,
@@ -1201,8 +1259,9 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     ridFromMeta: Boolean = false,
     // `_last_updated_version`: index of the carried value (-1 = none)
     luvIdx: Int = -1,
-    // row-preserving maintenance rewrite (full compaction): the commit
-    // lands a `#maint` marker — see ManifestFiles.maintLine
+    // row-preserving maintenance rewrite (full compaction, Z-order): the
+    // commit lands a `#maint` marker (see ManifestFiles.maintLine) and
+    // the rewrite evaluates no CHECK (see WriteSpec.of)
     maintenance: Boolean = false) extends BatchWrite {
 
   // Per-job staging namespace: concurrent writes (or an overlapping retry
@@ -1211,41 +1270,19 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    // Declared days/months/identity layout, re-read from disk HERE so
-    // every batch route splits files per partition value — plain
-    // appends, catalog INSERTs, COW rewrites, compact, AND streaming
-    // epochs (ManifestStreamingWrite) all preserve the layout.
-    // a staged REPLACE enforces the NEW DDL's declared intent (checks,
-    // blooms) — the to-be-replaced table's lines are history
+    // The table's declared write behaviour, read from disk HERE so every
+    // batch route — plain appends, catalog INSERTs, COW rewrites,
+    // compact — honours it. A staged REPLACE enforces the NEW DDL's
+    // declared intent; the to-be-replaced table's lines are history.
     val lines =
       if (replaceConf) confLines
-      else
-        try ManifestFiles.latestLines(
-          new Path(path).getFileSystem(conf.value), new Path(path))
-        catch { case _: Exception => Array.empty[String] }
-    val partSpec: Seq[(Int, String)] =
-      ManifestFiles.partConfs(lines).flatMap { case (pos, kind) =>
-        ManifestFiles.fieldAtPhys(schema, pos).map(idx => (idx, kind)) }
-    // declared bloom-filter columns ride the task conf (physical c<pos>
-    // names — the parquet writer's column identifiers)
-    ManifestParquet.setBloomCols(conf.value,
-      ManifestFiles.bloomFromLines(lines))
-    new ManifestWriterFactory(path, stagingName, failPartition, schema, conf,
-      recordBucket = bucketSpec.isDefined, sortPos = sortPos,
-      partSpec = partSpec,
-      checks = ManifestChecks.bind(SparkSession.active, schema,
-        ManifestFiles.checksFromLines(lines)),
-      upsertKeys = upsertKeys.toArray,
-      // histogram columns track NDV sketches too: catalyst's
-      // FilterEstimation refuses a histogram without count stats
-      // (hasCountStats), so a histogram-only declaration would never fire
-      ndvPos = (ManifestFiles.ndvFromLines(lines) ++
-          ManifestFiles.histDeclFromLines(lines)).distinct
-        .flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray,
-      histPos = ManifestFiles.histDeclFromLines(lines)
-        .flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray,
-      ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx,
-      shred = ManifestShred.writerSpecs(lines, schema))
+      else ManifestFiles.latestLines(
+        new Path(path).getFileSystem(conf.value), new Path(path))
+    new ManifestWriterFactory(path, stagingName, schema, conf,
+      WriteSpec.of(lines, schema, conf.value, maintenance),
+      failPartition = failPartition, recordBucket = bucketSpec.isDefined,
+      sortPos = sortPos, upsertKeys = upsertKeys.toArray,
+      ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx)
   }
 
   // Driver-side, exactly once, only after EVERY task committed: publish.
@@ -1261,47 +1298,8 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf.value)
     val staging = new Path(dir, stagingName)
-    def landOne(m: FileCommitted): Seq[String] = {
-      val fin = m.name.stripSuffix(".tmp")
-      val ok = fs.rename(new Path(staging, m.name), new Path(dir, fin))
-      require(ok, s"staged file ${m.name} vanished before commit")
-      Seq(s"$fin,${m.rows}",
-        ManifestFiles.statsLine(fin, m.bytes, m.stats, m.nestedStats)) ++
-        (if (m.ndv.nonEmpty) Seq(ManifestNdv.line(fin, m.ndv)) else Nil) ++
-        (if (m.hist.nonEmpty) Seq(ManifestHist.line(fin, m.hist)) else Nil) ++
-        (if (m.ridCol) Seq(ManifestFiles.ridColLine(fin)) else Nil) ++
-        (if (m.luvCol) Seq(ManifestFiles.luvColLine(fin)) else Nil) ++
-        bucketSpec.map { case (pos, n) =>
-          ManifestFiles.bucketLine(fin, pos, n, m.bucket) } ++
-        (sortPos.filter(_ => m.sortedOk).map { case (p, desc, nullsLast) =>
-          ManifestFiles.sortedLine(fin, ManifestFiles.physPos(schema, p),
-            desc, nullsLast) })
-    }
-    // unwrap upsert tees: their staged equality-delete files land now;
-    // the `#eqdels` lines are built inside the claim closure, where the
-    // attempted version is known (explicit sequencing — see
-    // ManifestEqDeletes)
-    val eqdelFins = messages.collect {
-      case ManifestEqDeletes.UpsertCommitted(_, Some(tmp), _) =>
-        val fin = tmp.stripSuffix(".tmp")
-        require(fs.rename(new Path(staging, tmp), new Path(dir, fin)),
-          s"staged equality-delete file $tmp vanished before commit")
-        fin
-    }
-    val fresh = messages.flatMap {
-      case ManifestEqDeletes.UpsertCommitted(inner, _, _) => inner match {
-        case f: FileCommitted => landOne(f)
-        case FilesCommitted(files) => files.flatMap(landOne)
-        case other => throw new IllegalStateException(other.toString)
-      }
-      case f: FileCommitted => landOne(f)
-      // partition-split tasks: one message, many files
-      case FilesCommitted(files) => files.flatMap(landOne)
-    }
-    val freshNames = fresh.filterNot(_.startsWith("#"))
-      .map(l => l.substring(0, l.lastIndexOf(',')))
-    val eqPositions = upsertKeys.map(k =>
-      ManifestFiles.physPos(schema, k)).mkString(";")
+    val landed = ManifestWriters.landTasks(fs, dir, staging, messages,
+      schema, upsertKeys, bucketSpec)
     val drop = dropFromPrevious()
     val scanState = scannedDeleteState()
     val scanEntries = scannedEntries()
@@ -1386,18 +1384,10 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
         }
         else previous.filterNot(line => ManifestSink.entryName(line).exists(drop))
       val conf0 = confLines.filterNot(base.contains)
-      val eqdels = eqdelFins.map(f => s"#eqdels,$f,$eqPositions,$version")
-      // merge-on-read tables mark every entry's BIRTH version so later
-      // equality deletes can scope around it; elsewhere the marker is
-      // dead weight and stays absent
-      val born: Array[String] =
-        if (ManifestFiles.isMergeOnRead(previous) || eqdelFins.nonEmpty)
-          freshNames.map(n => ManifestFiles.bornLine(n, version))
-        else Array.empty
       val maint: Array[String] =
         if (maintenance) Array(ManifestFiles.maintLine(version))
         else Array.empty
-      conf0 ++ base ++ eqdels ++ fresh ++ born ++ maint
+      conf0 ++ base ++ landed(previous, version) ++ maint
     }, schema, branch)
     fs.delete(staging, true)
   }
@@ -1409,46 +1399,136 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
   }
 }
 
-/** Task-side staged data-file writer, shared by the batch and streaming
-  * factories — only the staged file NAME differs (streaming prefixes
-  * the epoch so retried epochs never collide with committed files).
-  * Files are parquet (real columnar storage through Spark's
-  * ParquetWriteSupport, see ManifestParquet); staged names end in
-  * `.parquet.tmp`. Min/max/null counts stream through the SAME canonical
-  * ordering the skip evaluator uses. */
+/** Task-side staged data-file writers and the driver-side landing step
+  * shared by every governed-table write route. Files are parquet (real
+  * columnar storage through Spark's ParquetWriteSupport, see
+  * ManifestParquet); staged names end in `.parquet.tmp`. Min/max/null
+  * counts stream through the SAME canonical ordering the skip
+  * evaluator uses. */
 private[sources] object ManifestWriters {
 
-  def create(path: String, stagingName: String, name: String,
-      schema: StructType, conf: SerializableHadoopConf,
-      injectFailure: Boolean, bucket: Int = -1,
+  /** Open one task's writer — the helper every route calls: one staged
+    * file, or a partition-splitting writer when `spec` declares a
+    * layout; then the equality-delete tee for upserts; then the CHECK
+    * wrapper. Staged names derive from `prefix`: `<prefix>.parquet.tmp`,
+    * split files `<prefix>-s<n>.parquet.tmp`, the delete file
+    * `<prefix>.eqdel.tmp`. */
+  def task(path: String, stagingName: String, prefix: String,
+      schema: StructType, conf: SerializableHadoopConf, spec: WriteSpec,
+      injectFailure: Boolean = false,
+      // >= 0 on a bucketed write: the task's bucket id, recorded by every
+      // file it lands (split files too — a mixed bucket + transform
+      // layout lands files pure on both dimensions)
+      bucket: Int = -1,
       sortPos: Option[(Int, Boolean, Boolean)] = None,
-      // schema indices of declared stats.ndv.columns — each tracks a
-      // per-file HLL as rows stream (ManifestNdv)
-      ndvPos: Array[Int] = Array.empty,
-      // schema indices of declared stats.histogram.columns — each
-      // tracks a per-file deterministic sample (ManifestHist)
-      histPos: Array[Int] = Array.empty,
+      // CDC upsert key indices — tee the rows' key tuples into a delete
+      // file (see ManifestEqDeletes.tee)
+      upsertKeys: Array[Int] = Array.empty,
+      ridIdx: Int = -1, ridFromMeta: Boolean = false,
+      luvIdx: Int = -1): DataWriter[InternalRow] = {
+    def file(name: String): DataWriter[InternalRow] =
+      create(path, stagingName, name, schema, conf, spec, injectFailure,
+        bucket, sortPos, ridIdx, ridFromMeta, luvIdx)
+    val base =
+      if (spec.partSpec.isEmpty) file(s"$prefix.parquet.tmp")
+      else new PartitionSplitWriter(
+        spec.partSpec.map { case (idx, kind) =>
+          (idx, kind, schema(idx).dataType) },
+        seq => file(s"$prefix-s$seq.parquet.tmp"))
+    val teed =
+      if (upsertKeys.isEmpty) base
+      else ManifestEqDeletes.tee(base, schema, upsertKeys, path, stagingName,
+        s"$prefix.eqdel.tmp", conf)
+    ManifestChecks.wrap(teed, spec.checks, schema)
+  }
+
+  /** Move a staged file to its final name (the `.tmp` suffix dropped). */
+  def rename(fs: FileSystem, dir: Path, staging: Path, tmp: String): String = {
+    val fin = tmp.stripSuffix(".tmp")
+    require(fs.rename(new Path(staging, tmp), new Path(dir, fin)),
+      s"staged file $tmp vanished before commit")
+    fin
+  }
+
+  /** Land one staged data file: its entry line plus the `#stats`,
+    * `#ndv`, `#hist`, `#ridcol`, `#luvcol`, `#bucket` (on a bucketed
+    * write's (position, n)) and `#sorted` riders. */
+  def land(fs: FileSystem, dir: Path, staging: Path, m: FileCommitted,
+      bucketSpec: Option[(Int, Int)] = None): Seq[String] = {
+    val fin = rename(fs, dir, staging, m.name)
+    Seq(s"$fin,${m.rows}",
+      ManifestFiles.statsLine(fin, m.bytes, m.stats, m.nestedStats)) ++
+      (if (m.ndv.nonEmpty) Seq(ManifestNdv.line(fin, m.ndv)) else Nil) ++
+      (if (m.hist.nonEmpty) Seq(ManifestHist.line(fin, m.hist)) else Nil) ++
+      (if (m.ridCol) Seq(ManifestFiles.ridColLine(fin)) else Nil) ++
+      (if (m.luvCol) Seq(ManifestFiles.luvColLine(fin)) else Nil) ++
+      bucketSpec.map { case (pos, n) =>
+        ManifestFiles.bucketLine(fin, pos, n, m.bucket) } ++
+      m.sorted.map { case (pos, desc, nullsLast) =>
+        ManifestFiles.sortedLine(fin, pos, desc, nullsLast) }
+  }
+
+  /** The data files of one batch or streaming task's commit message. */
+  def filesOf(m: WriterCommitMessage): Seq[FileCommitted] = m match {
+    case f: FileCommitted => Seq(f)
+    case FilesCommitted(files) => files // partition-split task
+    case ManifestEqDeletes.UpsertCommitted(inner, _, _) => filesOf(inner)
+  }
+
+  /** Land a batch or streaming commit: the upsert tees' staged
+    * equality-delete files, then every data file. Returns the lines to
+    * add, rendered inside the claim closure where the attempted version
+    * is known: `#eqdels` (explicit sequencing — see ManifestEqDeletes),
+    * the fresh entries with their riders, and `#born` marks. */
+  def landTasks(fs: FileSystem, dir: Path, staging: Path,
+      messages: Array[WriterCommitMessage], schema: StructType,
+      upsertKeys: Seq[Int], bucketSpec: Option[(Int, Int)] = None):
+      (Array[String], Int) => Array[String] = {
+    val eqdelFins = messages.collect {
+      case ManifestEqDeletes.UpsertCommitted(_, Some(tmp), _) =>
+        rename(fs, dir, staging, tmp)
+    }
+    val files = messages.flatMap(filesOf)
+    val fresh = files.flatMap(land(fs, dir, staging, _, bucketSpec))
+    val freshNames = files.map(_.name.stripSuffix(".tmp"))
+    val eqPositions = upsertKeys.map(k =>
+      ManifestFiles.physPos(schema, k)).mkString(";")
+    (previous, version) => {
+      val eqdels = eqdelFins.map(f => s"#eqdels,$f,$eqPositions,$version")
+      // merge-on-read tables mark every entry's BIRTH version so later
+      // equality deletes can scope around it; elsewhere the marker is
+      // dead weight and stays absent
+      val born: Array[String] =
+        if (ManifestFiles.isMergeOnRead(previous) || eqdelFins.nonEmpty)
+          freshNames.map(n => ManifestFiles.bornLine(n, version))
+        else Array.empty
+      eqdels ++ fresh ++ born
+    }
+  }
+
+  private def create(path: String, stagingName: String, name: String,
+      schema: StructType, conf: SerializableHadoopConf, spec: WriteSpec,
+      injectFailure: Boolean, bucket: Int,
+      sortPos: Option[(Int, Boolean, Boolean)],
       // row lineage REWRITE: index in the incoming row holding the
       // carried `_row_id` (after the data columns); >= 0 materializes it
       // into the file's `_rid` column and marks the commit `#ridcol`
-      ridIdx: Int = -1,
+      ridIdx: Int,
       // row lineage through COPY-ON-WRITE row-level plans: Spark's
       // DataAndMetadataWritingSparkTask delivers each row's projected
       // METADATA row through the two-argument `write(metadata, row)` —
       // our requiredMetadataAttributes order puts `_row_id` at slot 1
       // (after `_file`) and `_last_updated_version` at slot 2; true
       // materializes both exactly like ridIdx/luvIdx
-      ridFromMeta: Boolean = false,
+      ridFromMeta: Boolean,
       // `_last_updated_version` carry: index in the incoming row (after
       // the data columns and the carried `_row_id`); >= 0 materializes
       // it into the file's `_luv` column and marks the commit `#luvcol`
-      luvIdx: Int = -1,
-      // declared variant.shred paths: (schema idx of the variant column,
-      // spec index for the synthetic #stats position, JSON path, typed
-      // extraction domain) — see ManifestShred
-      shred: Array[(Int, Int, String, DataType)] = Array.empty):
-      DataWriter[InternalRow] =
+      luvIdx: Int): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
+      private val ndvPos = spec.ndvPos
+      private val histPos = spec.histPos
+      private val shred = spec.shred
       private val file = new Path(new Path(path, stagingName), name)
       private val fs: FileSystem = file.getFileSystem(conf.value)
       private val withRid = ridIdx >= 0 || ridFromMeta
@@ -1512,42 +1592,22 @@ private[sources] object ManifestWriters {
         buf.toArray
       }
       private val leafNulls = new Array[Long](leaves.length)
-      private val leafMins = new Array[Any](leaves.length)
-      private val leafMaxs = new Array[Any](leaves.length)
-      private val leafRawMins = new Array[String](leaves.length)
-      private val leafRawMaxs = new Array[String](leaves.length)
+      private val leafTrackers: Array[ManifestColTrackers.Tracker] =
+        leaves.map(l => ManifestColTrackers.forType(l._4))
 
       private def trackLeaves(r: InternalRow): Unit = {
         var li = 0
         while (li < leaves.length) {
-          val (_, steps, ord, dt) = leaves(li)
-          var cur: org.apache.spark.sql.catalyst.expressions.SpecializedGetters = r
-          var nul = false
+          val (_, steps, ord, _) = leaves(li)
+          var cur = r
           var si = 0
-          while (si < steps.length && !nul) {
+          while (si < steps.length && cur != null) {
             val (o, n) = steps(si)
-            if (cur.isNullAt(o)) nul = true
-            else cur = cur.getStruct(o, n)
+            cur = if (cur.isNullAt(o)) null else cur.getStruct(o, n)
             si += 1
           }
-          if (nul || cur.isNullAt(ord)) leafNulls(li) += 1
-          else {
-            val v = cur.get(ord, dt)
-            ManifestSkip.normalize(dt, v).foreach { nv =>
-              val kept = nv match {
-                case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-                case other => other
-              }
-              if (leafMins(li) == null || ordered(kept, leafMins(li)) < 0) {
-                leafMins(li) = kept
-                leafRawMins(li) = String.valueOf(v)
-              }
-              if (leafMaxs(li) == null || ordered(kept, leafMaxs(li)) > 0) {
-                leafMaxs(li) = kept
-                leafRawMaxs(li) = String.valueOf(v)
-              }
-            }
-          }
+          if (cur == null || cur.isNullAt(ord)) leafNulls(li) += 1
+          else leafTrackers(li).add(cur, ord)
           li += 1
         }
       }
@@ -1582,34 +1642,24 @@ private[sources] object ManifestWriters {
             dt, failOnError = true, timeZoneId = Some("UTC"))
         }
       private val shredNulls = new Array[Long](shred.length)
-      private val shredMins = new Array[Any](shred.length)
-      private val shredMaxs = new Array[Any](shred.length)
-      private val shredRawMins = new Array[String](shred.length)
-      private val shredRawMaxs = new Array[String](shred.length)
+      private val shredTrackers: Array[ManifestColTrackers.Tracker] =
+        shred.map(s => ManifestColTrackers.forType(s._4))
+      // the extracted value, reused as the trackers' one-slot row
+      private val shredSlot =
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
       private val shredDirty = new Array[Boolean](shred.length)
 
       private def trackShred(r: InternalRow): Unit = {
         var si = 0
         while (si < shred.length) {
           if (!shredDirty(si)) {
-            val dt = shred(si)._4
             val v = try shredEvals(si).eval(r)
               catch { case _: Exception => shredDirty(si) = true; null }
             if (!shredDirty(si)) {
               if (v == null) shredNulls(si) += 1
-              else ManifestSkip.normalize(dt, v).foreach { nv =>
-                val kept = nv match {
-                  case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-                  case other => other
-                }
-                if (shredMins(si) == null || ordered(kept, shredMins(si)) < 0) {
-                  shredMins(si) = kept
-                  shredRawMins(si) = String.valueOf(v)
-                }
-                if (shredMaxs(si) == null || ordered(kept, shredMaxs(si)) > 0) {
-                  shredMaxs(si) = kept
-                  shredRawMaxs(si) = String.valueOf(v)
-                }
+              else {
+                shredSlot.update(0, v)
+                shredTrackers(si).add(shredSlot, 0)
               }
             }
           }
@@ -1739,46 +1789,20 @@ private[sources] object ManifestWriters {
       override def commit(): WriterCommitMessage = {
         closeOut()
         val bytes = fs.getFileStatus(file).getLen
-        // Non-orderable columns (arrays / binary / structs) get NO stats
-        // entry: bounds are meaningless and a (nulls, absent, absent)
-        // record would collide with the all-null pattern. Absent stats =
-        // never skipped, the format's standing conservative contract.
-        val stats = schema.indices
-          .filter(i => ManifestSkip.statsCapable(schema(i).dataType))
-          .map { i =>
-          // String bounds truncate (Iceberg's prefix / prefix+increment
-          // rule — ManifestFiles.truncLower/truncUpper) so the manifest
-          // scales with file count, not value size; numerics are exact.
-          // (statsCapable types are exactly those with a column tracker)
-          val t = colTrackers(i)
-          val (mn, mx) =
-            if (schema(i).dataType == StringType)
-              (Option(t.rawMin).map(ManifestFiles.truncLower),
-                Option(t.rawMax).flatMap(ManifestFiles.truncUpper))
-            else (Option(t.rawMin), Option(t.rawMax))
-          ManifestFiles.physPos(schema, i) ->
-            ManifestFiles.ColStats(nulls(i), mn, mx)
-        }
+        // Non-orderable columns (arrays / binary / structs) have no
+        // tracker and get NO stats entry: bounds are meaningless and a
+        // (nulls, absent, absent) record would collide with the all-null
+        // pattern. Absent stats = never skipped, the format's standing
+        // conservative contract.
+        val stats = schema.indices.filter(colTrackers(_) != null).map(i =>
+          ManifestFiles.physPos(schema, i) -> colTrackers(i).stats(nulls(i)))
         val shredStats = shred.indices.collect {
           case si if !shredDirty(si) =>
-            val dt = shred(si)._4
-            val (mn, mx) =
-              if (dt == StringType)
-                (Option(shredRawMins(si)).map(ManifestFiles.truncLower),
-                  Option(shredRawMaxs(si)).flatMap(ManifestFiles.truncUpper))
-              else (Option(shredRawMins(si)), Option(shredRawMaxs(si)))
             (ManifestShred.PosBase + shred(si)._2) ->
-              ManifestFiles.ColStats(shredNulls(si), mn, mx)
+              shredTrackers(si).stats(shredNulls(si))
         }
-        val nested = leaves.indices.map { li =>
-          val dt = leaves(li)._4
-          val (mn, mx) =
-            if (dt == StringType)
-              (Option(leafRawMins(li)).map(ManifestFiles.truncLower),
-                Option(leafRawMaxs(li)).flatMap(ManifestFiles.truncUpper))
-            else (Option(leafRawMins(li)), Option(leafRawMaxs(li)))
-          leaves(li)._1 -> ManifestFiles.ColStats(leafNulls(li), mn, mx)
-        }
+        val nested = leaves.indices.map(li =>
+          leaves(li)._1 -> leafTrackers(li).stats(leafNulls(li)))
         val ndv = ndvPos.indices.map(ni =>
           ManifestFiles.physPos(schema, ndvPos(ni)) -> ndvRegs(ni))
         val hist = histPos.indices.collect {
@@ -1787,7 +1811,9 @@ private[sources] object ManifestWriters {
               histTrackers(hi).result()
         }
         FileCommitted(name, rows, bytes, stats ++ shredStats, bucket,
-          sortedOk, nested, ndv, hist, ridCol = withRid, luvCol = withLuv)
+          sortPos.filter(_ => sortedOk).map { case (p, desc, nullsLast) =>
+            (ManifestFiles.physPos(schema, p), desc, nullsLast) },
+          nested, ndv, hist, ridCol = withRid, luvCol = withLuv)
       }
       override def abort(): Unit = {
         try closeOut() catch { case _: Exception => }
@@ -1797,106 +1823,41 @@ private[sources] object ManifestWriters {
     }
 }
 
-private[sources] class ManifestStreamWriterFactory(path: String,
-    stagingName: String, schema: StructType, conf: SerializableHadoopConf,
-    // declared days/months/identity layout: 24/7 streaming ingest lands
-    // value-pure files too, so retention deletes stay metadata-only on
-    // streamed history (round 12; the epoch prefix keeps the abort
-    // sweep's per-epoch selector working)
-    partSpec: Seq[(Int, String)] = Seq.empty,
-    checks: Seq[(String, String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Seq.empty,
-    upsertKeys: Array[Int] = Array.empty,
-    ndvPos: Array[Int] = Array.empty,
-    histPos: Array[Int] = Array.empty,
-    shred: Array[(Int, Int, String, DataType)] = Array.empty)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    val base =
-      if (partSpec.isEmpty)
-        ManifestWriters.create(path, stagingName,
-          f"part-e$epochId-$partitionId%05d-$taskId.parquet.tmp",
-          schema, conf, injectFailure = false, ndvPos = ndvPos,
-          histPos = histPos, shred = shred)
-      else
-        new PartitionSplitWriter(path, stagingName, schema, conf,
-          f"part-e$epochId-$partitionId%05d-$taskId",
-          partSpec.map { case (idx, kind) =>
-            (idx, kind, schema(idx).dataType) },
-          ndvPos = ndvPos, histPos = histPos, shred = shred)
-    val teed =
-      if (upsertKeys.isEmpty) base
-      // the epoch-prefixed staged name keeps abort's per-epoch sweep
-      // and the replayed-epoch cleanup working unchanged
-      else ManifestEqDeletes.tee(base, schema, upsertKeys, path, stagingName,
-        f"part-e$epochId-$partitionId%05d-$taskId.eqdel.tmp", conf)
-    ManifestChecks.wrap(teed, checks, schema)
-  }
-}
-
+/** Task-writer factory of the batch AND streaming routes — they differ
+  * only by the staged-name prefix: streaming prefixes the epoch, so
+  * retried epochs never collide with committed files and abort's
+  * per-epoch sweep can select them. */
 private[sources] class ManifestWriterFactory(path: String, stagingName: String,
-    failPartition: Int, schema: StructType,
-    conf: SerializableHadoopConf,
+    schema: StructType, conf: SerializableHadoopConf, spec: WriteSpec,
+    failPartition: Int = -1,
     // bucketed write: the task's partitionId IS its bucket id (the
     // required distribution pinned partitioning to pmod(murmur3(col), n))
     recordBucket: Boolean = false,
     sortPos: Option[(Int, Boolean, Boolean)] = None,
-    // (schema index, kind) per declared days/months/identity transform,
-    // in declared order: the task splits its rows into one staged file
-    // per COMPOSITE partition value
-    partSpec: Seq[(Int, String)] = Seq.empty,
-    // bound CHECK constraints, enforced on every row before it reaches
-    // any inner writer (see ManifestChecks)
-    checks: Seq[(String, String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Seq.empty,
-    // CDC upsert key indices — wraps each writer with the equality-
-    // delete tee (see ManifestEqDeletes.tee)
     upsertKeys: Array[Int] = Array.empty,
-    // declared stats.ndv.columns as schema indices (per-file sketches)
-    ndvPos: Array[Int] = Array.empty,
-    // declared stats.histogram.columns as schema indices (ManifestHist)
-    histPos: Array[Int] = Array.empty,
     // row lineage: incoming-row index of the carried `_row_id` (-1 none)
     ridIdx: Int = -1,
     // row lineage via the COW metadata channel
     ridFromMeta: Boolean = false,
     // `_last_updated_version`: incoming-row index of the carried value
-    luvIdx: Int = -1,
-    // declared variant.shred paths (ManifestShred)
-    shred: Array[(Int, Int, String, DataType)] = Array.empty)
-    extends DataWriterFactory {
+    luvIdx: Int = -1)
+    extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] = {
-    val base =
-      if (partSpec.isEmpty)
-        ManifestWriters.create(path, stagingName,
-          f"part-$partitionId%05d-$taskId.parquet.tmp",
-          schema, conf,
-          injectFailure = partitionId == failPartition,
-          bucket = if (recordBucket) partitionId else -1,
-          sortPos = sortPos, ndvPos = ndvPos, histPos = histPos,
-          ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx,
-          shred = shred)
-      else
-        new PartitionSplitWriter(path, stagingName, schema, conf,
-          f"part-$partitionId%05d-$taskId",
-          partSpec.map { case (idx, kind) =>
-            (idx, kind, schema(idx).dataType) },
-          sortPos = sortPos,
-          // MIXED layout (bucket + transforms): each task IS one bucket
-          // (clustered distribution), so every split file inherits the
-          // task's bucket id — files land pure on both dimensions
-          bucket = if (recordBucket) partitionId else -1,
-          ndvPos = ndvPos, histPos = histPos, ridIdx = ridIdx,
-          ridFromMeta = ridFromMeta, luvIdx = luvIdx, shred = shred)
-    val teed =
-      if (upsertKeys.isEmpty) base
-      else ManifestEqDeletes.tee(base, schema, upsertKeys, path, stagingName,
-        f"part-$partitionId%05d-$taskId.eqdel.tmp", conf)
-    ManifestChecks.wrap(teed, checks, schema)
-  }
+      taskId: Long): DataWriter[InternalRow] =
+    open(f"part-$partitionId%05d-$taskId", partitionId)
+
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    open(f"part-e$epochId-$partitionId%05d-$taskId", partitionId)
+
+  private def open(prefix: String, partitionId: Int): DataWriter[InternalRow] =
+    ManifestWriters.task(path, stagingName, prefix, schema, conf, spec,
+      injectFailure = partitionId == failPartition,
+      bucket = if (recordBucket) partitionId else -1,
+      sortPos = sortPos, upsertKeys = upsertKeys,
+      ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx)
 }
 
 /** Partition-splitting task writer for days/months/identity layouts:
@@ -1908,25 +1869,15 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
   * INSERT lands ~one file per day regardless of parallelism, which is
   * exactly the layout `DELETE WHERE ts < cutoff` needs to stay
   * metadata-only. Rows with a NULL partition value get their own file.
-  * Each inner writer is the standard staged writer (stats, payload,
-  * abort semantics all shared); the task's commit message carries every
+  * Each inner writer is the standard staged writer `newFile(n)` opens
+  * for the task's n-th value (stats, payload, abort semantics all
+  * shared); rows arrive ordered (partition cols, sort cols), so each
+  * file streams ordered on a declared sort key and earns its own
+  * verified `#sorted` mark. The task's commit message carries every
   * file it produced. */
-private[sources] class PartitionSplitWriter(path: String, stagingName: String,
-    schema: StructType, conf: SerializableHadoopConf, namePrefix: String,
+private[sources] class PartitionSplitWriter(
     specs: Seq[(Int, String, DataType)],
-    // declared write.sort-order's leading column: rows arrive ordered
-    // (partition cols, sort cols), so each per-value inner file streams
-    // non-decreasing in it and earns its own verified `#sorted` mark
-    sortPos: Option[(Int, Boolean, Boolean)] = None,
-    // ≥0 on a mixed bucket+transform layout: the task's bucket id, which
-    // every split file records via its `#bucket` line
-    bucket: Int = -1,
-    ndvPos: Array[Int] = Array.empty,
-    histPos: Array[Int] = Array.empty,
-    ridIdx: Int = -1,
-    ridFromMeta: Boolean = false,
-    luvIdx: Int = -1,
-    shred: Array[(Int, Int, String, DataType)] = Array.empty)
+    newFile: Int => DataWriter[InternalRow])
     extends DataWriter[InternalRow] {
 
   private val writers = scala.collection.mutable
@@ -1994,15 +1945,7 @@ private[sources] class PartitionSplitWriter(path: String, stagingName: String,
     specsArr.map { case (i, k, dt) => keyAt(row, i, k, dt) }.toList
 
   private def writerFor(row: InternalRow): DataWriter[InternalRow] =
-    writers.getOrElseUpdate(key(row), {
-      val seq = writers.size
-      ManifestWriters.create(path, stagingName,
-        s"$namePrefix-s$seq.parquet.tmp",
-        schema, conf, injectFailure = false, bucket = bucket,
-        sortPos = sortPos, ndvPos = ndvPos, histPos = histPos,
-        ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx,
-        shred = shred)
-    })
+    writers.getOrElseUpdate(key(row), newFile(writers.size))
 
   override def write(row: InternalRow): Unit = writerFor(row).write(row)
 
@@ -2047,31 +1990,17 @@ private[sources] class ManifestStreamingWrite(path: String, queryId: String,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    // declared days/months/identity layout (see ManifestBatchWrite):
-    // each micro-batch's tasks split output per partition value, so
-    // streamed history keeps retention deletes metadata-only. Without a
-    // demanded distribution the per-epoch file count is tasks × values
-    // touched this epoch — for time layouts an epoch usually touches
-    // one or two days, so the cost stays near one file per task.
-    val lines =
-      try ManifestFiles.latestLines(
-        new Path(path).getFileSystem(conf.value), new Path(path))
-      catch { case _: Exception => Array.empty[String] }
-    val partSpec: Seq[(Int, String)] =
-      ManifestFiles.partConfs(lines).flatMap { case (pos, kind) =>
-        ManifestFiles.fieldAtPhys(schema, pos).map(idx => (idx, kind)) }
-    ManifestParquet.setBloomCols(conf.value,
-      ManifestFiles.bloomFromLines(lines))
-    new ManifestStreamWriterFactory(path, stagingName, schema, conf, partSpec,
-      checks = ManifestChecks.bind(SparkSession.active, schema,
-        ManifestFiles.checksFromLines(lines)),
-      upsertKeys = upsertKeys.toArray,
-      ndvPos = (ManifestFiles.ndvFromLines(lines) ++
-          ManifestFiles.histDeclFromLines(lines)).distinct
-        .flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray,
-      histPos = ManifestFiles.histDeclFromLines(lines)
-        .flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray,
-      shred = ManifestShred.writerSpecs(lines, schema))
+    // declared days/months/identity layout: each micro-batch's tasks
+    // split output per partition value, so streamed history keeps
+    // retention deletes metadata-only. Without a demanded distribution
+    // the per-epoch file count is tasks × values touched this epoch —
+    // for time layouts an epoch usually touches one or two days, so the
+    // cost stays near one file per task.
+    val lines = ManifestFiles.latestLines(
+      new Path(path).getFileSystem(conf.value), new Path(path))
+    new ManifestWriterFactory(path, stagingName, schema, conf,
+      WriteSpec.of(lines, schema, conf.value, maintenance = false),
+      upsertKeys = upsertKeys.toArray)
   }
 
   override def commit(epochId: Long,
@@ -2094,44 +2023,12 @@ private[sources] class ManifestStreamingWrite(path: String, queryId: String,
       messages.foreach(sweep)
       return
     }
-    def landOne(m: FileCommitted): Seq[String] = {
-      val fin = m.name.stripSuffix(".tmp")
-      val ok = fs.rename(new Path(staging, m.name), new Path(dir, fin))
-      require(ok, s"staged file ${m.name} vanished before commit")
-      Seq(s"$fin,${m.rows}",
-        ManifestFiles.statsLine(fin, m.bytes, m.stats, m.nestedStats)) ++
-        (if (m.ndv.nonEmpty) Seq(ManifestNdv.line(fin, m.ndv)) else Nil) ++
-        (if (m.hist.nonEmpty) Seq(ManifestHist.line(fin, m.hist)) else Nil)
-    }
-    val eqdelFins = messages.collect {
-      case ManifestEqDeletes.UpsertCommitted(_, Some(tmp), _) =>
-        val fin = tmp.stripSuffix(".tmp")
-        require(fs.rename(new Path(staging, tmp), new Path(dir, fin)),
-          s"staged equality-delete file $tmp vanished before commit")
-        fin
-    }
-    val fresh = messages.flatMap {
-      case ManifestEqDeletes.UpsertCommitted(inner, _, _) => inner match {
-        case f: FileCommitted => landOne(f)
-        case FilesCommitted(files) => files.flatMap(landOne)
-        case other => throw new IllegalStateException(other.toString)
-      }
-      case f: FileCommitted => landOne(f)
-      case FilesCommitted(files) => files.flatMap(landOne)
-    }
-    val freshNames = fresh.filterNot(_.startsWith("#"))
-      .map(l => l.substring(0, l.lastIndexOf(',')))
-    val eqPositions = upsertKeys.map(k =>
-      ManifestFiles.physPos(schema, k)).mkString(";")
-    ManifestFiles.publishSnapshotV(fs, conf.value, dir, (previous, version) => {
-      val eqdels = eqdelFins.map(f => s"#eqdels,$f,$eqPositions,$version")
-      val born: Array[String] =
-        if (ManifestFiles.isMergeOnRead(previous) || eqdelFins.nonEmpty)
-          freshNames.map(n => ManifestFiles.bornLine(n, version))
-        else Array.empty
-      previous.filterNot(_.startsWith(s"#txn,$queryId,")) ++ eqdels ++
-        fresh ++ born :+ s"#txn,$queryId,$epochId"
-    }, schema, branch)
+    val landed = ManifestWriters.landTasks(fs, dir, staging, messages,
+      schema, upsertKeys)
+    ManifestFiles.publishSnapshotV(fs, conf.value, dir, (previous, version) =>
+      previous.filterNot(_.startsWith(s"#txn,$queryId,")) ++
+        landed(previous, version) :+ s"#txn,$queryId,$epochId",
+      schema, branch)
   }
 
   override def abort(epochId: Long,

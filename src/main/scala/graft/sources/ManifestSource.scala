@@ -5518,8 +5518,10 @@ private[sources] object ManifestProcedures {
     * The replacement is ONE atomic commit through the claim loop that
     * drops exactly the scoped entries (validated still-present against
     * the rebased predecessor — a concurrent rewrite aborts us loudly)
-    * and adds the folded files; a declared days/months/identity layout
-    * is preserved via the same partition-splitting task writer. */
+    * and adds the folded files, written through the table's one write
+    * spec and task writer (a declared layout stays split; sketches,
+    * shredded-variant stats and blooms carry; no CHECK evaluates — the
+    * rewrite preserves committed rows). */
   private def compactScoped(spark: SparkSession, dir: Path, fs: FileSystem,
       target: Int, sortBy: String,
       whereStr: String): java.util.Iterator[Scan] = {
@@ -5647,58 +5649,28 @@ private[sources] object ManifestProcedures {
       }
       val token = java.util.UUID.randomUUID().toString.take(8)
       val stagingName = s".staging-compactw-$token"
-      val partSpec: Seq[(Int, String, DataType)] =
-        ManifestFiles.partConfs(lines).flatMap { case (pos, kind) =>
-          ManifestFiles.fieldAtPhys(schemaNow, pos)
-            .map(i => (i, kind, schemaNow(i).dataType)) }
+      // a row-preserving rewrite: the table's write spec without CHECKs
+      val spec = WriteSpec.of(lines, schemaNow, hconf, maintenance = true)
       val serConf = new SerializableHadoopConf(hconf)
-      ManifestParquet.setBloomCols(serConf.value,
-        ManifestFiles.bloomFromLines(lines))
       val dirStr = dir.toString
       val schemaB = schemaNow
-      val ndvPos = (ManifestFiles.ndvFromLines(lines) ++
-          ManifestFiles.histDeclFromLines(lines)).distinct
-        .flatMap(ManifestFiles.fieldAtPhys(schemaB, _)).toArray
-      val histPosC = ManifestFiles.histDeclFromLines(lines)
-        .flatMap(ManifestFiles.fieldAtPhys(schemaB, _)).toArray
       val ridAt = if (lineage) schemaB.length else -1
       val luvAt = if (lineage) schemaB.length + 1 else -1
       val msgs: Array[FileCommitted] =
         arranged.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
           if (!rows.hasNext) Iterator.empty
           else {
-            val w =
-              if (partSpec.isEmpty)
-                ManifestWriters.create(dirStr, stagingName,
-                  f"part-cw$token-$pid%05d.parquet.tmp",
-                  schemaB, serConf, injectFailure = false, ndvPos = ndvPos,
-                  histPos = histPosC, ridIdx = ridAt, luvIdx = luvAt)
-              else new PartitionSplitWriter(dirStr, stagingName, schemaB,
-                serConf, f"part-cw$token-$pid%05d", partSpec,
-                ndvPos = ndvPos, histPos = histPosC,
-                ridIdx = ridAt, luvIdx = luvAt)
+            val w = ManifestWriters.task(dirStr, stagingName,
+              f"part-cw$token-$pid%05d", schemaB, serConf, spec,
+              ridIdx = ridAt, luvIdx = luvAt)
             try {
               rows.foreach(w.write)
-              w.commit() match {
-                case f: FileCommitted => Iterator(f)
-                case FilesCommitted(files) => files.iterator
-              }
+              ManifestWriters.filesOf(w.commit()).iterator
             } catch { case e: Throwable => w.abort(); throw e }
           }
         }.collect()
       val staging = new Path(dir, stagingName)
-      val fresh = msgs.flatMap { (m: FileCommitted) =>
-        val fin = m.name.stripSuffix(".tmp")
-        require(fs.rename(new Path(staging, m.name), new Path(dir, fin)),
-          s"staged file ${m.name} vanished before commit")
-        Seq(s"$fin,${m.rows}",
-          ManifestFiles.statsLine(fin, m.bytes, m.stats, m.nestedStats)) ++
-          (if (m.ndv.nonEmpty) Seq(ManifestNdv.line(fin, m.ndv)) else Nil) ++
-          (if (m.hist.nonEmpty)
-            Seq(ManifestHist.line(fin, m.hist)) else Nil) ++
-          (if (m.ridCol) Seq(ManifestFiles.ridColLine(fin)) else Nil) ++
-          (if (m.luvCol) Seq(ManifestFiles.luvColLine(fin)) else Nil)
-      }
+      val fresh = msgs.flatMap(ManifestWriters.land(fs, dir, staging, _))
       val selSet = sel.toSet
       val v = ManifestFiles.publishSnapshotV(fs, hconf, dir, (previous, version) => {
         val present = previous.flatMap(ManifestSink.entryName).toSet

@@ -320,6 +320,34 @@ class ManifestAddFilesSpec extends AnyFunSuite {
     assert(spark.table(s"$cat.lake").filter($"s".isNull).count() == 1L)
   }
 
+  test("integral partition directories must fit the column: SMALLINT " +
+    "refuses p=70000 and TINYINT p=300 at import, in-range values land") {
+    import spark.implicits._
+    val root = tmpDir()
+    val cat = register(root)
+    def landing(name: String, ps: Seq[Int]): String = {
+      val dir = s"$root/$name"
+      ps.map(p => (p, p.toLong)).toDF("p", "v")
+        .write.partitionBy("p").mode("overwrite").parquet(dir)
+      dir
+    }
+    def addFiles(table: String, dir: String) = spark.sql(
+      s"CALL $cat.system.add_files('$table', '$dir', 'p=*/*.parquet')")
+      .collect()
+    spark.sql(s"CREATE TABLE $cat.s (p SMALLINT, v BIGINT)")
+    val e = intercept[Exception](addFiles("s", landing("wide", Seq(5, 70000))))
+    assert(e.getMessage.contains("70000") && e.getMessage.contains("SMALLINT"),
+      e.getMessage)
+    assert(spark.table(s"$cat.s").count() == 0L, "a refused import lands nothing")
+    addFiles("s", landing("fits", Seq(-32768, 32767)))
+    assert(spark.table(s"$cat.s").orderBy($"v").collect()
+      .map(_.getShort(0).toInt).toSeq == Seq(-32768, 32767))
+    spark.sql(s"CREATE TABLE $cat.b (p TINYINT, v BIGINT)")
+    val e2 = intercept[Exception](addFiles("b", landing("tiny", Seq(300))))
+    assert(e2.getMessage.contains("300") && e2.getMessage.contains("TINYINT"),
+      e2.getMessage)
+  }
+
   test("lifted stats align metadata-level operations: a delete aligned " +
     "on imported day-pure files stays metadata-only") {
     import spark.implicits._

@@ -7,10 +7,12 @@ import graft.GraftSession
 
 /** CHECK constraints (round 12 — Delta's `delta.constraints.*`):
   * declared via `TBLPROPERTIES('check.<name>'='<expr>')`, validated by
-  * real analysis at DDL/ALTER time, enforced on EVERY write route at
-  * the commit boundary — a violating row aborts the whole batch and
-  * the table keeps its pre-batch state. TRUE and NULL pass; only FALSE
-  * violates (SQL three-valued CHECK). */
+  * real analysis at DDL/ALTER time, enforced at the commit boundary on
+  * every write route that brings rows in — a violating row aborts the
+  * whole batch and the table keeps its pre-batch state. Row-preserving
+  * maintenance rewrites (compact, Z-order) evaluate none, matching ADD
+  * CONSTRAINT's no-retro-validation rule. TRUE and NULL pass; only
+  * FALSE violates (SQL three-valued CHECK). */
 class ManifestChecksSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.local(4)
@@ -62,13 +64,18 @@ class ManifestChecksSpec extends AnyFunSuite {
       spark.sql(s"UPDATE $cat.t SET v = -5.0 WHERE k = 3")
     }
     assert(spark.table(s"$cat.t").filter($"v" < 0).count() == 0L)
-    // merge-on-read insert files validate too
+    // merge-on-read insert files validate too (the WHEN MATCHED clause
+    // keeps the MERGE a delta write: Spark plans an insert-only MERGE
+    // as a plain append)
     spark.sql(s"ALTER TABLE $cat.t " +
       "SET TBLPROPERTIES('delete.mode'='merge-on-read')")
-    intercept[Exception] {
+    val mor = intercept[Exception] {
       spark.sql(s"""MERGE INTO $cat.t USING (SELECT 999 AS k, -1.0 AS v) s
-        ON $cat.t.k = s.k WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""")
+        ON $cat.t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v
+        WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""")
     }
+    assert(mor.getMessage.contains("CHECK constraint 'positive'"),
+      mor.getMessage)
     assert(spark.table(s"$cat.t").count() == 20L)
     // streaming epochs validate; the good prefix before the bad batch
     // stays, the bad epoch aborts
@@ -89,6 +96,38 @@ class ManifestChecksSpec extends AnyFunSuite {
     input.addData(-3.0)
     assert(!drain(), "violating epoch must fail the stream")
     assert(spark.table(s"$cat.t").filter($"v" < 0).count() == 0L)
+  }
+
+  test("row-preserving maintenance evaluates no CHECK: scoped, Z-order " +
+    "and full compact fold rows a later constraint rejects, unchanged") {
+    val (cat, root) = freshCat("maint")
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v DOUBLE)")
+    def slice(lo: Int, hi: Int): Unit =
+      spark.range(lo, hi).select($"id".as("k"), ($"id" - 10).cast("double")
+        .as("v")).coalesce(1).writeTo(s"$cat.t").append()
+    slice(0, 20); slice(20, 40); slice(40, 60)
+    // rows k < 10 violate the new constraint; ADD CONSTRAINT does not
+    // retro-validate them
+    spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES('check.positive'='v >= 0')")
+    def rows() = spark.table(s"$cat.t").orderBy($"k").collect().toSeq
+    val before = rows()
+    assert(before.count(_.getDouble(1) < 0) == 10)
+    def files(): Int = {
+      val dir = new org.apache.hadoop.fs.Path(root, "t")
+      ManifestFiles.entries(dir.getFileSystem(
+        spark.sessionState.newHadoopConf()), dir, None).length
+    }
+    spark.sql(s"CALL $cat.system.compact('t', 1, '', 'k < 40')").collect()
+    assert(files() == 2 && rows() == before)
+    spark.sql(s"CALL $cat.system.compact('t', 2, 'k,v')").collect()
+    assert(rows() == before)
+    spark.sql(s"CALL $cat.system.compact('t', 1)").collect()
+    assert(files() == 1 && rows() == before)
+    // writes that bring rows in still enforce
+    intercept[Exception] {
+      Seq((100L, -1.0)).toDF("k", "v").writeTo(s"$cat.t").append()
+    }
+    assert(rows() == before)
   }
 
   test("DDL validation and evolution: bad expressions fail at declare " +
