@@ -27,7 +27,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     (stats, payload, two-phase commit, CHECKs, NDV/histogram
   *     sketches, shredded-variant stats and bloom filters all shared;
   *     only the partition split is skipped — see
-  *     ManifestDeltaBatchWrite);
+  *     ManifestDeltaOperation.newWriteBuilder);
   *   - scans apply delete files at plan time (`ManifestScan.deleteMap` →
   *     per-partition sorted ordinals, skipped as rows stream); `CALL
   *     compact` MATERIALIZES deletes — the rewrite reads through the
@@ -60,8 +60,15 @@ private[sources] class ManifestDeltaOperation(
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"),
       org.apache.spark.sql.connector.expressions.Expressions.column("_pos"))
 
-  private lazy val lineage: Boolean = ManifestFiles.isLineageAt(
-    new Path(path), SparkSession.active.sessionState.newHadoopConf())
+  // the table head, read ONCE per operation: lineage decides the update
+  // representation and the metadata columns, and the insert files'
+  // write spec derives from the same lines (see ManifestRowLevelOperation)
+  private lazy val headLines: Array[String] = {
+    val dir = new Path(path)
+    ManifestFiles.latestLines(
+      dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), dir)
+  }
+  private lazy val lineage: Boolean = ManifestFiles.isLineage(headLines)
 
   /** ROW LINEAGE through merge-on-read updates: with lineage on, an
     * UPDATE stays an UPDATE (not delete+insert), so `update(metadata,
@@ -81,12 +88,18 @@ private[sources] class ManifestDeltaOperation(
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = new DeltaWrite {
-        override def toBatch: DeltaBatchWrite = new ManifestDeltaBatchWrite(
-          path, info.queryId(),
-          if (tableSchema.nonEmpty) tableSchema else info.schema(),
-          new SerializableHadoopConf(
-            SparkSession.active.sessionState.newHadoopConf()),
-          carryRowIds = lineage)
+        override def toBatch: DeltaBatchWrite = {
+          val schema = if (tableSchema.nonEmpty) tableSchema else info.schema()
+          val conf = new SerializableHadoopConf(
+            SparkSession.active.sessionState.newHadoopConf())
+          // Insert files land UNSPLIT on a partitioned table: the delta
+          // write requests no clustered distribution, so splitting would
+          // open one file per partition value in every task.
+          val spec = WriteSpec.of(headLines, schema, conf.value,
+            maintenance = false).copy(partSpec = Seq.empty)
+          new ManifestDeltaBatchWrite(path, info.queryId(), schema, conf,
+            spec, carryRowIds = lineage)
+        }
       }
     }
 }
@@ -100,7 +113,7 @@ private[sources] case class DeltaCommitted(
   * lines. Nothing is ever dropped from the predecessor — that is the
   * whole point of merge-on-read. */
 private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
-    schema: StructType, conf: SerializableHadoopConf,
+    schema: StructType, conf: SerializableHadoopConf, spec: WriteSpec,
     // row lineage: updates carry their target row's id into `#ridcol`
     // insert files (see ManifestDeltaOperation.requiredMetadataAttributes)
     carryRowIds: Boolean = false) extends DeltaBatchWrite {
@@ -108,19 +121,9 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
   private val stagingName = s".staging-$queryId"
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DeltaWriterFactory = {
-    // no catch: an unreadable table or a bind failure must fail the
-    // write, not skip validation
-    val lines = ManifestFiles.latestLines(
-      new Path(path).getFileSystem(conf.value), new Path(path))
-    // Insert files land UNSPLIT on a partitioned table: the delta write
-    // requests no clustered distribution, so splitting would open one
-    // file per partition value in every task.
-    val spec = WriteSpec.of(lines, schema, conf.value, maintenance = false)
-      .copy(partSpec = Seq.empty)
+      info: PhysicalWriteInfo): DeltaWriterFactory =
     new ManifestDeltaWriterFactory(path, stagingName, schema, conf, spec,
       carryRowIds = carryRowIds)
-  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)

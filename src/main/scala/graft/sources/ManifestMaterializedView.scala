@@ -902,15 +902,8 @@ object ManifestMaterializedView {
         recompute.join(r.select(d.groupBy.map(col): _*),
           d.groupBy, "left_anti"))
     }
-    if (nDead > 0 || (recomputed.isDefined && dead.take(1).nonEmpty)) {
-      val view = "graft_mv_dead_" + java.lang.Long.toUnsignedString(
-        Thread.currentThread().getId)
-      dead.createOrReplaceTempView(view)
-      val keyTuple = d.groupBy.mkString("(", ", ", ")")
-      spark.sql(s"DELETE FROM $catalog.$mv WHERE $keyTuple IN " +
-        s"(SELECT ${d.groupBy.mkString(", ")} FROM $view)")
-      spark.catalog.dropTempView(view)
-    }
+    if (nDead > 0 || (recomputed.isDefined && dead.take(1).nonEmpty))
+      deleteGroups(spark, catalog, mv, d.groupBy, dead)
     val landed = next.copy(
       mvVersion = ManifestFiles.latestComplete(fs, mvDir))
     publishDef(fs, mvDir, landed, expectFresh = false)
@@ -918,6 +911,20 @@ object ManifestMaterializedView {
     } finally {
       if (joined != null) joined.unpersist()
     }
+  }
+
+  /** Delete the MV's groups whose keys `dead` holds: one `DELETE …
+    * WHERE (keys) IN (SELECT keys FROM <temp view>)` through the catalog,
+    * the view named per thread. */
+  private def deleteGroups(spark: SparkSession, catalog: String, mv: String,
+      groupBy: Seq[String], dead: DataFrame): Unit = {
+    val view = "graft_mv_dead_" + java.lang.Long.toUnsignedString(
+      Thread.currentThread().getId)
+    dead.createOrReplaceTempView(view)
+    spark.sql(s"DELETE FROM $catalog.$mv WHERE " +
+      s"${groupBy.mkString("(", ", ", ")")} IN " +
+      s"(SELECT ${groupBy.mkString(", ")} FROM $view)")
+    spark.catalog.dropTempView(view)
   }
 
   /** Test-visible: full recomputes taken (the dim-delta spec asserts
@@ -955,15 +962,8 @@ object ManifestMaterializedView {
       val dead = pre.select(pinned.groupBy.map(col): _*)
         .join(rows.select(pinned.groupBy.map(col): _*),
           pinned.groupBy, "left_anti")
-      if (dead.take(1).nonEmpty) {
-        val view = "graft_mv_dead_" + java.lang.Long.toUnsignedString(
-          Thread.currentThread().getId)
-        dead.createOrReplaceTempView(view)
-        val keyTuple = pinned.groupBy.mkString("(", ", ", ")")
-        spark.sql(s"DELETE FROM $catalog.$mv WHERE $keyTuple IN " +
-          s"(SELECT ${pinned.groupBy.mkString(", ")} FROM $view)")
-        spark.catalog.dropTempView(view)
-      }
+      if (dead.take(1).nonEmpty)
+        deleteGroups(spark, catalog, mv, pinned.groupBy, dead)
     } finally rows.unpersist()
     val next = pinned.copy(
       mvVersion = ManifestFiles.latestComplete(fs, mvDir))

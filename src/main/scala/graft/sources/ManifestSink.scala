@@ -130,8 +130,8 @@ class ManifestSink extends TableProvider
         if (Option(options.get("changeFeed")).exists(_.toBoolean)) {
           // IO failures PROPAGATE (round-15 advice): quietly deciding
           // "not lineage" on a transient FS error would drop _row_id
-          // from the CDF schema — the silent-corruption mode the
-          // isLineageAt policy exists to prevent. An empty chain reads
+          // from the CDF schema — the silent corruption the row-level
+          // operations' lineage read refuses too. An empty chain reads
           // as Array.empty → false, the one legitimate no-lineage case.
           val lineage =
             ManifestFiles.isLineage(ManifestFiles.latestLines(fs, dir))
@@ -595,6 +595,26 @@ private[sources] class ManifestTable(schema0: StructType,
               "bucketBy and buckets must be set together")
           }
         }
+        // BRANCH writes (write-audit-publish): the commit lands on the
+        // branch's own chain; the branch must exist (create_branch).
+        // Branch chains share main's version numbering (the fork is a
+        // twin of main's v<base>), so version-scoped metadata — `#born`
+        // birth markers, `#eqdels` sequencing — means the same thing on
+        // both chains: upserts stage on branches and live equality
+        // deletes survive the fork, verbatim through fast_forward's
+        // replay.
+        private val branch = Option(info.options.get("branch"))
+          .orElse(Option(properties.get("branch")))
+
+        // The head this write commits onto — main, or the chain named by
+        // `branch` — read ONCE: the layout, the upsert and lineage
+        // checks, the append-schema alignment and the write spec all
+        // derive from it, so a branch obeys its own `#tableconf`. A
+        // missing table reads as empty; an unreadable one fails the plan.
+        private val head = ManifestFiles.head(
+          path.getFileSystem(SparkSession.active.sessionState.newHadoopConf()),
+          path, branch)
+
         // REPLACE TABLE staging (see GraftManifestCatalog.stageReplace):
         // the catalog passes the NEW DDL's #tableconf lines — the write
         // must honor THOSE, never the to-be-replaced table's layout
@@ -604,74 +624,47 @@ private[sources] class ManifestTable(schema0: StructType,
             .orElse(Option(properties.get("replaceConfLines")))
             .map(v => v.split("\n").filter(_.nonEmpty))
 
-        // Declared days/months/identity partition layout (from the
-        // `#tableconf,part` line on disk, so EVERY write route honors it
-        // — catalog INSERTs and path-based appends alike). The write
-        // demands a RANGE distribution + in-partition sort on the
-        // column: clustered rows let the task-side partition-splitting
-        // writer keep one open file at a time, and the file count stays
-        // ~one per partition value instead of tasks × values.
-        private val partLayout: Seq[(Int, String)] =
-          replaceConf match {
-            // a staged CREATE's declared layout references the NEW
-            // schema (fresh positions == indices); staged REPLACE
-            // refuses transforms, so its lines never carry `part`
-            case Some(lines) => ManifestFiles.partConfs(lines)
-              .filter(_._1 < info.schema().length)
-            case None => try {
-              val fs = path.getFileSystem(
-                SparkSession.active.sessionState.newHadoopConf())
-              ManifestFiles.partConfs(ManifestFiles.latestLines(fs, path))
-                .flatMap { case (pos, kind) =>
-                  ManifestFiles.fieldAtPhys(
-                    ManifestFiles.schemaFor(fs, path, None), pos)
-                    .map(idx => (idx, kind))
-                }
-            } catch { case _: Exception => Seq.empty }
-          }
+        // the declared write behaviour this write plans and writes with
+        private val declared: Array[String] = replaceConf.getOrElse(head.lines)
 
-        // Declared `write.sort-order` (the `#tableconf,sortorder` line —
-        // read from disk like the partition layout, so EVERY write route
-        // honors it): schema indices in declared order. The write demands
-        // a PER-TASK lexicographic sort on these columns, appended after
-        // any partition clustering — no shuffle is added to the insert
-        // path (Iceberg's write.distribution-mode=none + sort order);
-        // each landed file is clustered on the keys, earns a verified
+        // schema index of a declared physical position: a staged
+        // CREATE/REPLACE's lines reference the NEW schema (fresh
+        // positions == indices), anything else the head's schema
+        private def declaredIndex(pos: Int): Option[Int] =
+          if (replaceConf.isDefined) Some(pos).filter(_ < info.schema().length)
+          else head.schema.flatMap(ManifestFiles.fieldAtPhys(_, pos))
+
+        // Declared days/months/identity partition layout (the
+        // `#tableconf,part` lines; staged REPLACE refuses transforms, so
+        // its lines never carry `part`). The write demands a RANGE
+        // distribution + in-partition sort on the column: clustered rows
+        // let the task-side partition-splitting writer keep one open
+        // file at a time, and the file count stays ~one per partition
+        // value instead of tasks × values.
+        private val partLayout: Seq[(Int, String)] =
+          ManifestFiles.partConfs(declared).flatMap { case (pos, kind) =>
+            declaredIndex(pos).map(idx => (idx, kind)) }
+
+        // Declared `write.sort-order` (the `#tableconf,sortorder` line):
+        // schema indices in declared order. The write demands a PER-TASK
+        // lexicographic sort on these columns, appended after any
+        // partition clustering — no shuffle is added to the insert path
+        // (Iceberg's write.distribution-mode=none + sort order); each
+        // landed file is clustered on the keys, earns a verified
         // `#sorted` mark on the leading one, and compaction later turns
         // per-file order into disjoint table-wide ranges.
         // range distribution mode (declared with the sort order): an
         // explicit `option("distributionMode", "none")` overrides — the
         // compaction rewrite arranges its own exact-file-count layout
         private val distRange: Boolean =
-          !Option(info.options.get("distributionMode")).contains("none") && {
-            replaceConf match {
-              case Some(lines) => ManifestFiles.distModeRange(lines)
-              case None =>
-                try ManifestFiles.distModeRange(ManifestFiles.latestLines(
-                  path.getFileSystem(
-                    SparkSession.active.sessionState.newHadoopConf()), path))
-                catch { case _: Exception => false }
-            }
-          }
+          !Option(info.options.get("distributionMode")).contains("none") &&
+            ManifestFiles.distModeRange(declared)
 
         // (schema index, desc, nullsLast) per declared sort key — the
         // full Iceberg sort-order surface, directions included
-        private val sortLayout: Seq[(Int, Boolean, Boolean)] = replaceConf match {
-          // a REPLACE's declared order references the NEW schema (fresh
-          // positions == indices)
-          case Some(lines) => ManifestFiles.sortKeysFromLines(lines)
-            .filter(_.pos < info.schema().length)
-            .map(k => (k.pos, k.desc, k.nullsLast))
-          case None =>
-            try {
-              val fs = path.getFileSystem(
-                SparkSession.active.sessionState.newHadoopConf())
-              ManifestFiles.sortKeysFromLines(ManifestFiles.latestLines(fs, path))
-                .flatMap(k => ManifestFiles.fieldAtPhys(
-                  ManifestFiles.schemaFor(fs, path, None), k.pos)
-                  .map(i => (i, k.desc, k.nullsLast)))
-            } catch { case _: Exception => Seq.empty }
-        }
+        private val sortLayout: Seq[(Int, Boolean, Boolean)] =
+          ManifestFiles.sortKeysFromLines(declared).flatMap(k =>
+            declaredIndex(k.pos).map(i => (i, k.desc, k.nullsLast)))
 
         // `option("upsertKeys", "k1[,k2]")` — CDC UPSERT append via
         // EQUALITY DELETES (see ManifestEqDeletes): each task tees its
@@ -685,11 +678,7 @@ private[sources] class ManifestTable(schema0: StructType,
           opt.map { cs =>
             require(bucketSpec.isEmpty,
               "upsertKeys cannot combine with a bucket-clustered write")
-            val lines =
-              try ManifestFiles.latestLines(path.getFileSystem(
-                SparkSession.active.sessionState.newHadoopConf()), path)
-              catch { case _: Exception => Array.empty[String] }
-            require(ManifestFiles.isMergeOnRead(lines),
+            require(ManifestFiles.isMergeOnRead(head.lines),
               "upsertKeys requires a merge-on-read table " +
                 "(TBLPROPERTIES('delete.mode'='merge-on-read')) — " +
                 "equality deletes are a MOR concept")
@@ -784,21 +773,44 @@ private[sources] class ManifestTable(schema0: StructType,
                   .map(keySortOrder)).toArray
             }
 
+        /** The schema this write publishes, after checking the branch
+          * exists. The authoritative previous schema is the head's
+          * published one (schema0 is the DataFrame's own schema on
+          * path-based writes — supportsExternalMetadata). Appends must
+          * align with it positionally (ACCEPT_ANY_SCHEMA paths hand us
+          * the INPUT's column names verbatim — a SQL `INSERT ... VALUES`
+          * arrives as col1/col2/... — so the commit republishes the
+          * names already published); truncate may legitimately rewrite
+          * the schema. */
+        private def targetSchema(incoming: StructType): StructType = {
+          branch.foreach { b =>
+            require(head.version > 0,
+              s"no branch '$b' at $path — CALL create_branch first " +
+                s"(branches: ${ManifestFiles.branches(path.getFileSystem(
+                  SparkSession.active.sessionState.newHadoopConf()), path)
+                  .sorted.mkString(", ")})")
+          }
+          val existing = if (truncateRequested) None else head.schema
+          existing.foreach { e =>
+            val aligned = e.length == incoming.length &&
+              e.fields.zip(incoming.fields).forall { case (t, w) =>
+                ManifestTable.writeCompatible(w.dataType, t.dataType) }
+            if (!aligned) throw new IllegalArgumentException(
+              s"graft-manifest append schema mismatch: table has " +
+                s"${e.simpleString}, write provides ${incoming.simpleString}" +
+                mismatchDetail(e, incoming))
+          }
+          // first write to a fresh table: publish NULLABLE at every level
+          // (Spark's own file sinks do the same) — the first DF's
+          // incidental non-nullability must not reject later appends
+          existing.getOrElse(ManifestTable.nullableSchema(incoming))
+        }
+
         override def toBatch: BatchWrite = {
           if (truncateRequested) require(upsertKeys.isEmpty,
             "upsertKeys with mode(\"overwrite\") is meaningless — the " +
               "truncate already discards every prior row")
-          // The authoritative previous schema is the published `_SCHEMA`
-          // on disk (schema0 is the DataFrame's own schema on path-based
-          // writes — supportsExternalMetadata). Appends must align with
-          // it positionally (ACCEPT_ANY_SCHEMA paths hand us the INPUT's
-          // column names verbatim — a SQL `INSERT ... VALUES` arrives as
-          // col1/col2/... — so the commit republishes the names already
-          // on disk); truncate may legitimately rewrite the schema.
           val incoming0 = info.schema()
-          val hconf = new SerializableHadoopConf(
-            SparkSession.active.sessionState.newHadoopConf())
-          val fs = path.getFileSystem(hconf.value)
           // ROW LINEAGE rewrite carry: a write whose TRAILING columns
           // are the reserved `_row_id` [+ `_last_updated_version`]
           // (compact / Z-order re-selecting the metadata columns)
@@ -816,57 +828,25 @@ private[sources] class ManifestTable(schema0: StructType,
           require(!carriesLuv || carriesRid,
             "_last_updated_version carries only alongside _row_id " +
               "(both names are reserved for row lineage)")
-          // IO failures PROPAGATE (round-15 advice): a swallowed read
-          // here would reject a legitimate lineage rewrite on a blip
-          if (carriesRid)
-            require(ManifestFiles.isLineage(
-                ManifestFiles.latestLines(fs, path)),
-              "writing a _row_id column requires " +
-                "TBLPROPERTIES('row.lineage'='true') on the target table " +
-                "(the name is reserved for row lineage)")
           val incoming =
             if (carriesRid)
               StructType(incoming0.fields.dropRight(if (carriesLuv) 2 else 1))
             else incoming0
-          // BRANCH writes (write-audit-publish): the commit lands on the
-          // branch's own chain; the branch must exist (create_branch)
-          val branch = Option(info.options.get("branch"))
-            .orElse(Option(properties.get("branch")))
-          // Branch chains share main's version numbering (the fork is a
-          // twin of main's v<base>), so version-scoped metadata —
-          // `#born` birth markers, `#eqdels` sequencing — means the same
-          // thing on both chains: upserts stage on branches and live
-          // equality deletes survive the fork, verbatim through
-          // fast_forward's replay.
-          branch.foreach { b =>
-            require(ManifestFiles.latestComplete(fs, path, Some(b)) > 0,
-              s"no branch '$b' at $path — CALL create_branch first " +
-                s"(branches: ${ManifestFiles.branches(fs, path).sorted.mkString(", ")})")
-          }
-          val existing =
-            if (truncateRequested) None
-            else if (branch.isDefined)
-              Some(ManifestFiles.schemaFor(fs, path, None, branch))
-            else if (fs.exists(new Path(path, "_SCHEMA")))
-              Some(ManifestFiles.schemaFor(fs, path, None))
-            else None
-          existing.foreach { e =>
-            val aligned = e.length == incoming.length &&
-              e.fields.zip(incoming.fields).forall { case (t, w) =>
-                ManifestTable.writeCompatible(w.dataType, t.dataType) }
-            if (!aligned) throw new IllegalArgumentException(
-              s"graft-manifest append schema mismatch: table has " +
-                s"${e.simpleString}, write provides ${incoming.simpleString}" +
-                mismatchDetail(e, incoming))
-          }
-          // first write to a fresh table: publish NULLABLE at every level
-          // (Spark's own file sinks do the same) — the first DF's
-          // incidental non-nullability must not reject later appends
-          val finalSchema = existing.getOrElse(ManifestTable.nullableSchema(incoming))
+          val finalSchema = targetSchema(incoming)
+          if (carriesRid)
+            require(ManifestFiles.isLineage(head.lines),
+              "writing a _row_id column requires " +
+                "TBLPROPERTIES('row.lineage'='true') on the target table " +
+                "(the name is reserved for row lineage)")
+          val hconf = new SerializableHadoopConf(
+            SparkSession.active.sessionState.newHadoopConf())
+          val maintenance = Option(info.options.get("maintenanceRewrite"))
+            .contains("true")
           new ManifestBatchWrite(
             path.toString, info.queryId(),
             Option(info.options.get("failPartition")).map(_.toInt).getOrElse(-1),
             finalSchema, truncateRequested, hconf,
+            WriteSpec.of(declared, finalSchema, hconf.value, maintenance),
             bucketSpec = bucketSpec.map { case (c, n) =>
               // record the PHYSICAL position so renames/drops keep the
               // layout valid (name resolves in the write's own schema)
@@ -906,44 +886,18 @@ private[sources] class ManifestTable(schema0: StructType,
             scannedEntries = () =>
               Option(info.options.get("scannedEntries")).map(v =>
                 if (v.isEmpty) Set.empty[String] else v.split("\n").toSet),
-            maintenance = Option(info.options.get("maintenanceRewrite"))
-              .contains("true"))
+            maintenance = maintenance)
         }
         override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
           if (truncateRequested) throw new UnsupportedOperationException(
             "graft-manifest streaming sink supports append output mode " +
               "only (Complete-mode truncation would also discard the " +
               "exactly-once #txn markers)")
-          val incoming = info.schema()
-          val hconf = new SerializableHadoopConf(
-            SparkSession.active.sessionState.newHadoopConf())
-          val fs = path.getFileSystem(hconf.value)
-          val branch = Option(info.options.get("branch"))
-            .orElse(Option(properties.get("branch")))
-          branch.foreach { b =>
-            // shared numbering makes upserts/eqdels branch-safe — see
-            // the batch path's note above
-            require(ManifestFiles.latestComplete(fs, path, Some(b)) > 0,
-              s"no branch '$b' at $path — CALL create_branch first " +
-                s"(branches: ${ManifestFiles.branches(fs, path).sorted.mkString(", ")})")
-          }
-          val existing =
-            if (branch.isDefined)
-              Some(ManifestFiles.schemaFor(fs, path, None, branch))
-            else if (fs.exists(new Path(path, "_SCHEMA")))
-              Some(ManifestFiles.schemaFor(fs, path, None))
-            else None
-          existing.foreach { e =>
-            val aligned = e.length == incoming.length &&
-              e.fields.zip(incoming.fields).forall { case (t, w) =>
-                ManifestTable.writeCompatible(w.dataType, t.dataType) }
-            if (!aligned) throw new IllegalArgumentException(
-              s"graft-manifest append schema mismatch: table has " +
-                s"${e.simpleString}, write provides ${incoming.simpleString}" +
-                mismatchDetail(e, incoming))
-          }
+          // the write spec re-derives per epoch (see ManifestStreamingWrite)
           new ManifestStreamingWrite(path.toString, info.queryId(),
-            existing.getOrElse(ManifestTable.nullableSchema(incoming)), hconf,
+            targetSchema(info.schema()),
+            new SerializableHadoopConf(
+              SparkSession.active.sessionState.newHadoopConf()),
             branch, upsertKeys = upsertKeys)
         }
       }
@@ -1002,12 +956,13 @@ private[sources] class ManifestRowLevelOperation(
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite = {
+          // Replacement rows carry the table's columns; keep its names.
+          val schema = if (tableSchema.nonEmpty) tableSchema else info.schema()
+          val conf = new SerializableHadoopConf(
+            SparkSession.active.sessionState.newHadoopConf())
           val inner = new ManifestBatchWrite(
-            path, info.queryId(), -1,
-            // Replacement rows carry the table's columns; keep its names.
-            if (tableSchema.nonEmpty) tableSchema else info.schema(),
-            truncate = false,
-            new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
+            path, info.queryId(), -1, schema, truncate = false, conf,
+            WriteSpec.of(headLines, schema, conf.value, maintenance = false),
             dropFromPrevious = () => scanned.toSet,
             scannedDeleteState = () => Some(scannedDeleteState),
             // ROW LINEAGE through copy-on-write: the operation asked for
@@ -1054,8 +1009,17 @@ private[sources] class ManifestRowLevelOperation(
       }
     }
 
-  private lazy val lineage: Boolean = ManifestFiles.isLineageAt(
-    new Path(path), SparkSession.active.sessionState.newHadoopConf())
+  // the table head, read ONCE per operation: lineage decides the
+  // metadata columns the rewrite requests, and the rewrite's write spec
+  // derives from the same lines. An absent table is not lineage; an IO
+  // failure PROPAGATES — quietly deciding "not lineage" would re-mint
+  // every updated row's identity.
+  private lazy val headLines: Array[String] = {
+    val dir = new Path(path)
+    ManifestFiles.latestLines(
+      dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), dir)
+  }
+  private lazy val lineage: Boolean = ManifestFiles.isLineage(headLines)
 
   override def requiredMetadataAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     val base = Array(
@@ -1213,6 +1177,10 @@ private[sources] object WriteSpec {
 private[sources] class ManifestBatchWrite(path: String, queryId: String,
     failPartition: Int, schema: StructType, truncate: Boolean,
     conf: SerializableHadoopConf,
+    // the table's declared write behaviour, derived by the planner from
+    // the same head read it planned the layout from (a staged REPLACE
+    // derives it from the NEW DDL's lines)
+    spec: WriteSpec,
     // Row-level COPY_ON_WRITE: entries the operation's scan planned are
     // dropped from the previous snapshot and replaced by this commit's
     // fresh files (evaluated at commit time, after the scan executed).
@@ -1269,21 +1237,11 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
   private val stagingName = s".staging-$queryId"
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    // The table's declared write behaviour, read from disk HERE so every
-    // batch route — plain appends, catalog INSERTs, COW rewrites,
-    // compact — honours it. A staged REPLACE enforces the NEW DDL's
-    // declared intent; the to-be-replaced table's lines are history.
-    val lines =
-      if (replaceConf) confLines
-      else ManifestFiles.latestLines(
-        new Path(path).getFileSystem(conf.value), new Path(path))
-    new ManifestWriterFactory(path, stagingName, schema, conf,
-      WriteSpec.of(lines, schema, conf.value, maintenance),
+      info: PhysicalWriteInfo): DataWriterFactory =
+    new ManifestWriterFactory(path, stagingName, schema, conf, spec,
       failPartition = failPartition, recordBucket = bucketSpec.isDefined,
       sortPos = sortPos, upsertKeys = upsertKeys.toArray,
       ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx)
-  }
 
   // Driver-side, exactly once, only after EVERY task committed: publish.
   // Each commit is a VERSION: append merges the predecessor snapshot's
@@ -1996,8 +1954,10 @@ private[sources] class ManifestStreamingWrite(path: String, queryId: String,
     // the per-epoch file count is tasks × values touched this epoch —
     // for time layouts an epoch usually touches one or two days, so the
     // cost stays near one file per task.
+    // One read per epoch of the chain the epoch commits onto, so a
+    // running stream picks up ALTERed write behaviour.
     val lines = ManifestFiles.latestLines(
-      new Path(path).getFileSystem(conf.value), new Path(path))
+      new Path(path).getFileSystem(conf.value), new Path(path), branch)
     new ManifestWriterFactory(path, stagingName, schema, conf,
       WriteSpec.of(lines, schema, conf.value, maintenance = false),
       upsertKeys = upsertKeys.toArray)

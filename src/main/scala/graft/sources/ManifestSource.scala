@@ -632,9 +632,6 @@ object ManifestFiles {
   def statsFromLines(lines: Array[String]): Map[String, FileStats] =
     lines.filter(_.startsWith("#stats,")).flatMap(parseStatsLine).toMap
 
-  def statsFor(fs: FileSystem, dir: Path, version: Option[Int]): Map[String, FileStats] =
-    statsFromLines(linesOf(fs, dir, version))
-
   final case class ColStats(nulls: Long, min: Option[String], max: Option[String])
   final case class FileStats(bytes: Long, cols: Map[Int, ColStats],
       // NESTED LEAF stats (round 12 — Iceberg records bounds per nested
@@ -1121,18 +1118,6 @@ object ManifestFiles {
 
   def isLineage(lines: Array[String]): Boolean = lines.contains(LineageLine)
 
-  /** Shared "is this table path lineage-enabled" probe for the row-level
-    * operation builders (COW and MOR alike). An ABSENT table is not
-    * lineage; an IO failure reading an existing one PROPAGATES — quietly
-    * deciding false would silently re-mint every updated row's identity,
-    * the exact corruption the feature exists to prevent. */
-  def isLineageAt(dir: Path,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir) || latestVersion(fs, dir) <= 0) false
-    else isLineage(latestLines(fs, dir))
-  }
-
   def firstRowLine(name: String, first: Long): String = s"#firstrow,$name,$first"
   def ridColLine(name: String): String = s"#ridcol,$name"
 
@@ -1224,17 +1209,20 @@ object ManifestFiles {
   /** (bucket colPos, n, sort colPos) declared by DDL, if any. */
   def tableConf(fs: FileSystem, dir: Path,
       version: Option[Int]): Option[(Int, Int, Option[Int])] =
-    linesOf(fs, dir, version)
-      .find(_.startsWith("#tableconf,bucket,")).flatMap { line =>
-        line.split(",") match {
-          case Array(_, _, pos, n) =>
-            for (p <- pos.toIntOption; nn <- n.toIntOption) yield (p, nn, None)
-          case Array(_, _, pos, n, sp) =>
-            for (p <- pos.toIntOption; nn <- n.toIntOption)
-              yield (p, nn, sp.toIntOption)
-          case _ => None
-        }
+    tableConfFromLines(linesOf(fs, dir, version))
+
+  def tableConfFromLines(
+      lines: Array[String]): Option[(Int, Int, Option[Int])] =
+    lines.find(_.startsWith("#tableconf,bucket,")).flatMap { line =>
+      line.split(",") match {
+        case Array(_, _, pos, n) =>
+          for (p <- pos.toIntOption; nn <- n.toIntOption) yield (p, nn, None)
+        case Array(_, _, pos, n, sp) =>
+          for (p <- pos.toIntOption; nn <- n.toIntOption)
+            yield (p, nn, sp.toIntOption)
+        case _ => None
       }
+    }
 
   /** Verified per-file sort marker: `#sorted,<file>,<colPos>[,<d|a><f|l>]`
     * — the writer CHECKED rows streamed monotone in that column under
@@ -1261,10 +1249,6 @@ object ManifestFiles {
       }
     }.toMap
 
-  def sortedFor(fs: FileSystem, dir: Path,
-      version: Option[Int]): Map[String, (Int, Boolean, Boolean)] =
-    sortedFromLines(linesOf(fs, dir, version))
-
   /** file → (colPos, n, bucketId) for one snapshot. */
   def bucketsFromLines(lines: Array[String]): Map[String, (Int, Int, Int)] =
     lines.filter(_.startsWith("#bucket,")).flatMap { line =>
@@ -1275,10 +1259,6 @@ object ManifestFiles {
           case _ => None
         }
       }.toMap
-
-  def bucketsFor(fs: FileSystem, dir: Path,
-      version: Option[Int]): Map[String, (Int, Int, Int)] =
-    bucketsFromLines(linesOf(fs, dir, version))
 
   private val nestedKey = """\d+(\.\d+)+""".r
 
@@ -1308,12 +1288,39 @@ object ManifestFiles {
       parts(1) -> FileStats(bytes, cols, nested))
   }
 
-  /** Raw lines of the newest complete snapshot (file entries AND
-    * `#`-metadata lines) — what a commit's rebase starts from. */
-  def latestLines(fs: FileSystem, dir: Path): Array[String] = {
-    val v = latestComplete(fs, dir)
-    if (v <= 0) Array.empty
-    else materialize(fs, dir, readManifest(fs, new Path(dir, s"_MANIFEST.v$v")))
+  /** Raw lines of the newest complete snapshot of main or of `branch`
+    * (file entries AND `#`-metadata lines) — what a commit's rebase
+    * starts from. A chain with no complete version reads as empty. */
+  def latestLines(fs: FileSystem, dir: Path,
+      branch: Option[String] = None): Array[String] = {
+    val v = latestComplete(fs, dir, branch)
+    if (v <= 0) Array.empty else headLines(fs, dir, v, branch)
+  }
+
+  private def headLines(fs: FileSystem, dir: Path, v: Int,
+      branch: Option[String]): Array[String] =
+    materialize(fs, dir, readManifest(fs,
+      new Path(dir, s"_MANIFEST.${chainPrefix(branch)}v$v")))
+
+  /** The head a write commits onto: the newest complete version of main
+    * or of `branch`, its lines and its published schema. A write plans
+    * everything from this one read — layout, schema checks, write spec.
+    * A fresh directory or an absent branch is version 0 with no lines
+    * and no schema; a legacy directory without version files has no
+    * lines and its `_SCHEMA`. An unreadable table fails the read. */
+  final case class Head(version: Int, lines: Array[String],
+      schema: Option[StructType])
+
+  def head(fs: FileSystem, dir: Path, branch: Option[String]): Head = {
+    val v = latestComplete(fs, dir, branch)
+    if (v > 0) Head(v, headLines(fs, dir, v, branch), Some(readSchema(fs,
+      new Path(dir, s"_SCHEMA.${chainPrefix(branch)}v$v"))))
+    else {
+      val legacy = new Path(dir, "_SCHEMA")
+      Head(0, Array.empty,
+        if (branch.isEmpty && fs.exists(legacy)) Some(readSchema(fs, legacy))
+        else None)
+    }
   }
 
   /** Highest epoch a streaming query has committed into this table, read
@@ -1764,6 +1771,10 @@ object ManifestFiles {
     }
     require(fs.exists(p), s"graft-manifest: no schema file at $p — " +
       "was this directory written by the graft-manifest sink?")
+    readSchema(fs, p)
+  }
+
+  private def readSchema(fs: FileSystem, p: Path): StructType = {
     val in = fs.open(p)
     val json =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -3806,7 +3817,7 @@ class GraftManifestCatalog extends TableCatalog
     }
     // DDL-declared layout rides into the write path as properties
     // (positions are PHYSICAL — resolve to the current field, if live)
-    ManifestFiles.tableConf(f, dir, version).foreach { case (pos, n, sp) =>
+    ManifestFiles.tableConfFromLines(confLines).foreach { case (pos, n, sp) =>
       ManifestFiles.fieldAtPhys(schema, pos).foreach { idx =>
         props.put("bucketBy", schema(idx).name)
         props.put("buckets", n.toString)
@@ -5388,17 +5399,28 @@ private[sources] object ManifestProcedures {
       else compactFull(spark, dir, fs, target, sortBy)
     }
 
+  /** The lines and schema of main's head — the one snapshot read a
+    * compaction plans from. */
+  private def compactHead(fs: FileSystem,
+      dir: Path): (Array[String], StructType) = {
+    val head = ManifestFiles.head(fs, dir, None)
+    (head.lines, head.schema.getOrElse(throw new IllegalArgumentException(
+      s"compact: no graft-manifest table at $dir")))
+  }
+
   private def compactFull(spark: SparkSession, dir: Path,
       fs: FileSystem, target: Int, sortBy: String): java.util.Iterator[Scan] = {
-      val before = ManifestFiles.entries(fs, dir, None).length
       val live0 = spark.read.format("graft-manifest")
         .option("path", dir.toString).load()
+      // the scan state: files_before, the bucket layout, lineage, the
+      // declared sort order and the schema all come from this one read
+      val (scanLines, schemaNow) = compactHead(fs, dir)
+      val before = ManifestFiles.entriesFromLines(scanLines).length
       // ROW LINEAGE: the rewrite carries every row's `_row_id` AND its
       // `_last_updated_version` through (trailing reserved columns → the
       // writer materializes them as the files' `_rid`/`_luv`), so
       // compaction/Z-order reordering never re-mints identities and
       // never reads as an update
-      val scanLines = ManifestFiles.latestLines(fs, dir)
       val live =
         if (ManifestFiles.isLineage(scanLines))
           live0.select(org.apache.spark.sql.functions.col("*"),
@@ -5431,9 +5453,7 @@ private[sources] object ManifestProcedures {
       // options, so the rewritten files keep their #bucket/#sorted marks
       // and later INSERT INTOs keep clustering). sort_by would fight the
       // layout — reject it loudly instead of silently unclustering.
-      val ddl = ManifestFiles.tableConf(fs, dir, None)
-      val schemaNow = ManifestFiles.schemaFor(fs, dir, None)
-      ddl match {
+      ManifestFiles.tableConfFromLines(scanLines) match {
         case Some((pos, n, sp)) =>
           // positions are physical — resolve to live fields (the drop
           // path refuses to retire a layout column, so this resolves)
@@ -5526,8 +5546,10 @@ private[sources] object ManifestProcedures {
       target: Int, sortBy: String,
       whereStr: String): java.util.Iterator[Scan] = {
     val hconf = spark.sessionState.newHadoopConf()
-    val lines = ManifestFiles.latestLines(fs, dir)
-    require(ManifestFiles.tableConf(fs, dir, None).isEmpty,
+    // the scan state: files_before, the bucket layout, lineage, the
+    // write spec and the schema all come from this one read
+    val (lines, schemaNow) = compactHead(fs, dir)
+    require(ManifestFiles.tableConfFromLines(lines).isEmpty,
       "scoped compact on a bucket-laid table is not supported — the " +
         "bucket layout already governs file organization (full compact " +
         "re-buckets)")
@@ -5536,7 +5558,6 @@ private[sources] object ManifestProcedures {
       "scoped compact with merge-on-read delete vectors or equality " +
         "deletes pending — CALL rewrite_position_deletes or a full " +
         "compact first")
-    val schemaNow = ManifestFiles.schemaFor(fs, dir, None)
     // WHERE → data-source filters via Spark's own translation
     val probe = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schemaNow)

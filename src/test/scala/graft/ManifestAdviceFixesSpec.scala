@@ -58,7 +58,9 @@ class ManifestAdviceFixesSpec extends AnyFunSuite {
       val out = fs.create(f, true)
       try out.write(s"$target,0\n".getBytes("UTF-8")) finally out.close()
       new ManifestDeltaBatchWrite(dir, queryId, schema,
-        new SerializableHadoopConf(hconf))
+        new SerializableHadoopConf(hconf),
+        WriteSpec.of(ManifestFiles.latestLines(fs, new Path(dir)), schema,
+          hconf, maintenance = false))
     }
 
     val doomed = stageDelete("advq1", "delete-advq1-0.del", victim)

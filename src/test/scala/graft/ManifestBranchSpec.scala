@@ -314,4 +314,46 @@ class ManifestBranchSpec extends AnyFunSuite {
     }
     assert(noCdf.getMessage.toLowerCase.contains("branch"), noCdf.getMessage)
   }
+
+  test("a branch obeys its own #tableconf: a CHECK main drops after the " +
+    "fork still guards batch appends and streaming epochs on the branch") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    val (cat, root) = freshCat("decl")
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES('check.positive'='v >= 0')")
+    spark.range(0, 10).select($"id".as("k"), $"id".as("v"))
+      .writeTo(s"$cat.t").append()
+    spark.sql(s"CALL $cat.system.create_branch('t', 'keep')")
+    spark.sql(s"ALTER TABLE $cat.t UNSET TBLPROPERTIES('check.positive')")
+    def branchRows() =
+      branchRead(s"$root/t", "keep").orderBy($"k").collect().toSeq
+    val before = branchRows()
+    def messages(e: Throwable): String = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val batch = intercept[Exception] {
+      Seq((100L, -5L)).toDF("k", "v")
+        .write.mode("append").format("graft-manifest")
+        .option("path", s"$root/t").option("branch", "keep").save()
+    }
+    assert(messages(batch).contains("CHECK constraint 'positive'"),
+      messages(batch))
+    val input = MemoryStream[Long](spark)
+    input.addData(-5L)
+    val q = input.toDS().selectExpr("value + 200 AS k", "value AS v")
+      .writeStream.format("graft-manifest")
+      .option("path", s"$root/t").option("branch", "keep")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_br_decl_ck").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    val epoch = intercept[Exception] {
+      try q.awaitTermination(60000) finally q.stop()
+    }
+    assert(messages(epoch).contains("CHECK constraint 'positive'"),
+      messages(epoch))
+    assert(branchRows() == before, "the branch's rows stay unchanged")
+    // main dropped the constraint: the same append lands there
+    Seq((100L, -5L)).toDF("k", "v").writeTo(s"$cat.t").append()
+    assert(spark.table(s"$cat.t").filter($"v" < 0).count() == 1L)
+  }
 }

@@ -85,8 +85,8 @@ class ManifestNestedStatsSpec extends AnyFunSuite {
       .option("path", path).save()
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = ManifestFiles.statsFor(fs,
-      new org.apache.hadoop.fs.Path(path), None)
+    val stats = ManifestFiles.statsFromLines(ManifestFiles.linesOf(fs,
+      new org.apache.hadoop.fs.Path(path), None))
     assert(stats.size == 2)
     // long string bounds are truncated (16 cp + increment headroom)
     val bounds = stats.values.flatMap(_.nested.get("1.0")).toSeq

@@ -54,7 +54,8 @@ class ManifestReplaceTableSpec extends AnyFunSuite {
         .writeTo(s"$cat.t").append()
       val dir = new Path(root, "t")
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      assert(ManifestFiles.sortedFor(fs, dir, None).nonEmpty)
+      assert(ManifestFiles.sortedFromLines(
+        ManifestFiles.linesOf(fs, dir, None)).nonEmpty)
       // time travel still reads the pre-replace image with ITS schema
       val old = spark.read.format("graft-manifest")
         .option("path", dir.toString).option("versionAsOf", "2").load()

@@ -39,6 +39,13 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
 
   private val schema = new StructType().add("k", LongType)
 
+  /** The table's write spec from its head, as the planner derives it. */
+  private def specOf(path: String, conf: SerializableHadoopConf): WriteSpec = {
+    val dir = new Path(path)
+    WriteSpec.of(ManifestFiles.latestLines(dir.getFileSystem(conf.value), dir),
+      schema, conf.value, maintenance = false)
+  }
+
   /** Stage one replacement file holding `ks`, exactly as a row-level
     * operation's write task would, and return (write, commit message) —
     * commit() is then the claim-time validation under test. */
@@ -48,7 +55,7 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
     val conf = new SerializableHadoopConf(
       spark.sessionState.newHadoopConf())
     val write = new ManifestBatchWrite(path, s"wc-${ks.hashCode}", -1,
-      schema, truncate = false, conf,
+      schema, truncate = false, conf, specOf(path, conf),
       dropFromPrevious = () => drop,
       scannedDeleteState = () => Some(scannedState))
     val factory = write.createBatchWriterFactory(new PhysicalWriteInfo {
@@ -147,7 +154,7 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
       (ManifestBatchWrite, Array[WriterCommitMessage]) = {
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val write = new ManifestBatchWrite(path, s"wcc-${ks.hashCode}", -1,
-      schema, truncate = true, conf,
+      schema, truncate = true, conf, specOf(path, conf),
       scannedDeleteState = () => Some(scannedState),
       scannedEntries = () => Some(scanned))
     val factory = write.createBatchWriterFactory(new PhysicalWriteInfo {
