@@ -211,49 +211,34 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     pass(rollup = false).orElse(pass(rollup = true))
   }
 
-  /** Resolve an MV definition expression against the query's own child
-    * plan (same attribute ids), so semanticEquals is meaningful. */
-  private def resolveAgainst(child: LogicalPlan,
-      sql: String): Option[Expression] =
-    try {
-      val df = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, child)
-      df.select(org.apache.spark.sql.functions.expr(sql))
-        .queryExecution.analyzed match {
-        case Project(Seq(Alias(e, _)), _) => Some(e)
-        case Project(Seq(e), _) => Some(e)
-        case _ => None
-      }
-    } catch { case _: Exception => None }
-
-  /** Memoizing resolver for one candidate attempt (round 17): tryOne
-    * resolved the same definition SQL repeatedly — every dim condition,
-    * the filter, and each agg spec PER query output expression — each a
-    * full analyzer pass over the query's child plan, which dominated
-    * the MV queries' probe statements after the round's FS fixes.
-    * `preload` resolves the whole definition in ONE analyzer pass; a
-    * batch that fails (a non-matching candidate referencing columns the
-    * child lacks) falls back to the exact per-expression path, so
-    * refusal semantics are unchanged expression by expression. */
+  /** Memoizing resolver of MV definition SQL against the query's own
+    * child plan (same attribute ids, so semanticEquals is meaningful).
+    * `preload` resolves a whole definition in ONE analyzer pass; a
+    * definition that does not resolve as a whole is refused. An
+    * expression whose references leave the child's output (a lateral
+    * alias of an earlier expression in the batch) resolves to None. */
   private final class DefResolver(child: LogicalPlan) {
     private val cache =
       scala.collection.mutable.Map.empty[String, Option[Expression]]
-    def preload(sqls: Seq[String]): Unit = {
+    def preload(sqls: Seq[String]): Boolean = {
       val todo = sqls.distinct.filterNot(cache.contains)
-      if (todo.isEmpty) return
-      try {
-        val df = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, child)
-        val exprs = df
-          .select(todo.map(s => org.apache.spark.sql.functions.expr(s)): _*)
-          .queryExecution.analyzed match {
-          case Project(list, _) if list.length == todo.length =>
-            list.map { case Alias(e, _) => e; case e => e }
-          case _ => return
-        }
-        todo.zip(exprs).foreach { case (s, e) => cache(s) = Some(e) }
-      } catch { case _: Exception => } // per-expression fallback below
+      if (todo.isEmpty) return true
+      val exprs =
+        try {
+          val df = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, child)
+          df.select(todo.map(s => org.apache.spark.sql.functions.expr(s)): _*)
+            .queryExecution.analyzed match {
+            case Project(list, _) if list.length == todo.length =>
+              list.map { case Alias(e, _) => e; case e => e }
+            case _ => return false
+          }
+        } catch { case _: Exception => return false }
+      todo.zip(exprs).foreach { case (s, e) =>
+        cache(s) = Some(e).filter(_.references.subsetOf(child.outputSet))
+      }
+      true
     }
-    def apply(sql: String): Option[Expression] =
-      cache.getOrElseUpdate(sql, resolveAgainst(child, sql))
+    def apply(sql: String): Option[Expression] = cache.getOrElse(sql, None)
   }
 
   private def tryOne(agg: Aggregate, queryFilter: Option[Expression],
@@ -261,10 +246,6 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       cat: GraftManifestCatalog, mvName: String,
       d: ManifestMaterializedView.MvDef,
       rollup: Boolean, resolve: DefResolver): Option[LogicalPlan] = {
-    // one analyzer pass for the whole definition (matching candidates —
-    // the repeated case — resolve everything; see DefResolver)
-    resolve.preload(d.dims.map(_.onSql) ++ d.filterSql.toSeq ++
-      d.aggs.filterNot(_.func == "count_star").map(_.expr))
     val groupingExprs = agg.groupingExpressions
     val bareNames: Option[Seq[String]] =
       if (groupingExprs.forall(_.isInstanceOf[AttributeReference]))
@@ -310,6 +291,10 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
           return None // dim rows moved / repinned
       }
     }
+    // one analyzer pass for the whole definition, paid only by a
+    // candidate the checks above did not refuse (see DefResolver)
+    if (!resolve.preload(d.dims.map(_.onSql) ++ d.filterSql.toSeq ++
+        d.aggs.filterNot(_.func == "count_star").map(_.expr))) return None
     // join-condition sets biject semantically, kind-for-kind: an INNER
     // spec matches only an untagged condition, a LEFT spec only a
     // left-tagged condition on the same dim (an inner query over a

@@ -19,8 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Write surface: `option("upsertKeys", "k1[,k2]")` on an append to a
   * merge-on-read table — batch AND streaming epochs. Each task tees the
-  * distinct key tuples of the rows it writes into a tiny `.eqdel` file;
-  * the commit lands `#eqdels,<file>,<p0;p1>,<version>` lines next to
+  * distinct key tuples of the rows it writes into a tiny `.eqdel` file.
+  * A batch upsert may carry one trailing `_change_type` STRING column
+  * (the change feed's own name): an 'insert' row upserts as usual, a
+  * 'delete' row only records its key — its group vanishes in the same
+  * commit, and the row reaches neither the CHECKs, the stats nor the
+  * data file; the column is never stored (an MV refresh step lands its
+  * upserted and vanished groups this way, in one commit). The commit
+  * lands `#eqdels,<file>,<p0;p1>,<version>` lines next to
   * `#born,<entry>,<version>` birth markers for its own data entries.
   * Scoping is EXPLICIT versioning (the manifest stores lines sorted, so
   * line order is useless): a delete set applies to an entry iff
@@ -217,17 +223,38 @@ private[sources] object ManifestEqDeletes {
   final case class UpsertCommitted(inner: WriterCommitMessage,
       delFile: Option[String], keyCount: Long) extends WriterCommitMessage
 
+  private val Insert = UTF8String.fromString("insert")
+  private val Delete = UTF8String.fromString("delete")
+
   /** Write-side tee: records the DISTINCT key tuples of every row
     * flowing into `inner`, staging them as a tiny `.eqdel` line file on
     * commit. NULL keys fail the task loudly (a NULL key row could never
     * be replaced by a later upsert — refusing beats silently
-    * accumulating duplicates). */
+    * accumulating duplicates). With `typeIdx >= 0` (a change-typed
+    * upsert, the marker right after the `schema` columns) that column
+    * of each row decides its fate: 'insert' flows on like a plain upsert
+    * row, minus the marker; 'delete' only records its key — so the key's
+    * prior rows vanish and nothing is written for it — and any other
+    * value, NULL included, fails the task. */
   def tee(inner: DataWriter[InternalRow], schema: StructType,
-      keys: Array[Int], path: String, stagingName: String, delName: String,
-      conf: SerializableHadoopConf): DataWriter[InternalRow] =
+      keys: Array[Int], typeIdx: Int, path: String, stagingName: String,
+      delName: String, conf: SerializableHadoopConf): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private val seen = new java.util.LinkedHashSet[String]()
       private val types = keys.map(schema(_).dataType)
+      private val stripped =
+        if (typeIdx < 0) null
+        else org.apache.spark.sql.catalyst.ProjectingInternalRow(
+          schema, schema.indices)
+
+      private def inserts(row: InternalRow): Boolean = {
+        val t = if (row.isNullAt(typeIdx)) null else row.getUTF8String(typeIdx)
+        if (Insert == t) true
+        else if (Delete == t) false
+        else throw new IllegalArgumentException(
+          s"${ManifestChangeFeed.TypeCol} is '$t' — a change-typed upsert " +
+            "row must be 'insert' or 'delete'")
+      }
 
       override def write(row: InternalRow): Unit = {
         val parts = new Array[String](keys.length)
@@ -242,7 +269,8 @@ private[sources] object ManifestEqDeletes {
           i += 1
         }
         seen.add(parts.mkString(","))
-        inner.write(row)
+        if (typeIdx < 0) inner.write(row)
+        else if (inserts(row)) { stripped.project(row); inner.write(stripped) }
       }
 
       override def commit(): WriterCommitMessage = {

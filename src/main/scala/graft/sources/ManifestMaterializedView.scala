@@ -48,26 +48,28 @@ import org.apache.spark.sql.types._
   * CRASH SAFETY (the design's one non-obvious invariant): every refresh
   * computes the new absolute group values from `MV AS OF
   * checkpoint.mvVersion` — the PINNED pre-state — never from the MV's
-  * current head. The data commit (upsert + vanished-group delete) and
-  * the checkpoint publish are separate atomic steps, so a crash between
-  * them leaves an orphan data commit; the next refresh, still reading
-  * the OLD checkpoint, recomputes the SAME absolute values from the
-  * same pinned inputs and replaces the orphan's rows with identical
-  * ones. Replays converge; nothing double-counts. (Concurrent refreshes
-  * are likewise safe — wasteful, not wrong.)
+  * current head. The data commit (one upsert whose 'delete'-typed rows
+  * drop the vanished groups) and the checkpoint publish are separate
+  * atomic steps, so a crash between them leaves an orphan data commit;
+  * the next refresh, still reading the OLD checkpoint, recomputes the
+  * SAME absolute values from the same pinned inputs and replaces the
+  * orphan's rows with identical ones. Replays converge; nothing
+  * double-counts. (Concurrent refreshes are likewise safe — wasteful, not
+  * wrong.)
   *
   * Group-key caveat: keys ride the upsert's equality-delete path, so
   * they must be exact-equality primitives and NON-NULL (a null group
   * key would never match its own delete leg); create() enforces the
   * type rule and documents the null rule.
   *
-  * Operations notes: (a) each refresh lands one CDC upsert, and stacked
-  * equality-delete sets degrade the MV's own read path conservatively
-  * (columnar batching off) until `CALL compact` materializes them —
-  * schedule compaction like any CDC-ingested table; (b) the checkpoint
-  * references a SOURCE version, so source vacuum retention must cover
-  * the refresh cadence — an expired checkpoint fails loudly with the
-  * format's expired-version surface, and the remedy is drop+create. */
+  * Operations notes: (a) each refresh step lands one CDC upsert, and
+  * stacked equality-delete sets degrade the MV's own read path
+  * conservatively (columnar batching off) until `CALL compact`
+  * materializes them — schedule compaction like any CDC-ingested table;
+  * (b) the checkpoint references a SOURCE version, so source vacuum
+  * retention must cover the refresh cadence — an expired checkpoint fails
+  * loudly with the format's expired-version surface, and the remedy is
+  * drop+create. */
 object ManifestMaterializedView {
 
   /** One aggregate column: `func` ∈ count_star | count | sum | avg |
@@ -855,7 +857,7 @@ object ManifestMaterializedView {
     // ONE gates pass (round 16): the negative guard, the recompute
     // probe, and the live/dead presence checks each cost a job before;
     // one aggregate over the persisted fold answers all four and fills
-    // the cache the write/delete below read.
+    // the cache the step's one write below reads.
     val foldCnt = coalesce(col(CntCol), lit(0).cast(storage(CntCol).dataType))
       .plus(col(s"__d_$CntCol")).cast(storage(CntCol).dataType)
     val gateRow = joined.select(
@@ -887,23 +889,18 @@ object ManifestMaterializedView {
           .filterNot(d.groupBy.contains).map(col)): _*))
     }
 
-    val live = recomputed.foldLeft(folded.filter(col(CntCol) > 0))(_ unionAll _)
-    if (nLive > 0 || recomputed.exists(_.take(1).nonEmpty))
-      live.write.mode("append").format("graft-manifest")
-        .option("path", mvDir.toString)
-        .option("upsertKeys", d.groupBy.mkString(",")).save()
-    // dead = fold-path groups at zero, plus recompute-path groups the
-    // source no longer holds (the recompute returned no row for them)
-    val deadFold = folded.filter(col(CntCol) === 0)
-      .select(d.groupBy.map(col): _*)
-    val dead = recomputed match {
-      case None => deadFold
-      case Some(r) => deadFold.unionAll(
-        recompute.join(r.select(d.groupBy.map(col): _*),
-          d.groupBy, "left_anti"))
+    // fold groups at zero vanish, the rest upsert — one projection, so
+    // the write keeps the fold's task count; recomputed groups upsert,
+    // and those the recompute no longer returns vanish
+    val foldStep = folded.withColumn(ManifestChangeFeed.TypeCol,
+      when(col(CntCol) > 0, lit("insert")).otherwise(lit("delete")))
+    val step = recomputed.fold(foldStep) { r =>
+      foldStep
+        .unionAll(r.withColumn(ManifestChangeFeed.TypeCol, lit("insert")))
+        .unionAll(vanished(recompute.join(r.select(d.groupBy.map(col): _*),
+          d.groupBy, "left_anti"), d.groupBy, r.schema))
     }
-    if (nDead > 0 || (recomputed.isDefined && dead.take(1).nonEmpty))
-      deleteGroups(spark, catalog, mv, d.groupBy, dead)
+    if (nLive > 0 || nDead > 0 || nR > 0) landStep(mvDir, d.groupBy, step)
     val landed = next.copy(
       mvVersion = ManifestFiles.latestComplete(fs, mvDir))
     publishDef(fs, mvDir, landed, expectFresh = false)
@@ -913,19 +910,23 @@ object ManifestMaterializedView {
     }
   }
 
-  /** Delete the MV's groups whose keys `dead` holds: one `DELETE …
-    * WHERE (keys) IN (SELECT keys FROM <temp view>)` through the catalog,
-    * the view named per thread. */
-  private def deleteGroups(spark: SparkSession, catalog: String, mv: String,
-      groupBy: Seq[String], dead: DataFrame): Unit = {
-    val view = "graft_mv_dead_" + java.lang.Long.toUnsignedString(
-      Thread.currentThread().getId)
-    dead.createOrReplaceTempView(view)
-    spark.sql(s"DELETE FROM $catalog.$mv WHERE " +
-      s"${groupBy.mkString("(", ", ", ")")} IN " +
-      s"(SELECT ${groupBy.mkString(", ")} FROM $view)")
-    spark.catalog.dropTempView(view)
-  }
+  /** Vanished groups as 'delete' rows shaped like `storage`: the group
+    * keys, every other column null. */
+  private def vanished(keys: DataFrame, groupBy: Seq[String],
+      storage: StructType): DataFrame =
+    keys.select(storage.fields.toSeq.map { f =>
+      if (groupBy.contains(f.name)) col(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    } :+ lit("delete").as(ManifestChangeFeed.TypeCol): _*)
+
+  /** Land one refresh step as ONE MV commit: an upsert whose
+    * `_change_type` column tags each group 'insert' or 'delete'
+    * (ManifestEqDeletes.tee), so readers never see half a step. */
+  private def landStep(mvDir: Path, groupBy: Seq[String],
+      step: DataFrame): Unit =
+    step.write.mode("append").format("graft-manifest")
+      .option("path", mvDir.toString)
+      .option("upsertKeys", groupBy.mkString(",")).save()
 
   /** Test-visible: full recomputes taken (the dim-delta spec asserts
     * dim movement does NOT land here). */
@@ -933,10 +934,10 @@ object ManifestMaterializedView {
 
   /** FULL recompute at the pins already set in `pinned` (unexpressable
     * history, or any drift remedy): re-aggregate the joined inputs,
-    * upsert every live group, delete groups the recompute no longer
-    * produces (diffed against `MV AS OF` the OLD checkpoint — pinned
-    * pre-state, same crash-replay convergence as the incremental
-    * path). Costs one scan of the joined inputs; ordinary fact and dim
+    * upsert every live group and, in the same commit, drop groups the
+    * recompute no longer produces (diffed against `MV AS OF` the OLD
+    * checkpoint — pinned pre-state, same crash-replay convergence as the
+    * incremental path). Costs one scan of the joined inputs; ordinary fact and dim
     * movement never lands here. */
   private def recomputeFull(spark: SparkSession, catalog: String,
       mv: String, pinned: MvDef): MvDef = {
@@ -947,23 +948,20 @@ object ManifestMaterializedView {
     val old = readDef(fs, mvDir)
     val joined = withDims(spark, root, pinned,
       tableAt(spark, root, pinned.source, pinned.sourceVersion))
-    // ONE evaluation of the joined aggregate (self-review: take(1), the
-    // upsert write, and the dead-group anti-join each re-ran it)
+    // ONE evaluation of the joined aggregate: the write reads it twice
+    // (the live rows and the dead-group anti-join)
     val rows = aggRows(pinned.filterSql.map(f => joined.filter(expr(f)))
       .getOrElse(joined), pinned).persist()
     try {
-      if (rows.take(1).nonEmpty)
-        rows.write.mode("append").format("graft-manifest")
-          .option("path", mvDir.toString)
-          .option("upsertKeys", pinned.groupBy.mkString(",")).save()
       val pre = spark.read.format("graft-manifest")
         .option("path", mvDir.toString)
         .option("versionAsOf", old.mvVersion.toString).load()
       val dead = pre.select(pinned.groupBy.map(col): _*)
         .join(rows.select(pinned.groupBy.map(col): _*),
           pinned.groupBy, "left_anti")
-      if (dead.take(1).nonEmpty)
-        deleteGroups(spark, catalog, mv, pinned.groupBy, dead)
+      landStep(mvDir, pinned.groupBy,
+        rows.withColumn(ManifestChangeFeed.TypeCol, lit("insert"))
+          .unionAll(vanished(dead, pinned.groupBy, rows.schema)))
     } finally rows.unpersist()
     val next = pinned.copy(
       mvVersion = ManifestFiles.latestComplete(fs, mvDir))

@@ -806,11 +806,21 @@ private[sources] class ManifestTable(schema0: StructType,
           existing.getOrElse(ManifestTable.nullableSchema(incoming))
         }
 
+        private def carriesChangeType(incoming: StructType): Boolean =
+          incoming.fields.lastOption
+            .exists(_.name == ManifestChangeFeed.TypeCol)
+
         override def toBatch: BatchWrite = {
           if (truncateRequested) require(upsertKeys.isEmpty,
             "upsertKeys with mode(\"overwrite\") is meaningless — the " +
               "truncate already discards every prior row")
-          val incoming0 = info.schema()
+          // CHANGE-TYPED upsert: a trailing `_change_type` column tags
+          // each row 'insert' or 'delete' for the equality-delete tee
+          // (see ManifestEqDeletes.tee) and is never stored
+          val typed = carriesChangeType(info.schema())
+          val incoming0 =
+            if (typed) StructType(info.schema().fields.dropRight(1))
+            else info.schema()
           // ROW LINEAGE rewrite carry: a write whose TRAILING columns
           // are the reserved `_row_id` [+ `_last_updated_version`]
           // (compact / Z-order re-selecting the metadata columns)
@@ -828,6 +838,12 @@ private[sources] class ManifestTable(schema0: StructType,
           require(!carriesLuv || carriesRid,
             "_last_updated_version carries only alongside _row_id " +
               "(both names are reserved for row lineage)")
+          if (typed) require(upsertKeys.nonEmpty && !carriesRid &&
+            info.schema().last.dataType == StringType,
+            s"a trailing ${ManifestChangeFeed.TypeCol} column marks a " +
+              "change-typed upsert: it must be a STRING column of a " +
+              "write with option(\"upsertKeys\", …) that carries no " +
+              "row-lineage columns")
           val incoming =
             if (carriesRid)
               StructType(incoming0.fields.dropRight(if (carriesLuv) 2 else 1))
@@ -872,6 +888,7 @@ private[sources] class ManifestTable(schema0: StructType,
               else Array.empty),
             branch = branch,
             upsertKeys = upsertKeys,
+            typeIdx = if (typed) incoming0.length else -1,
             replaceConf = replaceConf.isDefined,
             requireFresh = Option(properties.get("requireFreshTable"))
               .contains("true"),
@@ -893,6 +910,9 @@ private[sources] class ManifestTable(schema0: StructType,
             "graft-manifest streaming sink supports append output mode " +
               "only (Complete-mode truncation would also discard the " +
               "exactly-once #txn markers)")
+          require(!carriesChangeType(info.schema()),
+            s"a trailing ${ManifestChangeFeed.TypeCol} column marks a " +
+              "change-typed upsert, which is a batch write")
           // the write spec re-derives per epoch (see ManifestStreamingWrite)
           new ManifestStreamingWrite(path.toString, info.queryId(),
             targetSchema(info.schema()),
@@ -1213,6 +1233,10 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     // CDC upsert (equality deletes): schema indices of the key columns;
     // the commit lands `#eqdels` lines BEFORE this batch's entries
     upsertKeys: Seq[Int] = Seq.empty,
+    // change-typed upsert: incoming-row index of the `_change_type`
+    // marker, right after the data columns (-1 = every row inserts; see
+    // ManifestEqDeletes.tee)
+    typeIdx: Int = -1,
     // staged REPLACE TABLE: the truncate drops the OLD #tableconf lines
     // (confLines carries the new DDL's) instead of preserving them
     replaceConf: Boolean = false,
@@ -1240,7 +1264,7 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
       info: PhysicalWriteInfo): DataWriterFactory =
     new ManifestWriterFactory(path, stagingName, schema, conf, spec,
       failPartition = failPartition, recordBucket = bucketSpec.isDefined,
-      sortPos = sortPos, upsertKeys = upsertKeys.toArray,
+      sortPos = sortPos, upsertKeys = upsertKeys.toArray, typeIdx = typeIdx,
       ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx)
 
   // Driver-side, exactly once, only after EVERY task committed: publish.
@@ -1367,10 +1391,11 @@ private[sources] object ManifestWriters {
 
   /** Open one task's writer — the helper every route calls: one staged
     * file, or a partition-splitting writer when `spec` declares a
-    * layout; then the equality-delete tee for upserts; then the CHECK
-    * wrapper. Staged names derive from `prefix`: `<prefix>.parquet.tmp`,
-    * split files `<prefix>-s<n>.parquet.tmp`, the delete file
-    * `<prefix>.eqdel.tmp`. */
+    * layout; then the CHECK wrapper; then the equality-delete tee for
+    * upserts, outermost so a change-typed 'delete' row reaches neither
+    * the CHECKs nor the file. Staged names derive from `prefix`:
+    * `<prefix>.parquet.tmp`, split files `<prefix>-s<n>.parquet.tmp`, the
+    * delete file `<prefix>.eqdel.tmp`. */
   def task(path: String, stagingName: String, prefix: String,
       schema: StructType, conf: SerializableHadoopConf, spec: WriteSpec,
       injectFailure: Boolean = false,
@@ -1381,7 +1406,7 @@ private[sources] object ManifestWriters {
       sortPos: Option[(Int, Boolean, Boolean)] = None,
       // CDC upsert key indices — tee the rows' key tuples into a delete
       // file (see ManifestEqDeletes.tee)
-      upsertKeys: Array[Int] = Array.empty,
+      upsertKeys: Array[Int] = Array.empty, typeIdx: Int = -1,
       ridIdx: Int = -1, ridFromMeta: Boolean = false,
       luvIdx: Int = -1): DataWriter[InternalRow] = {
     def file(name: String): DataWriter[InternalRow] =
@@ -1393,11 +1418,10 @@ private[sources] object ManifestWriters {
         spec.partSpec.map { case (idx, kind) =>
           (idx, kind, schema(idx).dataType) },
         seq => file(s"$prefix-s$seq.parquet.tmp"))
-    val teed =
-      if (upsertKeys.isEmpty) base
-      else ManifestEqDeletes.tee(base, schema, upsertKeys, path, stagingName,
-        s"$prefix.eqdel.tmp", conf)
-    ManifestChecks.wrap(teed, spec.checks, schema)
+    val checked = ManifestChecks.wrap(base, spec.checks, schema)
+    if (upsertKeys.isEmpty) checked
+    else ManifestEqDeletes.tee(checked, schema, upsertKeys, typeIdx, path,
+      stagingName, s"$prefix.eqdel.tmp", conf)
   }
 
   /** Move a staged file to its final name (the `.tmp` suffix dropped). */
@@ -1793,6 +1817,7 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
     recordBucket: Boolean = false,
     sortPos: Option[(Int, Boolean, Boolean)] = None,
     upsertKeys: Array[Int] = Array.empty,
+    typeIdx: Int = -1,
     // row lineage: incoming-row index of the carried `_row_id` (-1 none)
     ridIdx: Int = -1,
     // row lineage via the COW metadata channel
@@ -1814,7 +1839,7 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
     ManifestWriters.task(path, stagingName, prefix, schema, conf, spec,
       injectFailure = partitionId == failPartition,
       bucket = if (recordBucket) partitionId else -1,
-      sortPos = sortPos, upsertKeys = upsertKeys,
+      sortPos = sortPos, upsertKeys = upsertKeys, typeIdx = typeIdx,
       ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx)
 }
 

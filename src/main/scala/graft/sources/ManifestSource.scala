@@ -548,15 +548,20 @@ object ManifestFiles {
     * resolving "latest" skip an incomplete tip instead of blocking.
     * Version files, not the `_MANIFEST`/`_SCHEMA` pointers, are the
     * source of truth: under concurrent commits the pointers can lag or
-    * even regress briefly (last swing wins); version files cannot. */
+    * even regress briefly (last swing wins); version files cannot. One
+    * directory listing answers it, however long the history. */
   def latestComplete(fs: FileSystem, dir: Path): Int =
     latestComplete(fs, dir, None)
 
-  def latestComplete(fs: FileSystem, dir: Path, branch: Option[String]): Int = {
-    val p = chainPrefix(branch)
-    (0 +: versions(fs, dir, branch).filter(v =>
-      fs.exists(new Path(dir, s"_SCHEMA.${p}v$v")))).max
-  }
+  def latestComplete(fs: FileSystem, dir: Path, branch: Option[String]): Int =
+    if (!fs.exists(dir)) 0
+    else {
+      val names = fs.listStatus(dir).map(_.getPath.getName).toSet
+      val p = chainPrefix(branch)
+      names.iterator.filter(_.startsWith(s"_MANIFEST.${p}v"))
+        .flatMap(_.stripPrefix(s"_MANIFEST.${p}v").toIntOption)
+        .filter(v => names(s"_SCHEMA.${p}v$v")).foldLeft(0)(math.max)
+    }
 
   /** Latest version whose snapshot file existed at `tsMicros` (commit
     * time = the version file's modification time). */
@@ -3760,11 +3765,15 @@ class GraftManifestCatalog extends TableCatalog
     val props = new java.util.HashMap[String, String]()
     props.put("path", dir.toString)
     version.foreach(v => props.put("versionAsOf", v.toString))
-    val schema = ManifestFiles.schemaFor(f, dir, version)
-    val confLines = ManifestFiles.linesOf(f, dir, version.orElse {
-      val v = ManifestFiles.latestComplete(f, dir)
-      if (v > 0) Some(v) else None
-    })
+    // the latest version is one head read; time travel and a legacy
+    // directory (no version files: `_MANIFEST` is the listing) read
+    // the named snapshot
+    val head = if (version.isEmpty) Some(ManifestFiles.head(f, dir, None))
+      .filter(_.version > 0) else None
+    val schema = head.flatMap(_.schema)
+      .getOrElse(ManifestFiles.schemaFor(f, dir, version))
+    val confLines = head.map(_.lines)
+      .getOrElse(ManifestFiles.linesOf(f, dir, version))
     if (ManifestFiles.isMergeOnRead(confLines))
       props.put("delete.mode", "merge-on-read")
     val bloomNames = ManifestFiles.bloomFromLines(confLines)

@@ -74,4 +74,27 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     // Final snapshot lists every commit's file exactly once.
     assert(ManifestFiles.entries(fs, p, None).length == writers * commitsEach)
   }
+
+  test("an incomplete tip (a claimed _MANIFEST.v<N+1> whose _SCHEMA.v<N+1> " +
+    "has not landed) reads as version N: latestComplete, path and catalog") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_tip").toString
+    val cat = "graft_tip_" + math.abs(root.hashCode)
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftManifestCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val dir = new Path(root, "t")
+    Seq(1, 2, 3).foreach { n =>
+      (0 until n).toDF("id").coalesce(1).write.mode("append")
+        .format("graft-manifest").option("path", dir.toString).save()
+    }
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(ManifestFiles.latestComplete(fs, dir) == 3)
+    // the crash window between the claim and its schema: v3 is claimed
+    assert(fs.delete(new Path(dir, "_SCHEMA.v3"), false))
+    assert(fs.exists(new Path(dir, "_MANIFEST.v3")))
+    assert(ManifestFiles.latestComplete(fs, dir) == 2)
+    assert(spark.read.format("graft-manifest").option("path", dir.toString)
+      .load().count() == 3L)
+    assert(spark.table(s"$cat.t").count() == 3L)
+  }
 }

@@ -224,6 +224,67 @@ class ManifestEqDeleteSpec extends AnyFunSuite {
       feed.toString)
   }
 
+  test("change-typed upsert: 'delete' rows drop their keys' prior rows, " +
+    "land no data rows and skip the CHECKs; other markers and a marker " +
+    "without upsertKeys fail; the marker is never stored") {
+    import spark.implicits._
+    val root = tmpDir()
+    val cat = register(root)
+    spark.sql(s"CREATE TABLE $cat.g (k BIGINT, v STRING, n BIGINT) " +
+      "TBLPROPERTIES('delete.mode'='merge-on-read', " +
+      "'check.n_set'='n IS NOT NULL')")
+    (0L until 6L).map(k => (k, s"a$k", k)).toDF("k", "v", "n")
+      .writeTo(s"$cat.g").append()
+    val dir = new Path(root, "g")
+    val fs = fsOf(dir)
+    def typed(rows: (Long, String, Option[Long], String)*) =
+      rows.toDF("k", "v", "n", "_change_type").coalesce(1)
+    def upsert(df: org.apache.spark.sql.DataFrame) =
+      df.write.mode("append").format("graft-manifest")
+        .option("path", dir.toString).option("upsertKeys", "k").save()
+    def state = spark.table(s"$cat.g").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+
+    // k=1 updates, k=6 inserts, k=2 and k=3 vanish — one commit; the
+    // 'delete' rows' NULL n would fail the CHECK, but never reach it
+    val v0 = ManifestFiles.latestComplete(fs, dir)
+    upsert(typed((1L, "b1", Some(10L), "insert"), (6L, "b6", Some(6L), "insert"),
+      (2L, null, None, "delete"), (3L, null, None, "delete")))
+    assert(ManifestFiles.latestComplete(fs, dir) == v0 + 1)
+    assert(state == Set(0L -> "a0", 1L -> "b1", 4L -> "a4", 5L -> "a5",
+      6L -> "b6"))
+
+    // a delete-only step records its key and writes no data row
+    val before = ManifestFiles.entries(fs, dir, None).map(_._1).toSet
+    upsert(typed((4L, null, None, "delete")))
+    val added = ManifestFiles.entries(fs, dir, None)
+      .filterNot(e => before.contains(e._1))
+    assert(added.map(_._2).sum == 0L, added.toSeq)
+    assert(state == Set(0L -> "a0", 1L -> "b1", 5L -> "a5", 6L -> "b6"))
+
+    // the published schema never holds the marker
+    assert(ManifestFiles.schemaFor(fs, dir, None).fieldNames.toSeq ==
+      Seq("k", "v", "n"))
+    assert(spark.table(s"$cat.g").columns.toSeq == Seq("k", "v", "n"))
+
+    // an 'insert' row still meets the CHECK
+    val e0 = intercept[Exception](upsert(typed((7L, "x", None, "insert"))))
+    assert(messages(e0).contains("n_set"), messages(e0))
+    // a marker other than 'insert'/'delete' fails the write
+    val e1 = intercept[Exception](
+      upsert(typed((5L, "c5", Some(5L), "update_preimage"))))
+    assert(messages(e1).contains("update_preimage"), messages(e1))
+    // the marker without upsertKeys is refused
+    val e2 = intercept[Exception](typed((8L, "x", Some(8L), "insert"))
+      .write.mode("append").format("graft-manifest")
+      .option("path", dir.toString).save())
+    assert(messages(e2).contains("_change_type"), messages(e2))
+    assert(state == Set(0L -> "a0", 1L -> "b1", 5L -> "a5", 6L -> "b6"))
+  }
+
   test("the change feed expresses upserts: value-keyed delete legs carry " +
     "the replaced rows' OLD values, stacking and replay-exactness hold") {
     import spark.implicits._

@@ -120,14 +120,20 @@ class ManifestMaterializedViewSpec extends AnyFunSuite {
   }
 
   test("a takedown that erases entire groups vanishes their MV rows " +
-    "(multi-key tuple-IN delete path) and the survivors stay exact") {
+    "(multi-key 'delete' rows riding the refresh's one upsert commit) " +
+    "and the survivors stay exact") {
     seedSourceIn { (cat, filter) =>
-      // multi-key MV exercises the (k1, k2) IN (...) vanish delete
+      // multi-key MV: the vanished (grp, sub) keys ride the upsert as
+      // 'delete'-typed rows
       ManifestMaterializedView.create(spark, cat, "mv2", "src",
         filter, Seq("grp", "sub"), ManifestMaterializedView.parseAggs(aggSpecs))
       spark.sql(s"DELETE FROM $cat.src WHERE grp = 'g2'") // whole groups
       spark.sql(s"DELETE FROM $cat.src WHERE k % 50 = 1") // partial dents
+      val mvDir = new Path(spark.conf.get(s"spark.sql.catalog.$cat.root"), "mv2")
+      val before = ManifestFiles.latestComplete(fsOf(mvDir), mvDir)
       ManifestMaterializedView.refresh(spark, cat, "mv2")
+      // upserted and vanished groups land in ONE MV-table version
+      assert(ManifestFiles.latestComplete(fsOf(mvDir), mvDir) == before + 1)
       val got = sortedRows(readMv(cat, "mv2"))
       val want = sortedRows(direct(cat, "src", filter, Seq("grp", "sub"), aggSel))
       assert(got == want)
@@ -406,10 +412,15 @@ class ManifestMaterializedViewSpec extends AnyFunSuite {
     starCheck(cat)
     assert(readMv(cat, "star").collect()
       .exists(_.getString(0) == "seg_moved"))
-    // a dim takedown erasing a whole segment deletes its MV groups
+    // a dim takedown erasing a whole segment deletes its MV groups, in
+    // the dim step's one MV commit
+    val starDir = new Path(root, "star")
+    def mvHead = ManifestFiles.latestComplete(fsOf(starDir), starDir)
+    val beforeTakedown = mvHead
     spark.sql(s"DELETE FROM $cat.dimc WHERE c_seg = 'seg9'")
     ManifestMaterializedView.refresh(spark, cat, "star")
     starCheck(cat)
+    assert(mvHead == beforeTakedown + 1)
     assert(!readMv(cat, "star").collect().exists(_.getString(0) == "seg9"),
       "groups of the vanished dim segment must be DELETED from the MV")
     assert(ManifestMaterializedView.fullRecomputes.get() == fullBefore,
@@ -420,8 +431,10 @@ class ManifestMaterializedViewSpec extends AnyFunSuite {
     spark.sql(s"CALL $cat.system.vacuum('dimc', 1)")
     Seq((401L, 21L, 2L, 50.0)).toDF("sk", "f_c", "f_i", "amt")
       .writeTo(s"$cat.fact").append()
+    val beforeRecompute = mvHead
     ManifestMaterializedView.refresh(spark, cat, "star")
     starCheck(cat)
+    assert(mvHead == beforeRecompute + 1) // the recompute's one commit
     assert(ManifestMaterializedView.fullRecomputes.get() > fullBefore,
       "an expired dim pin must fall back to the authoritative recompute")
   }
