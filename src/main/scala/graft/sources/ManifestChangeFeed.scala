@@ -37,7 +37,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * A range whose versions were vacuumed fails with the expired-version
   * surface; an unlisted file whose bytes vacuum already reclaimed fails
   * loudly at plan time (the diff is genuinely unavailable — widen
-  * retention or restart downstream). */
+  * retention or restart downstream).
+  *
+  * ONE VERSION WALK. Every incremental reader of `(from, end]` steps
+  * through [[walk]] here: the feed's plan ([[planRange]]), streaming
+  * admission ([[ManifestFiles.admittedEnd]] /
+  * [[ManifestFiles.availableRows]]) and the extrema gate
+  * ([[rangeAppendOnly]]) are per-step folds over it, and the plain
+  * tail's two-point [[ManifestFiles.addedBetween]] reads through its
+  * expired-aware [[linesAt]]. The walk alone owns the expired-version
+  * error, the `from = 0` start at the oldest retained version, and the
+  * `#maint` run jump with its deferred baseline. Both streams — the
+  * plain tail and this feed — are one [[ManifestVersionStream]],
+  * differing only in how a range plans and which readers they build. */
 object ManifestChangeFeed {
   val TypeCol = "_change_type"
   val VersionCol = "_commit_version"
@@ -87,70 +99,47 @@ object ManifestChangeFeed {
     * can beat a stored min/max; appends can only fold in via
     * least/greatest) — whose compensation fold must then read the feed
     * with `skipMaintenance` so the marked steps' cancelling legs never
-    * reach the extrema column. O(range) snapshot line reads,
-    * segment-cached like every plan-path read. */
+    * reach the extrema column. A fold over the [[walk]] with its marker
+    * jumps on: a compaction rewrites FILES, never rows, so it cannot
+    * retract a value, and the next data step diffs against the run's
+    * end — which lets min/max compensate across the continuous-ingest
+    * shape "append, nightly compact, append". A vacuumed run end keeps
+    * the pre-run baseline (rows equal by the marker proof), so the next
+    * data step fails conservatively on the run's file churn rather than
+    * silently passing a retraction. */
   def rangeAppendOnly(fs: FileSystem, dir: Path, from: Int,
       end: Int): Boolean = {
     def delState(lines: Array[String]): Set[String] =
       lines.filter(l => l.startsWith("#dels,") ||
         l.startsWith("#eqdels,")).toSet
-    // marker-proven row-preserving steps (round 16): a compaction
-    // rewrites FILES, never rows, so it cannot retract a value — the
-    // append-only-in-ROWS property this probe guards survives it. The
-    // walk still advances its baseline through the marked step, so the
-    // next data step diffs against the reorganized listing. This is
-    // what lets min/max compensate across the continuous-ingest shape
-    // "append, nightly compact, append" (not just a leading prefix).
-    val marks = ManifestFiles.maintFromLines(
-      ManifestFiles.readManifest(fs, new Path(dir, s"_MANIFEST.v$end")))
-    var prev =
-      if (from <= 0) Array.empty[String]
-      else ManifestFiles.linesOf(fs, dir, Some(from))
-    (from + 1 to end).forall { v =>
-      if (marks.contains(v)) {
-        // a VACUUMED marked version must not poison the baseline: its
-        // empty listing would make the next step's subset check
-        // vacuously true (unsafe) — keep the previous baseline instead
-        // (rows equal by the marker proof; the next data step then
-        // diffs against it, conservatively failing on the run's file
-        // churn rather than silently passing a retraction)
-        if (fs.exists(new Path(dir, s"_MANIFEST.v$v")))
-          prev = ManifestFiles.linesOf(fs, dir, Some(v))
-        true
-      } else {
-        val cur = ManifestFiles.linesOf(fs, dir, Some(v))
-        val prevNames = ManifestFiles.entriesFromLines(prev).map(_._1).toSet
-        val curNames = ManifestFiles.entriesFromLines(cur).map(_._1).toSet
-        val ok = prevNames.subsetOf(curNames) &&
-          (delState(cur) -- delState(prev)).isEmpty
-        prev = cur
+    var ok = true
+    walk(fs, dir, from, end, skipMaint = true, new Listing(_)) {
+      (_, prev, cur) =>
+        ok = prev.names.subsetOf(cur.names) &&
+          (delState(cur.lines) -- delState(prev.lines)).isEmpty
         ok
-      }
     }
+    ok
   }
 
   /** Did every version step between `a` and `b` (either order) preserve
     * the table's LOGICAL ROW MULTISET exactly? True only when each step
     * in the range carries a `#maint` marker (compaction / Z-order /
     * scoped compaction / delete-file rewrite — see
-    * [[ManifestFiles.maintLine]]). ONE snapshot read at the range's
-    * upper end: markers carry forward commit-over-commit, so the newest
-    * snapshot in the range holds every marker at or below it (subject
-    * to the MaintKeep cap — an aged-out marker answers false,
-    * conservatively). Powers maintenance-transparent MV freshness: a
-    * rewrite or refresh over a maintenance-only tail is EXACT with zero
-    * data I/O, in either direction (the row state at `a` and `b` is
-    * identical). */
+    * [[ManifestFiles.maintLine]]). ONE marker read at the range's
+    * upper end ([[marksAt]]): markers carry forward commit-over-commit,
+    * so the newest snapshot in the range holds every marker at or below
+    * it (subject to the MaintKeep cap — an aged-out marker answers
+    * false, conservatively). Powers maintenance-transparent MV
+    * freshness: a rewrite or refresh over a maintenance-only tail is
+    * EXACT with zero data I/O, in either direction (the row state at
+    * `a` and `b` is identical). */
   def rangeRowPreserving(fs: FileSystem, dir: Path, a: Int,
       b: Int): Boolean = {
     val lo = math.min(a, b); val hi = math.max(a, b)
     if (lo == hi) return true
-    if (lo < 0 || !fs.exists(new Path(dir, s"_MANIFEST.v$hi"))) return false
-    // RAW list read, not materialize: `#maint` markers are inline
-    // control lines, so the proof never resolves a segment file — the
-    // plan-path cost is one small-file read however large the table
-    val marks = ManifestFiles.maintFromLines(
-      ManifestFiles.readManifest(fs, new Path(dir, s"_MANIFEST.v$hi")))
+    if (lo < 0) return false
+    val marks = marksAt(fs, dir, hi)
     ((lo + 1) to hi).forall(marks.contains)
   }
 
@@ -162,21 +151,18 @@ object ManifestChangeFeed {
     * append" — folding from the pin would replay the compaction's
     * full-table delete+insert legs (they cancel exactly, but only
     * after reading the table twice); folding from the prefix end reads
-    * just the appends. Same one-raw-read proof as
-    * [[rangeRowPreserving]]; an unmarked (or aged-out) step stops the
-    * advance conservatively. */
+    * just the appends. Same one marker read as [[rangeRowPreserving]];
+    * an unmarked (or aged-out) step stops the advance conservatively. */
   def rowPreservingPrefix(fs: FileSystem, dir: Path, from: Int,
       to: Int): Int = {
-    if (to <= from || from < 0 ||
-        !fs.exists(new Path(dir, s"_MANIFEST.v$to"))) return from
-    val marks = ManifestFiles.maintFromLines(
-      ManifestFiles.readManifest(fs, new Path(dir, s"_MANIFEST.v$to")))
+    if (to <= from || from < 0) return from
+    val marks = marksAt(fs, dir, to)
     // advance only onto RETAINED versions: a consumer anchors its CDF
     // baseline at the returned prefix end, and a baseline whose own
     // snapshot was vacuumed (a tag can pin `from` while untagged
     // maintenance commits age out) would force refresh's retention
     // check into a full recompute that the retained `from` can serve
-    // exactly (planRange's deferred-baseline fallback)
+    // exactly (the walk's deferred-baseline fallback)
     var m = from
     var best = from
     while (m < to && marks.contains(m + 1)) {
@@ -195,66 +181,132 @@ object ManifestChangeFeed {
     * the plain "every version retained" pre-gate. */
   def tailFoldable(fs: FileSystem, dir: Path, from: Int, to: Int): Boolean = {
     if (to <= from) return true
-    if (from < 1 || !fs.exists(new Path(dir, s"_MANIFEST.v$from"))) return false
-    if (!fs.exists(new Path(dir, s"_MANIFEST.v$to"))) return false
-    val marks = ManifestFiles.maintFromLines(
-      ManifestFiles.readManifest(fs, new Path(dir, s"_MANIFEST.v$to")))
     val retained = ManifestFiles.versions(fs, dir).toSet
+    if (from < 1 || !retained(from) || !retained(to)) return false
+    val marks = marksAt(fs, dir, to)
     ((from + 1) to to).forall(v => marks.contains(v) || retained.contains(v))
   }
 
-  /** Shared maintenance-run JUMP for the skipping walks (planRange /
-    * admittedEnd / availableRows — one state machine, three baselines):
-    * from a marked step `v`, find the run end `m`, and resolve the
-    * lines the walk's baseline should advance to — `Some(run-end
-    * lines)` normally; when the run-end snapshot was vacuumed,
-    * `Some(from's lines)` if the baseline read was deferred (loud if it
-    * too expired), else `None` = keep the current baseline (rows equal
-    * by the marker proof; the next unmarked step diffs against it
-    * exactly). Returns (runEnd, state, runEndRetained) — callers that
-    * PUBLISH offsets must not publish an unretained run end. */
-  private[sources] def jumpMaintRun(fs: FileSystem, dir: Path,
-      marks: Set[Int], v: Int, end: Int, from: Int,
-      baselineDeferred: Boolean, linesAt: Int => Array[String]):
-      (Int, Option[Array[String]], Boolean) = {
-    var m = v
-    while (m < end && marks.contains(m + 1)) m += 1
-    if (fs.exists(new Path(dir, s"_MANIFEST.v$m")))
-      (m, Some(linesAt(m)), true)
-    else if (baselineDeferred) (m, Some(linesAt(from)), false)
-    else (m, None, false)
+  /** The `#maint` markers as of version `v`: one RAW list read, never a
+    * materialize — markers are inline control lines, so the proof never
+    * resolves a segment file (one small-file read however large the
+    * table). A vacuumed `v` holds no markers. */
+  private[sources] def marksAt(fs: FileSystem, dir: Path, v: Int): Set[Int] =
+    ManifestFiles.maintFromLines(
+      ManifestFiles.readManifest(fs, new Path(dir, s"_MANIFEST.v$v")))
+
+  /** The walk's one snapshot read: version `v`'s full lines, or None
+    * when its version file was vacuumed (version 0 is the empty table). */
+  private def retainedLines(fs: FileSystem, dir: Path,
+      v: Int): Option[Array[String]] =
+    if (v <= 0) Some(Array.empty)
+    else if (!fs.exists(new Path(dir, s"_MANIFEST.v$v"))) None
+    else Some(ManifestFiles.linesOf(fs, dir, Some(v)))
+
+  /** [[retainedLines]] for a version the reader NEEDS: a vacuumed one
+    * surfaces as EXPIRED, not as a generic missing-file error — the
+    * caller's checkpoint or range outlived the retention window and
+    * needs a deliberate restart. */
+  private[sources] def linesAt(fs: FileSystem, dir: Path,
+      v: Int): Array[String] =
+    retainedLines(fs, dir, v).getOrElse {
+      val have = ManifestFiles.versions(fs, dir).sorted
+      throw new IllegalStateException(
+        s"graft-manifest at $dir: version $v has expired (vacuumed); " +
+          s"retained versions: ${have.mkString(",")} — restart the " +
+          "incremental read or change feed from a retained version")
+    }
+
+  /** A walked snapshot: its lines, with the entry listing parsed once. */
+  private[sources] final class Listing(val lines: Array[String]) {
+    lazy val entries: Array[(String, Long)] =
+      ManifestFiles.entriesFromLines(lines)
+    lazy val names: Set[String] = entries.iterator.map(_._1).toSet
   }
 
-  /** The step walk, shared by the batch scan and the streaming source:
-    * one ManifestChangePartition per changed file per commit in
-    * (from, end]. Driver metadata I/O only.
+  /** THE VERSION WALK over `(from, end]`, shared by every incremental
+    * reader: the change feed ([[planRange]]), streaming admission
+    * ([[ManifestFiles.admittedEnd]] / [[ManifestFiles.availableRows]])
+    * and the extrema gate ([[rangeAppendOnly]]) are folds over it. Each
+    * snapshot it reads goes through `load` once; `step(v, prev, cur)`
+    * sees every step that must be diffed — `prev` is its baseline —
+    * and returns false to stop the walk. The rules live here only:
+    *   - every read is [[linesAt]]: a vacuumed version fails as EXPIRED;
+    *   - a `from = 0` walk on a vacuumed table starts at the OLDEST
+    *     RETAINED version: the history below it is observable only as
+    *     that snapshot, which diffs against the empty baseline (so a
+    *     marker on it never skips it). A NON-zero expired `from` fails
+    *     (the checkpoint outlived retention);
+    *   - with `skipMaint`, the `#maint` markers are read ONCE from the
+    *     range end ([[marksAt]]) and each marked RUN is jumped in one
+    *     hop: the row state at its end equals the state at its start,
+    *     so the baseline advances to the run end without a step — and
+    *     without reading (possibly vacuumed) intermediate snapshots. A
+    *     vacuumed run end keeps the current baseline (rows equal by the
+    *     marker proof; the next unmarked step diffs against it exactly,
+    *     folding the run's cancelling reorganization back in).
+    *     `onJump(runEnd, retained)` reports each jump; only admission
+    *     needs it, because only admission PUBLISHES offsets;
+    *   - the baseline read is DEFERRED when the first step is marked:
+    *     the jump usually replaces it wholesale, so a checkpoint whose
+    *     own snapshot was vacuumed behind a maintenance run still walks.
+    *     If the run end was vacuumed too, the deferred read happens
+    *     then — loudly, if it also expired. */
+  private[sources] def walk[S](fs: FileSystem, dir: Path, from: Int,
+      end: Int, skipMaint: Boolean, load: Array[String] => S,
+      onJump: (Int, Boolean) => Unit = (_: Int, _: Boolean) => ())(
+      step: (Int, S, S) => Boolean): Unit = {
+    var v = from + 1
+    var mustEmit = -1
+    if (from == 0) {
+      val retained = ManifestFiles.versions(fs, dir)
+      if (retained.nonEmpty && retained.min > 1) {
+        v = retained.min; mustEmit = v
+      }
+    }
+    val marks = if (skipMaint) marksAt(fs, dir, end) else Set.empty[Int]
+    var base: Option[S] =
+      if (from > 0 && marks.contains(v)) None
+      else Some(load(linesAt(fs, dir, from)))
+    var going = true
+    while (going && v <= end) {
+      if (marks.contains(v) && v != mustEmit) {
+        var m = v
+        while (m < end && marks.contains(m + 1)) m += 1
+        val runEnd = retainedLines(fs, dir, m)
+        runEnd.foreach(lines => base = Some(load(lines)))
+        if (base.isEmpty) base = Some(load(linesAt(fs, dir, from)))
+        onJump(m, runEnd.isDefined)
+        v = m + 1
+      } else {
+        val cur = load(linesAt(fs, dir, v))
+        going = step(v, base.get, cur)
+        base = Some(cur)
+        v += 1
+      }
+    }
+  }
+
+  /** The change feed's plan: one ManifestChangePartition per changed
+    * file per commit in (from, end], a fold over the [[walk]]. Driver
+    * metadata I/O only, shared by the batch scan and the stream.
     *
     * `skipMaint` (the `skipMaintenance` read option, round 16): a step
     * carrying a `#maint` marker is PROVEN to have preserved the logical
     * row multiset — its delete+insert legs cancel exactly under any
-    * signed fold — so the feed omits them entirely, which is what Delta
-    * CDF and Iceberg's changelog scan do for compactions. This is the
-    * difference, for every 24/7 CDF consumer (MV refresh, governed
-    * ANN/band index maintenance, fingerprint stores), between a nightly
-    * compaction costing a full corpus replay and costing NOTHING.
-    * Marked RUNS are jumped in one hop (the walk reads only the
-    * run-end snapshot), so a vacuumed mid-run version never fails a
-    * feed that skips it; an aged-out marker (MaintKeep cap) simply
-    * emits that step's legs — still exact, they cancel downstream. */
+    * signed fold — so the feed omits them entirely (the walk jumps
+    * marked runs), which is what Delta CDF and Iceberg's changelog scan
+    * do for compactions. This is the difference, for every 24/7 CDF
+    * consumer (MV refresh, governed ANN/band index maintenance,
+    * fingerprint stores), between a nightly compaction costing a full
+    * corpus replay and costing NOTHING. An aged-out marker (MaintKeep
+    * cap) simply emits that step's legs — still exact, they cancel
+    * downstream. */
   def planRange(fs: FileSystem, dir: Path, from: Int,
       end: Int, schema: StructType,
       conf: org.apache.hadoop.conf.Configuration,
       skipMaint: Boolean = false): Array[InputPartition] = {
     require(end >= from, s"changesTo ($end) must be >= changesFrom ($from)")
-    def linesAt(v: Int): Array[String] =
-      if (v <= 0) Array.empty
-      else if (!fs.exists(new Path(dir, s"_MANIFEST.v$v"))) {
-        val have = ManifestFiles.versions(fs, dir).sorted
-        throw new IllegalStateException(
-          s"graft-manifest at $dir: version $v has expired (vacuumed); " +
-            s"retained versions: ${have.mkString(",")} — restart the " +
-            "change feed from a retained version")
-      } else ManifestFiles.linesOf(fs, dir, Some(v))
     // delete-FILE contents cache: each #dels file is immutable, read once
     val delFileCache = scala.collection.mutable.Map.empty[String, Array[(String, Long)]]
     def delsOf(lines: Array[String]): Map[String, Array[Long]] =
@@ -294,56 +346,22 @@ object ManifestChangeFeed {
       }
     }
 
-    val out = Array.newBuilder[InputPartition]
+    // one walked snapshot, parsed once whether it is a step or a baseline.
     // ROW LINEAGE riders (immutable per file while listed): insert legs
     // resolve against the commit's own snapshot, delete legs against the
     // predecessor — so a feed consumer sees each leg's `_row_id` exactly
     // as a reader of that snapshot would
-    def ridsOf(lines: Array[String]):
-        (Map[String, Long], Set[String], Map[String, Int], Set[String]) =
-      (ManifestFiles.firstRowFromLines(lines),
-        ManifestFiles.ridColFromLines(lines),
-        ManifestFiles.luvFromLines(lines),
-        ManifestFiles.luvColFromLines(lines))
-    var v = from + 1
-    // FULL-HISTORY feeds (from = 0) on a vacuumed table: the history
-    // below the oldest retained version is observable only as that
-    // snapshot, so the walk starts there and its entries surface as
-    // inserts at that version — the same contract the plain tail's
-    // admission walk keeps. A NON-zero expired `from` still fails
-    // loudly below (the checkpoint outlived retention). That first step
-    // diffs against the EMPTY baseline, not its predecessor, so a
-    // maintenance marker on it must never skip it (`mustEmit`).
-    var mustEmit = -1
-    if (from == 0) {
-      val retained = ManifestFiles.versions(fs, dir)
-      if (retained.nonEmpty && retained.min > 1) {
-        v = retained.min; mustEmit = v
-      }
+    final class Snap(val lines: Array[String]) {
+      val names: Set[String] =
+        ManifestFiles.entriesFromLines(lines).map(_._1).toSet
+      val dels: Map[String, Array[Long]] = delsOf(lines)
+      val firstRow: Map[String, Long] = ManifestFiles.firstRowFromLines(lines)
+      val ridCol: Set[String] = ManifestFiles.ridColFromLines(lines)
+      val luv: Map[String, Int] = ManifestFiles.luvFromLines(lines)
+      val luvCol: Set[String] = ManifestFiles.luvColFromLines(lines)
     }
-    // `#maint` markers are inline control lines carried forward by every
-    // commit, so ONE raw read of the range-end list file proves every
-    // skippable step (same read discipline as rangeRowPreserving)
-    val maintMarks: Set[Int] =
-      if (!skipMaint) Set.empty
-      else ManifestFiles.maintFromLines(ManifestFiles.readManifest(
-        fs, new Path(dir, s"_MANIFEST.v$end")))
-    // the baseline read is DEFERRED when the walk's first step is a
-    // marked maintenance step: the jump below usually replaces the
-    // state wholesale, so a checkpoint whose own snapshot was vacuumed
-    // behind a maintenance run still feeds (the marker proof never
-    // reads it). If the jump itself cannot land (run-end vacuumed), the
-    // deferred read materializes then — loudly, if it too expired.
-    var baselineDeferred = from > 0 && maintMarks.contains(v)
-    var prevLines =
-      if (baselineDeferred) Array.empty[String] else linesAt(from)
-    var prevNames = ManifestFiles.entriesFromLines(prevLines).map(_._1).toSet
-    var prevDels = delsOf(prevLines)
-    var prevRids = ridsOf(prevLines)
-    def emitStep(v: Int): Unit = {
-      val curLines = linesAt(v)
-      val curNames = ManifestFiles.entriesFromLines(curLines).map(_._1).toSet
-      val curDels = delsOf(curLines)
+    val out = Array.newBuilder[InputPartition]
+    walk(fs, dir, from, end, skipMaint, new Snap(_)) { (v, prev, cur) =>
       // A version step that REMOVES delete state — CALL rollback to a
       // pre-delete snapshot — RESURRECTS rows on files that survive the
       // step, a diff this walk cannot express as insert/delete legs (the
@@ -352,14 +370,14 @@ object ManifestChangeFeed {
       // silently diverge. Shrinkage on files that were ALSO unlisted in
       // the same step (compaction materializing its deletes) stays fine:
       // those surface as full delete+insert legs.
-      val survivors = curNames & prevNames
+      val survivors = cur.names & prev.names
       val shrunkVec = survivors.iterator.filter { n =>
-        prevDels.getOrElse(n, Array.empty[Long])
-          .diff(curDels.getOrElse(n, Array.empty[Long])).nonEmpty
+        prev.dels.getOrElse(n, Array.empty[Long])
+          .diff(cur.dels.getOrElse(n, Array.empty[Long])).nonEmpty
       }.take(1).toSeq
-      val curLineSet = curLines.toSet
-      val bornPrev = ManifestFiles.bornFromLines(prevLines)
-      val shrunkEq = prevLines.filter { l =>
+      val curLineSet = cur.lines.toSet
+      val bornPrev = ManifestFiles.bornFromLines(prev.lines)
+      val shrunkEq = prev.lines.filter { l =>
         l.startsWith("#eqdels,") && !curLineSet.contains(l) && {
           val ver = l.split(",", 4).lift(3).flatMap(_.toIntOption).getOrElse(0)
           survivors.exists(n => bornPrev.getOrElse(n, 0) < ver)
@@ -379,8 +397,8 @@ object ManifestChangeFeed {
       // a new `#eqdels` set at v deletes, from every file born before
       // it, the rows that were LIVE at the predecessor (not positionally
       // deleted, not already eq-deleted) and match the set's tuples
-      val prevEqApplicable = eqApplicable(prevLines)
-      val newEqSets = eqSetsOf(curLines).collect {
+      val prevEqApplicable = eqApplicable(prev.lines)
+      val newEqSets = eqSetsOf(cur.lines).collect {
         case (ver, st) if ver == v => st }
       val mergedNew =
         if (newEqSets.isEmpty) None
@@ -391,78 +409,41 @@ object ManifestChangeFeed {
           newEqSets.head.keyTypes, newEqSets.flatMap(_.tuples).toArray))
       val ts = fs.getFileStatus(new Path(dir, s"_MANIFEST.v$v"))
         .getModificationTime * 1000L
-      val curRids = ridsOf(curLines)
-      def ridArgs(n: String,
-          of: (Map[String, Long], Set[String], Map[String, Int], Set[String])):
-          (Long, Boolean, Int, Boolean) =
-        (of._1.getOrElse(n, -1L), of._2.contains(n),
-          of._3.getOrElse(n, -1), of._4.contains(n))
-      (curNames -- prevNames).toSeq.sorted.foreach { n =>
-        val (fr, rc, lv, lc) = ridArgs(n, curRids)
-        out += ManifestChangePartition(new Path(dir, n).toString, n,
-          "insert", v, curDels.getOrElse(n, Array.empty), Array.empty, ts,
-          firstRow = fr, ridCol = rc, luv = lv, luvCol = lc)
+      def leg(n: String, kind: String, of: Snap, skip: Array[Long],
+          keep: Array[Long], skipEqs: Seq[ManifestEqDeletes.EqSet] = Seq.empty,
+          keepEq: Option[ManifestEqDeletes.EqSet] = None): Unit =
+        out += ManifestChangePartition(new Path(dir, n).toString, n, kind, v,
+          skip, keep, ts, keepEq = keepEq, skipEqs = skipEqs,
+          firstRow = of.firstRow.getOrElse(n, -1L),
+          ridCol = of.ridCol.contains(n), luv = of.luv.getOrElse(n, -1),
+          luvCol = of.luvCol.contains(n))
+      (cur.names -- prev.names).toSeq.sorted.foreach { n =>
+        leg(n, "insert", cur, cur.dels.getOrElse(n, Array.empty), Array.empty)
       }
-      (prevNames -- curNames).toSeq.sorted.foreach { n =>
+      (prev.names -- cur.names).toSeq.sorted.foreach { n =>
         if (!fs.exists(new Path(dir, n))) throw new IllegalStateException(
           s"graft-manifest at $dir: data file $n was unlisted at " +
             s"version $v and its bytes were vacuumed — the change feed " +
             "for this range is unavailable; widen retention or restart " +
             "downstream from a full snapshot")
-        val (fr, rc, lv, lc) = ridArgs(n, prevRids)
-        out += ManifestChangePartition(new Path(dir, n).toString, n,
-          "delete", v, prevDels.getOrElse(n, Array.empty), Array.empty, ts,
-          skipEqs = prevEqApplicable.getOrElse(n, Seq.empty),
-          firstRow = fr, ridCol = rc, luv = lv, luvCol = lc)
+        leg(n, "delete", prev, prev.dels.getOrElse(n, Array.empty),
+          Array.empty, skipEqs = prevEqApplicable.getOrElse(n, Seq.empty))
       }
-      (curNames & prevNames).toSeq.sorted.foreach { n =>
-        val fresh = curDels.getOrElse(n, Array.empty)
-          .diff(prevDels.getOrElse(n, Array.empty))
-        if (fresh.nonEmpty) {
-          val (fr, rc, lv, lc) = ridArgs(n, prevRids)
-          out += ManifestChangePartition(new Path(dir, n).toString, n,
-            "delete", v, Array.empty, fresh, ts, firstRow = fr, ridCol = rc,
-            luv = lv, luvCol = lc)
-        }
+      survivors.toSeq.sorted.foreach { n =>
+        val fresh = cur.dels.getOrElse(n, Array.empty)
+          .diff(prev.dels.getOrElse(n, Array.empty))
+        if (fresh.nonEmpty) leg(n, "delete", prev, Array.empty, fresh)
       }
       mergedNew.foreach { st =>
-        val bornCur = ManifestFiles.bornFromLines(curLines)
-        (curNames & prevNames).toSeq.sorted
+        val bornCur = ManifestFiles.bornFromLines(cur.lines)
+        survivors.toSeq.sorted
           .filter(n => bornCur.getOrElse(n, 0) < v).foreach { n =>
-            val (fr, rc, lv, lc) = ridArgs(n, prevRids)
-            out += ManifestChangePartition(new Path(dir, n).toString, n,
-              "delete", v, prevDels.getOrElse(n, Array.empty), Array.empty,
-              ts, skipEqs = prevEqApplicable.getOrElse(n, Seq.empty),
-              keepEq = Some(st), firstRow = fr, ridCol = rc,
-              luv = lv, luvCol = lc)
+            leg(n, "delete", prev, prev.dels.getOrElse(n, Array.empty),
+              Array.empty, skipEqs = prevEqApplicable.getOrElse(n, Seq.empty),
+              keepEq = Some(st))
           }
       }
-      prevLines = curLines; prevNames = curNames; prevDels = curDels
-      prevRids = curRids
-    }
-    while (v <= end) {
-      if (maintMarks.contains(v) && v != mustEmit) {
-        // jump the whole marked run in one hop: the row state at its
-        // end equals the state at its start, so the baseline advances
-        // without emitting legs — and without reading (possibly
-        // vacuumed) intermediate snapshots. A vacuumed run-end keeps
-        // the current baseline (see jumpMaintRun): the next unmarked
-        // step diffs against it EXACTLY, folding the run's cancelling
-        // reorganization back in — unskipped, still exact.
-        val (m, state, _) = jumpMaintRun(fs, dir, maintMarks, v, end,
-          from, baselineDeferred, linesAt)
-        state.foreach { jump =>
-          prevLines = jump
-          prevNames = ManifestFiles.entriesFromLines(jump).map(_._1).toSet
-          prevDels = delsOf(jump)
-          prevRids = ridsOf(jump)
-        }
-        baselineDeferred = false
-        v = m + 1
-      } else {
-        emitStep(v)
-        v += 1
-      }
+      true
     }
     out.result()
   }
@@ -559,14 +540,8 @@ private[sources] case class ManifestChangePartition(file: String,
 private[sources] class ManifestChangeFeedScan(path: String, from: Int,
     to: Option[Int], fullSchema: StructType, required: StructType,
     conf: SerializableHadoopConf,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None,
-    maxRowsPerTrigger: Option[Long] = None,
-    minRowsPerTrigger: Option[Long] = None,
-    maxTriggerDelayMs: Long = 15000L,
+    caps: ManifestAdmission.Caps = ManifestAdmission.Caps(),
     skipMaintenance: Boolean = false) extends Scan with Batch {
-
-  import ManifestChangeFeed._
 
   private def dir = new Path(path)
 
@@ -575,12 +550,15 @@ private[sources] class ManifestChangeFeedScan(path: String, from: Int,
   override def description(): String =
     s"graft-manifest-changefeed $path v$from..${to.getOrElse("latest")}"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val fs = dir.getFileSystem(conf.value)
-    ManifestChangeFeed.planRange(fs, dir, from,
-      to.getOrElse(ManifestFiles.latestComplete(fs, dir)),
+  private def plan(fs: FileSystem, dir: Path, from: Int,
+      end: Int): Array[InputPartition] =
+    ManifestChangeFeed.planRange(fs, dir, from, end,
       ManifestChangeFeed.stripCdf(fullSchema), conf.value,
       skipMaint = skipMaintenance)
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val fs = dir.getFileSystem(conf.value)
+    plan(fs, dir, from, to.getOrElse(ManifestFiles.latestComplete(fs, dir)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -597,70 +575,10 @@ private[sources] class ManifestChangeFeedScan(path: String, from: Int,
     * = full history first batch). */
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ManifestChangeFeedStream(path, from, fullSchema, required, conf,
-      maxFilesPerTrigger, maxBytesPerTrigger, maxRowsPerTrigger,
-      minRowsPerTrigger, maxTriggerDelayMs, skipMaintenance)
-}
-
-private[sources] class ManifestChangeFeedStream(path: String, startAt: Int,
-    fullSchema: StructType, required: StructType, conf: SerializableHadoopConf,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None,
-    maxRowsPerTrigger: Option[Long] = None,
-    minRowsPerTrigger: Option[Long] = None,
-    maxTriggerDelayMs: Long = 15000L,
-    skipMaintenance: Boolean = false)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-
-  private def dir = new Path(path)
-  private def fs = dir.getFileSystem(conf.value)
-
-  @volatile private var availableEnd: Option[Int] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableEnd = Some(ManifestFiles.latestVersion(fs, dir))
-
-  private def head: Int =
-    availableEnd.getOrElse(ManifestFiles.latestVersion(fs, dir))
-
-  override def getDefaultReadLimit: ReadLimit =
-    ManifestAdmission.defaultLimit(maxFilesPerTrigger, maxBytesPerTrigger,
-      maxRowsPerTrigger, minRowsPerTrigger, maxTriggerDelayMs)
-
-  @volatile private var lastTriggerMs = 0L
-
-  override def initialOffset(): Offset = ManifestOffset(startAt)
-  override def latestOffset(): Offset =
-    ManifestOffset(ManifestFiles.latestVersion(fs, dir))
-  // Admission control for the streaming change feed: the same capped
-  // version walk as the plain tail, with `countRemovals = true` —
-  // a version's UNLISTED entries are reads the CDF batch must perform
-  // (delete legs), so they price against the caps too.
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[ManifestOffset].version
-    ManifestOffset(ManifestAdmission.decide(fs, dir, from, head,
-      ManifestAdmission.capsOf(limit), countRemovals = true,
-      draining = availableEnd.isDefined,
-      () => lastTriggerMs, lastTriggerMs = _,
-      skipMaint = skipMaintenance))
-  }
-  override def reportLatestOffset(): Offset = ManifestOffset(head)
-  override def deserializeOffset(json: String): Offset =
-    ManifestOffset(json.trim.toInt)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    ManifestChangeFeed.planRange(fs, dir,
-      start.asInstanceOf[ManifestOffset].version,
-      end.asInstanceOf[ManifestOffset].version,
-      ManifestChangeFeed.stripCdf(fullSchema), conf.value,
-      skipMaint = skipMaintenance)
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    ManifestChangeFeed.readerFactory(fs, dir, None, fullSchema, required, conf)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+    new ManifestVersionStream(path, conf, caps, startAt = from,
+      countRemovals = true, skipMaint = skipMaintenance, plan = plan,
+      readers = (fs, dir) => ManifestChangeFeed.readerFactory(fs, dir, None,
+        fullSchema, required, conf))
 }
 
 /** Wraps the ordinary single-file readers: the inner read projects the

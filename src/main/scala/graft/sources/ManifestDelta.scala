@@ -242,7 +242,7 @@ private[sources] class ManifestDeltaWriterFactory(path: String,
 
       override def commit(): WriterCommitMessage = {
         val dataMsg = Seq(Option(dataWriter), Option(updWriter)).flatten
-          .map(_.commit().asInstanceOf[FileCommitted])
+          .flatMap(w => ManifestWriters.filesOf(w.commit()))
         if (delOut != null) delOut.close()
         DeltaCommitted(dataMsg,
           if (delRows > 0) Some(delName) else {

@@ -501,31 +501,32 @@ private[sources] class ManifestTable(schema0: StructType,
       branch = branch,
       filesSubset = opt("filesSubset")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet),
-      maxFilesPerTrigger = opt("maxFilesPerTrigger").map { s =>
-        val n = s.trim.toInt
-        require(n > 0, s"maxFilesPerTrigger must be positive, got $n")
-        n
-      },
-      maxBytesPerTrigger = opt("maxBytesPerTrigger").map { s =>
-        val b = s.trim.toLong
-        require(b > 0, s"maxBytesPerTrigger must be positive, got $b")
-        b
-      },
-      maxRowsPerTrigger = opt("maxRowsPerTrigger").map { s =>
-        val r = s.trim.toLong
-        require(r > 0, s"maxRowsPerTrigger must be positive, got $r")
-        r
-      },
-      minRowsPerTrigger = opt("minRowsPerTrigger").map { s =>
-        val r = s.trim.toLong
-        require(r > 0, s"minRowsPerTrigger must be positive, got $r")
-        r
-      },
-      maxTriggerDelayMs = opt("maxTriggerDelayMs").map { s =>
-        val d = s.trim.toLong
-        require(d >= 0, s"maxTriggerDelayMs must be >= 0, got $d")
-        d
-      }.getOrElse(15000L),
+      caps = ManifestAdmission.Caps(
+        maxFiles = opt("maxFilesPerTrigger").map { s =>
+          val n = s.trim.toInt
+          require(n > 0, s"maxFilesPerTrigger must be positive, got $n")
+          n
+        },
+        maxBytes = opt("maxBytesPerTrigger").map { s =>
+          val b = s.trim.toLong
+          require(b > 0, s"maxBytesPerTrigger must be positive, got $b")
+          b
+        },
+        maxRows = opt("maxRowsPerTrigger").map { s =>
+          val r = s.trim.toLong
+          require(r > 0, s"maxRowsPerTrigger must be positive, got $r")
+          r
+        },
+        minRows = opt("minRowsPerTrigger").map { s =>
+          val r = s.trim.toLong
+          require(r > 0, s"minRowsPerTrigger must be positive, got $r")
+          r
+        },
+        delayMs = opt("maxTriggerDelayMs").map { s =>
+          val d = s.trim.toLong
+          require(d >= 0, s"maxTriggerDelayMs must be >= 0, got $d")
+          d
+        }.getOrElse(15000L)),
       variantSkip = opt("variantSkip"))
   }
   /** Per-field type diff for the append-mismatch error (simpleString
@@ -1515,8 +1516,10 @@ private[sources] object ManifestWriters {
       private val fs: FileSystem = file.getFileSystem(conf.value)
       private val withRid = ridIdx >= 0 || ridFromMeta
       private val withLuv = luvIdx >= 0 || ridFromMeta
-      private val pqOut = ManifestParquet.createWriter(file, schema,
-        conf.value, withRid = withRid, withLuv = withLuv)
+      // opened on the FIRST row, so a task that receives none lands no
+      // file — no entry, `#stats` or `#born` line either
+      private var pqOut: org.apache.parquet.hadoop.ParquetWriter[InternalRow] =
+        null
       // projection [data columns…, carried _row_id, carried _luv] → the
       // writer's (stored schema + _rid [+ _luv]) layout
       private val ridProj: org.apache.spark.sql.catalyst.ProjectingInternalRow =
@@ -1724,6 +1727,8 @@ private[sources] object ManifestWriters {
           }
           i += 1
         }
+        if (pqOut == null) pqOut = ManifestParquet.createWriter(file, schema,
+          conf.value, withRid = withRid, withLuv = withLuv)
         pqOut.write(out)
         if (leaves.nonEmpty) trackLeaves(r)
         if (ndvPos.nonEmpty) trackNdv(r)
@@ -1765,11 +1770,12 @@ private[sources] object ManifestWriters {
 
       private def closeOut(): Unit = if (!closed) {
         closed = true
-        pqOut.close()
+        if (pqOut != null) pqOut.close()
       }
 
       override def commit(): WriterCommitMessage = {
         closeOut()
+        if (pqOut == null) return FilesCommitted(Nil)
         val bytes = fs.getFileStatus(file).getLen
         // Non-orderable columns (arrays / binary / structs) have no
         // tracker and get NO stats entry: bounds are meaningless and a
@@ -1939,8 +1945,8 @@ private[sources] class PartitionSplitWriter(
     writerFor(row).write(meta, row)
 
   override def commit(): WriterCommitMessage =
-    FilesCommitted(writers.values.toSeq.map(
-      _.commit().asInstanceOf[FileCommitted]))
+    FilesCommitted(writers.values.toSeq.flatMap(w =>
+      ManifestWriters.filesOf(w.commit())))
 
   override def abort(): Unit = writers.values.foreach { w =>
     try w.abort() catch { case _: Exception => }

@@ -1487,23 +1487,13 @@ object ManifestFiles {
     * set difference, shared by the streaming source and the batch
     * `changesFrom`/`changesTo` options). Fails loudly when the range is
     * not pure appends — a COW rewrite inside the range would otherwise
-    * surface rewritten rows as if they were new data. */
+    * surface rewritten rows as if they were new data. A two-point diff,
+    * not a walk, but both ends read through the walk's expired-aware
+    * [[ManifestChangeFeed.linesAt]]. */
   def addedBetween(fs: FileSystem, dir: Path, from: Int, to: Int,
       ignoreDeletes: Boolean = false): Array[String] = {
-    def linesAt(v: Int): Array[String] =
-      if (v <= 0) Array.empty
-      else if (!fs.exists(new Path(dir, s"_MANIFEST.v$v"))) {
-        // a vacuumed start/end version must surface as EXPIRED, not as a
-        // generic missing-file error — the caller's checkpoint outlived
-        // the retention window and needs a deliberate restart
-        val have = versions(fs, dir).sorted
-        throw new IllegalStateException(
-          s"graft-manifest at $dir: version $v has expired (vacuumed); " +
-            s"retained versions: ${have.mkString(",")} — restart the " +
-            "incremental read from a retained version")
-      } else linesOf(fs, dir, Some(v))
-    val beforeLines = linesAt(from)
-    val afterLines = linesAt(to)
+    val beforeLines = ManifestChangeFeed.linesAt(fs, dir, from)
+    val afterLines = ManifestChangeFeed.linesAt(fs, dir, to)
     val before = entriesFromLines(beforeLines).map(_._1).toSet
     val after = entriesFromLines(afterLines).map(_._1).toSet
     val removed = before -- after
@@ -1543,19 +1533,24 @@ object ManifestFiles {
   /** STREAMING ADMISSION CONTROL (the reference's rate-limit seam —
     * `FileStreamSource.scala:63,99` caps each batch's new-file take via
     * `maxFilesPerBatch`, `KafkaSource.scala:107` via
-    * `maxOffsetsPerTrigger` — lifted to snapshot versions): walk the
-    * versions in `(from, head]`, accumulate the files and bytes each
-    * step ADDS (plus, for change feeds, the entries it UNLISTS — every
-    * changed file is a read the batch must perform), and return the last
-    * version that fits the caps. A version is NEVER split — offsets stay
-    * plain snapshot versions, so exactly-once replay needs no
-    * sub-version bookkeeping; a single commit larger than the cap is
-    * admitted alone (progress guarantee), and metadata-only commits ride
-    * along free. Counting touches only the admitted prefix's manifests
-    * (segment-cached reads), so a consumer restarting against a year of
-    * backlog prices the BATCH it will run, never the history it skips
-    * past. Bytes come from the manifest's own `#stats` lines; pre-stats
-    * entries fall back to one `getFileStatus` each. */
+    * `maxOffsetsPerTrigger` — lifted to snapshot versions): a fold over
+    * the version walk ([[ManifestChangeFeed.walk]]) of `(from, head]`
+    * that accumulates the files and bytes each step ADDS (plus, for
+    * change feeds, the entries it UNLISTS — every changed file is a read
+    * the batch must perform), and returns the last version that fits the
+    * caps. A version is NEVER split — offsets stay plain snapshot
+    * versions, so exactly-once replay needs no sub-version bookkeeping;
+    * a single commit larger than the cap is admitted alone (progress
+    * guarantee), and metadata-only commits ride along free. Counting
+    * touches only the admitted prefix's manifests (segment-cached
+    * reads), so a consumer restarting against a year of backlog prices
+    * the BATCH it will run, never the history it skips past. Bytes come
+    * from the manifest's own `#stats` lines; pre-stats entries fall back
+    * to one `getFileStatus` each. With `skipMaint` the walk jumps
+    * marker-proven maintenance runs at zero price — otherwise a nightly
+    * compaction on a 10⁶-file table would drain through ~files/cap
+    * empty micro-batches before the stream reached the real commits
+    * behind it. */
   def admittedEnd(fs: FileSystem, dir: Path, from: Int, head: Int,
       maxFiles: Option[Int], maxBytes: Option[Long],
       countRemovals: Boolean = false,
@@ -1563,15 +1558,6 @@ object ManifestFiles {
       skipMaint: Boolean = false): Int = {
     if (head <= from ||
       (maxFiles.isEmpty && maxBytes.isEmpty && maxRows.isEmpty)) return head
-    def linesAt(v: Int): Array[String] =
-      if (v <= 0) Array.empty
-      else if (!fs.exists(new Path(dir, s"_MANIFEST.v$v"))) {
-        val have = versions(fs, dir).sorted
-        throw new IllegalStateException(
-          s"graft-manifest at $dir: version $v has expired (vacuumed); " +
-            s"retained versions: ${have.mkString(",")} — restart the " +
-            "incremental read from a retained version")
-      } else linesOf(fs, dir, Some(v))
     def bytesOf(name: String, stats: Map[String, FileStats]): Long =
       stats.get(name).map(_.bytes).getOrElse {
         try fs.getFileStatus(new Path(dir, name)).getLen
@@ -1581,94 +1567,51 @@ object ManifestFiles {
     var bytes = 0L
     var rows = 0L
     var end = from
-    var v = from + 1
-    // a FRESH stream (from = 0) on a vacuumed table: the history below
-    // the oldest retained version is observable only as that snapshot's
-    // full list, so the walk starts THERE and the first step admits it
-    // as one unit — exactly the base the uncapped read diffs against.
-    // A NON-zero expired `from` still fails loudly above (the
-    // checkpoint outlived retention), matching addedBetween. That step
-    // diffs against the EMPTY baseline, so a maintenance marker on it
-    // never zero-prices it (mustEmit — mirrors planRange).
-    var mustEmit = -1
-    if (from == 0) {
-      val retained = versions(fs, dir)
-      if (retained.nonEmpty && retained.min > 1) {
-        v = retained.min; mustEmit = v
-      }
-    }
-    // a skipMaintenance feed emits NOTHING for marker-proven
-    // row-preserving steps, so admission prices them at zero and jumps
-    // whole marked runs — otherwise a nightly compaction on a 10⁶-file
-    // table would drain through ~files/cap empty micro-batches before
-    // the stream reached the real commits behind it
-    val maintMarks: Set[Int] =
-      if (!skipMaint) Set.empty
-      else maintFromLines(readManifest(fs, new Path(dir, s"_MANIFEST.v$head")))
-    var baselineDeferred = from > 0 && maintMarks.contains(v)
-    var prevLines =
-      if (baselineDeferred) Array.empty[String] else linesAt(from)
-    var prevNames = entriesFromLines(prevLines).map(_._1).toSet
-    while (v <= head) {
-      if (maintMarks.contains(v) && v != mustEmit) {
-        // shared jump (ManifestChangeFeed.jumpMaintRun): a vacuumed
-        // run-end keeps the baseline, and — critically — is NEVER
-        // published as the admitted offset: Spark would log it and the
-        // planned batch would die on the expired snapshot at every
-        // replay, wedging the stream on its own checkpoint. The walk
-        // rides through the run and the offset lands on the next
-        // admitted REAL version instead.
-        val (m, state, runEndRetained) = ManifestChangeFeed.jumpMaintRun(
-          fs, dir, maintMarks, v, head, from, baselineDeferred, linesAt)
-        state.foreach { jump =>
-          prevLines = jump
-          prevNames = entriesFromLines(jump).map(_._1).toSet
+    ManifestChangeFeed.walk(fs, dir, from, head, skipMaint,
+      new ManifestChangeFeed.Listing(_),
+      // a vacuumed run end is NEVER published as the admitted offset:
+      // Spark would log it and the planned batch would die on the
+      // expired snapshot at every replay, wedging the stream on its own
+      // checkpoint. The offset lands on the next admitted REAL version.
+      onJump = (runEnd, retained) => if (retained) end = runEnd) {
+      (v, prev, cur) =>
+        val added = cur.names -- prev.names
+        val removed = if (countRemovals) prev.names -- cur.names
+          else Set.empty[String]
+        val stepFiles = added.size + removed.size
+        val stepBytes =
+          if (maxBytes.isEmpty) 0L
+          else {
+            lazy val curStats = statsFromLines(cur.lines)
+            lazy val prevStats = statsFromLines(prev.lines)
+            added.iterator.map(bytesOf(_, curStats)).sum +
+              removed.iterator.map(bytesOf(_, prevStats)).sum
+          }
+        // entry lines carry EXACT row counts for added/unlisted entries.
+        // A CDF step can ALSO carry delete state against SURVIVING
+        // entries (fresh MOR delete-vector ordinals, new equality-delete
+        // sets) whose leg volume no manifest line prices — such a
+        // version is conservatively priced UNBOUNDED: it is admitted
+        // ALONE, never coalesced under a rows cap with neighbors (the
+        // tail never emits those legs, so only countRemovals walks pay).
+        val stepRows = if (maxRows.isEmpty) 0L else {
+          lazy val prevRows = prev.entries.toMap
+          cur.entries.iterator.filter(e => added(e._1)).map(_._2).sum +
+            removed.iterator.map(n => prevRows.getOrElse(n, 0L)).sum +
+            (if (countRemovals && newDeleteState(prev.lines, cur.lines))
+              Long.MaxValue / 4 else 0L)
         }
-        baselineDeferred = false
-        if (runEndRetained) end = m
-        v = m + 1
-      } else {
-      val curLines = linesAt(v)
-      val curEntries = entriesFromLines(curLines)
-      val curNames = curEntries.map(_._1).toSet
-      val added = curNames -- prevNames
-      val removed = if (countRemovals) prevNames -- curNames
-        else Set.empty[String]
-      val stepFiles = added.size + removed.size
-      val stepBytes = {
-        lazy val curStats = statsFromLines(curLines)
-        lazy val prevStats = statsFromLines(prevLines)
-        (if (maxBytes.isEmpty) 0L
-         else added.iterator.map(bytesOf(_, curStats)).sum +
-           removed.iterator.map(bytesOf(_, prevStats)).sum)
-      }
-      // entry lines carry EXACT row counts for added/unlisted entries.
-      // A CDF step can ALSO carry delete state against SURVIVING
-      // entries (fresh MOR delete-vector ordinals, new equality-delete
-      // sets) whose leg volume no manifest line prices — such a version
-      // is conservatively priced UNBOUNDED: it is admitted ALONE, never
-      // coalesced under a rows cap with neighbors (the tail never emits
-      // those legs, so only countRemovals walks pay this).
-      val unpricedDeleteState = countRemovals && (maxRows.isDefined) &&
-        newDeleteState(prevLines, curLines)
-      val stepRows = if (maxRows.isEmpty) 0L else {
-        lazy val prevRows = entriesFromLines(prevLines).toMap
-        curEntries.iterator.filter(e => added(e._1)).map(_._2).sum +
-          removed.iterator.map(n => prevRows.getOrElse(n, 0L)).sum +
-          (if (unpricedDeleteState) Long.MaxValue / 4 else 0L)
-      }
-      val wouldExceed = maxFiles.exists(files + stepFiles > _) ||
-        maxBytes.exists(bytes + stepBytes > _) ||
-        maxRows.exists(rows + stepRows > _)
-      if (end > from && wouldExceed) return end
-      files += stepFiles
-      bytes += stepBytes
-      rows += stepRows
-      end = v
-      prevLines = curLines
-      prevNames = curNames
-      v += 1
-      }
+        val wouldExceed = maxFiles.exists(files + stepFiles > _) ||
+          maxBytes.exists(bytes + stepBytes > _) ||
+          maxRows.exists(rows + stepRows > _)
+        if (end > from && wouldExceed) false
+        else {
+          files += stepFiles
+          bytes += stepBytes
+          rows += stepRows
+          end = v
+          true
+        }
     }
     end
   }
@@ -1690,67 +1633,28 @@ object ManifestFiles {
 
   /** Rows AVAILABLE in `(from, head]`, stopping early once `atLeast` is
     * reached — the go/no-go probe for `minRowsPerTrigger` (a deep
-    * backlog never walks past the threshold). Same expired-version and
-    * fresh-stream-on-vacuumed-table semantics as [[admittedEnd]]. */
+    * backlog never walks past the threshold). The same fold over the
+    * version walk as [[admittedEnd]]; with `skipMaint` the jumped
+    * maintenance runs count zero rows, so a minRows floor never
+    * releases a batch whose only content would be legs the feed never
+    * emits. */
   def availableRows(fs: FileSystem, dir: Path, from: Int, head: Int,
       atLeast: Long, countRemovals: Boolean = false,
       skipMaint: Boolean = false): Long = {
     if (head <= from) return 0L
-    def linesAt(v: Int): Array[String] =
-      if (v <= 0) Array.empty
-      else if (!fs.exists(new Path(dir, s"_MANIFEST.v$v"))) {
-        val have = versions(fs, dir).sorted
-        throw new IllegalStateException(
-          s"graft-manifest at $dir: version $v has expired (vacuumed); " +
-            s"retained versions: ${have.mkString(",")} — restart the " +
-            "incremental read from a retained version")
-      } else linesOf(fs, dir, Some(v))
     var rows = 0L
-    var v = from + 1
-    var mustEmit = -1
-    if (from == 0) {
-      val retained = versions(fs, dir)
-      if (retained.nonEmpty && retained.min > 1) {
-        v = retained.min; mustEmit = v
+    ManifestChangeFeed.walk(fs, dir, from, head, skipMaint,
+      new ManifestChangeFeed.Listing(_)) { (_, prev, cur) =>
+      val added = cur.names -- prev.names
+      rows += cur.entries.iterator.filter(e => added(e._1)).map(_._2).sum
+      if (countRemovals) {
+        lazy val prevRows = prev.entries.toMap
+        rows += (prev.names -- cur.names).iterator
+          .map(n => prevRows.getOrElse(n, 0L)).sum
+        // un-priced delete legs (see newDeleteState): the floor is met
+        if (newDeleteState(prev.lines, cur.lines)) rows = atLeast
       }
-    }
-    // zero-count marker-proven maintenance steps for a skipMaintenance
-    // feed — a minRows floor must not release a batch whose only
-    // content would have been legs the feed never emits
-    val maintMarks: Set[Int] =
-      if (!skipMaint) Set.empty
-      else maintFromLines(readManifest(fs, new Path(dir, s"_MANIFEST.v$head")))
-    var baselineDeferred = from > 0 && maintMarks.contains(v)
-    var prevLines =
-      if (baselineDeferred) Array.empty[String] else linesAt(from)
-    var prevNames = entriesFromLines(prevLines).map(_._1).toSet
-    while (v <= head && rows < atLeast) {
-      if (maintMarks.contains(v) && v != mustEmit) {
-        val (m, state, _) = ManifestChangeFeed.jumpMaintRun(
-          fs, dir, maintMarks, v, head, from, baselineDeferred, linesAt)
-        state.foreach { jump =>
-          prevLines = jump
-          prevNames = entriesFromLines(jump).map(_._1).toSet
-        }
-        baselineDeferred = false
-        v = m + 1
-      } else {
-        val curLines = linesAt(v)
-        val curEntries = entriesFromLines(curLines)
-        val curNames = curEntries.map(_._1).toSet
-        val added = curNames -- prevNames
-        rows += curEntries.iterator.filter(e => added(e._1)).map(_._2).sum
-        if (countRemovals) {
-          lazy val prevRows = entriesFromLines(prevLines).toMap
-          rows += (prevNames -- curNames).iterator
-            .map(n => prevRows.getOrElse(n, 0L)).sum
-          // un-priced delete legs (see newDeleteState): the floor is met
-          if (newDeleteState(prevLines, curLines)) return atLeast
-        }
-        prevLines = curLines
-        prevNames = curNames
-        v += 1
-      }
+      rows < atLeast
     }
     rows
   }
@@ -2150,11 +2054,7 @@ private[sources] class ManifestScanBuilder(path: String, version: Option[Int],
     // reads — partial compaction rewrites a file set verbatim)
     filesSubset: Option[Set[String]] = None,
     // streaming admission control caps (see ManifestFiles.admittedEnd)
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None,
-    maxRowsPerTrigger: Option[Long] = None,
-    minRowsPerTrigger: Option[Long] = None,
-    maxTriggerDelayMs: Long = 15000L,
+    caps: ManifestAdmission.Caps = ManifestAdmission.Caps(),
     // row-level COPY_ON_WRITE: receives the planned snapshot's
     // delete-state lines (#dels/#eqdels) — the replacing commit's
     // write-conflict validation compares against them
@@ -2244,23 +2144,13 @@ private[sources] class ManifestScanBuilder(path: String, version: Option[Int],
       // full history (batch) / stream-from-0 (streaming).
       new ManifestChangeFeedScan(path, changes.map(_._1).getOrElse(0),
         changes.flatMap(_._2),
-        ManifestChangeFeed.stripCdf(fullSchema), required, conf,
-        maxFilesPerTrigger = maxFilesPerTrigger,
-        maxBytesPerTrigger = maxBytesPerTrigger,
-        maxRowsPerTrigger = maxRowsPerTrigger,
-        minRowsPerTrigger = minRowsPerTrigger,
-        maxTriggerDelayMs = maxTriggerDelayMs,
+        ManifestChangeFeed.stripCdf(fullSchema), required, conf, caps,
         skipMaintenance = skipMaintenance)
     else new ManifestScan(path, version, fullSchema,
       required, conf, onPlanned, changes, accepted.toArray,
       runtimeKeyPrune = statsSkip, columnar = columnar,
       ignoreDeletes = ignoreDeletes, branch = branch,
-      filesSubset = filesSubset,
-      maxFilesPerTrigger = maxFilesPerTrigger,
-      maxBytesPerTrigger = maxBytesPerTrigger,
-      maxRowsPerTrigger = maxRowsPerTrigger,
-      minRowsPerTrigger = minRowsPerTrigger,
-      maxTriggerDelayMs = maxTriggerDelayMs,
+      filesSubset = filesSubset, caps = caps,
       onDeleteState = onDeleteState,
       variantSkip = if (statsSkip) variantSkip else None,
       luvSentinel = luvSentinel)
@@ -2303,11 +2193,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     ignoreDeletes: Boolean = false,
     branch: Option[String] = None,
     filesSubset: Option[Set[String]] = None,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None,
-    maxRowsPerTrigger: Option[Long] = None,
-    minRowsPerTrigger: Option[Long] = None,
-    maxTriggerDelayMs: Long = 15000L,
+    caps: ManifestAdmission.Caps = ManifestAdmission.Caps(),
     onDeleteState: Set[String] => Unit = _ => (),
     variantSkip: Option[String] = None,
     // true ONLY on row-level COPY_ON_WRITE scans of lineage tables: the
@@ -3152,9 +3038,46 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     require(branch.isEmpty,
       "graft-manifest: streaming tails follow MAIN only — fast-forward " +
         "the branch to stream its rows")
-    new ManifestMicroBatchStream(path, fullSchema, required, conf,
-      ignoreDeletes, maxFilesPerTrigger, maxBytesPerTrigger,
-      maxRowsPerTrigger, minRowsPerTrigger, maxTriggerDelayMs)
+    new ManifestVersionStream(path, conf, caps, startAt = 0,
+      countRemovals = false, skipMaint = false, plan = tailRange,
+      readers = (fs, dir) =>
+        new ManifestReaderFactory(fullSchema, required, conf,
+          defaults = ManifestChecks.existsDefaults(
+            org.apache.spark.sql.SparkSession.active, required),
+          imports = ManifestFiles.importsFromLines(
+            ManifestFiles.latestLines(fs, dir))))
+  }
+
+  /** The plain tail's micro-batch: the entries ADDED in `(s, e]`. */
+  private def tailRange(fs: FileSystem, dir: Path, s: Int,
+      e: Int): Array[InputPartition] = {
+    // addedBetween runs FIRST: a vacuumed range must surface its
+    // deliberate expired-version error, not a generic missing-file one
+    val added = ManifestFiles.addedBetween(fs, dir, s, e, ignoreDeletes)
+    // row lineage resolves against THIS BATCH's end version — "latest"
+    // could already have compacted these files away (their ids would
+    // null out) while the batch legitimately reads their bytes; the
+    // re-read of version e is segment-cached, so the cost is memory
+    val wantRid = required.fieldNames.contains("_row_id")
+    val wantLuv = required.fieldNames.contains("_last_updated_version")
+    val ls =
+      if (wantRid || wantLuv) ManifestFiles.linesOf(fs, dir, Some(e))
+      else Array.empty[String]
+    val (rids, ridCols) =
+      if (!wantRid) (Map.empty[String, Long], Set.empty[String])
+      else
+        // ignoreDeletes tails can surface COW-rewrite files, which
+        // carry materialized ids — the coalesce marker rides along
+        (ManifestFiles.firstRowFromLines(ls), ManifestFiles.ridColFromLines(ls))
+    val (luvsM, luvCols) =
+      if (!wantLuv) (Map.empty[String, Int], Set.empty[String])
+      else (ManifestFiles.luvFromLines(ls), ManifestFiles.luvColFromLines(ls))
+    added.map(n =>
+      ManifestInputPartition(new Path(dir, n).toString, n,
+        firstRow = rids.getOrElse(n, -1L),
+        ridCol = ridCols.contains(n),
+        luv = luvsM.getOrElse(n, -1),
+        luvCol = luvCols.contains(n)): InputPartition)
   }
 }
 
@@ -3192,35 +3115,25 @@ private[sources] class DeleteRowsAppliedMetric
   override def description(): String = "merge-on-read row deletes applied"
 }
 
-/** Streaming read of the manifest table (the Delta streaming-source
-  * pattern): an OFFSET IS A SNAPSHOT VERSION. Each micro-batch covers
-  * the manifest entries added between two versions — set difference by
-  * name, so a batch reads exactly the files new commits published,
-  * never rescanning history. Restarts resume from the engine-persisted
-  * version offset. Non-append history (a COPY_ON_WRITE delete/update/
-  * merge or an overwrite unlisted files between the offsets) fails the
-  * batch explicitly rather than silently re-emitting rewritten rows —
-  * the same contract Delta's streaming source defaults to. */
 private[sources] case class ManifestOffset(version: Int)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json: String = version.toString
 }
 
-/** ReadLimit plumbing shared by the manifest tail and the streaming
-  * change feed: the `maxFilesPerTrigger` / `maxBytesPerTrigger` /
-  * `maxRowsPerTrigger` / `minRowsPerTrigger`+`maxTriggerDelayMs` read
-  * options become the stream's default `ReadLimit` (composite when
-  * several are set), and whatever limit the engine hands back is
-  * decoded into the [[ManifestAdmission.Caps]] that
+/** The admission caps of both manifest streams — the
+  * `maxFilesPerTrigger` / `maxBytesPerTrigger` / `maxRowsPerTrigger` /
+  * `minRowsPerTrigger`+`maxTriggerDelayMs` read options, parsed once
+  * into a [[ManifestAdmission.Caps]] that becomes the stream's default
+  * `ReadLimit` (composite when several are set); whatever limit the
+  * engine hands back is decoded into the Caps that
   * [[ManifestAdmission.decide]] prices each micro-batch with. */
 private[sources] object ManifestAdmission {
   import org.apache.spark.sql.connector.read.streaming._
 
-  /** The caps an engine-supplied ReadLimit carries. `minRows` +
-    * `delayMs` are the anti-small-batch pair (Kafka's
-    * minOffsetsPerTrigger / maxTriggerDelay): withhold a batch until at
-    * least `minRows` are available OR `delayMs` has passed since the
-    * last batch. */
+  /** The caps a stream admits under. `minRows` + `delayMs` are the
+    * anti-small-batch pair (Kafka's minOffsetsPerTrigger /
+    * maxTriggerDelay): withhold a batch until at least `minRows` are
+    * available OR `delayMs` has passed since the last batch. */
   final case class Caps(maxFiles: Option[Int] = None,
       maxBytes: Option[Long] = None, maxRows: Option[Long] = None,
       minRows: Option[Long] = None, delayMs: Long = 0L) {
@@ -3230,13 +3143,11 @@ private[sources] object ManifestAdmission {
       math.max(delayMs, o.delayMs))
   }
 
-  def defaultLimit(maxFiles: Option[Int], maxBytes: Option[Long],
-      maxRows: Option[Long] = None, minRows: Option[Long] = None,
-      delayMs: Long = 15000L): ReadLimit = {
-    val lims = maxFiles.map(ReadLimit.maxFiles).toSeq ++
-      maxBytes.map(ReadLimit.maxBytes).toSeq ++
-      maxRows.map(ReadLimit.maxRows).toSeq ++
-      minRows.map(ReadLimit.minRows(_, delayMs)).toSeq
+  def defaultLimit(caps: Caps): ReadLimit = {
+    val lims = caps.maxFiles.map(ReadLimit.maxFiles).toSeq ++
+      caps.maxBytes.map(ReadLimit.maxBytes).toSeq ++
+      caps.maxRows.map(ReadLimit.maxRows).toSeq ++
+      caps.minRows.map(ReadLimit.minRows(_, caps.delayMs)).toSeq
     lims match {
       case Seq() => ReadLimit.allAvailable()
       case Seq(one) => one
@@ -3255,7 +3166,7 @@ private[sources] object ManifestAdmission {
     case _ => Caps()
   }
 
-  /** Shared go/no-go + admitted-end decision for both manifest streams.
+  /** The go/no-go + admitted-end decision of [[ManifestVersionStream]].
     * Returns the offset to report; advances `lastTriggerMs` through the
     * callbacks so each stream keeps its own batch clock. AvailableNow
     * drains ignore `minRows` — the trigger's contract is "process
@@ -3287,14 +3198,23 @@ private[sources] object ManifestAdmission {
   }
 }
 
-private[sources] class ManifestMicroBatchStream(path: String,
-    fullSchema: StructType, required: StructType, conf: SerializableHadoopConf,
-    ignoreDeletes: Boolean = false,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None,
-    maxRowsPerTrigger: Option[Long] = None,
-    minRowsPerTrigger: Option[Long] = None,
-    maxTriggerDelayMs: Long = 15000L)
+/** The one streaming read of a manifest table (the Delta
+  * streaming-source pattern), behind both the plain tail and the
+  * streaming change feed: an OFFSET IS A SNAPSHOT VERSION, so restarts
+  * resume from the engine-persisted version and each micro-batch plans
+  * the version range between two offsets, never rescanning history.
+  * The stream owns the offsets, the AvailableNow head pin, the default
+  * read limit, the trigger clock and the admission decision; the two
+  * kinds differ only in their start offset, how a range plans (`plan`),
+  * which reader factory they build (`readers`), and the admission
+  * walk's `countRemovals` (a change feed's UNLISTED entries are reads
+  * its delete legs perform, so they price against the caps) and
+  * `skipMaint`. */
+private[sources] class ManifestVersionStream(path: String,
+    conf: SerializableHadoopConf, caps: ManifestAdmission.Caps,
+    startAt: Int, countRemovals: Boolean, skipMaint: Boolean,
+    plan: (FileSystem, Path, Int, Int) => Array[InputPartition],
+    readers: (FileSystem, Path) => PartitionReaderFactory)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
@@ -3314,12 +3234,11 @@ private[sources] class ManifestMicroBatchStream(path: String,
     availableEnd.getOrElse(ManifestFiles.latestVersion(fs, dir))
 
   override def getDefaultReadLimit: ReadLimit =
-    ManifestAdmission.defaultLimit(maxFilesPerTrigger, maxBytesPerTrigger,
-      maxRowsPerTrigger, minRowsPerTrigger, maxTriggerDelayMs)
+    ManifestAdmission.defaultLimit(caps)
 
   @volatile private var lastTriggerMs = 0L
 
-  override def initialOffset(): Offset = ManifestOffset(0)
+  override def initialOffset(): Offset = ManifestOffset(startAt)
   override def latestOffset(): Offset =
     ManifestOffset(ManifestFiles.latestVersion(fs, dir))
   // ADMISSION CONTROL (SupportsAdmissionControl): each micro-batch takes
@@ -3328,56 +3247,22 @@ private[sources] class ManifestMicroBatchStream(path: String,
   // batches (bounded task sets, bounded watermark steps) rather than
   // one giant catch-up batch — and minRows withholds tiny batches until
   // enough rows accumulate or the trigger delay passes.
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[ManifestOffset].version
-    ManifestOffset(ManifestAdmission.decide(fs, dir, from, head,
-      ManifestAdmission.capsOf(limit), countRemovals = false,
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    ManifestOffset(ManifestAdmission.decide(fs, dir,
+      start.asInstanceOf[ManifestOffset].version, head,
+      ManifestAdmission.capsOf(limit), countRemovals,
       draining = availableEnd.isDefined,
-      () => lastTriggerMs, lastTriggerMs = _))
-  }
+      () => lastTriggerMs, lastTriggerMs = _, skipMaint))
   override def reportLatestOffset(): Offset = ManifestOffset(head)
   override def deserializeOffset(json: String): Offset =
     ManifestOffset(json.trim.toInt)
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ManifestOffset].version
-    val e = end.asInstanceOf[ManifestOffset].version
-    // addedBetween runs FIRST: a vacuumed range must surface its
-    // deliberate expired-version error, not a generic missing-file one
-    val added = ManifestFiles.addedBetween(fs, dir, s, e, ignoreDeletes)
-    // row lineage resolves against THIS BATCH's end version — "latest"
-    // could already have compacted these files away (their ids would
-    // null out) while the batch legitimately reads their bytes; the
-    // re-read of version e is segment-cached, so the cost is memory
-    val wantRid = required.fieldNames.contains("_row_id")
-    val wantLuv = required.fieldNames.contains("_last_updated_version")
-    val ls =
-      if (wantRid || wantLuv) ManifestFiles.linesOf(fs, dir, Some(e))
-      else Array.empty[String]
-    val (rids, ridCols) =
-      if (!wantRid) (Map.empty[String, Long], Set.empty[String])
-      else
-        // ignoreDeletes tails can surface COW-rewrite files, which
-        // carry materialized ids — the coalesce marker rides along
-        (ManifestFiles.firstRowFromLines(ls), ManifestFiles.ridColFromLines(ls))
-    val (luvsM, luvCols) =
-      if (!wantLuv) (Map.empty[String, Int], Set.empty[String])
-      else (ManifestFiles.luvFromLines(ls), ManifestFiles.luvColFromLines(ls))
-    added.map(n =>
-      ManifestInputPartition(new Path(dir, n).toString, n,
-        firstRow = rids.getOrElse(n, -1L),
-        ridCol = ridCols.contains(n),
-        luv = luvsM.getOrElse(n, -1),
-        luvCol = luvCols.contains(n)): InputPartition)
-  }
+  override def planInputPartitions(start: Offset,
+      end: Offset): Array[InputPartition] =
+    plan(fs, dir, start.asInstanceOf[ManifestOffset].version,
+      end.asInstanceOf[ManifestOffset].version)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val latest = ManifestFiles.latestLines(fs, dir)
-    new ManifestReaderFactory(fullSchema, required, conf,
-      defaults = ManifestChecks.existsDefaults(
-        org.apache.spark.sql.SparkSession.active, required),
-      imports = ManifestFiles.importsFromLines(latest))
-  }
+  override def createReaderFactory(): PartitionReaderFactory = readers(fs, dir)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -496,7 +496,7 @@ object Sources extends QueryModule {
       WHERE s.c_custkey NOT IN (SELECT c_custkey FROM survivors)
       ORDER BY c_custkey"""))
 
-  /** Streaming read of the manifest table (ManifestMicroBatchStream —
+  /** Streaming read of the manifest table (ManifestVersionStream —
     * an offset is a snapshot version, each micro-batch reads exactly the
     * files the new commits listed): three append commits tail into a
     * memory sink, aggregated per commit-tier; the oracle recomputes the

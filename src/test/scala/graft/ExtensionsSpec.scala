@@ -1,7 +1,5 @@
 package graft
 
-import scala.sys.process._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftExtensions wiring proof: a FRESH JVM whose only link to the
@@ -12,28 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * test.) */
 class ExtensionsSpec extends AnyFunSuite {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("spark.sql.extensions alone wires functions and strategy") {
-    val cmd = Seq("java") ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.ExtensionsDemo")
-    val out = new StringBuilder
-    val code = cmd ! ProcessLogger(l => out.append(l).append('\n'), _ => ())
+    val (code, out) = TestJvm.run("graft.ExtensionsDemo", Nil,
+      sysProps = Seq("spark.sql.session.timeZone" -> "UTC"))
     assert(code == 0, s"demo JVM failed:\n$out")
-    assert(out.toString.contains(
+    assert(out.contains(
       "EXT_OK cos=1.0 ngrams=a b|b c|c d hamming=3 topk=z,e strategy=true " +
         "dedup=1:1,2:5 kernel=true ksum=0"),
-      out.toString)
+      out)
   }
 }

@@ -226,6 +226,22 @@ class ManifestAdmissionSpec extends AnyFunSuite {
       ManifestFiles.admittedEnd(fs, dir, 2, 8, Some(1), None)
     }
     assert(ex.getMessage.contains("expired"))
+    // ...from every reader of the version walk, not just admission
+    val schema = ManifestFiles.schemaFor(fs, dir, None)
+    Seq[(String, () => Any)](
+      "addedBetween" -> (() => ManifestFiles.addedBetween(fs, dir, 2, 8)),
+      "availableRows" -> (() =>
+        ManifestFiles.availableRows(fs, dir, 2, 8, 1L)),
+      "change-feed plan" -> (() => ManifestChangeFeed.planRange(fs, dir, 2,
+        8, schema, spark.sessionState.newHadoopConf()))
+    ).foreach { case (what, read) =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("expired"), s"$what: ${e.getMessage}")
+    }
+    // a from = 0 walk counts the oldest retained snapshot (v5, 50 rows)
+    // as its FIRST step, then the retained tail
+    assert(ManifestFiles.availableRows(fs, dir, 0, 8, 1L) == 50L)
+    assert(ManifestFiles.availableRows(fs, dir, 0, 8, Long.MaxValue) == 80L)
     // the CHANGE FEED keeps the same contract: a fresh full-history
     // feed starts at the oldest retained snapshot (its rows surface as
     // inserts AT that version) instead of dying on the vacuumed prefix

@@ -49,6 +49,44 @@ class ManifestSinkSpec extends AnyFunSuite {
     assert(back.count() == 1000)
   }
 
+  test("empty write tasks land no file: an empty append repartitioned " +
+    "to 3 commits its version with no entries; an empty CTAS still " +
+    "creates the table") {
+    import spark.implicits._
+    import graft.sources.ManifestFiles
+    val path = tmpDir()
+    spark.range(0, 10).select($"id", ($"id" % 7).as("m")).coalesce(1)
+      .write.mode("append").format("graft-manifest").option("path", path)
+      .save()                                                    // v1
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val before = ManifestFiles.entries(fs, dir, None).map(_._1).toSet
+    spark.range(0, 10).select($"id", ($"id" % 7).as("m"))
+      .filter($"id" < 0).repartition(3)
+      .write.mode("append").format("graft-manifest").option("path", path)
+      .save()                                                    // v2
+    assert(ManifestFiles.latestComplete(fs, dir) == 2,
+      "an empty write still commits its version")
+    val added = ManifestFiles.entries(fs, dir, None)
+      .filterNot(e => before.contains(e._1))
+    assert(added.isEmpty, added.toSeq)
+    assert(new java.io.File(path).listFiles().map(_.getName)
+      .filter(_.startsWith("part-")).toSet == before)
+    // CTAS of an empty result: the table exists, schema published, no entries
+    val root = tmpDir()
+    val cat = "graft_sink_empty_" + math.abs(root.hashCode)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      "graft.sources.GraftManifestCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    spark.sql(s"CREATE TABLE $cat.e AS SELECT id, id % 7 AS m " +
+      "FROM range(10) WHERE id < 0")
+    val edir = new org.apache.hadoop.fs.Path(root, "e")
+    assert(ManifestFiles.latestComplete(fs, edir) >= 1)
+    assert(ManifestFiles.entries(fs, edir, None).isEmpty)
+    assert(spark.table(s"$cat.e").columns.toSeq == Seq("id", "m"))
+    assert(spark.table(s"$cat.e").count() == 0L)
+  }
+
   test("parquet payload (the default) round-trips through STOCK " +
     "spark.read.parquet — an independent decoder") {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import scala.sys.process._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives RetryDeterminism in a fresh `local[4, 2]` JVM: a task fails on
@@ -9,29 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * must produce a bit-identical result to the failure-free run. */
 class RetryDeterminismSpec extends AnyFunSuite {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("task retry leaves exact aggregates bit-identical") {
-    val cmd = Seq("java") ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.RetryDeterminism")
-    val out = new StringBuilder
-    val code = cmd ! ProcessLogger(l => out.append(l).append('\n'), _ => ())
+    val (code, out) = TestJvm.run("graft.RetryDeterminism", Nil,
+      sysProps = Seq("spark.sql.session.timeZone" -> "UTC"))
     assert(code == 0, s"retry JVM failed:\n$out")
-    assert(out.toString.contains("equal=true"), out.toString)
-    assert(out.toString.contains("rows=97"), out.toString)
+    assert(out.contains("equal=true"), out)
+    assert(out.contains("rows=97"), out)
     // ManifestSink under retry: complete manifest, no staged leftovers.
-    assert(out.toString.contains("SINK_OK files=4 rows=1000 tmps=0"),
-      out.toString)
+    assert(out.contains("SINK_OK files=4 rows=1000 tmps=0"), out)
   }
 }
