@@ -654,12 +654,8 @@ private[sources] class ManifestTable(schema0: StructType,
         // landed file is clustered on the keys, earns a verified
         // `#sorted` mark on the leading one, and compaction later turns
         // per-file order into disjoint table-wide ranges.
-        // range distribution mode (declared with the sort order): an
-        // explicit `option("distributionMode", "none")` overrides — the
-        // compaction rewrite arranges its own exact-file-count layout
-        private val distRange: Boolean =
-          !Option(info.options.get("distributionMode")).contains("none") &&
-            ManifestFiles.distModeRange(declared)
+        // range distribution mode (declared with the sort order)
+        private val distRange: Boolean = ManifestFiles.distModeRange(declared)
 
         // (schema index, desc, nullsLast) per declared sort key — the
         // full Iceberg sort-order surface, directions included
@@ -819,51 +815,23 @@ private[sources] class ManifestTable(schema0: StructType,
           // each row 'insert' or 'delete' for the equality-delete tee
           // (see ManifestEqDeletes.tee) and is never stored
           val typed = carriesChangeType(info.schema())
-          val incoming0 =
-            if (typed) StructType(info.schema().fields.dropRight(1))
-            else info.schema()
-          // ROW LINEAGE rewrite carry: a write whose TRAILING columns
-          // are the reserved `_row_id` [+ `_last_updated_version`]
-          // (compact / Z-order re-selecting the metadata columns)
-          // materializes them per-file instead of storing them as data —
-          // the names are reserved, so this can never misread a user
-          // column
-          val carriesLuv = incoming0.fields.lastOption.exists(f =>
-            f.name == "_last_updated_version" &&
-              f.dataType == org.apache.spark.sql.types.IntegerType)
-          val ridSlot = incoming0.length - 1 - (if (carriesLuv) 1 else 0)
-          val carriesRid = ridSlot >= 0 && {
-            val f = incoming0.fields(ridSlot)
-            f.name == "_row_id" && f.dataType == LongType
-          }
-          require(!carriesLuv || carriesRid,
-            "_last_updated_version carries only alongside _row_id " +
-              "(both names are reserved for row lineage)")
-          if (typed) require(upsertKeys.nonEmpty && !carriesRid &&
+          if (typed) require(upsertKeys.nonEmpty &&
             info.schema().last.dataType == StringType,
             s"a trailing ${ManifestChangeFeed.TypeCol} column marks a " +
               "change-typed upsert: it must be a STRING column of a " +
-              "write with option(\"upsertKeys\", …) that carries no " +
-              "row-lineage columns")
+              "write with option(\"upsertKeys\", …)")
           val incoming =
-            if (carriesRid)
-              StructType(incoming0.fields.dropRight(if (carriesLuv) 2 else 1))
-            else incoming0
+            if (typed) StructType(info.schema().fields.dropRight(1))
+            else info.schema()
           val finalSchema = targetSchema(incoming)
-          if (carriesRid)
-            require(ManifestFiles.isLineage(head.lines),
-              "writing a _row_id column requires " +
-                "TBLPROPERTIES('row.lineage'='true') on the target table " +
-                "(the name is reserved for row lineage)")
           val hconf = new SerializableHadoopConf(
             SparkSession.active.sessionState.newHadoopConf())
-          val maintenance = Option(info.options.get("maintenanceRewrite"))
-            .contains("true")
           new ManifestBatchWrite(
             path.toString, info.queryId(),
             Option(info.options.get("failPartition")).map(_.toInt).getOrElse(-1),
             finalSchema, truncateRequested, hconf,
-            WriteSpec.of(declared, finalSchema, hconf.value, maintenance),
+            WriteSpec.of(declared, finalSchema, hconf.value,
+              maintenance = false),
             bucketSpec = bucketSpec.map { case (c, n) =>
               // record the PHYSICAL position so renames/drops keep the
               // layout valid (name resolves in the write's own schema)
@@ -889,22 +857,10 @@ private[sources] class ManifestTable(schema0: StructType,
               else Array.empty),
             branch = branch,
             upsertKeys = upsertKeys,
-            typeIdx = if (typed) incoming0.length else -1,
+            typeIdx = if (typed) incoming.length else -1,
             replaceConf = replaceConf.isDefined,
             requireFresh = Option(properties.get("requireFreshTable"))
-              .contains("true"),
-            ridIdx = if (carriesRid) incoming.length else -1,
-            luvIdx = if (carriesLuv) incoming.length + 1 else -1,
-            // compaction declares the state its scan saw; the claim
-            // validates nothing conflicting landed (rewrites derive
-            // from the scan — see the commit closure)
-            scannedDeleteState = () =>
-              Option(info.options.get("scannedDeleteState")).map(v =>
-                if (v.isEmpty) Set.empty[String] else v.split("\n").toSet),
-            scannedEntries = () =>
-              Option(info.options.get("scannedEntries")).map(v =>
-                if (v.isEmpty) Set.empty[String] else v.split("\n").toSet),
-            maintenance = maintenance)
+              .contains("true"))
         }
         override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
           if (truncateRequested) throw new UnsupportedOperationException(
@@ -1142,8 +1098,8 @@ private[sources] case class FilesCommitted(files: Seq[FileCommitted])
 
 /** A governed table's declared write behaviour, derived from its
   * `#tableconf` lines by ONE function that every write route calls
-  * (batch / copy-on-write / full compact, streaming epochs,
-  * merge-on-read inserts, scoped compact), so a declaration cannot
+  * (batch / copy-on-write, streaming epochs, merge-on-read inserts,
+  * compaction), so a declaration cannot
   * reach one route and miss another. Schema indices throughout:
   *   - `partSpec`: (index, kind) per declared days/months/identity/…
   *     transform, in declared order — the task splits its rows into
@@ -1212,12 +1168,6 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     // snapshot the operation SCANNED — the claim closure validates the
     // rewrite against concurrent commits (see below)
     scannedDeleteState: () => Option[Set[String]] = () => None,
-    // Some(names) on a TRUNCATING rewrite that derives from a scan
-    // (full compaction): the entries the scan saw. The closure keeps
-    // entries a concurrent commit ADDED since (blind appends commute
-    // with a compaction) and aborts if a scanned entry vanished (a
-    // concurrent rewrite — landing both outputs would double rows)
-    scannedEntries: () => Option[Set[String]] = () => None,
     // (colPos, n) when this write was bucket-clustered — each commit
     // message's partitionId IS the file's bucket id.
     bucketSpec: Option[(Int, Int)] = None,
@@ -1245,17 +1195,8 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     // concurrent CREATE that claimed first aborts this one loudly
     // instead of silently merging two tables
     requireFresh: Boolean = false,
-    // row lineage: index in the incoming row carrying the `_row_id` to
-    // materialize per file (-1 = plain write)
-    ridIdx: Int = -1,
     // row lineage via the COW metadata channel (write(meta, row))
-    ridFromMeta: Boolean = false,
-    // `_last_updated_version`: index of the carried value (-1 = none)
-    luvIdx: Int = -1,
-    // row-preserving maintenance rewrite (full compaction, Z-order): the
-    // commit lands a `#maint` marker (see ManifestFiles.maintLine) and
-    // the rewrite evaluates no CHECK (see WriteSpec.of)
-    maintenance: Boolean = false) extends BatchWrite {
+    ridFromMeta: Boolean = false) extends BatchWrite {
 
   // Per-job staging namespace: concurrent writes (or an overlapping retry
   // of another job) can never see or delete each other's in-flight files.
@@ -1266,7 +1207,7 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     new ManifestWriterFactory(path, stagingName, schema, conf, spec,
       failPartition = failPartition, recordBucket = bucketSpec.isDefined,
       sortPos = sortPos, upsertKeys = upsertKeys.toArray, typeIdx = typeIdx,
-      ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx)
+      ridFromMeta = ridFromMeta)
 
   // Driver-side, exactly once, only after EVERY task committed: publish.
   // Each commit is a VERSION: append merges the predecessor snapshot's
@@ -1285,7 +1226,6 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
       schema, upsertKeys, bucketSpec)
     val drop = dropFromPrevious()
     val scanState = scannedDeleteState()
-    val scanEntries = scannedEntries()
     // The base snapshot is supplied by publishSnapshot's claim loop (the
     // immediate predecessor version, re-read on every retry), so a
     // concurrent committer's files are never lost from the merge.
@@ -1316,8 +1256,7 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
             "against the current snapshot")
       }
       // delete-state validation runs for EVERY commit that declared a
-      // scanned state — row-level COW ops (drop-based) AND compaction's
-      // truncating rewrite, whose content equally derives from the scan
+      // scanned state
       scanState.foreach { known =>
         val newState = previous.filter(l => l.startsWith("#dels,") ||
           l.startsWith("#eqdels,")).filterNot(known)
@@ -1337,40 +1276,16 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
       // must never be re-minted for different rows, and a replacement
       // that re-declares row.lineage would otherwise restart from 0.
       val base =
-        if (truncate) {
-          val conf0 = previous.filter(l =>
-            ((!replaceConf || l.startsWith("#tableconf,rowidnext,")) &&
-              l.startsWith("#tableconf,") &&
-              // a truncating rewrite replaces EVERY byte at the current
-              // type — the narrow-history widening markers clear with it
-              !l.startsWith("#tableconf,widened,")) ||
-              l.startsWith("#branchbase,"))
-          scanEntries match {
-            case None => conf0 // plain INSERT OVERWRITE: last writer wins
-            case Some(scanned) =>
-              // compaction: its output REPLACES exactly the scanned
-              // entries. A scanned entry already gone = a concurrent
-              // rewrite raced us (landing both outputs doubles rows);
-              // entries ADDED since the scan are blind appends — they
-              // commute, keep them (and their riders) verbatim.
-              val present = ManifestFiles.entriesFromLines(previous)
-                .map(_._1).toSet
-              val gone = scanned -- present
-              if (gone.nonEmpty) throw new IllegalStateException(
-                s"graft-manifest at $path: a concurrent commit rewrote " +
-                  s"or removed ${gone.size} file(s) this compaction " +
-                  s"derives from (e.g. ${gone.head}); retry against the " +
-                  "current snapshot")
-              conf0 ++ previous.filter(l =>
-                ManifestSink.entryName(l).exists(n => !scanned(n)))
-          }
-        }
+        if (truncate) previous.filter(l =>
+          ((!replaceConf || l.startsWith("#tableconf,rowidnext,")) &&
+            l.startsWith("#tableconf,") &&
+            // a truncating rewrite replaces EVERY byte at the current
+            // type — the narrow-history widening markers clear with it
+            !l.startsWith("#tableconf,widened,")) ||
+            l.startsWith("#branchbase,"))
         else previous.filterNot(line => ManifestSink.entryName(line).exists(drop))
       val conf0 = confLines.filterNot(base.contains)
-      val maint: Array[String] =
-        if (maintenance) Array(ManifestFiles.maintLine(version))
-        else Array.empty
-      conf0 ++ base ++ landed(previous, version) ++ maint
+      conf0 ++ base ++ landed(previous, version)
     }, schema, branch)
     fs.delete(staging, true)
   }
@@ -1824,12 +1739,8 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
     sortPos: Option[(Int, Boolean, Boolean)] = None,
     upsertKeys: Array[Int] = Array.empty,
     typeIdx: Int = -1,
-    // row lineage: incoming-row index of the carried `_row_id` (-1 none)
-    ridIdx: Int = -1,
     // row lineage via the COW metadata channel
-    ridFromMeta: Boolean = false,
-    // `_last_updated_version`: incoming-row index of the carried value
-    luvIdx: Int = -1)
+    ridFromMeta: Boolean = false)
     extends DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
 
@@ -1846,7 +1757,7 @@ private[sources] class ManifestWriterFactory(path: String, stagingName: String,
       injectFailure = partitionId == failPartition,
       bucket = if (recordBucket) partitionId else -1,
       sortPos = sortPos, upsertKeys = upsertKeys, typeIdx = typeIdx,
-      ridIdx = ridIdx, ridFromMeta = ridFromMeta, luvIdx = luvIdx)
+      ridFromMeta = ridFromMeta)
 }
 
 /** Partition-splitting task writer for days/months/identity layouts:

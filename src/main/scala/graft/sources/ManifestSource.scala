@@ -3584,10 +3584,9 @@ private[sources] class ManifestReaderFactory(fullSchema: StructType,
   * (the `CALL cat.system.proc(...)` seam, Iceberg's maintenance
   * convention) with the table-format lifecycle operations:
   *
-  *   - `CALL cat.system.compact('t', target_files)` — read the latest
-  *     snapshot, coalesce into `target_files` files, commit as ONE new
-  *     snapshot (copy-on-write: a lazy self-read is safe because commit
-  *     publishes at job end and data files are never mutated). Small
+  *   - `CALL cat.system.compact('t', target_files)` — rewrite the head
+  *     snapshot (read pinned to its version) into `target_files` files,
+  *     commit as ONE new snapshot (see [[ManifestCompaction]]). Small
   *     files are the #1 operational failure of manifest-style tables at
   *     scale — every streaming append adds files forever.
   *   - `CALL cat.system.vacuum('t', retain_versions)` — drop snapshot
@@ -5255,381 +5254,40 @@ private[sources] object ManifestProcedures {
       }
     }
 
-  /** `compact(table, target_files, sort_by)`: fold the live snapshot into
-    * `target_files` files; with `sort_by` set, CLUSTER by that column
-    * (range-repartition + sort within partitions) so the rewritten files
-    * carry DISJOINT `#stats` ranges — the operation that makes data
-    * skipping effective on a table whose appends interleaved the key
-    * (Iceberg's rewrite-with-sort-order). A time-keyed table compacted on
-    * its time column turns every later range query into a near-minimal
-    * file read; ManifestSkippingSpec proves the before/after filesPlanned
-    * difference.
-    *
-    * `sort_by` with a comma-separated list of numeric columns Z-ORDERS
-    * instead (graft.functions.ZOrder): files tile the multi-column key
-    * space, so a selective predicate on ANY of the listed columns skips —
-    * the linear sort only ever serves its first column.
-    * ManifestZOrderSpec proves both-column skipping + exactness. */
+  /** `compact(table, target_files, sort_by, where)`: fold the live
+    * snapshot into `target_files` files through the one compaction
+    * routine ([[ManifestCompaction]]): one head read picks the scope,
+    * one version-pinned scan rewrites it, one replacing commit lands it.
+    * With `sort_by` set the rewrite CLUSTERS by that column (range-
+    * repartition + sort within partitions), so the files carry DISJOINT
+    * `#stats` ranges — the operation that makes data skipping effective
+    * on a table whose appends interleaved the key (Iceberg's
+    * rewrite-with-sort-order); ManifestSkippingSpec proves the
+    * before/after filesPlanned difference. A comma-separated list of
+    * numeric columns Z-ORDERS instead (graft.functions.ZOrder): files
+    * tile the multi-column key space, so a selective predicate on ANY
+    * listed column skips (ManifestZOrderSpec). Without `sort_by` a
+    * declared `write.sort-order` clusters, a declared bucket layout
+    * re-buckets. `where` SCOPES the rewrite (at 100 TB you never rewrite
+    * the whole table) to the files whose stats PROVE every row
+    * satisfies it; partially covered files stay untouched. The result
+    * row reports the version this compaction committed and the live
+    * file counts before it and in that snapshot. */
   def compact(dirFor: String => Path): UnboundProcedure =
     proc("compact", Array(param("table", StringType),
         paramDefault("target_files", IntegerType, "1"),
         paramDefault("sort_by", StringType, "''"),
-        // SCOPED compaction (round 12 — at 100 TB you never rewrite the
-        // whole table): fold ONLY the files whose stats PROVE every row
-        // satisfies `where` (the same sound file-alignment rule
-        // metadata delete uses); partially-covered files stay untouched
         paramDefault("where", StringType, "''"))) { input =>
-      val spark = SparkSession.active
-      val dir = dirFor(input.getUTF8String(0).toString)
-      val target = input.getInt(1)
-      require(target >= 1, s"target_files must be >= 1, got $target")
-      val sortBy = if (input.numFields > 2 && !input.isNullAt(2))
-        input.getUTF8String(2).toString else ""
-      val whereStr = if (input.numFields > 3 && !input.isNullAt(3))
-        input.getUTF8String(3).toString else ""
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      if (whereStr.nonEmpty)
-        compactScoped(spark, dir, fs, target, sortBy, whereStr)
-      else compactFull(spark, dir, fs, target, sortBy)
-    }
-
-  /** The lines and schema of main's head — the one snapshot read a
-    * compaction plans from. */
-  private def compactHead(fs: FileSystem,
-      dir: Path): (Array[String], StructType) = {
-    val head = ManifestFiles.head(fs, dir, None)
-    (head.lines, head.schema.getOrElse(throw new IllegalArgumentException(
-      s"compact: no graft-manifest table at $dir")))
-  }
-
-  private def compactFull(spark: SparkSession, dir: Path,
-      fs: FileSystem, target: Int, sortBy: String): java.util.Iterator[Scan] = {
-      val live0 = spark.read.format("graft-manifest")
-        .option("path", dir.toString).load()
-      // the scan state: files_before, the bucket layout, lineage, the
-      // declared sort order and the schema all come from this one read
-      val (scanLines, schemaNow) = compactHead(fs, dir)
-      val before = ManifestFiles.entriesFromLines(scanLines).length
-      // ROW LINEAGE: the rewrite carries every row's `_row_id` AND its
-      // `_last_updated_version` through (trailing reserved columns → the
-      // writer materializes them as the files' `_rid`/`_luv`), so
-      // compaction/Z-order reordering never re-mints identities and
-      // never reads as an update
-      val live =
-        if (ManifestFiles.isLineage(scanLines))
-          live0.select(org.apache.spark.sql.functions.col("*"),
-            live0.metadataColumn("_row_id"),
-            // a pre-lineage row's NULL recency carries as the 0
-            // sentinel: a null `_luv` slot means "updated by this
-            // commit" and resolves to the file default — maintenance
-            // must never read as an update (see ManifestParquet.luvOf)
-            org.apache.spark.sql.functions.coalesce(
-              live0.metadataColumn("_last_updated_version"),
-              org.apache.spark.sql.functions.lit(0))
-              .as("_last_updated_version"))
-        else live0
-      // the rewrite derives from THIS state; the commit validates no
-      // newer #dels/#eqdels landed concurrently (a racing row-level
-      // delete would otherwise silently resurrect), keeps entries a
-      // concurrent blind append landed (they commute), and aborts if a
-      // scanned entry was concurrently rewritten (both outputs landing
-      // would double rows)
-      val scanState = scanLines.filter(l => l.startsWith("#dels,") ||
-        l.startsWith("#eqdels,")).mkString("\n")
-      val scanEntries = ManifestFiles.entriesFromLines(scanLines)
-        .map(_._1).mkString("\n")
-      val sortCols = sortBy.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-      sortCols.foreach(c => require(live.columns.contains(c),
-        s"sort_by column '$c' not in ${live.columns.mkString(",")}"))
-      import org.apache.spark.sql.functions.col
-      // A DDL-declared bucket layout governs the rewrite: compact folds
-      // small files WITHIN the layout (rewrite carries the bucket/sort
-      // options, so the rewritten files keep their #bucket/#sorted marks
-      // and later INSERT INTOs keep clustering). sort_by would fight the
-      // layout — reject it loudly instead of silently unclustering.
-      ManifestFiles.tableConfFromLines(scanLines) match {
-        case Some((pos, n, sp)) =>
-          // positions are physical — resolve to live fields (the drop
-          // path refuses to retire a layout column, so this resolves)
-          val bucketName = ManifestFiles.fieldAtPhys(schemaNow, pos)
-            .map(schemaNow(_).name).getOrElse(throw new IllegalStateException(
-              s"bucket layout references retired position $pos"))
-          require(sortCols.isEmpty,
-            "compact(sort_by) conflicts with this table's declared " +
-              s"bucket layout (bucket($n, $bucketName)); " +
-              "the layout already governs file organization")
-          live.write.mode("overwrite").format("graft-manifest")
-            .option("path", dir.toString)
-            .option("scannedDeleteState", scanState)
-            .option("scannedEntries", scanEntries)
-            .option("maintenanceRewrite", "true")
-            .option("bucketBy", bucketName)
-            .option("buckets", n.toString)
-            .options(sp.flatMap(p => ManifestFiles.fieldAtPhys(schemaNow, p))
-              .map(p => Map("sortedBy" -> schemaNow(p).name))
-              .getOrElse(Map.empty))
-            .save()
-        case None =>
-          // no explicit sort_by: a DECLARED write.sort-order governs the
-          // rewrite (Iceberg's rewrite-with-table-sort-order) — range-
-          // cluster LEXICOGRAPHICALLY on the declared columns, turning
-          // the per-file sortedness appends produce into disjoint
-          // table-wide ranges. An explicit multi-column sort_by keeps
-          // its Z-ORDER semantics (a different, opt-in tiling).
-          // declared keys keep their DIRECTION + null placement through
-          // the compaction rewrite (latest-first clustering compacts
-          // latest-first)
-          val declared: Seq[org.apache.spark.sql.Column] =
-            if (sortCols.nonEmpty) Seq.empty
-            // scanLines, not a re-read: the clustering decision must
-            // come from the same snapshot the commit validates against
-            else ManifestFiles.sortKeysFromLines(scanLines)
-              .flatMap { k =>
-                ManifestFiles.fieldAtPhys(schemaNow, k.pos).map { i =>
-                  val c = col(schemaNow(i).name)
-                  (k.desc, k.nullsLast) match {
-                    case (false, false) => c.asc_nulls_first
-                    case (false, true) => c.asc_nulls_last
-                    case (true, false) => c.desc_nulls_first
-                    case (true, true) => c.desc_nulls_last
-                  }
-                }
-              }
-          val arranged = (sortCols, declared) match {
-            case (Seq(), Seq()) => live.coalesce(target)
-            case (Seq(), ds) =>
-              live.repartitionByRange(target, ds: _*)
-                .sortWithinPartitions(ds: _*)
-            case (Seq(one), _) =>
-              live.repartitionByRange(target, col(one)).sortWithinPartitions(one)
-            case (many, _) =>
-              val zc = "__graft_z"
-              live.withColumn(zc, graft.functions.ZOrder.zvalue(live, many))
-                .repartitionByRange(target, col(zc))
-                .sortWithinPartitions(zc)
-                .drop(zc) // projection keeps the per-partition order
-          }
-          arranged.write.mode("overwrite").format("graft-manifest")
-            .option("path", dir.toString)
-            .option("scannedDeleteState", scanState)
-            .option("scannedEntries", scanEntries)
-            .option("maintenanceRewrite", "true")
-            // compact arranges its own exact-target layout; a declared
-            // range mode must not re-shuffle it to the session default
-            .option("distributionMode", "none").save()
-      }
-      val after = ManifestFiles.entries(fs, dir, None).length
+      def str(i: Int): String =
+        if (input.numFields > i && !input.isNullAt(i))
+          input.getUTF8String(i).toString else ""
+      val out = ManifestCompaction.run(SparkSession.active,
+        dirFor(input.getUTF8String(0).toString), input.getInt(1), str(2),
+        str(3))
       result(new StructType().add("version", IntegerType)
           .add("files_before", IntegerType).add("files_after", IntegerType),
-        Array(ManifestFiles.latestVersion(fs, dir), before, after))
-  }
-
-  /** SCOPED compaction: fold ONLY the files whose `#stats` PROVE every
-    * row satisfies `where` (translated conjunct-by-conjunct through
-    * Spark's own filter translation; untranslatable conjuncts merely
-    * shrink the scope to nothing — selection is advisory, rewrite is
-    * verbatim, so correctness never depends on predicate semantics).
-    * The replacement is ONE atomic commit through the claim loop that
-    * drops exactly the scoped entries (validated still-present against
-    * the rebased predecessor — a concurrent rewrite aborts us loudly)
-    * and adds the folded files, written through the table's one write
-    * spec and task writer (a declared layout stays split; sketches,
-    * shredded-variant stats and blooms carry; no CHECK evaluates — the
-    * rewrite preserves committed rows). */
-  private def compactScoped(spark: SparkSession, dir: Path, fs: FileSystem,
-      target: Int, sortBy: String,
-      whereStr: String): java.util.Iterator[Scan] = {
-    val hconf = spark.sessionState.newHadoopConf()
-    // the scan state: files_before, the bucket layout, lineage, the
-    // write spec and the schema all come from this one read
-    val (lines, schemaNow) = compactHead(fs, dir)
-    require(ManifestFiles.tableConfFromLines(lines).isEmpty,
-      "scoped compact on a bucket-laid table is not supported — the " +
-        "bucket layout already governs file organization (full compact " +
-        "re-buckets)")
-    require(!lines.exists(l => l.startsWith("#dels,") ||
-        l.startsWith("#eqdels,")),
-      "scoped compact with merge-on-read delete vectors or equality " +
-        "deletes pending — CALL rewrite_position_deletes or a full " +
-        "compact first")
-    // WHERE → data-source filters via Spark's own translation
-    val probe = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schemaNow)
-    // analyzed condition + manual constant folding (the optimizer would
-    // erase a Filter over the empty probe relation): the implicit casts
-    // analysis wraps around literals collapse (`k < 120` → `k < 120L`)
-    val cond0 = probe.filter(org.apache.spark.sql.functions.expr(whereStr))
-      .queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }.getOrElse(throw new IllegalArgumentException(
-        s"could not analyze where: $whereStr"))
-    val cond = cond0.transformUp {
-      case e if e.foldable &&
-          !e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal] =>
-        org.apache.spark.sql.catalyst.expressions.Literal.create(
-          e.eval(null), e.dataType)
+        Array(out.version, out.filesBefore, out.filesAfter))
     }
-    def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression):
-        Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    // conjunct → data-source filter for the shapes the stats prover
-    // understands (comparison / equality / In / null tests against
-    // literals) — internal literal values convert to the EXTERNAL
-    // representation sources.Filter carries
-    def ext(v: Any, dt: DataType): Any =
-      org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala(v, dt)
-    def toSource(e: org.apache.spark.sql.catalyst.expressions.Expression):
-        Option[org.apache.spark.sql.sources.Filter] = {
-      import org.apache.spark.sql.catalyst.expressions._
-      import org.apache.spark.sql.{sources => s}
-      e match {
-        case EqualTo(a: AttributeReference, Literal(v, dt)) =>
-          Some(s.EqualTo(a.name, ext(v, dt)))
-        case EqualTo(Literal(v, dt), a: AttributeReference) =>
-          Some(s.EqualTo(a.name, ext(v, dt)))
-        case LessThan(a: AttributeReference, Literal(v, dt)) =>
-          Some(s.LessThan(a.name, ext(v, dt)))
-        case LessThan(Literal(v, dt), a: AttributeReference) =>
-          Some(s.GreaterThan(a.name, ext(v, dt)))
-        case LessThanOrEqual(a: AttributeReference, Literal(v, dt)) =>
-          Some(s.LessThanOrEqual(a.name, ext(v, dt)))
-        case LessThanOrEqual(Literal(v, dt), a: AttributeReference) =>
-          Some(s.GreaterThanOrEqual(a.name, ext(v, dt)))
-        case GreaterThan(a: AttributeReference, Literal(v, dt)) =>
-          Some(s.GreaterThan(a.name, ext(v, dt)))
-        case GreaterThan(Literal(v, dt), a: AttributeReference) =>
-          Some(s.LessThan(a.name, ext(v, dt)))
-        case GreaterThanOrEqual(a: AttributeReference, Literal(v, dt)) =>
-          Some(s.GreaterThanOrEqual(a.name, ext(v, dt)))
-        case GreaterThanOrEqual(Literal(v, dt), a: AttributeReference) =>
-          Some(s.LessThanOrEqual(a.name, ext(v, dt)))
-        case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-          Some(s.In(a.name, vs.map { case Literal(v, dt) => ext(v, dt) }.toArray))
-        case InSet(a: AttributeReference, vs) =>
-          Some(s.In(a.name, vs.map(ext(_, a.dataType)).toArray))
-        case IsNull(a: AttributeReference) => Some(s.IsNull(a.name))
-        case IsNotNull(a: AttributeReference) => Some(s.IsNotNull(a.name))
-        case _ => None
-      }
-    }
-    val filters = conjuncts(cond).flatMap(toSource)
-    require(filters.nonEmpty,
-      s"where '$whereStr' translates to no pushable filter — scoped " +
-        "compact selects files by stats proofs")
-    val entries = ManifestFiles.entriesFromLines(lines)
-    val stats = ManifestFiles.statsFromLines(lines)
-    val rowsOf = entries.toMap
-    val sel = entries.map(_._1).filter { n =>
-      filters.forall(f => ManifestSkip.provesAllMatch(f, schemaNow,
-        stats.get(n), rowsOf.get(n)))
-    }.toSeq
-    val before = entries.length
-    if (sel.isEmpty)
-      result(new StructType().add("version", IntegerType)
-          .add("files_before", IntegerType).add("files_after", IntegerType),
-        Array(ManifestFiles.latestVersion(fs, dir), before, before))
-    else {
-      val sortCols = sortBy.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-      sortCols.foreach(c => require(schemaNow.fieldNames.contains(c),
-        s"sort_by column '$c' not in ${schemaNow.fieldNames.mkString(",")}"))
-      import org.apache.spark.sql.functions.col
-      val subset0 = spark.read.format("graft-manifest")
-        .option("path", dir.toString)
-        .option("filesSubset", sel.mkString(",")).load()
-      val lineage = ManifestFiles.isLineage(lines)
-      // lineage: carry `_row_id` + `_last_updated_version` through the
-      // scoped rewrite (trailing reserved columns, materialized per
-      // file below — maintenance never reads as an update)
-      val subset =
-        if (lineage) subset0.select(col("*"),
-          subset0.metadataColumn("_row_id"),
-          // pre-lineage NULL recency → 0 sentinel (ManifestParquet.luvOf)
-          org.apache.spark.sql.functions.coalesce(
-            subset0.metadataColumn("_last_updated_version"),
-            org.apache.spark.sql.functions.lit(0))
-            .as("_last_updated_version"))
-        else subset0
-      val arranged = sortCols match {
-        case Seq() => subset.coalesce(target)
-        case Seq(one) =>
-          subset.repartitionByRange(target, col(one)).sortWithinPartitions(one)
-        case many =>
-          val zc = "__graft_z"
-          subset.withColumn(zc, graft.functions.ZOrder.zvalue(subset, many))
-            .repartitionByRange(target, col(zc))
-            .sortWithinPartitions(zc).drop(zc)
-      }
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val stagingName = s".staging-compactw-$token"
-      // a row-preserving rewrite: the table's write spec without CHECKs
-      val spec = WriteSpec.of(lines, schemaNow, hconf, maintenance = true)
-      val serConf = new SerializableHadoopConf(hconf)
-      val dirStr = dir.toString
-      val schemaB = schemaNow
-      val ridAt = if (lineage) schemaB.length else -1
-      val luvAt = if (lineage) schemaB.length + 1 else -1
-      val msgs: Array[FileCommitted] =
-        arranged.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-          if (!rows.hasNext) Iterator.empty
-          else {
-            val w = ManifestWriters.task(dirStr, stagingName,
-              f"part-cw$token-$pid%05d", schemaB, serConf, spec,
-              ridIdx = ridAt, luvIdx = luvAt)
-            try {
-              rows.foreach(w.write)
-              ManifestWriters.filesOf(w.commit()).iterator
-            } catch { case e: Throwable => w.abort(); throw e }
-          }
-        }.collect()
-      val staging = new Path(dir, stagingName)
-      val fresh = msgs.flatMap(ManifestWriters.land(fs, dir, staging, _))
-      val selSet = sel.toSet
-      val v = ManifestFiles.publishSnapshotV(fs, hconf, dir, (previous, version) => {
-        val present = previous.flatMap(ManifestSink.entryName).toSet
-        require(selSet.subsetOf(present),
-          "a concurrent commit rewrote files in the compaction scope — " +
-            "retry the scoped compact")
-        // the scan REFUSED pre-existing delete state up front, so ANY
-        // #dels/#eqdels here landed concurrently. Equality deletes
-        // apply value-keyed to everything born before them; the folded
-        // output is born AFTER the eqdel, so committing would resurrect
-        // any matching rows that moved into it — abort. DELIBERATELY
-        // COARSE (round-15 advice, documented trade): an eqdel whose
-        // keys live only in out-of-scope files is also aborted, because
-        // proving disjointness means reading the eqdel key sets and
-        // probing them against the fresh output's bounds mid-claim —
-        // retry cost on busy CDC tables is the accepted price for a
-        // race-path check that stays metadata-only and obviously sound.
-        // Positional vectors conflict only when they point
-        // INTO the folded scope (the folded files were computed without
-        // them); vectors on out-of-scope files ride through untouched
-        // and commute — a steadily-deleting 100 TB table must not make
-        // scoped compaction un-commitable.
-        require(!previous.exists(_.startsWith("#eqdels,")),
-          "a concurrent commit landed equality deletes during the " +
-            "scoped compact — retry against the current snapshot")
-        val vectored = ManifestFiles.deleteFilesFromLines(previous)
-          .flatMap(dn => ManifestFiles.readManifest(fs, new Path(dir, dn))
-            .map(l => l.substring(0, l.lastIndexOf(','))))
-        require(!vectored.exists(selSet.contains),
-          "a concurrent commit landed delete vectors INTO the scoped " +
-            "compaction's files — committing would resurrect those " +
-            "rows; retry against the current snapshot")
-        previous.filterNot(l =>
-          ManifestSink.entryName(l).exists(selSet)) ++ fresh :+
-          // scoped compaction replaces scanned entries with a verbatim
-          // rewrite of their rows — the logical multiset is unchanged
-          ManifestFiles.maintLine(version)
-      }, schemaNow)
-      fs.delete(staging, true)
-      result(new StructType().add("version", IntegerType)
-          .add("files_before", IntegerType).add("files_after", IntegerType),
-        Array(v, before, before - sel.length + msgs.length))
-    }
-  }
 
   /** `rewrite_position_deletes(table)`: fold a snapshot's many small
     * positional delete files (every DELETE/UPDATE task writes its own)

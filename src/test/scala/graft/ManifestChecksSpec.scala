@@ -130,6 +130,29 @@ class ManifestChecksSpec extends AnyFunSuite {
     assert(rows() == before)
   }
 
+  test("only compaction is maintenance: a user append carrying " +
+    "option(maintenanceRewrite) still enforces the CHECK and lands no " +
+    "#maint marker") {
+    val (cat, root) = freshCat("maintopt")
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES('check.positive'='v >= 0')")
+    def append(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.mode("append").format("graft-manifest")
+        .option("path", s"$root/t").option("maintenanceRewrite", "true")
+        .save()
+    val e = intercept[Exception](append(Seq((1L, -1.0)).toDF("k", "v")))
+    val msg = Option(e.getMessage).getOrElse("") +
+      Option(e.getCause).map(_.getMessage).getOrElse("")
+    assert(msg.contains("positive"), msg)
+    append(Seq((2L, 1.0)).toDF("k", "v"))
+    val dir = new org.apache.hadoop.fs.Path(root, "t")
+    val lines = ManifestFiles.latestLines(
+      dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
+    assert(!lines.exists(_.startsWith("#maint,")),
+      s"a row-bringing write is no maintenance step: ${lines.toSeq}")
+    assert(spark.table(s"$cat.t").count() == 1L)
+  }
+
   test("DDL validation and evolution: bad expressions fail at declare " +
     "time; ALTER adds/drops; renames and drops of referenced columns " +
     "refuse; properties surface") {

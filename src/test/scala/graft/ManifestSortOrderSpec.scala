@@ -193,13 +193,15 @@ class ManifestSortOrderSpec extends AnyFunSuite {
     assert(show.get("write.sort-order").contains("ts DESC,k"),
       show.get("write.sort-order").toString)
     // an UNSORTED route never earns the desc mark (verification holds
-    // for directions too): append through the path API with the order
-    // suppressed via distributionMode=none + pre-sorted ASC input
+    // for directions too): append through the path API with the range
+    // distribution declared off + pre-sorted ASC input
+    spark.sql(s"ALTER TABLE $cat.ev " +
+      "SET TBLPROPERTIES('write.distribution-mode'='none')")
     spark.range(100).select($"id".as("ts"), ($"id" % 3).as("k"),
         $"id".as("v"))
       .sortWithinPartitions($"ts".asc).coalesce(1)
       .write.mode("append").format("graft-manifest")
-      .option("path", dir.toString).option("distributionMode", "none").save()
+      .option("path", dir.toString).save()
     val after = ManifestFiles.entries(fs, dir, None).map(_._1)
     val marks2 = ManifestFiles.sortedFromLines(ManifestFiles.linesOf(fs, dir, None))
     val fresh = after.filterNot(entries.contains)

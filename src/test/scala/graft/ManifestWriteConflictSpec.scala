@@ -21,9 +21,10 @@ import graft.GraftSession
   * so committing would resurrect the concurrently-deleted rows. Both
   * must abort loudly (Delta's WriteSerializable conflict classes;
   * Iceberg's overwrite validation); blind APPENDS racing a row-level
-  * op commute and must keep committing. The spec drives the real
-  * commit closure (ManifestBatchWrite) with REAL interleaved commits —
-  * the exact race, deterministically. */
+  * op commute and must keep committing. Compaction's replacing commit
+  * obeys the same three rules. The spec drives the real commit closures
+  * (ManifestBatchWrite, ManifestCompaction) with REAL interleaved
+  * commits — the exact race, deterministically. */
 class ManifestWriteConflictSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.local(4)
@@ -147,32 +148,11 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
       "the rewrite's survivors landed exactly once")
   }
 
-  /** Stage a COMPACTION-style truncating rewrite (folded output derived
-    * from `scanned`), exactly as compactFull's write does. */
-  private def stageCompacting(path: String, scanned: Set[String],
-      scannedState: Set[String], ks: Seq[Long]):
-      (ManifestBatchWrite, Array[WriterCommitMessage]) = {
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val write = new ManifestBatchWrite(path, s"wcc-${ks.hashCode}", -1,
-      schema, truncate = true, conf, specOf(path, conf),
-      scannedDeleteState = () => Some(scannedState),
-      scannedEntries = () => Some(scanned))
-    val factory = write.createBatchWriterFactory(new PhysicalWriteInfo {
-      override def numPartitions(): Int = 1
-    })
-    val ksLocal = ks.toArray
-    val tid = 900000L + ManifestWriteConflictSpec.seq.incrementAndGet()
-    val msgs = spark.sparkContext.parallelize(Seq(0), 1).map { _ =>
-      val w = factory.createWriter(0, tid)
-      ksLocal.foreach { k =>
-        val r = new GenericInternalRow(1)
-        r.update(0, k)
-        w.write(r.asInstanceOf[InternalRow])
-      }
-      w.commit()
-    }.collect()
-    (write, msgs.toArray[WriterCommitMessage])
-  }
+  /** Plan a full compaction of `dir` from its head — the split the
+    * procedure runs in one go: plan (head read + scope), write (the
+    * pinned scan's rewrite job), commit (the claim under test). */
+  private def planCompacting(dir: Path): ManifestCompaction.Plan =
+    ManifestCompaction.plan(spark, dir, 1, "", "")
 
   test("a compaction racing a BLIND APPEND keeps the append's rows " +
     "(they commute); racing a concurrent REWRITE of its inputs it " +
@@ -182,25 +162,53 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
     spark.range(0, 100).select($"id".as("k")).coalesce(1)
       .writeTo(s"$cat.t").append()
     val dir = new Path(s"$root/t")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val scanned = ManifestFiles.entries(fs, dir, None).map(_._1).toSet
-    // compaction staged from the scanned snapshot...
-    val (w1, m1) = stageCompacting(s"$root/t", scanned,
-      deleteState(fs, dir), 0L until 100L)
+    // compaction staged from the head's snapshot...
+    val s1 = planCompacting(dir).write()
     // ...a blind append races it
     spark.range(5000, 5010).select($"id".as("k")).writeTo(s"$cat.t").append()
-    w1.commit(m1)
+    s1.commit()
     val ks = spark.table(s"$cat.t").collect().map(_.getLong(0)).sorted
     assert(ks.length == 110, s"append rows must survive: ${ks.length}")
     assert(ks.count(_ >= 5000) == 10)
     // round 2: a concurrent rewrite of the compaction's INPUT aborts it
-    val scanned2 = ManifestFiles.entries(fs, dir, None).map(_._1).toSet
-    val (w2, m2) = stageCompacting(s"$root/t", scanned2,
-      deleteState(fs, dir), 0L until 110L)
+    val s2 = planCompacting(dir).write()
     spark.sql(s"CALL $cat.system.compact('t')") // steals every input
-    val e = intercept[IllegalStateException](w2.commit(m2))
+    val e = intercept[IllegalStateException](s2.commit())
     assert(e.getMessage.contains("rewrote or removed"))
     assert(spark.table(s"$cat.t").count() == 110, "nothing may land")
+  }
+
+  test("a compaction racing new DELETE STATE (a CDC upsert's " +
+    "equality-delete set) ABORTS instead of resurrecting the deleted rows") {
+    val (cat, root) = freshCat("cmpstate")
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT) " +
+      "TBLPROPERTIES('delete.mode'='merge-on-read')")
+    spark.range(0, 100).select($"id".as("k")).coalesce(1)
+      .writeTo(s"$cat.t").append()
+    val staged = planCompacting(new Path(s"$root/t")).write()
+    spark.range(7, 8).select($"id".as("k"))
+      .write.mode("append").format("graft-manifest")
+      .option("path", s"$root/t").option("upsertKeys", "k").save()
+    val e = intercept[IllegalStateException](staged.commit())
+    assert(e.getMessage.contains("new row-level delete state"))
+    assert(spark.table(s"$cat.t").count() == 100, "nothing may land")
+  }
+
+  test("an append landing between the compaction's head read and its " +
+    "scan lands exactly once: the scan is pinned to the head's version " +
+    "and the commit keeps the append as a blind append") {
+    val (cat, root) = freshCat("pin")
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT)")
+    spark.range(0, 100).select($"id".as("k")).repartition(3)
+      .writeTo(s"$cat.t").append()
+    val plan = planCompacting(new Path(s"$root/t"))
+    spark.range(5000, 5010).select($"id".as("k")).coalesce(1)
+      .writeTo(s"$cat.t").append() // after the head read, before the scan
+    val out = plan.write().commit()
+    val ks = spark.table(s"$cat.t").collect().map(_.getLong(0)).sorted
+    assert(ks.toSeq == ((0L until 100L) ++ (5000L until 5010L)),
+      s"every row exactly once: ${ks.length} rows")
+    assert(out.filesAfter == 2, s"the folded file plus the append's: $out")
   }
 
   test("a blind append's RIDER LINES survive the racing compaction " +
@@ -216,12 +224,10 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
       .writeTo(s"$cat.t").append() // v2
     val dir = new Path(s"$root/t")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val scanned = ManifestFiles.entries(fs, dir, None).map(_._1).toSet
-    val (w1, m1) = stageCompacting(s"$root/t", scanned,
-      deleteState(fs, dir), 0L until 100L)
+    val staged = planCompacting(dir).write()
     spark.range(5000, 5010).select($"id".as("k"))
       .writeTo(s"$cat.t").append() // v3, the blind append
-    w1.commit(m1) // v4, the compaction
+    staged.commit() // v4, the compaction
     val lines = ManifestFiles.latestLines(fs, dir)
     val appendFile = ManifestFiles.luvFromLines(lines)
       .collectFirst { case (n, 3) => n }
@@ -231,14 +237,16 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
     assert(ManifestHist.fromLines(lines).contains(appendFile.get),
       "the append's #hist sample must survive too")
     assert(ManifestFiles.firstRowFromLines(lines).contains(appendFile.get))
-    // row-level truth: appended rows still read luv = 3, compacted = 4
+    // row-level truth: appended rows still read luv = 3, and the
+    // compacted rows keep theirs (2) — maintenance never reads as an
+    // update
     val luvs = spark.sql(s"SELECT k, _last_updated_version FROM $cat.t")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert((5000L until 5010L).forall(luvs(_) == 3),
       s"append rows must keep THEIR commit version, got " +
         s"${luvs.filter(_._1 >= 5000)}")
-    assert((0L until 100L).forall(luvs(_) == 4),
-      "the staged rewrite output (no carried _luv) stamps its own commit")
+    assert((0L until 100L).forall(luvs(_) == 2),
+      s"the compaction carries each row's _luv, got ${luvs.filter(_._1 < 100)}")
   }
 
   test("end to end: SQL UPDATE and DELETE still work and validate " +
