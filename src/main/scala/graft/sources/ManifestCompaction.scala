@@ -143,7 +143,7 @@ private[sources] object ManifestCompaction {
               ManifestFiles.maintLine(version)
             filesAfter = ManifestFiles.entriesFromLines(built).length
             built
-          }, schema)
+          }, schema, basis = Some(schema))
         Outcome(v, filesBefore, filesAfter)
       } finally fs.delete(staging, true)
     }

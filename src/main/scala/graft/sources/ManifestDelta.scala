@@ -160,7 +160,7 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
       // delete must not swallow rows an UPDATE re-landed after it
       previous ++ fresh ++
         freshNames.map(n => ManifestFiles.bornLine(n, version))
-    }, schema)
+    }, schema, basis = Some(schema))
     fs.delete(staging, true)
   }
 

@@ -219,37 +219,22 @@ object ManifestMaterializedView {
     decode(ManifestFiles.readManifest(fs, new Path(dir, s"_MV.v${vs.max}")))
   }
 
-  /** Claim the next `_MV.v<N>` — the view/snapshot claim discipline
-    * (stage + rename-if-absent under a same-process lock; see
+  /** Claim the next `_MV.v<N>` through the snapshot claim loop
+    * ([[ManifestFiles.claim]] under the directory's MV lock; see
     * ManifestViews.publish). Returns the landed version. */
   def publishDef(fs: FileSystem, dir: Path, d: MvDef,
       expectFresh: Boolean): Int = {
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val lock = (dir.toUri.toString + "#graft-mv-claim").intern()
-    lock.synchronized {
-      var attempt = 0
-      while (true) {
-        attempt += 1
-        require(attempt <= 64, s"mv claim at $dir starved after 64 attempts")
-        val vs = versions(fs, dir)
-        if (expectFresh && vs.nonEmpty)
+    ManifestFiles.withClaimLock(dir, "mv") {
+      ManifestFiles.claim(fs, dir, (0 +: versions(fs, dir)).max + 1,
+          v => s"_MV.v$v") { v =>
+        if (expectFresh && v > 1)
           throw new IllegalStateException(
             s"materialized view at $dir already exists " +
-              s"(versions ${vs.sorted.mkString(",")})")
-        val v = (0 +: vs).max + 1
-        val tmp = new Path(dir, s"._mvclaim-$token")
-        val out = fs.create(tmp, true)
-        try out.write((encode(d).mkString("\n") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        val ok = !fs.exists(new Path(dir, s"_MV.v$v")) &&
-          (try fs.rename(tmp, new Path(dir, s"_MV.v$v"))
-           catch { case _: java.io.IOException => false })
-        if (ok) return v
-        fs.delete(tmp, false)
-      }
-      -1 // unreachable
+              s"(versions ${versions(fs, dir).sorted.mkString(",")})")
+        ((encode(d).mkString("\n") + "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8), Nil)
+      }._1
     }
   }
 

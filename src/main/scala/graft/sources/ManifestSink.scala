@@ -318,26 +318,11 @@ private[sources] class ManifestTable(schema0: StructType,
       ManifestFiles.schemaFor(fs, dir, None, Some(b)), p, strictSchema = true)
   }
 
-  // Declared layout surfaced for introspection (DESCRIBE/SHOW CREATE):
-  // the catalog's load() passes bucket/partition props from the
-  // `#tableconf` lines; SPJ itself rides the Scan's outputPartitioning.
-  override def partitioning(): Array[Transform] = {
-    import org.apache.spark.sql.connector.expressions.Expressions
-    val bucket = for {
-      c <- Option(properties.get("bucketBy"))
-      n <- Option(properties.get("buckets"))
-    } yield Expressions.bucket(n.toInt, c)
-    val part = for {
-      cs <- Option(properties.get("partitionBy")).map(_.split(",").toSeq)
-      ks <- Option(properties.get("partitionKind")).map(_.split(",").toSeq)
-      if cs.length == ks.length
-    } yield cs.zip(ks).map {
-      case (c, "days") => Expressions.days(c)
-      case (c, "months") => Expressions.months(c)
-      case (c, _) => Expressions.identity(c)
-    }
-    (bucket.toSeq ++ part.toSeq.flatten).toArray
-  }
+  // Declared layout surfaced for introspection (DESCRIBE/SHOW CREATE),
+  // decoded from the properties the catalog's load() surfaced; SPJ
+  // itself rides the Scan's outputPartitioning.
+  override def partitioning(): Array[Transform] =
+    ManifestTableProps.transforms(properties)
 
   // ---- METADATA-ONLY DELETE (SupportsDelete; Iceberg's partition-
   // aligned delete generalized to stats-aligned): when every file either
@@ -377,7 +362,7 @@ private[sources] class ManifestTable(schema0: StructType,
           s"predicate/file alignment (e.g. ${mixed.head}); retry the DELETE")
       previous.filterNot(line =>
         ManifestSink.entryName(line).exists(drop.contains))
-    }, schema0)
+    }, schema0, basis = Some(schema0))
   }
 
   // `_file` = the manifest entry name a row came from; `_pos` = the
@@ -1286,7 +1271,7 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
         else previous.filterNot(line => ManifestSink.entryName(line).exists(drop))
       val conf0 = confLines.filterNot(base.contains)
       conf0 ++ base ++ landed(previous, version)
-    }, schema, branch)
+    }, schema, branch, basis = if (truncate) None else Some(schema))
     fs.delete(staging, true)
   }
 
@@ -1930,7 +1915,7 @@ private[sources] class ManifestStreamingWrite(path: String, queryId: String,
     ManifestFiles.publishSnapshotV(fs, conf.value, dir, (previous, version) =>
       previous.filterNot(_.startsWith(s"#txn,$queryId,")) ++
         landed(previous, version) :+ s"#txn,$queryId,$epochId",
-      schema, branch)
+      schema, branch, basis = Some(schema))
   }
 
   override def abort(epochId: Long,

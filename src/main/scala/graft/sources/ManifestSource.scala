@@ -804,7 +804,7 @@ object ManifestFiles {
     * A tag pins a version for humans (`VERSION AS OF 'nightly'`) and
     * for VACUUM, which never drops a tagged version. Stored OUTSIDE the
     * snapshot chain (a tag is a pointer to history, not part of it), so
-    * tagging never creates versions; updates land via tmp + rename. */
+    * tagging never creates versions; updates go through [[updateTags]]. */
   def tags(fs: FileSystem, dir: Path): Map[String, Int] =
     readManifest(fs, new Path(dir, "_TAGS")).flatMap { l =>
       val i = l.lastIndexOf(',')
@@ -821,16 +821,21 @@ object ManifestFiles {
           s"(tags: ${t.keys.toSeq.sorted.mkString(", ")})"))
     }
 
-  def writeTags(fs: FileSystem, dir: Path, m: Map[String, Int]): Unit = {
-    val tmp = new Path(dir, s"._tags-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(m.toSeq.sortBy(_._1)
-      .map { case (n, v) => s"$n,$v\n" }.mkString.getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(dir, "_TAGS")
-    fs.delete(dest, false)
-    require(fs.rename(tmp, dest), s"could not publish tags at $dest")
-  }
+  /** Re-read `_TAGS`, apply `f` and publish the result, under main's
+    * claim lock and through the overwrite-rename the latest pointers
+    * use — two racing tag updates both land, and a vacuum (which reads
+    * the tags under the same lock) never sees the file mid-swap.
+    * Returns the tags `f` saw. */
+  def updateTags(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
+      dir: Path)(f: Map[String, Int] => Map[String, Int]): Map[String, Int] =
+    withClaimLock(dir, "manifest-") {
+      val cur = tags(fs, dir)
+      overwrite(fs, org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf),
+        dir, s"._tags-${java.util.UUID.randomUUID().toString.take(8)}.tmp",
+        f(cur).toSeq.sortBy(_._1).map { case (n, v) => s"$n,$v\n" }.mkString
+          .getBytes("UTF-8"), "_TAGS")
+      cur
+    }
 
   /** Parquet BLOOM FILTER columns (round 12 — Iceberg's
     * `write.parquet.bloom-filter-enabled.column.*`): positions of
@@ -1350,14 +1355,10 @@ object ManifestFiles {
     * source of truth, see latestVersion). Returns the claimed version. */
   def publishSnapshot(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
       dir: Path, buildEntries: Array[String] => Array[String],
-      schema: StructType): Int =
-    publishSnapshot(fs, conf, dir, buildEntries, schema, None)
-
-  def publishSnapshot(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-      dir: Path, buildEntries: Array[String] => Array[String],
-      schema: StructType, branch: Option[String]): Int =
+      schema: StructType, branch: Option[String] = None,
+      basis: Option[StructType] = None): Int =
     publishSnapshotV(fs, conf, dir, (prev, _) => buildEntries(prev), schema,
-      branch)
+      branch, basis = basis)
 
   /** The versioned flavor: `buildEntries` additionally receives the
     * version number THIS claim attempt is for (re-invoked per retry), so
@@ -1372,7 +1373,7 @@ object ManifestFiles {
   def publishSnapshotV(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
       dir: Path, buildEntries: (Array[String], Int) => Array[String],
       schema: StructType, branch: Option[String] = None,
-      startAt: Int = 0): Int =
+      startAt: Int = 0, basis: Option[StructType] = None): Int =
     publishRawV(fs, conf, dir, (prevRaw, version) => {
       val previous = materialize(fs, dir, prevRaw)
       // row-lineage choke point: EVERY snapshot commit (append, rewrite,
@@ -1383,7 +1384,7 @@ object ManifestFiles {
             previous))),
         version,
         java.util.UUID.randomUUID().toString.take(8), schema)
-    }, schema, branch, startAt)
+    }, schema, branch, startAt, basis)
 
   /** RAW-level publish: `buildRaw` receives the predecessor's raw list
     * lines and returns (raw lines to land, segment files written for
@@ -1391,95 +1392,139 @@ object ManifestFiles {
     * (create_branch, rollback, fast_forward) use this directly to
     * re-reference the source snapshot's segments verbatim: a branch
     * fork or a rollback of a million-file table is a one-small-file
-    * metadata commit. */
+    * metadata commit.
+    *
+    * `basis` is the schema a commit was planned against. A commit that
+    * keeps the schema (appends, row-level operations, merge-on-read
+    * deletes, compaction) or evolves it (ALTER) passes it, and the claim
+    * refuses a predecessor whose `_SCHEMA` differs: publishing anyway
+    * would drop a concurrent ALTER's change (or hand two racing ADD
+    * COLUMNs one physical position). Commits that publish a schema on
+    * purpose (truncating and copy-style ones) pass None. */
   def publishRawV(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
       dir: Path, buildRaw: (Array[String], Int) => (Array[String], Seq[Path]),
       schema: StructType, branch: Option[String] = None,
-      startAt: Int = 0): Int = {
+      startAt: Int = 0, basis: Option[StructType] = None): Int = {
     val pfx = chainPrefix(branch)
     if (!fs.exists(dir)) fs.mkdirs(dir)
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
-    // Temp names carry a committer-unique token: two committers racing
-    // for the same version number must stage to DIFFERENT temp files.
     val token = java.util.UUID.randomUUID().toString.take(8)
-    // The CLAIM must go through FileSystem.rename, not FileContext: it
-    // refuses an existing destination natively (atomic putIfAbsent on
-    // HDFS semantics) AND ChecksumFileSystem moves the data+crc sidecar
-    // pair coherently — FileContext's pair-unaware rename let a losing
-    // claimer clobber the winner's .crc, corrupting the version file
-    // for every reader. Pointer swings still use FileContext's
-    // overwrite-rename; pointers are an existence probe only (version
-    // files are the read path), so their last-swing-wins race is benign.
-    def land(tmpName: String, bytes: Array[Byte], target: String,
-        overwrite: Boolean): Boolean = {
-      val tmp = new Path(dir, tmpName)
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      if (overwrite) {
-        // Best-effort: FileContext's OVERWRITE is delete-then-rename
-        // internally, so concurrent swingers can race each other into a
-        // spurious already-exists. Losing the swing is fine — some
-        // committer's complete snapshot is the pointer either way.
-        try {
-          fc.rename(tmp, new Path(dir, target),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        } catch {
-          case _: java.io.IOException => fs.delete(tmp, false)
-        }
-        true
-      } else {
-        val ok =
-          try fs.rename(tmp, new Path(dir, target))
-          catch { case _: java.io.IOException => false }
-        if (!ok) fs.delete(tmp, false)
-        ok
-      }
-    }
-
-    // POSIX rename overwrites silently, so on a LOCAL filesystem the
-    // exists-check + rename pair is not atomic across threads — a raw
-    // race let two claimers both "succeed" with one snapshot silently
-    // replaced. Same-process committers (local mode, one driver JVM)
-    // therefore serialize on a lock keyed by the table directory —
-    // Delta's LocalLogStore makes the same tradeoff. On HDFS-semantics
-    // filesystems rename refuses an existing destination server-side,
-    // so CROSS-process committers are safe where it matters (shared
-    // production storage); cross-process writers on one raw local disk
-    // remain a documented out-of-scope race.
-    val lock = (dir.toUri.toString + s"#graft-manifest-claim-$pfx").intern()
-    lock.synchronized {
-      var version = math.max(latestVersion(fs, dir, branch) + 1, startAt)
-      var entries: Array[Byte] = null
-      var claimed = false
-      while (!claimed) {
+    // Pointer swings use FileContext's overwrite-rename. Best-effort:
+    // its OVERWRITE is delete-then-rename internally, so concurrent
+    // swingers can race each other into a spurious already-exists.
+    // Losing the swing is fine — pointers are an existence probe only
+    // (version files are the read path), and some committer's complete
+    // snapshot is the pointer either way.
+    def swing(tmpName: String, bytes: Array[Byte], target: String): Unit =
+      try overwrite(fs, fc, dir, tmpName, bytes, target)
+      catch { case _: java.io.IOException => }
+    withClaimLock(dir, s"manifest-$pfx") {
+      val (version, entries) = claim(fs, dir,
+          math.max(latestVersion(fs, dir, branch) + 1, startAt),
+          v => s"_MANIFEST.${pfx}v$v") { version =>
+        basis.foreach(requireBasis(fs, dir, pfx, version - 1, _))
         val prevRaw =
           if (version <= 1) Array.empty[String]
           else readManifest(fs, new Path(dir, s"_MANIFEST.${pfx}v${version - 1}"))
         val (raw, segsWritten) = buildRaw(prevRaw, version)
-        entries = raw.mkString("\n").getBytes("UTF-8")
-        claimed = !fs.exists(new Path(dir, s"_MANIFEST.${pfx}v$version")) &&
-          land(s"._claim-$token-$pfx$version", entries,
-            s"_MANIFEST.${pfx}v$version", overwrite = false)
-        if (!claimed) {
-          // this attempt's segments are unreferenced — sweep them now
-          // rather than leaving orphans for vacuum
-          segsWritten.foreach(p => try fs.delete(p, false)
-            catch { case _: Exception => })
-          version += 1
-        }
+        (raw.mkString("\n").getBytes("UTF-8"), segsWritten)
       }
       val schemaBytes = schema.json.getBytes("UTF-8")
-      land(s"._publish-$token-vschema", schemaBytes, s"_SCHEMA.${pfx}v$version",
-        overwrite = true)
+      swing(s"._publish-$token-vschema", schemaBytes, s"_SCHEMA.${pfx}v$version")
       // the latest pointers are MAIN's convenience probe — branch
       // readers resolve through their own chain's version files
       if (branch.isEmpty) {
-        land(s"._publish-$token-lschema", schemaBytes, "_SCHEMA",
-          overwrite = true)
-        land(s"._publish-$token-lmanifest", entries, "_MANIFEST",
-          overwrite = true)
+        swing(s"._publish-$token-lschema", schemaBytes, "_SCHEMA")
+        swing(s"._publish-$token-lmanifest", entries, "_MANIFEST")
       }
       version
+    }
+  }
+
+  /** Same-process committers to one chain serialize on a lock keyed by
+    * the directory and the chain. POSIX rename overwrites silently, so
+    * on a LOCAL filesystem the exists-check + rename pair is not atomic
+    * across threads — a raw race let two claimers both "succeed" with
+    * one snapshot silently replaced (Delta's LocalLogStore makes the
+    * same tradeoff). On HDFS-semantics filesystems rename refuses an
+    * existing destination server-side, so CROSS-process committers are
+    * safe where it matters (shared production storage); cross-process
+    * writers on one raw local disk remain a documented out-of-scope
+    * race. Snapshots hold `manifest-<branch prefix>`; `_TAGS` updates
+    * hold main's, so a tag never races a vacuum or another tag. */
+  private[sources] def withClaimLock[T](dir: Path, chain: String)(body: => T): T =
+    (dir.toUri.toString + s"#graft-$chain-claim").intern().synchronized(body)
+
+  /** The ONE claim loop of every versioned chain in a directory —
+    * snapshots (`_MANIFEST.[<branch>.]v<N>`), view definitions
+    * (`_VIEW.v<N>`) and MV definitions (`_MV.v<N>`) — run under the
+    * chain's [[withClaimLock]]. From version `first`, stage the bytes
+    * `attempt(v)` builds and claim `target(v)` by rename-if-absent. The
+    * claim goes through FileSystem.rename, not FileContext: it refuses
+    * an existing destination natively (atomic putIfAbsent on HDFS
+    * semantics) AND ChecksumFileSystem moves the data+crc sidecar pair
+    * coherently — FileContext's pair-unaware rename let a losing
+    * claimer clobber the winner's .crc. A claim lost to another
+    * committer (the target exists) deletes the attempt's extra files and
+    * retries at v + 1 with a fresh build. Retries are unbounded: each
+    * one is a version another committer landed, so the loop ends when
+    * the contention does. A rename that fails while the target does NOT
+    * exist is no lost race — moving on would leave a hole the next
+    * commit reads as an empty predecessor, dropping every earlier entry
+    * — so it fails the commit. Returns the claimed version and bytes. */
+  @scala.annotation.tailrec
+  private[sources] def claim(fs: FileSystem, dir: Path, first: Int,
+      target: Int => String)(
+      attempt: Int => (Array[Byte], Seq[Path])): (Int, Array[Byte]) = {
+    val (bytes, written) = attempt(first)
+    val dest = new Path(dir, target(first))
+    val claimed = !fs.exists(dest) && {
+      // committer-unique temp name: racers for one version never share it
+      val tmp = new Path(dir,
+        s"._claim-${java.util.UUID.randomUUID().toString.take(8)}-${target(first)}")
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      val ok = try fs.rename(tmp, dest) catch { case _: java.io.IOException => false }
+      if (!ok) fs.delete(tmp, false)
+      ok
+    }
+    if (claimed) (first, bytes)
+    else {
+      written.foreach(p => try fs.delete(p, false) catch { case _: Exception => })
+      if (!fs.exists(dest)) throw new java.io.IOException(
+        s"graft-manifest at $dir: the claim of ${target(first)} failed and " +
+          "no other committer holds it — failing the commit rather than " +
+          s"skipping version $first")
+      claim(fs, dir, first + 1, target)(attempt)
+    }
+  }
+
+  /** Stage `bytes` and overwrite-rename them onto `target`. */
+  private def overwrite(fs: FileSystem, fc: org.apache.hadoop.fs.FileContext,
+      dir: Path, tmpName: String, bytes: Array[Byte], target: String): Unit = {
+    val tmp = new Path(dir, tmpName)
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    try fc.rename(tmp, new Path(dir, target),
+      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    catch { case e: java.io.IOException => fs.delete(tmp, false); throw e }
+  }
+
+  /** A commit planned against schema `basis` requires its predecessor
+    * (version `prev` of the chain) to still publish it. Nullability
+    * aside, field names, types and physical positions must match. */
+  private def requireBasis(fs: FileSystem, dir: Path, pfx: String, prev: Int,
+      basis: StructType): Unit = {
+    def shape(s: StructType) =
+      ManifestTable.nullableSchema(s).fields.toSeq.zipWithIndex.map {
+        case (fd, i) => (fd.name, fd.dataType, physPos(s, i)) }
+    val p = new Path(dir, s"_SCHEMA.${pfx}v$prev")
+    if (prev >= 1 && fs.exists(p)) {
+      val published = readSchema(fs, p)
+      if (shape(published) != shape(basis)) throw new IllegalStateException(
+        s"graft-manifest at $dir: concurrent schema change, retry — " +
+          s"version $prev publishes ${published.simpleString}, this " +
+          s"commit was planned against ${basis.simpleString}")
     }
   }
 
@@ -3658,66 +3703,11 @@ class GraftManifestCatalog extends TableCatalog
       .getOrElse(ManifestFiles.schemaFor(f, dir, version))
     val confLines = head.map(_.lines)
       .getOrElse(ManifestFiles.linesOf(f, dir, version))
-    if (ManifestFiles.isMergeOnRead(confLines))
-      props.put("delete.mode", "merge-on-read")
-    val bloomNames = ManifestFiles.bloomFromLines(confLines)
-      .flatMap(ManifestFiles.fieldAtPhys(schema, _)).map(schema(_).name)
-    if (bloomNames.nonEmpty)
-      props.put("bloom.columns", bloomNames.mkString(","))
-    val ndvNames = ManifestFiles.ndvFromLines(confLines)
-      .flatMap(ManifestFiles.fieldAtPhys(schema, _)).map(schema(_).name)
-    if (ndvNames.nonEmpty)
-      props.put("stats.ndv.columns", ndvNames.mkString(","))
-    val histNames = ManifestFiles.histDeclFromLines(confLines)
-      .flatMap(ManifestFiles.fieldAtPhys(schema, _)).map(schema(_).name)
-    if (histNames.nonEmpty)
-      props.put("stats.histogram.columns", histNames.mkString(","))
-    val shredDecl = ManifestShred.fromLines(confLines).flatMap { sp =>
-      ManifestFiles.fieldAtPhys(schema, sp.pos).map { i =>
-        s"${schema(i).name}:${sp.path}:" + ManifestShred.typeName(sp.dt)
-      }
-    }
-    if (shredDecl.nonEmpty)
-      props.put("variant.shred", shredDecl.mkString(","))
-    if (ManifestFiles.isLineage(confLines))
-      props.put("row.lineage", "true")
-    val sortNames = ManifestFiles.sortKeysFromLines(confLines).flatMap { k =>
-      ManifestFiles.fieldAtPhys(schema, k.pos).map { i =>
-        schema(i).name + (if (k.desc) " DESC" else "") +
-          (if (k.nullsLast != k.desc)
-             (if (k.nullsLast) " NULLS LAST" else " NULLS FIRST")
-           else "")
-      }
-    }
-    if (sortNames.nonEmpty)
-      props.put("write.sort-order", sortNames.mkString(","))
-    if (ManifestFiles.distModeRange(confLines))
-      props.put("write.distribution-mode", "range")
-    ManifestFiles.checksFromLines(confLines).foreach { case (n, txt) =>
-      props.put(s"check.$n", txt)
-    }
-    ManifestFiles.partConfs(confLines) match {
-      case specs if specs.nonEmpty =>
-        val resolved = specs.flatMap { case (pos, kind) =>
-          ManifestFiles.fieldAtPhys(schema, pos)
-            .map(idx => (schema(idx).name, kind)) }
-        // all-or-nothing: a half-resolved layout must not surface
-        if (resolved.length == specs.length) {
-          props.put("partitionBy", resolved.map(_._1).mkString(","))
-          props.put("partitionKind", resolved.map(_._2).mkString(","))
-        }
-      case _ =>
-    }
-    // DDL-declared layout rides into the write path as properties
-    // (positions are PHYSICAL — resolve to the current field, if live)
-    ManifestFiles.tableConfFromLines(confLines).foreach { case (pos, n, sp) =>
-      ManifestFiles.fieldAtPhys(schema, pos).foreach { idx =>
-        props.put("bucketBy", schema(idx).name)
-        props.put("buckets", n.toString)
-        sp.flatMap(p => ManifestFiles.fieldAtPhys(schema, p))
-          .foreach(pi => props.put("sortedBy", schema(pi).name))
-      }
-    }
+    // declared properties and the DDL layout ride into SHOW TBLPROPERTIES
+    // and the write path (positions are PHYSICAL — resolved to the
+    // current field, if live)
+    ManifestTableProps.decode(schema, confLines).foreach { case (k, v) =>
+      props.put(k, v) }
     new ManifestTable(schema, props, strictSchema = true)
   }
 
@@ -3784,50 +3774,12 @@ class GraftManifestCatalog extends TableCatalog
     load(ident, Some(v))
   }
 
-  /** `write.sort-order` property value → sort keys (validated: live
-    * columns, orderable primitives, no duplicates). Grammar per key:
-    * `col [ASC|DESC] [NULLS FIRST|NULLS LAST]` — Iceberg's sort-order
-    * surface; direction defaults ASC, null placement defaults to the
-    * direction's SQL pairing. */
-  private def parseSortOrder(schema: StructType,
-      cs: String): Seq[ManifestFiles.SortKey] = {
-    val keys = cs.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { spec =>
-      val toks = spec.split("\\s+").toList
-      val c = toks.head
-      val (desc, rest) = toks.tail.map(_.toLowerCase) match {
-        case "desc" :: r => (true, r)
-        case "asc" :: r => (false, r)
-        case r => (false, r)
-      }
-      val nullsLast = rest match {
-        case Nil => desc
-        case List("nulls", "first") => false
-        case List("nulls", "last") => true
-        case _ => throw new IllegalArgumentException(
-          s"write.sort-order: cannot parse '$spec' — use " +
-            "'col [ASC|DESC] [NULLS FIRST|NULLS LAST]'")
-      }
-      require(schema.fieldNames.contains(c),
-        s"write.sort-order column '$c' not in ${schema.fieldNames.mkString(",")}")
-      require(ManifestSkip.statsCapable(schema(c).dataType),
-        s"write.sort-order needs orderable primitive columns — " +
-          s"'$c' is ${schema(c).dataType.sql}")
-      ManifestFiles.SortKey(
-        ManifestFiles.physPos(schema, schema.fieldIndex(c)), desc, nullsLast)
-    }
-    require(keys.nonEmpty, "write.sort-order must name at least one column")
-    require(keys.map(_.pos).distinct.length == keys.length,
-      "duplicate column in write.sort-order")
-    keys
-  }
-
   /** DDL table creation — `CREATE TABLE cat.t (…) [PARTITIONED BY
     * (bucket(n, col))]` and CTAS resolve here: an EMPTY version-1
-    * snapshot publishes the schema, and a bucket transform persists as a
-    * `#tableconf` line so every later `INSERT INTO` auto-clusters into
-    * the storage-partitioned-join layout (ManifestDdlSpec). Identity or
-    * other transforms are rejected explicitly — the format's layouts are
-    * bucket (+ sorted via the write option). */
+    * snapshot publishes the schema, and the declared layout and
+    * properties persist as `#tableconf` lines (ManifestTableProps) so
+    * every later `INSERT INTO` clusters, splits and validates without
+    * options (ManifestDdlSpec). */
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: JMap[String, String]): Table = {
     val dir = tableDir(ident)
@@ -3837,190 +3789,12 @@ class GraftManifestCatalog extends TableCatalog
         Array(catalogName, ident.name))
     require(!ManifestViews.exists(f, dir),
       s"'${ident.name}' is a VIEW in catalog $catalogName — DROP it first")
-    val (bucket, part) = parseTransforms(schema, partitions)
     // validated BEFORE the publish touches the directory
-    val confLines = createConfLines(schema, bucket, part, properties)
+    val confLines = ManifestTableProps.create(schema, partitions, properties)
     ManifestFiles.publishSnapshot(f,
       SparkSession.active.sessionState.newHadoopConf(), dir,
       _ => confLines, schema)
     load(ident, None)
-  }
-
-  /** DECLARED layout transforms → (bucket spec, time/identity/truncate
-    * partition columns), shared by CREATE TABLE and the staged (atomic)
-    * CTAS. Time/identity/truncate transforms are recorded as
-    * `#tableconf,part` lines IN DECLARED ORDER; the write side splits
-    * task output so each data file holds one COMPOSITE partition value
-    * (see ManifestWriters) — `PARTITIONED BY (days(ts), region)` lands
-    * day+region-pure files, so a retention delete on either dimension
-    * stays metadata-only and two identically-laid tables
-    * storage-partition-join on the composite key. MIXED specs may add
-    * ONE `bucket(n, col)`: the write clusters tasks by bucket and splits
-    * files by the remaining transforms — files land pure on BOTH, the
-    * bucket SPJ layout holds, and temporal retention deletes stay
-    * metadata-only. */
-  private def parseTransforms(schema: StructType,
-      partitions: Array[Transform]):
-      (Option[(Int, Int)], Vector[(Int, String)]) = {
-    var part: Vector[(Int, String)] = Vector.empty
-    var bucket: Option[(Int, Int)] = None
-    def litInt(t: Transform): Option[Int] = t.arguments.collectFirst {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        l.value.toString.toInt
-    }
-    def colOf(t: Transform): Int = {
-      val c = t.references.headOption.map(_.fieldNames.mkString("."))
-        .getOrElse(throw new IllegalArgumentException(
-          s"malformed ${t.name} transform: $t"))
-      require(schema.fieldNames.contains(c),
-        s"partition column '$c' not in ${schema.fieldNames.mkString(",")}")
-      schema.fieldIndex(c)
-    }
-    partitions.foreach { t =>
-      t.name match {
-        case "bucket" =>
-          require(bucket.isEmpty, "at most one bucket(n, col) transform")
-          val idx = colOf(t)
-          val n = litInt(t).getOrElse(throw new IllegalArgumentException(
-            s"malformed bucket transform: $t"))
-          require(schema(idx).dataType == LongType,
-            s"bucket supports BIGINT columns, got ${schema(idx).dataType.sql}")
-          bucket = Some((idx, n))
-        case k if GraftTimeTransformFunction.TimeKinds(k) =>
-          val idx = colOf(t)
-          val dt = schema(idx).dataType
-          require(dt == TimestampType || dt == TimestampNTZType ||
-              (dt == DateType && k != "hours"),
-            s"$k() needs a TIMESTAMP${if (k == "hours") ""
-              else " or DATE"} column, got ${dt.sql}")
-          require(!part.exists(_._1 == idx),
-            s"duplicate partition transform on column ${schema(idx).name}")
-          part :+= ((idx, k))
-        case "truncate" =>
-          val idx = colOf(t)
-          val w = litInt(t).getOrElse(throw new IllegalArgumentException(
-            s"malformed truncate transform: $t"))
-          require(w >= 1, s"truncate width must be >= 1, got $w")
-          val dt = schema(idx).dataType
-          require(dt == LongType || dt == IntegerType || dt == StringType,
-            s"truncate supports BIGINT/INT/STRING columns, got ${dt.sql}")
-          require(!part.exists(_._1 == idx),
-            s"duplicate partition transform on column ${schema(idx).name}")
-          part :+= ((idx, GraftTruncateFunction.kindOf(w)))
-        case "identity" =>
-          val idx = colOf(t)
-          require(ManifestSkip.statsCapable(schema(idx).dataType),
-            s"identity partitioning needs an orderable primitive " +
-              s"column, got ${schema(idx).dataType.sql}")
-          require(!part.exists(_._1 == idx),
-            s"duplicate partition transform on column ${schema(idx).name}")
-          part :+= ((idx, "identity"))
-        case other => throw new UnsupportedOperationException(
-          "graft-manifest supports PARTITIONED BY lists of days/months/" +
-            "years/hours(ts), truncate(w, col), identity (col), plus at " +
-            s"most one bucket(n, col); got $other")
-      }
-    }
-    (bucket, part)
-  }
-
-  /** A fresh table's full `#tableconf` line set (layout + properties). */
-  private def createConfLines(schema: StructType,
-      bucket: Option[(Int, Int)], part: Vector[(Int, String)],
-      properties: JMap[String, String]): Array[String] =
-    bucket.map { case (pos, n) =>
-        ManifestFiles.tableConfLine(pos, n, None) }.toArray ++
-      part.map { case (pos, kind) =>
-        ManifestFiles.partConfLine(pos, kind) }.toArray[String] ++
-      propertyConfLines(schema, properties, bucketLaid = bucket.isDefined)
-
-  /** DDL properties → their persisted `#tableconf` lines (delete.mode,
-    * CHECK constraints, bloom columns, write sort order) —
-    * shared by CREATE TABLE and the staged REPLACE. */
-  private def propertyConfLines(schema: StructType,
-      properties: JMap[String, String], bucketLaid: Boolean): Array[String] = {
-    val mor = Option(properties.get("delete.mode")) match {
-      case Some("merge-on-read") => Array(ManifestFiles.MergeOnReadLine)
-      case Some("copy-on-write") | None => Array.empty[String]
-      case Some(other) => throw new IllegalArgumentException(
-        s"delete.mode must be 'copy-on-write' or 'merge-on-read', got '$other'")
-    }
-    ManifestParquet.requireFormat(Option(properties.get("format")))
-    val checks = properties.entrySet().iterator().asScala.toSeq
-      .filter(_.getKey.startsWith("check."))
-      .map(e => (e.getKey.stripPrefix("check."), e.getValue))
-      .sortBy(_._1)
-      .map { case (n, txt) =>
-        ManifestChecks.validate(SparkSession.active, schema, n, txt)
-        ManifestFiles.checkLine(n, txt)
-      }.toArray
-    val bloom = Option(properties.get("bloom.columns")).map { cs =>
-      val positions = cs.split(",").map(_.trim).filter(_.nonEmpty).map { c =>
-        require(schema.fieldNames.contains(c),
-          s"bloom.columns column '$c' not in ${schema.fieldNames.mkString(",")}")
-        schema.fieldIndex(c)
-      }.toSeq
-      require(positions.nonEmpty, "bloom.columns must name at least one column")
-      ManifestFiles.bloomLine(positions)
-    }.toArray
-    val ndv = Option(properties.get("stats.ndv.columns")).map { cs =>
-      val positions = cs.split(",").map(_.trim).filter(_.nonEmpty).map { c =>
-        require(schema.fieldNames.contains(c),
-          s"stats.ndv.columns column '$c' not in " +
-            schema.fieldNames.mkString(","))
-        require(ManifestNdv.capable(schema(schema.fieldIndex(c)).dataType),
-          s"stats.ndv.columns column '$c' has type " +
-            s"${schema(schema.fieldIndex(c)).dataType.simpleString}, which " +
-            "has no stable sketch identity")
-        schema.fieldIndex(c)
-      }.toSeq
-      require(positions.nonEmpty,
-        "stats.ndv.columns must name at least one column")
-      ManifestFiles.ndvConfLine(positions)
-    }.toArray
-    val hist = Option(properties.get("stats.histogram.columns")).map { cs =>
-      val positions = cs.split(",").map(_.trim).filter(_.nonEmpty).map { c =>
-        require(schema.fieldNames.contains(c),
-          s"stats.histogram.columns column '$c' not in " +
-            schema.fieldNames.mkString(","))
-        require(ManifestHist.capable(schema(schema.fieldIndex(c)).dataType),
-          s"stats.histogram.columns column '$c' has type " +
-            s"${schema(schema.fieldIndex(c)).dataType.simpleString}, " +
-            "which has no histogram domain (numeric/temporal only)")
-        schema.fieldIndex(c)
-      }.toSeq
-      require(positions.nonEmpty,
-        "stats.histogram.columns must name at least one column")
-      ManifestFiles.histConfLine(positions)
-    }.toArray
-    val lineage = Option(properties.get("row.lineage")) match {
-      case Some("true") => Array(ManifestFiles.LineageLine)
-      case Some("false") | None => Array.empty[String]
-      case Some(other) => throw new IllegalArgumentException(
-        s"row.lineage must be 'true', got '$other'")
-    }
-    val shred = Option(properties.get("variant.shred")).map { v =>
-      ManifestShred.confLines(ManifestShred.parseDecl(schema, v))
-    }.getOrElse(Seq.empty).toArray
-    val sortOrder = Option(properties.get("write.sort-order")).map { cs =>
-      require(!bucketLaid,
-        "write.sort-order conflicts with a bucket layout — sorted " +
-          "buckets are declared via the layout's own sort slot " +
-          "(option(\"sortedBy\", col))")
-      ManifestFiles.sortOrderLine(parseSortOrder(schema, cs))
-    }.toArray
-    val distMode = Option(properties.get("write.distribution-mode")) match {
-      case Some("range") =>
-        require(sortOrder.nonEmpty,
-          "write.distribution-mode=range needs a declared " +
-            "write.sort-order — there is nothing to range-distribute on")
-        Array(ManifestFiles.DistModeRangeLine)
-      case Some("none") | None => Array.empty[String]
-      case Some(other) => throw new IllegalArgumentException(
-        s"write.distribution-mode must be 'none' or 'range', got '$other'")
-    }
-    mor ++ bloom ++ ndv ++ hist ++ shred ++ lineage ++ sortOrder ++
-      distMode ++ checks
   }
 
   // ---- StagingTableCatalog: atomic CTAS / RTAS ------------------------
@@ -4048,17 +3822,16 @@ class GraftManifestCatalog extends TableCatalog
     if (f.exists(new Path(dir, "_MANIFEST")))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         Array(catalogName, ident.name))
-    val (bucket, part) = parseTransforms(schema, partitions)
-    val confLines = createConfLines(schema, bucket, part, properties)
+    val confLines = ManifestTableProps.create(schema, partitions, properties)
     val props = new java.util.HashMap[String, String]()
     props.put("path", dir.toString)
     props.put("replaceConfLines", confLines.mkString("\n"))
     props.put("requireFreshTable", "true")
     // a bucket layout clusters the CTAS write itself (the recorded
     // #tableconf line rides replaceConfLines; these drive the shuffle)
-    bucket.foreach { case (pos, n) =>
-      props.put("bucketBy", schema.fieldNames(pos))
-      props.put("buckets", n.toString)
+    ManifestTableProps.decode(schema, confLines).foreach {
+      case (k @ ("bucketBy" | "buckets"), v) => props.put(k, v)
+      case _ =>
     }
     val hconf = SparkSession.active.sessionState.newHadoopConf()
     new StagedManifestTable(
@@ -4112,10 +3885,7 @@ class GraftManifestCatalog extends TableCatalog
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName, ident.name))
     }
-    require(partitions.isEmpty,
-      "REPLACE TABLE with partition transforms is not supported — " +
-        "CREATE a new table and ALTER TABLE RENAME it into place")
-    val confLines = propertyConfLines(schema, properties, bucketLaid = false)
+    val confLines = ManifestTableProps.replace(schema, partitions, properties)
     val props = new java.util.HashMap[String, String]()
     props.put("path", dir.toString)
     // presence of the key IS the replace marker (old #tableconf drops)
@@ -4158,22 +3928,19 @@ class GraftManifestCatalog extends TableCatalog
     if (!f.exists(new Path(dir, "_MANIFEST")))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName, ident.name))
-    var schema = ManifestFiles.schemaFor(f, dir, None)
-    val priorLines = ManifestFiles.latestLines(f, dir)
-    var dropped = ManifestFiles.droppedFromLines(priorLines)
-    var newDropLines = List.empty[String]
-    var morFlip: Option[Boolean] = None
-    var partFlip: Option[Seq[(Int, String)]] = None
-    var bloomFlip: Option[Seq[Int]] = None
-    var ndvFlip: Option[Seq[Int]] = None
-    var histFlip: Option[Seq[Int]] = None
-    var shredFlip: Option[Seq[ManifestShred.Spec]] = None
-    var lineageFlip: Boolean = false
-    var sortFlip: Option[Seq[ManifestFiles.SortKey]] = None
-    var distFlip: Option[Boolean] = None
-    var widenFlip: List[(Int, DataType)] = Nil
-    val checkSet = scala.collection.mutable.LinkedHashMap
-      .empty[String, Option[String]] // Some = add/replace, None = drop
+    // ONE head read: the schema changes evolve its schema. Property
+    // changes and every blocker below validate inside the claim against
+    // the predecessor's lines, and the claim refuses a predecessor whose
+    // schema is not this one (a concurrent schema change — retry).
+    val head = ManifestFiles.head(f, dir, None)
+    val read = head.schema.getOrElse(throw new IllegalStateException(
+      s"graft-manifest at $dir has no published schema"))
+    var schema = read
+    var dropped = ManifestFiles.droppedFromLines(head.lines)
+    var drops = Vector.empty[(String, Int)] // (name, physical position)
+    var renames = Vector.empty[String] // top-level names renamed away
+    var widens = Vector.empty[(String, Int, DataType)] // (name, pos, from)
+    val props = Vector.newBuilder[(String, Option[String])] // None = UNSET
     def nextPos: Int =
       (schema.indices.map(ManifestFiles.physPos(schema, _)) ++ dropped)
         .foldLeft(-1)(math.max) + 1
@@ -4269,12 +4036,7 @@ class GraftManifestCatalog extends TableCatalog
           s"column ${r.newName} exists")
         // check-constraint expressions store column NAMES — a rename
         // would silently break them, so it is refused while referenced
-        ManifestFiles.checksFromLines(priorLines).foreach { case (n, txt) =>
-          require(!ManifestChecks.referencedColumns(SparkSession.active, txt)
-              .exists(_.equalsIgnoreCase(from)),
-            s"cannot rename '$from': check constraint '$n' ($txt) " +
-              "references it — drop the constraint first")
-        }
+        renames :+= from
         schema = StructType(schema.fields.map(fd =>
           if (fd.name == from) fd.copy(name = r.newName) else fd))
       case d: TableChange.DeleteColumn =>
@@ -4290,37 +4052,8 @@ class GraftManifestCatalog extends TableCatalog
             "graft-manifest: cannot drop the last column")
           val idx = schema.fieldIndex(name)
           val pos = ManifestFiles.physPos(schema, idx)
-          // a DDL bucket/sort/partition layout referencing the column
-          // blocks the drop
-          ManifestFiles.tableConf(f, dir, None).foreach { case (bp, _, sp) =>
-            require(bp != pos && !sp.contains(pos),
-              s"cannot drop '$name': the table's declared bucket/sort " +
-                "layout references it")
-          }
-          ManifestFiles.partConfs(priorLines).foreach { case (pp, kind) =>
-            require(pp != pos,
-              s"cannot drop '$name': the table's declared $kind() " +
-                "partition layout references it")
-          }
-          require(!ManifestFiles.sortOrderFromLines(priorLines).contains(pos),
-            s"cannot drop '$name': the table's declared write.sort-order " +
-              "references it — clear or re-declare the sort order first")
-          // live equality-delete files key on physical positions: losing
-          // one would make their tuples unevaluable and RESURFACE the
-          // deleted rows — materialize first
-          require(!priorLines.exists(l => l.startsWith("#eqdels,") &&
-              l.split(",", 4)(2).split(";").flatMap(_.toIntOption)
-                .contains(pos)),
-            s"cannot drop '$name': live equality-delete files key on it " +
-              "— CALL compact to materialize them first")
-          ManifestFiles.checksFromLines(priorLines).foreach { case (cn, txt) =>
-            require(!ManifestChecks.referencedColumns(SparkSession.active, txt)
-                .exists(_.equalsIgnoreCase(name)),
-              s"cannot drop '$name': check constraint '$cn' ($txt) " +
-                "references it — drop the constraint first")
-          }
           dropped += pos
-          newDropLines ::= ManifestFiles.droppedLine(pos)
+          drops :+= ((name, pos))
           // survivors pin their physical positions explicitly
           schema = StructType(schema.fields.zipWithIndex
             .filterNot(_._2 == idx)
@@ -4362,277 +4095,80 @@ class GraftManifestCatalog extends TableCatalog
             "narrowing or changing the type family requires rewriting " +
             "the column (CTAS a new table)")
         val pos = ManifestFiles.physPos(schema, idx)
-        // bucket layouts hash the STORED representation — widening under
-        // one would silently re-key the layout (bucket demands BIGINT at
-        // DDL, so this is belt and braces)
-        ManifestFiles.tableConf(f, dir, None).foreach { case (bp, _, _) =>
-          require(bp != pos,
-            s"cannot widen '$name': the declared bucket layout hashes it")
-        }
         schema = StructType(schema.fields.zipWithIndex.map { case (fd, i) =>
           if (i == idx) fd.copy(dataType = to) else fd })
         // keep the ORIGINAL from-type if the column was already widened
         // (files at the narrowest type may still exist)
-        if (!ManifestFiles.widenedFromLines(priorLines).contains(pos) &&
-            !widenFlip.exists(_._1 == pos))
-          widenFlip ::= ((pos, from))
-      case sp: TableChange.SetProperty if sp.property == "delete.mode" =>
-        // switch row-level strategy in place: MOR adds the #tableconf
-        // line, COW removes it (existing delete files keep applying —
-        // only FUTURE ops change shape)
-        sp.value match {
-          case "merge-on-read" => morFlip = Some(true)
-          case "copy-on-write" => morFlip = Some(false)
-          case other => throw new IllegalArgumentException(
-            s"delete.mode must be 'copy-on-write' or 'merge-on-read', " +
-              s"got '$other'")
-        }
-      // PARTITION EVOLUTION (round 12 — Iceberg evolves partition specs
-      // in place): replace the declared days/months/identity layout.
-      // METADATA-ONLY: existing files keep their stats and simply stop
-      // (or start!) proving purity under the new layout — group
-      // reporting and delete alignment degrade per-file, never
-      // wrongness; FUTURE writes split under the new layout. 'none'
-      // clears the layout.
-      case sp: TableChange.SetProperty if sp.property == "partition.layout" =>
-        require(ManifestFiles.tableConf(f, dir, None).isEmpty,
-          "partition.layout cannot be set on a bucket-laid table " +
-            "(bucket and time/identity layouts are exclusive)")
-        val specs: Seq[(Int, String)] = sp.value.trim match {
-          case "" | "none" => Seq.empty
-          case v => v.split(",").map(_.trim).toSeq.map { token =>
-            val timeKind = GraftTimeTransformFunction.TimeKinds.find(k =>
-              token.startsWith(s"$k(") && token.endsWith(")"))
-            val (kind, col) = token match {
-              case s if timeKind.isDefined =>
-                val k = timeKind.get
-                (k, s.stripPrefix(s"$k(").stripSuffix(")").trim)
-              case s if s.startsWith("truncate(") && s.endsWith(")") =>
-                // truncate(w c) — layout strings are comma-split, so the
-                // width and column separate on whitespace
-                val inner = s.stripPrefix("truncate(").stripSuffix(")").trim
-                val ps = inner.split("\\s+")
-                require(ps.length == 2 && ps(0).toIntOption.exists(_ >= 1),
-                  s"truncate spec '$s' — use truncate(<w> <col>)")
-                (GraftTruncateFunction.kindOf(ps(0).toInt), ps(1))
-              case s if s.startsWith("identity(") && s.endsWith(")") =>
-                ("identity", s.stripPrefix("identity(").stripSuffix(")").trim)
-              case s if !s.contains("(") => ("identity", s)
-              case s => throw new IllegalArgumentException(
-                s"partition.layout transform '$s' — use days(col), " +
-                  "months(col), years(col), hours(col), " +
-                  "truncate(<w> <col>), identity(col)/col, or 'none'")
-            }
-            require(schema.fieldNames.contains(col),
-              s"partition column '$col' not in ${schema.fieldNames.mkString(",")}")
-            val dt = schema(col).dataType
-            if (kind == "identity")
-              require(ManifestSkip.statsCapable(dt),
-                s"identity partitioning needs an orderable primitive " +
-                  s"column, got ${dt.sql}")
-            else if (GraftTruncateFunction.widthOf(kind).isDefined)
-              require(dt == LongType || dt == IntegerType || dt == StringType,
-                s"truncate supports BIGINT/INT/STRING columns, got ${dt.sql}")
-            else
-              require(dt == TimestampType || dt == TimestampNTZType ||
-                  (dt == DateType && kind != "hours"),
-                s"$kind() needs a TIMESTAMP${if (kind == "hours") ""
-                  else " or DATE"} column, got ${dt.sql}")
-            (ManifestFiles.physPos(schema, schema.fieldIndex(col)), kind)
-          }
-        }
-        require(specs.map(_._1).distinct.length == specs.length,
-          "duplicate partition transform on one column")
-        partFlip = Some(specs)
-      // CHECK constraint add/replace: validated now (analysis error on
-      // unknown columns / non-boolean), enforced on FUTURE writes —
-      // existing rows are NOT retro-validated (Delta's ADD CONSTRAINT
-      // would scan; our format stays metadata-only, documented)
-      case sp: TableChange.SetProperty if sp.property.startsWith("check.") =>
-        val n = sp.property.stripPrefix("check.")
-        ManifestChecks.validate(SparkSession.active, schema, n, sp.value)
-        checkSet += (n -> Some(sp.value))
-      case rp: TableChange.RemoveProperty if rp.property.startsWith("check.") =>
-        checkSet += (rp.property.stripPrefix("check.") -> None)
-      // bloom evolution: future writes carry (or stop carrying) the
-      // filters; existing files are untouched (reads degrade per-chunk)
-      case sp: TableChange.SetProperty if sp.property == "bloom.columns" =>
-        bloomFlip = Some(sp.value.trim match {
-          case "" | "none" => Seq.empty
-          case v => v.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { c =>
-            require(schema.fieldNames.contains(c),
-              s"bloom.columns column '$c' not in ${schema.fieldNames.mkString(",")}")
-            ManifestFiles.physPos(schema, schema.fieldIndex(c))
-          }
-        })
-      // sort-order evolution: FUTURE writes sort (and mark/bound) under
-      // the new order; existing files keep whatever marks they earned —
-      // reads degrade per-file, never wrongness. 'none' clears it.
-      case sp: TableChange.SetProperty if sp.property == "write.sort-order" =>
-        require(ManifestFiles.tableConf(f, dir, None).isEmpty,
-          "write.sort-order cannot be set on a bucket-laid table — " +
-            "sorted buckets are declared via the layout's own sort slot")
-        sortFlip = Some(sp.value.trim match {
-          case "" | "none" => Seq.empty
-          case v => parseSortOrder(schema, v)
-        })
-      // row lineage: enable-only (disabling would strand ids readers
-      // already depend on — Iceberg v3 makes the same one-way choice);
-      // the commit closure's assignRowIds then backfills #firstrow for
-      // EVERY existing entry in this same metadata-only commit
-      case sp: TableChange.SetProperty if sp.property == "row.lineage" =>
-        require(sp.value.trim == "true",
-          "row.lineage can only be enabled ('true'); ids already handed " +
-            "to readers cannot be revoked")
-        lineageFlip = true
-      // NDV evolution: future files carry (or stop carrying) sketches;
-      // the scan reports distinctCount only while EVERY kept file has
-      // one, so partial coverage degrades to no-NDV, never a wrong one
-      case sp: TableChange.SetProperty if sp.property == "stats.ndv.columns" =>
-        ndvFlip = Some(sp.value.trim match {
-          case "" | "none" => Seq.empty
-          case v => v.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { c =>
-            require(schema.fieldNames.contains(c),
-              s"stats.ndv.columns column '$c' not in " +
-                schema.fieldNames.mkString(","))
-            require(ManifestNdv.capable(schema(schema.fieldIndex(c)).dataType),
-              s"stats.ndv.columns column '$c' has type " +
-                s"${schema(schema.fieldIndex(c)).dataType.simpleString}, " +
-                "which has no stable sketch identity")
-            ManifestFiles.physPos(schema, schema.fieldIndex(c))
-          }
-        })
-      case sp: TableChange.SetProperty
-          if sp.property == "stats.histogram.columns" =>
-        histFlip = Some(sp.value.trim match {
-          case "" | "none" => Seq.empty
-          case v => v.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { c =>
-            require(schema.fieldNames.contains(c),
-              s"stats.histogram.columns column '$c' not in " +
-                schema.fieldNames.mkString(","))
-            require(ManifestHist.capable(schema(schema.fieldIndex(c)).dataType),
-              s"stats.histogram.columns column '$c' has type " +
-                s"${schema(schema.fieldIndex(c)).dataType.simpleString}, " +
-                "which has no histogram domain (numeric/temporal only)")
-            ManifestFiles.physPos(schema, schema.fieldIndex(c))
-          }
-        })
-      // VARIANT SHREDDING evolution (round 16): future files carry (or
-      // stop carrying) shredded-path bounds; old files simply lack the
-      // synthetic #stats position and are never skipped — conservative
-      case sp: TableChange.SetProperty if sp.property == "variant.shred" =>
-        shredFlip = Some(sp.value.trim match {
-          case "" | "none" => Seq.empty
-          case v => ManifestShred.parseDecl(schema, v)
-        })
-      case sp: TableChange.SetProperty
-          if sp.property == "write.distribution-mode" =>
-        distFlip = Some(sp.value.trim match {
-          case "range" =>
-            require(
-              ManifestFiles.sortOrderFromLines(priorLines).nonEmpty,
-              "write.distribution-mode=range needs a declared " +
-                "write.sort-order — there is nothing to range-distribute on")
-            true
-          case "none" | "" => false
-          case other => throw new IllegalArgumentException(
-            s"write.distribution-mode must be 'none' or 'range', got '$other'")
-        })
+        if (!widens.exists(_._2 == pos)) widens :+= ((name, pos, from))
+      case sp: TableChange.SetProperty if ManifestTableProps.supports(sp.property) =>
+        props += sp.property -> Some(sp.value)
+      case rp: TableChange.RemoveProperty
+          if ManifestTableProps.supports(rp.property) =>
+        props += rp.property -> None
       case other => throw new UnsupportedOperationException(
         "graft-manifest supports ADD COLUMN (appended, nullable), " +
-          "RENAME COLUMN, DROP COLUMN, and SET " +
-          "TBLPROPERTIES('delete.mode'|'partition.layout'|'bloom.columns'|" +
-          "'stats.ndv.columns'|'variant.shred'|'write.sort-order'|" +
-          "'write.distribution-mode') " +
-          s"only, got $other")
+          "RENAME COLUMN, DROP COLUMN, ALTER COLUMN TYPE (widening), and " +
+          "SET/UNSET TBLPROPERTIES(" +
+          ManifestTableProps.keyNames.map(k => s"'$k'").mkString("|") +
+          s") only, got $other")
     }
-    val drops = newDropLines.reverse.toArray
+    val propChanges = props.result()
+    def checkRef(lines: Array[String], col: String) =
+      ManifestFiles.checksFromLines(lines).find { case (_, txt) =>
+        ManifestChecks.referencedColumns(SparkSession.active, txt)
+          .exists(_.equalsIgnoreCase(col)) }
     ManifestFiles.publishSnapshot(f,
       SparkSession.active.sessionState.newHadoopConf(), dir,
       previous => {
-        val base0 = morFlip match {
-          case Some(true) =>
-            previous.filterNot(_ == ManifestFiles.MergeOnReadLine) :+
-              ManifestFiles.MergeOnReadLine
-          case Some(false) =>
-            previous.filterNot(_ == ManifestFiles.MergeOnReadLine)
-          case None => previous
+        renames.foreach(from => checkRef(previous, from).foreach { case (n, txt) =>
+          throw new IllegalArgumentException(s"cannot rename '$from': check " +
+            s"constraint '$n' ($txt) references it — drop the constraint first")
+        })
+        drops.foreach { case (name, pos) =>
+          // a DDL bucket/sort/partition layout referencing the column
+          // blocks the drop
+          ManifestFiles.tableConfFromLines(previous).foreach { case (bp, _, sp) =>
+            require(bp != pos && !sp.contains(pos),
+              s"cannot drop '$name': the table's declared bucket/sort " +
+                "layout references it")
+          }
+          ManifestFiles.partConfs(previous).foreach { case (pp, kind) =>
+            require(pp != pos,
+              s"cannot drop '$name': the table's declared $kind() " +
+                "partition layout references it")
+          }
+          require(!ManifestFiles.sortOrderFromLines(previous).contains(pos),
+            s"cannot drop '$name': the table's declared write.sort-order " +
+              "references it — clear or re-declare the sort order first")
+          // live equality-delete files key on physical positions: losing
+          // one would make their tuples unevaluable and RESURFACE the
+          // deleted rows — materialize first
+          require(!previous.exists(l => l.startsWith("#eqdels,") &&
+              l.split(",", 4)(2).split(";").flatMap(_.toIntOption)
+                .contains(pos)),
+            s"cannot drop '$name': live equality-delete files key on it " +
+              "— CALL compact to materialize them first")
+          checkRef(previous, name).foreach { case (cn, txt) =>
+            throw new IllegalArgumentException(s"cannot drop '$name': check " +
+              s"constraint '$cn' ($txt) references it — drop the constraint first")
+          }
         }
-        val base1 = partFlip match {
-          case Some(specs) =>
-            base0.filterNot(_.startsWith("#tableconf,part,")) ++
-              specs.map { case (pos, kind) =>
-                ManifestFiles.partConfLine(pos, kind) }
-          case None => base0
+        // bucket layouts hash the STORED representation — widening under
+        // one would silently re-key the layout (bucket demands BIGINT at
+        // DDL, so this is belt and braces)
+        widens.foreach { case (name, pos, _) =>
+          ManifestFiles.tableConfFromLines(previous).foreach { case (bp, _, _) =>
+            require(bp != pos,
+              s"cannot widen '$name': the declared bucket layout hashes it")
+          }
         }
-        val base2b = bloomFlip match {
-          case Some(positions) =>
-            base1.filterNot(_.startsWith("#tableconf,bloom,")) ++
-              (if (positions.nonEmpty) Seq(ManifestFiles.bloomLine(positions))
-               else Seq.empty)
-          case None => base1
-        }
-        val base2n0 = ndvFlip match {
-          case Some(positions) =>
-            base2b.filterNot(_.startsWith("#tableconf,ndv,")) ++
-              (if (positions.nonEmpty)
-                 Seq(ManifestFiles.ndvConfLine(positions))
-               else Seq.empty)
-          case None => base2b
-        }
-        val base2n = histFlip match {
-          case Some(positions) =>
-            base2n0.filterNot(_.startsWith("#tableconf,hist,")) ++
-              (if (positions.nonEmpty)
-                 Seq(ManifestFiles.histConfLine(positions))
-               else Seq.empty)
-          case None => base2n0
-        }
-        val base2v = shredFlip match {
-          case Some(specs0) =>
-            // stable re-index against the prior declaration (see
-            // ManifestShred.reindex): surviving paths keep their
-            // synthetic #stats position, new paths draw fresh ones
-            val (specs, next) = ManifestShred.reindex(base2n, specs0)
-            base2n.filterNot(l => l.startsWith("#tableconf,shred,") ||
-                l.startsWith(ManifestShred.NextPrefix)) ++
-              ManifestShred.confLines(specs) :+ ManifestShred.nextLine(next)
-          case None => base2n
-        }
-        val base2 =
-          if (lineageFlip && !base2v.contains(ManifestFiles.LineageLine))
-            base2v :+ ManifestFiles.LineageLine
-          else base2v
-        val base2s0 = sortFlip match {
-          case Some(keys) =>
-            base2.filterNot(_.startsWith("#tableconf,sortorder,")) ++
-              (if (keys.nonEmpty)
-                 Seq(ManifestFiles.sortOrderLine(keys))
-               else Seq.empty)
-          case None => base2
-        }
-        // clearing the sort order also clears a range mode riding it
-        val base2s = distFlip match {
-          case Some(true) =>
-            base2s0.filterNot(_ == ManifestFiles.DistModeRangeLine) :+
-              ManifestFiles.DistModeRangeLine
-          case Some(false) =>
-            base2s0.filterNot(_ == ManifestFiles.DistModeRangeLine)
-          case None =>
-            if (sortFlip.contains(Seq.empty))
-              base2s0.filterNot(_ == ManifestFiles.DistModeRangeLine)
-            else base2s0
-        }
-        val base3 =
-          if (checkSet.isEmpty) base2s
-          else base2s.filterNot(l => checkSet.keys.exists(n =>
-            l.startsWith(s"#tableconf,check,$n,"))) ++
-            checkSet.collect { case (n, Some(txt)) =>
-              ManifestFiles.checkLine(n, txt) }
-        val base = base3 ++ widenFlip.map { case (pos, from) =>
-          ManifestFiles.widenedLine(pos, from) }
-        base ++ drops.filterNot(base.contains)
-      }, schema)
+        val widened = ManifestFiles.widenedFromLines(previous)
+        val base = ManifestTableProps.alter(schema, previous, propChanges) ++
+          widens.collect { case (_, pos, from) if !widened.contains(pos) =>
+            ManifestFiles.widenedLine(pos, from) }
+        base ++ drops.map(d => ManifestFiles.droppedLine(d._2))
+          .filterNot(base.contains)
+      }, schema, basis = Some(read))
     load(ident, None)
   }
 
@@ -5306,6 +4842,7 @@ private[sources] object ManifestProcedures {
       val fs = dir.getFileSystem(conf)
       var before = 0
       var pairs = 0L
+      val schema = ManifestFiles.schemaFor(fs, dir, None)
       ManifestFiles.publishSnapshotV(fs, conf, dir, (previous, version) => {
         val dels = ManifestFiles.deleteFilesFromLines(previous)
         before = dels.length
@@ -5334,7 +4871,7 @@ private[sources] object ManifestProcedures {
           previous.filterNot(_.startsWith("#dels,")) ++
             Array(s"#dels,$merged", ManifestFiles.maintLine(version))
         }
-      }, ManifestFiles.schemaFor(fs, dir, None))
+      }, schema, basis = Some(schema))
       result(new StructType().add("delete_files_before", IntegerType)
           .add("delete_files_after", IntegerType).add("pairs", LongType),
         Array(before, if (before <= 1) before else 1, pairs))
@@ -5358,7 +4895,8 @@ private[sources] object ManifestProcedures {
       val versions = ManifestFiles.versions(fs, dir).sorted
       // tagged versions are PINNED: vacuum never drops a version a tag
       // still names (drop the tag first) — Iceberg's ref-aware expiry
-      val tagged = ManifestFiles.tags(fs, dir).values.toSet
+      val tagged = ManifestFiles.withClaimLock(dir, "manifest-")(
+        ManifestFiles.tags(fs, dir)).values.toSet
       val dropByCount = math.max(0, versions.length - retain)
       // commit time = the version file's modification time (the same
       // clock `snapshots` and time travel report); age-kept versions
@@ -5450,11 +4988,13 @@ private[sources] object ManifestProcedures {
         }
       }
       // Crashed committers leave orphan temp files (`._claim-*` /
-      // `._publish-*`); racing a LIVE commit is harmless — its claim
-      // retry stages a fresh temp. Not counted as data files.
+      // `._publish-*`). A live commit's temp is moments old, and sweeping
+      // it would fail that claim, so temps age past the segment horizon
+      // first. Not counted as data files.
       fs.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
-        if (st.isFile && (n.startsWith("._claim-") || n.startsWith("._publish-")))
+        if (st.isFile && (n.startsWith("._claim-") || n.startsWith("._publish-")) &&
+            st.getModificationTime < segHorizon)
           fs.delete(st.getPath, false)
       }
       result(new StructType().add("versions_dropped", IntegerType)
@@ -5839,10 +5379,11 @@ private[sources] object ManifestProcedures {
       require(ManifestFiles.versions(fs, dir).contains(v),
         s"cannot tag version $v — it does not exist " +
           s"(have: ${ManifestFiles.versions(fs, dir).sorted.mkString(",")})")
-      val cur = ManifestFiles.tags(fs, dir)
-      require(!cur.contains(tag),
-        s"tag '$tag' already names version ${cur(tag)} — drop_tag it first")
-      ManifestFiles.writeTags(fs, dir, cur + (tag -> v))
+      ManifestFiles.updateTags(fs, spark.sessionState.newHadoopConf(), dir) { cur =>
+        require(!cur.contains(tag),
+          s"tag '$tag' already names version ${cur(tag)} — drop_tag it first")
+        cur + (tag -> v)
+      }
       result(new StructType().add("tag", StringType)
           .add("version", IntegerType),
         Array(UTF8String.fromString(tag), v))
@@ -5854,11 +5395,12 @@ private[sources] object ManifestProcedures {
       val spark = SparkSession.active
       val dir = dirFor(input.getUTF8String(0).toString)
       val tag = input.getUTF8String(1).toString
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      val cur = ManifestFiles.tags(fs, dir)
-      require(cur.contains(tag),
-        s"no tag '$tag' (have: ${cur.keys.toSeq.sorted.mkString(", ")})")
-      ManifestFiles.writeTags(fs, dir, cur - tag)
+      val conf = spark.sessionState.newHadoopConf()
+      val cur = ManifestFiles.updateTags(dir.getFileSystem(conf), conf, dir) { cur =>
+        require(cur.contains(tag),
+          s"no tag '$tag' (have: ${cur.keys.toSeq.sorted.mkString(", ")})")
+        cur - tag
+      }
       result(new StructType().add("tag", StringType)
           .add("was_version", IntegerType),
         Array(UTF8String.fromString(tag), cur(tag)))
@@ -6326,7 +5868,7 @@ private[sources] object ManifestProcedures {
         (previous, version) => previous ++ prepared.flatMap(_._3) ++
           (if (ManifestFiles.isMergeOnRead(previous))
              prepared.map(pr => ManifestFiles.bornLine(pr._2, version))
-           else Array.empty[String]), schema)
+           else Array.empty[String]), schema, basis = Some(schema))
       catch { case t: Throwable =>
         prepared.foreach { case (src, name, _) =>
           try fs.rename(new Path(dir, name), src)

@@ -106,44 +106,25 @@ object ManifestViews {
     decode(ManifestFiles.readManifest(fs, new Path(dir, s"_VIEW.v$v")))
   }
 
-  /** Claim the next `_VIEW.v<N>` atomically (stage + rename-if-absent,
-    * the SNAPSHOT claim discipline — see publishRawV's scaladoc):
-    * same-process claimers serialize on a lock keyed by the view
-    * directory, because POSIX rename on a raw local filesystem silently
-    * overwrites and the exists-check + rename pair alone is not atomic
-    * across threads; on HDFS-semantics storage rename refuses an
-    * existing destination server-side, covering cross-process racers
-    * where it matters. `expectFresh = true` (CREATE) refuses when ANY
-    * version exists — re-checked under the lock, so exactly one CREATE
+  /** Claim the next `_VIEW.v<N>` through the snapshot claim loop
+    * ([[ManifestFiles.claim]] under the directory's view lock).
+    * `expectFresh = true` (CREATE) refuses when ANY version exists —
+    * re-checked on every attempt under the lock, so exactly one CREATE
     * wins and the loser fails loudly. Returns the landed version. */
   def publish(fs: FileSystem, dir: Path, d: ViewDef,
       expectFresh: Boolean): Int = {
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val lock = (dir.toUri.toString + "#graft-view-claim").intern()
-    lock.synchronized {
-      var attempt = 0
-      while (true) {
-        attempt += 1
-        require(attempt <= 64, s"view claim at $dir starved after 64 attempts")
-        val vs = versions(fs, dir)
-        if (expectFresh && vs.nonEmpty)
+    ManifestFiles.withClaimLock(dir, "view") {
+      ManifestFiles.claim(fs, dir, (0 +: versions(fs, dir)).max + 1,
+          v => s"_VIEW.v$v") { v =>
+        if (expectFresh && v > 1)
           throw new IllegalStateException(
-            s"view at $dir already exists (versions ${vs.sorted.mkString(",")})" +
-              " — CREATE OR REPLACE to evolve it")
-        val v = (0 +: vs).max + 1
-        val tmp = new Path(dir, s"._viewclaim-$token")
-        val out = fs.create(tmp, true)
-        try out.write((encode(d).mkString("\n") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        val ok = !fs.exists(new Path(dir, s"_VIEW.v$v")) &&
-          (try fs.rename(tmp, new Path(dir, s"_VIEW.v$v"))
-           catch { case _: java.io.IOException => false })
-        if (ok) return v
-        fs.delete(tmp, false) // lost a cross-process race; retry
-      }
-      -1 // unreachable
+            s"view at $dir already exists (versions " +
+              s"${versions(fs, dir).sorted.mkString(",")}) — CREATE OR " +
+              "REPLACE to evolve it")
+        ((encode(d).mkString("\n") + "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8), Nil)
+      }._1
     }
   }
 }

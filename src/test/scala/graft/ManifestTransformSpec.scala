@@ -54,6 +54,13 @@ class ManifestTransformSpec extends AnyFunSuite {
       "spark.sql.autoBroadcastJoinThreshold", (32L << 20).toString)
   }
 
+  /** The declared layout as the catalog's table reports it (DESCRIBE). */
+  private def layoutOf(cat: String, table: String): Seq[String] =
+    spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+      .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(
+        Array.empty, table)).partitioning().map(_.toString).toSeq
+
   private def entryCount(root: String, table: String): Int = {
     val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -65,6 +72,7 @@ class ManifestTransformSpec extends AnyFunSuite {
     val (cat, root) = freshCat("hr")
     spark.sql(s"CREATE TABLE $cat.ev (k BIGINT, ts TIMESTAMP) " +
       "PARTITIONED BY (hours(ts))")
+    assert(layoutOf(cat, "ev") == Seq("hours(ts)"))
     // 6 distinct hours, 40 rows each
     spark.range(0, 240).select($"id".as("k"),
         (lit(1700000000L) + ($"id" % 6) * 3600L).cast("timestamp").as("ts"))
@@ -94,6 +102,7 @@ class ManifestTransformSpec extends AnyFunSuite {
       "PARTITIONED BY (years(ts))")
     spark.sql(s"CREATE TABLE $cat.b (ts TIMESTAMP, name STRING) " +
       "PARTITIONED BY (years(ts))")
+    assert(layoutOf(cat, "a") == Seq("years(ts)"))
     def tsOf(y: Column) = // Jan 1 of 2020+y, mid-year offset via k
       to_timestamp(concat((lit(2020) + y).cast("string"), lit("-03-01")))
     spark.range(0, 200).select($"id".as("k"),
@@ -145,6 +154,7 @@ class ManifestTransformSpec extends AnyFunSuite {
     val (cat, root) = freshCat("tws")
     spark.sql(s"CREATE TABLE $cat.s (s STRING, v BIGINT) " +
       "PARTITIONED BY (truncate(2, s))")
+    assert(layoutOf(cat, "s") == Seq("truncate(2, s)"))
     val prefixes = Seq("aa", "bb", "cc", "dd")
     prefixes.zipWithIndex.foreach { case (p, i) =>
       spark.range(0, 30).select(concat(lit(p), lit("-"), $"id").as("s"),
