@@ -56,18 +56,19 @@ object ManifestAggPushdown {
       agg: Aggregation): Option[Pushed] = {
     if (agg.groupByExpressions.nonEmpty) return None
     if (agg.aggregateExpressions.isEmpty) return None
-    val lines =
-      try ManifestFiles.linesOf(fs, dir, version.orElse {
-        val v = ManifestFiles.latestComplete(fs, dir, branch)
-        if (v > 0) Some(v) else return None
-      }, branch)
-      catch { case _: Exception => return None }
-    // row-level delete state hides rows the entry counts include
-    if (lines.exists(l => l.startsWith("#dels,") || l.startsWith("#eqdels,")))
-      return None
-    val entries = ManifestFiles.entriesFromLines(lines)
-    val stats = ManifestFiles.statsFromLines(lines)
-    val widened = ManifestFiles.widenedFromLines(lines).map(_._1).toSet
+    val snap =
+      try {
+        val s = ManifestSnapshot.resolve(fs, dir, version, branch)
+        s.lines // an unreadable segment declines the pushdown too
+        s
+      } catch { case _: Exception => return None }
+    // an empty table has nothing to answer from; row-level delete state
+    // hides rows the entry counts include
+    if (snap.version <= 0 || snap.deleteFiles.nonEmpty ||
+        snap.eqDeleteFiles.nonEmpty) return None
+    val entries = snap.entries
+    val stats = snap.stats
+    val widened = snap.widened.keySet
     val allStats = entries.forall(e => stats.contains(e._1))
     val totalRows = entries.map(_._2).sum
 

@@ -45,7 +45,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[ManifestFiles.availableRows]]) and the extrema gate
   * ([[rangeAppendOnly]]) are per-step folds over it, and the plain
   * tail's two-point [[ManifestFiles.addedBetween]] reads through its
-  * expired-aware [[linesAt]]. The walk alone owns the expired-version
+  * expired-aware [[snapshotAt]]. The walk alone owns the expired-version
   * error, the `from = 0` start at the oldest retained version, and the
   * `#maint` run jump with its deferred baseline. Both streams — the
   * plain tail and this feed — are one [[ManifestVersionStream]],
@@ -109,15 +109,14 @@ object ManifestChangeFeed {
     * silently passing a retraction. */
   def rangeAppendOnly(fs: FileSystem, dir: Path, from: Int,
       end: Int): Boolean = {
-    def delState(lines: Array[String]): Set[String] =
-      lines.filter(l => l.startsWith("#dels,") ||
+    def delState(s: ManifestSnapshot): Set[String] =
+      s.raw.filter(l => l.startsWith("#dels,") ||
         l.startsWith("#eqdels,")).toSet
     var ok = true
-    walk(fs, dir, from, end, skipMaint = true, new Listing(_)) {
-      (_, prev, cur) =>
-        ok = prev.names.subsetOf(cur.names) &&
-          (delState(cur.lines) -- delState(prev.lines)).isEmpty
-        ok
+    walk(fs, dir, from, end, skipMaint = true) { (_, prev, cur) =>
+      ok = prev.names.subsetOf(cur.names) &&
+        (delState(cur) -- delState(prev)).isEmpty
+      ok
     }
     ok
   }
@@ -192,24 +191,23 @@ object ManifestChangeFeed {
     * resolves a segment file (one small-file read however large the
     * table). A vacuumed `v` holds no markers. */
   private[sources] def marksAt(fs: FileSystem, dir: Path, v: Int): Set[Int] =
-    ManifestFiles.maintFromLines(
-      ManifestFiles.readManifest(fs, new Path(dir, s"_MANIFEST.v$v")))
+    retained(fs, dir, v).fold(Set.empty[Int])(_.maint)
 
-  /** The walk's one snapshot read: version `v`'s full lines, or None
-    * when its version file was vacuumed (version 0 is the empty table). */
-  private def retainedLines(fs: FileSystem, dir: Path,
-      v: Int): Option[Array[String]] =
-    if (v <= 0) Some(Array.empty)
+  /** The walk's one snapshot read: version `v`, or None when its version
+    * file was vacuumed (version 0 is the empty table). */
+  private def retained(fs: FileSystem, dir: Path,
+      v: Int): Option[ManifestSnapshot] =
+    if (v <= 0) Some(ManifestSnapshot.ofLines(Array.empty))
     else if (!fs.exists(new Path(dir, s"_MANIFEST.v$v"))) None
-    else Some(ManifestFiles.linesOf(fs, dir, Some(v)))
+    else Some(ManifestSnapshot.at(fs, dir, v))
 
-  /** [[retainedLines]] for a version the reader NEEDS: a vacuumed one
+  /** [[retained]] for a version the reader NEEDS: a vacuumed one
     * surfaces as EXPIRED, not as a generic missing-file error — the
     * caller's checkpoint or range outlived the retention window and
     * needs a deliberate restart. */
-  private[sources] def linesAt(fs: FileSystem, dir: Path,
-      v: Int): Array[String] =
-    retainedLines(fs, dir, v).getOrElse {
+  private[sources] def snapshotAt(fs: FileSystem, dir: Path,
+      v: Int): ManifestSnapshot =
+    retained(fs, dir, v).getOrElse {
       val have = ManifestFiles.versions(fs, dir).sorted
       throw new IllegalStateException(
         s"graft-manifest at $dir: version $v has expired (vacuumed); " +
@@ -217,21 +215,14 @@ object ManifestChangeFeed {
           "incremental read or change feed from a retained version")
     }
 
-  /** A walked snapshot: its lines, with the entry listing parsed once. */
-  private[sources] final class Listing(val lines: Array[String]) {
-    lazy val entries: Array[(String, Long)] =
-      ManifestFiles.entriesFromLines(lines)
-    lazy val names: Set[String] = entries.iterator.map(_._1).toSet
-  }
-
   /** THE VERSION WALK over `(from, end]`, shared by every incremental
     * reader: the change feed ([[planRange]]), streaming admission
     * ([[ManifestFiles.admittedEnd]] / [[ManifestFiles.availableRows]])
     * and the extrema gate ([[rangeAppendOnly]]) are folds over it. Each
-    * snapshot it reads goes through `load` once; `step(v, prev, cur)`
+    * version it reads is one [[ManifestSnapshot]]; `step(v, prev, cur)`
     * sees every step that must be diffed — `prev` is its baseline —
     * and returns false to stop the walk. The rules live here only:
-    *   - every read is [[linesAt]]: a vacuumed version fails as EXPIRED;
+    *   - every read is [[snapshotAt]]: a vacuumed version fails as EXPIRED;
     *   - a `from = 0` walk on a vacuumed table starts at the OLDEST
     *     RETAINED version: the history below it is observable only as
     *     that snapshot, which diffs against the empty baseline (so a
@@ -252,10 +243,10 @@ object ManifestChangeFeed {
     *     own snapshot was vacuumed behind a maintenance run still walks.
     *     If the run end was vacuumed too, the deferred read happens
     *     then — loudly, if it also expired. */
-  private[sources] def walk[S](fs: FileSystem, dir: Path, from: Int,
-      end: Int, skipMaint: Boolean, load: Array[String] => S,
+  private[sources] def walk(fs: FileSystem, dir: Path, from: Int,
+      end: Int, skipMaint: Boolean,
       onJump: (Int, Boolean) => Unit = (_: Int, _: Boolean) => ())(
-      step: (Int, S, S) => Boolean): Unit = {
+      step: (Int, ManifestSnapshot, ManifestSnapshot) => Boolean): Unit = {
     var v = from + 1
     var mustEmit = -1
     if (from == 0) {
@@ -265,21 +256,21 @@ object ManifestChangeFeed {
       }
     }
     val marks = if (skipMaint) marksAt(fs, dir, end) else Set.empty[Int]
-    var base: Option[S] =
+    var base: Option[ManifestSnapshot] =
       if (from > 0 && marks.contains(v)) None
-      else Some(load(linesAt(fs, dir, from)))
+      else Some(snapshotAt(fs, dir, from))
     var going = true
     while (going && v <= end) {
       if (marks.contains(v) && v != mustEmit) {
         var m = v
         while (m < end && marks.contains(m + 1)) m += 1
-        val runEnd = retainedLines(fs, dir, m)
-        runEnd.foreach(lines => base = Some(load(lines)))
-        if (base.isEmpty) base = Some(load(linesAt(fs, dir, from)))
+        val runEnd = retained(fs, dir, m)
+        if (runEnd.isDefined) base = runEnd
+        if (base.isEmpty) base = Some(snapshotAt(fs, dir, from))
         onJump(m, runEnd.isDefined)
         v = m + 1
       } else {
-        val cur = load(linesAt(fs, dir, v))
+        val cur = snapshotAt(fs, dir, v)
         going = step(v, base.get, cur)
         base = Some(cur)
         v += 1
@@ -309,8 +300,8 @@ object ManifestChangeFeed {
     require(end >= from, s"changesTo ($end) must be >= changesFrom ($from)")
     // delete-FILE contents cache: each #dels file is immutable, read once
     val delFileCache = scala.collection.mutable.Map.empty[String, Array[(String, Long)]]
-    def delsOf(lines: Array[String]): Map[String, Array[Long]] =
-      ManifestFiles.deleteFilesFromLines(lines).flatMap { dn =>
+    def delsOf(snap: ManifestSnapshot): Map[String, Array[Long]] =
+      snap.deleteFiles.flatMap { dn =>
         delFileCache.getOrElseUpdate(dn,
           ManifestFiles.readManifest(fs, new Path(dir, dn)).map { l =>
             val i = l.lastIndexOf(',')
@@ -323,8 +314,8 @@ object ManifestChangeFeed {
     // types resolve against the range-end schema, like every read)
     val eqSetCache = scala.collection.mutable
       .Map.empty[String, ManifestEqDeletes.EqSet]
-    def eqSetsOf(lines: Array[String]): Seq[(Int, ManifestEqDeletes.EqSet)] =
-      lines.filter(_.startsWith("#eqdels,")).toSeq.flatMap { l =>
+    def eqSetsOf(snap: ManifestSnapshot): Seq[(Int, ManifestEqDeletes.EqSet)] =
+      snap.raw.filter(_.startsWith("#eqdels,")).toSeq.flatMap { l =>
         val parts = l.split(",", 4)
         for (ver <- parts.lift(3).flatMap(_.toIntOption)) yield
           ver -> eqSetCache.getOrElseUpdate(parts(1),
@@ -332,36 +323,30 @@ object ManifestChangeFeed {
               parts(2).split(";").map(_.toInt), schema, dir, conf))
       }
     // file → the delete sets already applied to it in a snapshot
-    def eqApplicable(lines: Array[String]):
+    def eqApplicable(snap: ManifestSnapshot):
         Map[String, Seq[ManifestEqDeletes.EqSet]] = {
-      val sets = eqSetsOf(lines)
+      val sets = eqSetsOf(snap)
       if (sets.isEmpty) Map.empty
       else {
-        val born = ManifestFiles.bornFromLines(lines)
-        ManifestFiles.entriesFromLines(lines).flatMap { case (n, _) =>
+        snap.entries.flatMap { case (n, _) =>
           val applicable = sets.collect {
-            case (ver, st) if born.getOrElse(n, 0) < ver => st }
+            case (ver, st) if snap.born.getOrElse(n, 0) < ver => st }
           if (applicable.isEmpty) None else Some(n -> applicable.toSeq)
         }.toMap
       }
     }
 
-    // one walked snapshot, parsed once whether it is a step or a baseline.
-    // ROW LINEAGE riders (immutable per file while listed): insert legs
-    // resolve against the commit's own snapshot, delete legs against the
-    // predecessor — so a feed consumer sees each leg's `_row_id` exactly
-    // as a reader of that snapshot would
-    final class Snap(val lines: Array[String]) {
-      val names: Set[String] =
-        ManifestFiles.entriesFromLines(lines).map(_._1).toSet
-      val dels: Map[String, Array[Long]] = delsOf(lines)
-      val firstRow: Map[String, Long] = ManifestFiles.firstRowFromLines(lines)
-      val ridCol: Set[String] = ManifestFiles.ridColFromLines(lines)
-      val luv: Map[String, Int] = ManifestFiles.luvFromLines(lines)
-      val luvCol: Set[String] = ManifestFiles.luvColFromLines(lines)
-    }
+    // each walked snapshot is a step's `cur`, then the next step's
+    // `prev`: its delete vectors are read once, for both
+    var delsMemo = List.empty[(ManifestSnapshot, Map[String, Array[Long]])]
+    def dels(snap: ManifestSnapshot): Map[String, Array[Long]] =
+      delsMemo.collectFirst { case (s, d) if s eq snap => d }.getOrElse {
+        val d = delsOf(snap)
+        delsMemo = (snap -> d) :: delsMemo.take(1)
+        d
+      }
     val out = Array.newBuilder[InputPartition]
-    walk(fs, dir, from, end, skipMaint, new Snap(_)) { (v, prev, cur) =>
+    walk(fs, dir, from, end, skipMaint) { (v, prev, cur) =>
       // A version step that REMOVES delete state — CALL rollback to a
       // pre-delete snapshot — RESURRECTS rows on files that survive the
       // step, a diff this walk cannot express as insert/delete legs (the
@@ -370,17 +355,17 @@ object ManifestChangeFeed {
       // silently diverge. Shrinkage on files that were ALSO unlisted in
       // the same step (compaction materializing its deletes) stays fine:
       // those surface as full delete+insert legs.
+      val (prevDels, curDels) = (dels(prev), dels(cur))
       val survivors = cur.names & prev.names
       val shrunkVec = survivors.iterator.filter { n =>
-        prev.dels.getOrElse(n, Array.empty[Long])
-          .diff(cur.dels.getOrElse(n, Array.empty[Long])).nonEmpty
+        prevDels.getOrElse(n, Array.empty[Long])
+          .diff(curDels.getOrElse(n, Array.empty[Long])).nonEmpty
       }.take(1).toSeq
-      val curLineSet = cur.lines.toSet
-      val bornPrev = ManifestFiles.bornFromLines(prev.lines)
-      val shrunkEq = prev.lines.filter { l =>
+      val curLineSet = cur.raw.toSet
+      val shrunkEq = prev.raw.filter { l =>
         l.startsWith("#eqdels,") && !curLineSet.contains(l) && {
           val ver = l.split(",", 4).lift(3).flatMap(_.toIntOption).getOrElse(0)
-          survivors.exists(n => bornPrev.getOrElse(n, 0) < ver)
+          survivors.exists(n => prev.born.getOrElse(n, 0) < ver)
         }
       }.take(1)
       if (shrunkVec.nonEmpty || shrunkEq.nonEmpty)
@@ -397,8 +382,8 @@ object ManifestChangeFeed {
       // a new `#eqdels` set at v deletes, from every file born before
       // it, the rows that were LIVE at the predecessor (not positionally
       // deleted, not already eq-deleted) and match the set's tuples
-      val prevEqApplicable = eqApplicable(prev.lines)
-      val newEqSets = eqSetsOf(cur.lines).collect {
+      val prevEqApplicable = eqApplicable(prev)
+      val newEqSets = eqSetsOf(cur).collect {
         case (ver, st) if ver == v => st }
       val mergedNew =
         if (newEqSets.isEmpty) None
@@ -409,7 +394,11 @@ object ManifestChangeFeed {
           newEqSets.head.keyTypes, newEqSets.flatMap(_.tuples).toArray))
       val ts = fs.getFileStatus(new Path(dir, s"_MANIFEST.v$v"))
         .getModificationTime * 1000L
-      def leg(n: String, kind: String, of: Snap, skip: Array[Long],
+      // ROW LINEAGE riders (immutable per file while listed): insert legs
+      // resolve against the commit's own snapshot, delete legs against
+      // the predecessor — so a feed consumer sees each leg's `_row_id`
+      // exactly as a reader of that snapshot would
+      def leg(n: String, kind: String, of: ManifestSnapshot, skip: Array[Long],
           keep: Array[Long], skipEqs: Seq[ManifestEqDeletes.EqSet] = Seq.empty,
           keepEq: Option[ManifestEqDeletes.EqSet] = None): Unit =
         out += ManifestChangePartition(new Path(dir, n).toString, n, kind, v,
@@ -418,7 +407,7 @@ object ManifestChangeFeed {
           ridCol = of.ridCol.contains(n), luv = of.luv.getOrElse(n, -1),
           luvCol = of.luvCol.contains(n))
       (cur.names -- prev.names).toSeq.sorted.foreach { n =>
-        leg(n, "insert", cur, cur.dels.getOrElse(n, Array.empty), Array.empty)
+        leg(n, "insert", cur, curDels.getOrElse(n, Array.empty), Array.empty)
       }
       (prev.names -- cur.names).toSeq.sorted.foreach { n =>
         if (!fs.exists(new Path(dir, n))) throw new IllegalStateException(
@@ -426,19 +415,18 @@ object ManifestChangeFeed {
             s"version $v and its bytes were vacuumed — the change feed " +
             "for this range is unavailable; widen retention or restart " +
             "downstream from a full snapshot")
-        leg(n, "delete", prev, prev.dels.getOrElse(n, Array.empty),
+        leg(n, "delete", prev, prevDels.getOrElse(n, Array.empty),
           Array.empty, skipEqs = prevEqApplicable.getOrElse(n, Seq.empty))
       }
       survivors.toSeq.sorted.foreach { n =>
-        val fresh = cur.dels.getOrElse(n, Array.empty)
-          .diff(prev.dels.getOrElse(n, Array.empty))
+        val fresh = curDels.getOrElse(n, Array.empty)
+          .diff(prevDels.getOrElse(n, Array.empty))
         if (fresh.nonEmpty) leg(n, "delete", prev, Array.empty, fresh)
       }
       mergedNew.foreach { st =>
-        val bornCur = ManifestFiles.bornFromLines(cur.lines)
         survivors.toSeq.sorted
-          .filter(n => bornCur.getOrElse(n, 0) < v).foreach { n =>
-            leg(n, "delete", prev, prev.dels.getOrElse(n, Array.empty),
+          .filter(n => cur.born.getOrElse(n, 0) < v).foreach { n =>
+            leg(n, "delete", prev, prevDels.getOrElse(n, Array.empty),
               Array.empty, skipEqs = prevEqApplicable.getOrElse(n, Seq.empty),
               keepEq = Some(st))
           }
@@ -487,8 +475,7 @@ object ManifestChangeFeed {
     if (vmax <= seen) acc
     else {
       val extended = (seen + 1 to vmax).foldLeft(acc) { (m, v) =>
-        try m ++ ManifestFiles.importsFromLines(
-          ManifestFiles.linesOf(fs, dir, Some(v)))
+        try m ++ ManifestSnapshot.at(fs, dir, v).imports
         catch { case _: Exception => m }
       }
       importCache.merge(dir.toString, (epoch, vmax, extended),

@@ -46,7 +46,7 @@ private[sources] object ManifestCompaction {
   /** A compaction planned from one head read: the scope and the
     * arranged, version-pinned scan of it. */
   final class Plan private[ManifestCompaction] (dir: Path, fs: FileSystem,
-      val head: ManifestFiles.Head, schema: StructType,
+      val head: ManifestSnapshot, schema: StructType,
       val scope: Seq[String],
       // the scope is every live entry of the head: the rewrite then
       // materializes the head's delete state and clears it
@@ -58,7 +58,7 @@ private[sources] object ManifestCompaction {
       bucketSpec: Option[(Int, Int)],
       sortPos: Option[(Int, Boolean, Boolean)], lineage: Boolean) {
 
-    val filesBefore: Int = ManifestFiles.entriesFromLines(head.lines).length
+    val filesBefore: Int = head.entries.length
 
     /** Run the rewrite's one job: each task stages its rows' files. */
     def write(): Staged = {
@@ -99,12 +99,11 @@ private[sources] object ManifestCompaction {
         val landed = ManifestWriters.landTasks(fs, dir, staging, msgs,
           schema, Seq.empty, bucketSpec)
         val scopeSet = scope.toSet
-        val headState = head.lines.filter(isDeleteState).toSet
+        val headState = head.raw.filter(isDeleteState).toSet
         var filesAfter = 0
         val v = ManifestFiles.publishSnapshotV(fs, hconf, dir,
           (previous, version) => {
-            val gone = scopeSet -- ManifestFiles.entriesFromLines(previous)
-              .map(_._1)
+            val gone = scopeSet -- previous.names
             if (gone.nonEmpty) throw new IllegalStateException(
               s"graft-manifest at $dir: a concurrent commit rewrote or " +
                 s"removed ${gone.size} file(s) this compaction derives " +
@@ -120,7 +119,7 @@ private[sources] object ManifestCompaction {
             // vector conflicts; a partial scope conflicts only with
             // vectors pointing INTO it — vectors on out-of-scope files
             // commute, or a steadily-deleting table could never compact.
-            val fresh = previous.filter(isDeleteState).filterNot(headState)
+            val fresh = previous.raw.filter(isDeleteState).filterNot(headState)
             fresh.find(l => covered || l.startsWith("#eqdels,") ||
                 vectorsInto(l, scopeSet)).foreach { l =>
               throw new IllegalStateException(
@@ -133,7 +132,7 @@ private[sources] object ManifestCompaction {
             // a covering rewrite replaces every byte at the current type
             // and has applied every delete: the narrow-history widening
             // markers and the delete state clear with it
-            val kept = previous.filterNot(l =>
+            val kept = previous.lines.filterNot(l =>
               ManifestSink.entryName(l).exists(scopeSet) ||
                 (covered && (isDeleteState(l) ||
                   l.startsWith("#tableconf,widened,"))))
@@ -174,17 +173,16 @@ private[sources] object ManifestCompaction {
     require(target >= 1, s"target_files must be >= 1, got $target")
     val hconf = spark.sessionState.newHadoopConf()
     val fs = dir.getFileSystem(hconf)
-    val head = ManifestFiles.head(fs, dir, None)
-    val lines = head.lines
+    val head = ManifestSnapshot.latest(fs, dir)
     val schema = head.schema.getOrElse(throw new IllegalArgumentException(
       s"compact: no graft-manifest table at $dir"))
-    val entries = ManifestFiles.entriesFromLines(lines)
+    val entries = head.entries
     // positions are physical — resolve to live fields (the drop path
     // refuses to retire a layout column, so these resolve)
     def nameAt(pos: Int): String = ManifestFiles.fieldAtPhys(schema, pos)
       .map(schema(_).name).getOrElse(throw new IllegalStateException(
         s"compact: the declared layout references retired position $pos"))
-    val layout = ManifestFiles.tableConfFromLines(lines)
+    val layout = head.tableConf
     val scope =
       if (where.isEmpty) entries.map(_._1).toSeq
       else {
@@ -192,12 +190,12 @@ private[sources] object ManifestCompaction {
           "scoped compact on a bucket-laid table is not supported — the " +
             "bucket layout already governs file organization (full " +
             "compact re-buckets)")
-        require(!lines.exists(isDeleteState),
+        require(!head.raw.exists(isDeleteState),
           "scoped compact with merge-on-read delete vectors or equality " +
             "deletes pending — CALL rewrite_position_deletes or a full " +
             "compact first")
         val filters = scopeFilters(spark, schema, where)
-        val stats = ManifestFiles.statsFromLines(lines)
+        val stats = head.stats
         entries.collect { case (n, rows) if filters.forall(f =>
           ManifestSkip.provesAllMatch(f, schema, stats.get(n), Some(rows))) => n
         }.toSeq
@@ -227,16 +225,16 @@ private[sources] object ManifestCompaction {
     // never re-mints identities and never reads as an update. A
     // pre-lineage row's NULL recency carries as the 0 sentinel — a null
     // `_luv` slot would resolve to this commit (see ManifestParquet.luvOf)
-    val lineage = ManifestFiles.isLineage(lines)
+    val lineage = head.lineage
     val scan =
       if (lineage) scan0.select(col("*"), scan0.metadataColumn("_row_id"),
         coalesce(scan0.metadataColumn("_last_updated_version"), lit(0))
           .as("_last_updated_version"))
       else scan0
 
-    val lead: Seq[Column] = ManifestFiles.partConfs(lines).map(p =>
+    val lead: Seq[Column] = head.partConfs.map(p =>
       col(nameAt(p._1)).asc)
-    val declared = ManifestFiles.sortKeysFromLines(lines)
+    val declared = head.sortKeys
     val zc = "__graft_z"
     val (keyed, keys): (DataFrame, Seq[Column]) = sortCols match {
       case Seq() => (scan, declared.map { k =>
@@ -265,7 +263,7 @@ private[sources] object ManifestCompaction {
         keyed.repartitionByRange(target, order: _*)
           .sortWithinPartitions(order: _*).drop(zc)
     }
-    val spec = WriteSpec.of(lines, schema, hconf, maintenance = true)
+    val spec = WriteSpec.of(head, schema, hconf, maintenance = true)
     // the writer verifies the order it was promised and only then marks a
     // file `#sorted`: a sorted bucket layout's column, else the declared
     // order's leading key

@@ -42,7 +42,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * every DDL intent. Copy-on-write remains the default.
   */
 private[sources] class ManifestDeltaOperation(
-    cmd: RowLevelOperation.Command, path: String, tableSchema: StructType)
+    cmd: RowLevelOperation.Command, path: String, tableSchema: StructType,
+    head: ManifestSnapshot)
     extends RowLevelOperation with SupportsDelta {
 
   override def command(): RowLevelOperation.Command = cmd
@@ -60,15 +61,8 @@ private[sources] class ManifestDeltaOperation(
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"),
       org.apache.spark.sql.connector.expressions.Expressions.column("_pos"))
 
-  // the table head, read ONCE per operation: lineage decides the update
-  // representation and the metadata columns, and the insert files'
-  // write spec derives from the same lines (see ManifestRowLevelOperation)
-  private lazy val headLines: Array[String] = {
-    val dir = new Path(path)
-    ManifestFiles.latestLines(
-      dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), dir)
-  }
-  private lazy val lineage: Boolean = ManifestFiles.isLineage(headLines)
+  // lineage decides the update representation and the metadata columns
+  private def lineage: Boolean = head.lineage
 
   /** ROW LINEAGE through merge-on-read updates: with lineage on, an
     * UPDATE stays an UPDATE (not delete+insert), so `update(metadata,
@@ -95,7 +89,7 @@ private[sources] class ManifestDeltaOperation(
           // Insert files land UNSPLIT on a partitioned table: the delta
           // write requests no clustered distribution, so splitting would
           // open one file per partition value in every task.
-          val spec = WriteSpec.of(headLines, schema, conf.value,
+          val spec = WriteSpec.of(head, schema, conf.value,
             maintenance = false).copy(partSpec = Seq.empty)
           new ManifestDeltaBatchWrite(path, info.queryId(), schema, conf,
             spec, carryRowIds = lineage)
@@ -149,8 +143,7 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
       // appending the vectors anyway would silently no-op them and the
       // deleted rows would resurface. Fail the commit (user retries
       // against the rewritten snapshot) instead of losing the delete.
-      val live = ManifestFiles.entriesFromLines(previous).map(_._1).toSet
-      val gone = referenced -- live
+      val gone = referenced -- previous.names
       if (gone.nonEmpty) throw new IllegalStateException(
         s"graft-manifest at $path: merge-on-read commit references " +
           s"${gone.size} data file(s) a concurrent commit rewrote or " +
@@ -158,7 +151,7 @@ private[sources] class ManifestDeltaBatchWrite(path: String, queryId: String,
           "the current snapshot")
       // MOR insert files mark their birth version — a later equality
       // delete must not swallow rows an UPDATE re-landed after it
-      previous ++ fresh ++
+      previous.lines ++ fresh ++
         freshNames.map(n => ManifestFiles.bornLine(n, version))
     }, schema, basis = Some(schema))
     fs.delete(staging, true)

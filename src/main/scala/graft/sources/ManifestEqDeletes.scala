@@ -111,19 +111,17 @@ private[sources] object ManifestEqDeletes {
   }
 
   /** Driver-side: file → the delete sets that apply to it, from one
-    * snapshot's lines. Applicability: born(entry) < deleteVersion (see
+    * snapshot. Applicability: born(entry) < deleteVersion (see
     * the header — explicit versions, never line order). Delete files are
     * read once (KB-scale tuple lists). A key position that no longer resolves
     * fails LOUDLY — silently ignoring it would resurface deleted rows
     * (the DROP COLUMN path refuses to retire referenced positions, so
     * this guards corruption, not a reachable state). */
-  def assemble(lines: Array[String], schema: StructType, dir: Path,
+  def assemble(snap: ManifestSnapshot, schema: StructType, dir: Path,
       conf: org.apache.hadoop.conf.Configuration):
       Map[String, Seq[EqSet]] = {
-    if (!lines.exists(_.startsWith("#eqdels,"))) return Map.empty
-    val fs = dir.getFileSystem(conf)
-    val born = ManifestFiles.bornFromLines(lines)
-    val sets = lines.collect {
+    if (!snap.raw.exists(_.startsWith("#eqdels,"))) return Map.empty
+    val sets = snap.raw.collect {
       case l if l.startsWith("#eqdels,") =>
         val parts = l.split(",", 4)
         require(parts.length == 4 && parts(3).toIntOption.isDefined,
@@ -132,10 +130,8 @@ private[sources] object ManifestEqDeletes {
         (atVersion, readSet(parts(1), parts(2).split(";").map(_.toInt),
           schema, dir, conf))
     }
-    val entries = lines.filterNot(_.startsWith("#"))
-      .map(l => l.substring(0, l.lastIndexOf(',')))
-    entries.flatMap { name =>
-      val bornAt = born.getOrElse(name, 0)
+    snap.entries.flatMap { case (name, _) =>
+      val bornAt = snap.born.getOrElse(name, 0)
       val applicable = sets.collect {
         case (v, s) if bornAt < v => s }
       if (applicable.isEmpty) None else Some(name -> applicable.toSeq)

@@ -80,9 +80,8 @@ private[sources] object ManifestMetaTables {
   }
 
   /** The positions [[fileKey]] must treat as unprovable for a snapshot. */
-  def unsafeKeyPositions(lines: Array[String]): Set[Int] =
-    ManifestFiles.widenedFromLines(lines)
-      .collect { case (pos, "float") => pos }.toSet
+  def unsafeKeyPositions(snap: ManifestSnapshot): Set[Int] =
+    snap.widened.collect { case (pos, "float") => pos }.toSet
 
   /** Partition-value column of the `$partitions` schema for one
     * transform: identity surfaces the column itself; days surfaces
@@ -142,18 +141,18 @@ private[sources] class ManifestMetaTable(kind: String, dir: Path,
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
-  private def ver: Option[Int] = version.orElse {
-    val v = ManifestFiles.latestComplete(fs, dir)
-    if (v > 0) Some(v) else None
-  }
+  /** The ONE snapshot this instance describes: its schema, its layout
+    * and its rows all come from it, so a commit landing between
+    * `schema()` and the scan never mixes two versions. */
+  private lazy val snap: ManifestSnapshot =
+    ManifestSnapshot.resolve(fs, dir, version)
 
-  private lazy val baseSchema: StructType =
-    ManifestFiles.schemaFor(fs, dir, ver)
+  private lazy val baseSchema: StructType = snap.requireSchema
 
   /** Declared layout resolved to live (name, kind, type, physical pos)
     * — positions key the stats, names/types surface in results. */
   private lazy val layout: Seq[(String, String, DataType, Int)] =
-    ManifestFiles.partConfs(ManifestFiles.linesOf(fs, dir, ver)).flatMap {
+    snap.partConfs.flatMap {
       case (pos, k) =>
         ManifestFiles.fieldAtPhys(baseSchema, pos).map { idx =>
           (baseSchema(idx).name, k, baseSchema(idx).dataType, pos)
@@ -219,34 +218,32 @@ private[sources] class ManifestMetaTable(kind: String, dir: Path,
   }
 
   private def computeRows(): Array[InternalRow] = {
-    val lines = ManifestFiles.linesOf(fs, dir, ver)
-    val entries = ManifestFiles.entriesFromLines(lines)
-    val stats = ManifestFiles.statsFromLines(lines)
+    lazy val entries = snap.entries
+    lazy val stats = snap.stats
     kind match {
       case "files" =>
-        val buckets = ManifestFiles.bucketsFromLines(lines)
-        val sorted = ManifestFiles.sortedFromLines(lines)
-        val born = ManifestFiles.bornFromLines(lines)
-        val imported = ManifestFiles.importsFromLines(lines).keySet
+        val buckets = snap.buckets
+        val sorted = snap.sorted
+        val born = snap.born
+        val imported = snap.imports.keySet
         // equality-delete set VERSIONS (counting needs no tuple reads)
-        val eqVersions = lines.filter(_.startsWith("#eqdels,"))
+        val eqVersions = snap.raw.filter(_.startsWith("#eqdels,"))
           .flatMap(_.split(",", 4).lift(3)).flatMap(_.toIntOption)
         // per-file merge-on-read deleted-row counts (#dels files hold
         // (file, pos) pairs — driver metadata I/O)
-        val delCounts: Map[String, Long] = lines
-          .filter(_.startsWith("#dels,")).map(_.split(",", 2)(1))
+        val delCounts: Map[String, Long] = snap.deleteFiles
           .flatMap { dn =>
             ManifestFiles.readManifest(fs, new Path(dir, dn)).map { l =>
               l.substring(0, l.lastIndexOf(',')) }
           }.groupBy(identity).map { case (f, hits) => f -> hits.length.toLong }
         val specs3 = layout.map { case (n, k, dt, pos) => (pos, k, dt) }
         val names3 = layout.map { case (n, k, dt, _) => (n, k, dt) }
-        val firstRows = ManifestFiles.firstRowFromLines(lines)
-        val ridCols = ManifestFiles.ridColFromLines(lines)
+        val firstRows = snap.firstRow
+        val ridCols = snap.ridCol
         entries.map { case (file, rows) =>
           val key =
             if (layout.isEmpty) None
-            else fileKey(stats.get(file), specs3, unsafeKeyPositions(lines))
+            else fileKey(stats.get(file), specs3, unsafeKeyPositions(snap))
           new GenericInternalRow(Array[Any](
             UTF8String.fromString(file),
             UTF8String.fromString("parquet"),
@@ -296,17 +293,16 @@ private[sources] class ManifestMetaTable(kind: String, dir: Path,
             null)): InternalRow
         }
         val branchRows = ManifestFiles.branches(fs, dir).sorted.map { b =>
-          val head = ManifestFiles.latestComplete(fs, dir, Some(b))
-          val base = ManifestFiles.linesOf(fs, dir, None, Some(b))
-            .find(_.startsWith("#branchbase,"))
+          val head = ManifestSnapshot.latest(fs, dir, Some(b))
+          val base = head.raw.find(_.startsWith("#branchbase,"))
             .flatMap(_.stripPrefix("#branchbase,").toIntOption)
           new GenericInternalRow(Array[Any](
-            UTF8String.fromString(b), UTF8String.fromString("branch"), head,
+            UTF8String.fromString(b), UTF8String.fromString("branch"), head.version,
             base.map(v => v: Any).orNull)): InternalRow
         }
         (tagRows ++ branchRows).toArray
       case "segments" =>
-        val raw = ManifestFiles.rawLinesOf(fs, dir, ver)
+        val raw = snap.raw
         def rowOf(name: String, ls: Array[String],
             bytes: Option[Long], summarized: Boolean): InternalRow = {
           val es = ManifestFiles.entriesFromLines(ls)
@@ -330,7 +326,7 @@ private[sources] class ManifestMetaTable(kind: String, dir: Path,
       case "partitions" =>
         val specs3 = layout.map { case (_, k, dt, pos) => (pos, k, dt) }
         val kinds = layout.map(_._2)
-        val unsafe = unsafeKeyPositions(lines)
+        val unsafe = unsafeKeyPositions(snap)
         entries.toSeq
           .groupBy { case (file, _) => fileKey(stats.get(file), specs3, unsafe) }
           .map { case (key, files) =>

@@ -142,7 +142,7 @@ object ManifestShred extends PredicateHelper {
   def reindex(prior: Array[String], specs: Seq[Spec]): (Seq[Spec], Int) = {
     val old = fromLines(prior)
     val byIdent = old.map(s => (s.pos, s.path, s.dt) -> s.i).toMap
-    var next = math.max(nextFromLines(prior), (old.map(_.i + 1) :+ 0).max)
+    var next = math.max(nextIndex(prior), (old.map(_.i + 1) :+ 0).max)
     val out = specs.map { s =>
       byIdent.get((s.pos, s.path, s.dt)) match {
         case Some(i) => s.copy(i = i)
@@ -154,7 +154,7 @@ object ManifestShred extends PredicateHelper {
 
   val NextPrefix = "#tableconf,shrednext,"
   def nextLine(n: Int): String = s"$NextPrefix$n"
-  def nextFromLines(lines: Array[String]): Int =
+  private def nextIndex(lines: Array[String]): Int =
     lines.collectFirst { case l if l.startsWith(NextPrefix) =>
       l.substring(NextPrefix.length).toIntOption.getOrElse(0) }.getOrElse(0)
 
@@ -162,9 +162,9 @@ object ManifestShred extends PredicateHelper {
     * schema, as the writer's spec tuples (schema idx, spec index, path,
     * typed domain) — part of the one write spec every data-file write
     * route applies (WriteSpec.of). */
-  def writerSpecs(lines: Array[String], schema: StructType):
+  def writerSpecs(specs: Seq[Spec], schema: StructType):
       Array[(Int, Int, String, DataType)] =
-    fromLines(lines).flatMap(sp =>
+    specs.flatMap(sp =>
       ManifestFiles.fieldAtPhys(schema, sp.pos)
         .map(idx => (idx, sp.i, sp.path, sp.dt))).toArray
 

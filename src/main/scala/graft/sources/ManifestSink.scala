@@ -71,17 +71,17 @@ private[sources] object ManifestSink {
     * each file's stats: (provably all-match, provably none-match,
     * undecidable). Metadata-only DELETE requires the third set empty. */
   def partitionByMatch(filters: Array[org.apache.spark.sql.sources.Filter],
-      schema: StructType, lines: Array[String]):
+      schema: StructType, snap: ManifestSnapshot):
       (Set[String], Set[String], Seq[String]) = {
-    val entries = ManifestFiles.entriesFromLines(lines)
-    val stats = ManifestFiles.statsFromLines(lines)
+    val entries = snap.entries
+    val stats = snap.stats
     // float→double WIDENED columns: their text-stored bounds re-decode
     // to DIFFERENT doubles than the rows' upcast values, so neither
     // all-match nor no-match is provable from them — a filter touching
     // one sends every file to `mixed` (the COW rewrite path, which
     // evaluates real rows; cost, never wrongness). Same suppression the
     // scan's statsSafeFilters applies.
-    val widenedFloat: Set[String] = ManifestFiles.widenedFromLines(lines)
+    val widenedFloat: Set[String] = snap.widened
       .collect { case (pos, "float") => pos }
       .flatMap(p => ManifestFiles.fieldAtPhys(schema, p))
       .map(schema(_).name).toSet
@@ -117,10 +117,10 @@ class ManifestSink extends TableProvider
       val fs = dir.getFileSystem(
         SparkSession.active.sessionState.newHadoopConf())
       if (fs.exists(new Path(dir, "_SCHEMA"))) {
-        val base = ManifestFiles.schemaFor(fs, dir,
+        val base = ManifestSnapshot.resolve(fs, dir,
           Option(options.get("versionAsOf"))
             .map(ManifestFiles.resolveVersionStr(fs, dir, _)),
-          Option(options.get("branch")))
+          Option(options.get("branch"))).requireSchema
         // change-feed reads surface the table's columns PLUS the
         // _change_type/_commit_version constants — and on row-lineage
         // tables, each leg's `_row_id` (COW rewrites PRESERVE ids, so
@@ -133,8 +133,7 @@ class ManifestSink extends TableProvider
           // from the CDF schema — the silent corruption the row-level
           // operations' lineage read refuses too. An empty chain reads
           // as Array.empty → false, the one legitimate no-lineage case.
-          val lineage =
-            ManifestFiles.isLineage(ManifestFiles.latestLines(fs, dir))
+          val lineage = ManifestSnapshot.latest(fs, dir).lineage
           val withRid =
             if (!lineage) base
             else base.add(StructField("_row_id",
@@ -314,8 +313,8 @@ private[sources] class ManifestTable(schema0: StructType,
     val dir = new Path(properties.get("path"))
     val fs = dir.getFileSystem(
       SparkSession.active.sessionState.newHadoopConf())
-    new ManifestTable(
-      ManifestFiles.schemaFor(fs, dir, None, Some(b)), p, strictSchema = true)
+    new ManifestTable(ManifestSnapshot.latest(fs, dir, Some(b)).requireSchema,
+      p, strictSchema = true)
   }
 
   // Declared layout surfaced for introspection (DESCRIBE/SHOW CREATE),
@@ -340,8 +339,8 @@ private[sources] class ManifestTable(schema0: StructType,
     tablePath.exists { p =>
       val dir = new Path(p)
       val fs = dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-      val lines = ManifestFiles.latestLines(fs, dir)
-      ManifestSink.partitionByMatch(filters, schema0, lines)._3.isEmpty
+      ManifestSink.partitionByMatch(filters, schema0,
+        ManifestSnapshot.latest(fs, dir))._3.isEmpty
     }
 
   override def deleteWhere(
@@ -360,7 +359,7 @@ private[sources] class ManifestTable(schema0: StructType,
       if (mixed.nonEmpty) throw new IllegalStateException(
         s"graft-manifest metadata delete: concurrent commit broke " +
           s"predicate/file alignment (e.g. ${mixed.head}); retry the DELETE")
-      previous.filterNot(line =>
+      previous.lines.filterNot(line =>
         ManifestSink.entryName(line).exists(drop.contains))
     }, schema0, basis = Some(schema0))
   }
@@ -427,13 +426,21 @@ private[sources] class ManifestTable(schema0: StructType,
       throw new IllegalArgumentException(
         "graft-manifest row-level operations need the table resolved " +
           "through GraftManifestCatalog (no path property present)"))
+    // the table head, read ONCE per operation: lineage decides the
+    // metadata columns the operation requests, and its write spec
+    // derives from the same lines. An absent table is not lineage; an IO
+    // failure PROPAGATES — quietly deciding "not lineage" would re-mint
+    // every updated row's identity.
+    val dir = new Path(path)
+    val head = ManifestSnapshot.latest(
+      dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), dir)
     // merge-on-read tables (`TBLPROPERTIES('delete.mode'='merge-on-read')`)
     // take the DELTA path: positional delete files instead of rewriting
     // whole data files (ManifestDelta.scala)
     if (Option(properties.get("delete.mode")).contains("merge-on-read"))
-      () => new ManifestDeltaOperation(info.command(), path, schema0)
+      () => new ManifestDeltaOperation(info.command(), path, schema0, head)
     else
-      () => new ManifestRowLevelOperation(info.command(), path, schema0)
+      () => new ManifestRowLevelOperation(info.command(), path, schema0, head)
   }
   override def capabilities(): java.util.Set[TableCapability] = {
     val caps = java.util.EnumSet.of(TableCapability.BATCH_WRITE,
@@ -596,8 +603,9 @@ private[sources] class ManifestTable(schema0: StructType,
         // `branch` — read ONCE: the layout, the upsert and lineage
         // checks, the append-schema alignment and the write spec all
         // derive from it, so a branch obeys its own `#tableconf`. A
-        // missing table reads as empty; an unreadable one fails the plan.
-        private val head = ManifestFiles.head(
+        // missing table reads as empty; a missing branch or an
+        // unreadable table fails the plan.
+        private val head = ManifestSnapshot.latest(
           path.getFileSystem(SparkSession.active.sessionState.newHadoopConf()),
           path, branch)
 
@@ -611,7 +619,8 @@ private[sources] class ManifestTable(schema0: StructType,
             .map(v => v.split("\n").filter(_.nonEmpty))
 
         // the declared write behaviour this write plans and writes with
-        private val declared: Array[String] = replaceConf.getOrElse(head.lines)
+        private val declared: ManifestSnapshot =
+          replaceConf.map(ManifestSnapshot.ofLines).getOrElse(head)
 
         // schema index of a declared physical position: a staged
         // CREATE/REPLACE's lines reference the NEW schema (fresh
@@ -628,7 +637,7 @@ private[sources] class ManifestTable(schema0: StructType,
         // file at a time, and the file count stays ~one per partition
         // value instead of tasks × values.
         private val partLayout: Seq[(Int, String)] =
-          ManifestFiles.partConfs(declared).flatMap { case (pos, kind) =>
+          declared.partConfs.flatMap { case (pos, kind) =>
             declaredIndex(pos).map(idx => (idx, kind)) }
 
         // Declared `write.sort-order` (the `#tableconf,sortorder` line):
@@ -640,12 +649,12 @@ private[sources] class ManifestTable(schema0: StructType,
         // `#sorted` mark on the leading one, and compaction later turns
         // per-file order into disjoint table-wide ranges.
         // range distribution mode (declared with the sort order)
-        private val distRange: Boolean = ManifestFiles.distModeRange(declared)
+        private val distRange: Boolean = declared.distModeRange
 
         // (schema index, desc, nullsLast) per declared sort key — the
         // full Iceberg sort-order surface, directions included
         private val sortLayout: Seq[(Int, Boolean, Boolean)] =
-          ManifestFiles.sortKeysFromLines(declared).flatMap(k =>
+          declared.sortKeys.flatMap(k =>
             declaredIndex(k.pos).map(i => (i, k.desc, k.nullsLast)))
 
         // `option("upsertKeys", "k1[,k2]")` — CDC UPSERT append via
@@ -660,7 +669,7 @@ private[sources] class ManifestTable(schema0: StructType,
           opt.map { cs =>
             require(bucketSpec.isEmpty,
               "upsertKeys cannot combine with a bucket-clustered write")
-            require(ManifestFiles.isMergeOnRead(head.lines),
+            require(head.mergeOnRead,
               "upsertKeys requires a merge-on-read table " +
                 "(TBLPROPERTIES('delete.mode'='merge-on-read')) — " +
                 "equality deletes are a MOR concept")
@@ -755,8 +764,8 @@ private[sources] class ManifestTable(schema0: StructType,
                   .map(keySortOrder)).toArray
             }
 
-        /** The schema this write publishes, after checking the branch
-          * exists. The authoritative previous schema is the head's
+        /** The schema this write publishes. The authoritative previous
+          * schema is the head's
           * published one (schema0 is the DataFrame's own schema on
           * path-based writes — supportsExternalMetadata). Appends must
           * align with it positionally (ACCEPT_ANY_SCHEMA paths hand us
@@ -765,13 +774,6 @@ private[sources] class ManifestTable(schema0: StructType,
           * names already published); truncate may legitimately rewrite
           * the schema. */
         private def targetSchema(incoming: StructType): StructType = {
-          branch.foreach { b =>
-            require(head.version > 0,
-              s"no branch '$b' at $path — CALL create_branch first " +
-                s"(branches: ${ManifestFiles.branches(path.getFileSystem(
-                  SparkSession.active.sessionState.newHadoopConf()), path)
-                  .sorted.mkString(", ")})")
-          }
           val existing = if (truncateRequested) None else head.schema
           existing.foreach { e =>
             val aligned = e.length == incoming.length &&
@@ -875,7 +877,7 @@ private[sources] class ManifestTable(schema0: StructType,
   * the operation builder stays cheap at analysis time. */
 private[sources] class ManifestRowLevelOperation(
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-    path: String, tableSchema: StructType)
+    path: String, tableSchema: StructType, head: ManifestSnapshot)
     extends org.apache.spark.sql.connector.write.RowLevelOperation {
 
   @volatile private var scanned: Array[String] = Array.empty
@@ -924,7 +926,7 @@ private[sources] class ManifestRowLevelOperation(
             SparkSession.active.sessionState.newHadoopConf())
           val inner = new ManifestBatchWrite(
             path, info.queryId(), -1, schema, truncate = false, conf,
-            WriteSpec.of(headLines, schema, conf.value, maintenance = false),
+            WriteSpec.of(head, schema, conf.value, maintenance = false),
             dropFromPrevious = () => scanned.toSet,
             scannedDeleteState = () => Some(scannedDeleteState),
             // ROW LINEAGE through copy-on-write: the operation asked for
@@ -971,17 +973,7 @@ private[sources] class ManifestRowLevelOperation(
       }
     }
 
-  // the table head, read ONCE per operation: lineage decides the
-  // metadata columns the rewrite requests, and the rewrite's write spec
-  // derives from the same lines. An absent table is not lineage; an IO
-  // failure PROPAGATES — quietly deciding "not lineage" would re-mint
-  // every updated row's identity.
-  private lazy val headLines: Array[String] = {
-    val dir = new Path(path)
-    ManifestFiles.latestLines(
-      dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), dir)
-  }
-  private lazy val lineage: Boolean = ManifestFiles.isLineage(headLines)
+  private def lineage: Boolean = head.lineage
 
   override def requiredMetadataAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     val base = Array(
@@ -1114,25 +1106,25 @@ private[sources] object WriteSpec {
     * rewrite re-lands rows that already committed and evaluates no
     * CHECK — the same "existing rows are not retro-validated" rule
     * ADD CONSTRAINT follows. */
-  def of(lines: Array[String], schema: StructType, conf: Configuration,
+  def of(decl: ManifestSnapshot, schema: StructType, conf: Configuration,
       maintenance: Boolean): WriteSpec = {
-    ManifestParquet.setBloomCols(conf, ManifestFiles.bloomFromLines(lines))
+    ManifestParquet.setBloomCols(conf, decl.bloom)
     def indices(positions: Seq[Int]): Array[Int] =
       positions.flatMap(ManifestFiles.fieldAtPhys(schema, _)).toArray
-    val hist = ManifestFiles.histDeclFromLines(lines)
+    val hist = decl.hist
     WriteSpec(
-      partSpec = ManifestFiles.partConfs(lines).flatMap { case (pos, kind) =>
+      partSpec = decl.partConfs.flatMap { case (pos, kind) =>
         ManifestFiles.fieldAtPhys(schema, pos).map(idx => (idx, kind)) },
       checks =
         if (maintenance) Seq.empty
         else ManifestChecks.bind(SparkSession.active, schema,
-          ManifestFiles.checksFromLines(lines)),
+          decl.checks),
       // histogram columns track NDV sketches too: catalyst's
       // FilterEstimation refuses a histogram without count stats
       // (hasCountStats), so a histogram-only declaration would never fire
-      ndvPos = indices((ManifestFiles.ndvFromLines(lines) ++ hist).distinct),
+      ndvPos = indices((decl.ndv ++ hist).distinct),
       histPos = indices(hist),
-      shred = ManifestShred.writerSpecs(lines, schema))
+      shred = ManifestShred.writerSpecs(decl.shred, schema))
   }
 }
 
@@ -1214,7 +1206,8 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
     // The base snapshot is supplied by publishSnapshot's claim loop (the
     // immediate predecessor version, re-read on every retry), so a
     // concurrent committer's files are never lost from the merge.
-    ManifestFiles.publishSnapshotV(fs, conf.value, dir, (previous, version) => {
+    ManifestFiles.publishSnapshotV(fs, conf.value, dir, (prev, version) => {
+      val previous = prev.lines
       require(!requireFresh || (previous.isEmpty && version == 1),
         s"graft-manifest at $path: a concurrent committer published a " +
           "version while this CREATE TABLE AS SELECT was staging — " +
@@ -1232,8 +1225,7 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
       // nor delete state) — snapshot-isolation semantics, matching
       // Delta's WriteSerializable and Iceberg's overwrite validation.
       if (drop.nonEmpty) {
-        val live = ManifestFiles.entriesFromLines(previous).map(_._1).toSet
-        val gone = drop -- live
+        val gone = drop -- prev.names
         if (gone.nonEmpty) throw new IllegalStateException(
           s"graft-manifest at $path: this row-level operation rewrites " +
             s"${gone.size} file(s) a concurrent commit already rewrote " +
@@ -1270,7 +1262,7 @@ private[sources] class ManifestBatchWrite(path: String, queryId: String,
             l.startsWith("#branchbase,"))
         else previous.filterNot(line => ManifestSink.entryName(line).exists(drop))
       val conf0 = confLines.filterNot(base.contains)
-      conf0 ++ base ++ landed(previous, version)
+      conf0 ++ base ++ landed(prev, version)
     }, schema, branch, basis = if (truncate) None else Some(schema))
     fs.delete(staging, true)
   }
@@ -1366,7 +1358,7 @@ private[sources] object ManifestWriters {
   def landTasks(fs: FileSystem, dir: Path, staging: Path,
       messages: Array[WriterCommitMessage], schema: StructType,
       upsertKeys: Seq[Int], bucketSpec: Option[(Int, Int)] = None):
-      (Array[String], Int) => Array[String] = {
+      (ManifestSnapshot, Int) => Array[String] = {
     val eqdelFins = messages.collect {
       case ManifestEqDeletes.UpsertCommitted(_, Some(tmp), _) =>
         rename(fs, dir, staging, tmp)
@@ -1382,7 +1374,7 @@ private[sources] object ManifestWriters {
       // equality deletes can scope around it; elsewhere the marker is
       // dead weight and stays absent
       val born: Array[String] =
-        if (ManifestFiles.isMergeOnRead(previous) || eqdelFins.nonEmpty)
+        if (previous.mergeOnRead || eqdelFins.nonEmpty)
           freshNames.map(n => ManifestFiles.bornLine(n, version))
         else Array.empty
       eqdels ++ fresh ++ born
@@ -1883,10 +1875,10 @@ private[sources] class ManifestStreamingWrite(path: String, queryId: String,
     // cost stays near one file per task.
     // One read per epoch of the chain the epoch commits onto, so a
     // running stream picks up ALTERed write behaviour.
-    val lines = ManifestFiles.latestLines(
+    val head = ManifestSnapshot.latest(
       new Path(path).getFileSystem(conf.value), new Path(path), branch)
     new ManifestWriterFactory(path, stagingName, schema, conf,
-      WriteSpec.of(lines, schema, conf.value, maintenance = false),
+      WriteSpec.of(head, schema, conf.value, maintenance = false),
       upsertKeys = upsertKeys.toArray)
   }
 
@@ -1895,9 +1887,8 @@ private[sources] class ManifestStreamingWrite(path: String, queryId: String,
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf.value)
     val staging = new Path(dir, stagingName)
-    val already = ManifestFiles.committedEpoch(
-      if (branch.isDefined) ManifestFiles.linesOf(fs, dir, None, branch)
-      else ManifestFiles.latestLines(fs, dir), queryId).exists(_ >= epochId)
+    val already = ManifestSnapshot.latest(fs, dir, branch)
+      .committedEpoch(queryId).exists(_ >= epochId)
     if (already) {
       def sweep(m: WriterCommitMessage): Unit = m match {
         case f: FileCommitted =>
@@ -1913,7 +1904,7 @@ private[sources] class ManifestStreamingWrite(path: String, queryId: String,
     val landed = ManifestWriters.landTasks(fs, dir, staging, messages,
       schema, upsertKeys)
     ManifestFiles.publishSnapshotV(fs, conf.value, dir, (previous, version) =>
-      previous.filterNot(_.startsWith(s"#txn,$queryId,")) ++
+      previous.lines.filterNot(_.startsWith(s"#txn,$queryId,")) ++
         landed(previous, version) :+ s"#txn,$queryId,$epochId",
       schema, branch, basis = Some(schema))
   }

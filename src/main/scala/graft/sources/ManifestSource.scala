@@ -38,6 +38,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Register: `spark.sql.catalog.<name> = graft.sources.GraftManifestCatalog`
   * and `spark.sql.catalog.<name>.root = <dir>`; each table is the
   * subdirectory `<root>/<table>` written by `graft-manifest` sink jobs.
+  *
+  * `ManifestFiles` is the storage side: the segmented list encoding, the
+  * claim loop, version listing, tags, and the ENCODERS of every line
+  * kind. Reading a version — resolving "latest", decoding its lines,
+  * pairing them with their schema — is [[ManifestSnapshot]]'s job.
   */
 object ManifestFiles {
 
@@ -292,9 +297,10 @@ object ManifestFiles {
   private def segSummaryLine(name: String, data: Array[String],
       schema: StructType,
       shredTypes: Map[Int, DataType] = Map.empty): Option[String] = {
-    val entries = entriesFromLines(data)
+    val seg = ManifestSnapshot.ofLines(data)
+    val entries = seg.entries
     if (entries.isEmpty) return None
-    val stats = statsFromLines(data)
+    val stats = seg.stats
     if (!entries.forall(e => stats.contains(e._1))) return None
     val all = entries.map(e => stats(e._1)).toSeq
     val keys = all.map(_.cols.keySet).reduce(_ intersect _)
@@ -330,7 +336,8 @@ object ManifestFiles {
     * neighbors. */
   private def segSketchLines(name: String, data: Array[String]):
       List[String] = {
-    val entries = entriesFromLines(data)
+    val seg = ManifestSnapshot.ofLines(data)
+    val entries = seg.entries
     if (entries.isEmpty) return Nil
     val names = entries.map(_._1)
     val out = List.newBuilder[String]
@@ -348,7 +355,7 @@ object ManifestFiles {
     }
     val hist = ManifestHist.fromLines(data)
     if (hist.nonEmpty) {
-      val stats = statsFromLines(data)
+      val stats = seg.stats
       val rowsByName = entries.toMap
       val allPos = names.flatMap(n =>
         hist.get(n).fold(Set.empty[Int])(_.keySet)).distinct.sorted
@@ -391,9 +398,6 @@ object ManifestFiles {
     * the data twice). */
   val MaintKeep = 512
   def maintLine(v: Int): String = s"#maint,$v"
-  def maintFromLines(lines: Array[String]): Set[Int] =
-    lines.filter(_.startsWith("#maint,"))
-      .flatMap(_.split(",", 2)(1).toIntOption).toSet
   private[sources] def carryMaint(previous: Array[String],
       built: Array[String]): Array[String] = {
     val all = (previous.filter(_.startsWith("#maint,")) ++
@@ -571,42 +575,9 @@ object ManifestFiles {
         .getModificationTime * 1000L <= tsMicros)
       .maxOption
 
-  private def manifestPath(fs: FileSystem, dir: Path, version: Option[Int],
-      branch: Option[String] = None): Path = {
-    val pfx = chainPrefix(branch)
-    version match {
-      case Some(v) =>
-        val p = new Path(dir, s"_MANIFEST.${pfx}v$v")
-        require(fs.exists(p),
-          s"no version $v${branch.map(b => s" on branch '$b'").getOrElse("")} " +
-            s"at $dir (have: ${versions(fs, dir, branch).sorted.mkString(",")})")
-        p
-      case None =>
-        val v = latestComplete(fs, dir, branch)
-        if (v > 0) new Path(dir, s"_MANIFEST.${pfx}v$v")
-        else if (branch.isDefined) throw new IllegalArgumentException(
-          s"no branch '${branch.get}' at $dir " +
-            s"(branches: ${branches(fs, dir).sorted.mkString(", ")})")
-        else new Path(dir, "_MANIFEST")
-    }
-  }
-
-  /** Full logical lines of ONE snapshot (the consistency unit — every
-    * parser below can run off a single read of these). Segmented lists
-    * resolve through the segment cache; legacy listings pass through. */
+  /** Full logical lines of ONE snapshot (see [[ManifestSnapshot]]). */
   def linesOf(fs: FileSystem, dir: Path, version: Option[Int]): Array[String] =
-    materialize(fs, dir, readManifest(fs, manifestPath(fs, dir, version)))
-
-  def linesOf(fs: FileSystem, dir: Path, version: Option[Int],
-      branch: Option[String]): Array[String] =
-    materialize(fs, dir,
-      readManifest(fs, manifestPath(fs, dir, version, branch)))
-
-  /** RAW list lines of one snapshot — copy-style publishers re-reference
-    * these verbatim (segments shared, O(1) metadata I/O). */
-  def rawLinesOf(fs: FileSystem, dir: Path, version: Option[Int],
-      branch: Option[String] = None): Array[String] =
-    readManifest(fs, manifestPath(fs, dir, version, branch))
+    ManifestSnapshot.resolve(fs, dir, version).lines
 
   def entriesFromLines(lines: Array[String]): Array[(String, Long)] =
     // `#`-prefixed lines are snapshot metadata (`#txn,<query>,<epoch>`
@@ -618,24 +589,7 @@ object ManifestFiles {
     }
 
   def entries(fs: FileSystem, dir: Path, version: Option[Int]): Array[(String, Long)] =
-    entriesFromLines(linesOf(fs, dir, version))
-
-  /** Per-file column statistics for one snapshot: min/max/null-count per
-    * column POSITION plus the exact file size in bytes, encoded as
-    * `#stats,<file>,<bytes>,<i>=<nulls>:<minB64>:<maxB64>;...` metadata
-    * lines riding the atomically-claimed version file. This is the seam
-    * the reference gets from parquet footer min/max + partition pruning
-    * (`sql/core/.../SparkOptimizer.scala:33-37`,
-    * `.../parquet/ParquetFileFormat.scala:51`) lifted to the FILE level —
-    * Iceberg-class manifest stats: a pushed predicate can prove a file
-    * irrelevant before it is ever opened. Keys are PHYSICAL positions
-    * (parquet `c<pos>` names), so RENAME COLUMN keeps stats valid; a
-    * column added by ALTER TABLE has no stats in pre-evolution files
-    * (never skipped); values are Base64 of the field's `String.valueOf`,
-    * so no comma/colon escaping issues arise. Files committed before
-    * this feature simply have no `#stats` line and are never skipped. */
-  def statsFromLines(lines: Array[String]): Map[String, FileStats] =
-    lines.filter(_.startsWith("#stats,")).flatMap(parseStatsLine).toMap
+    ManifestSnapshot.resolve(fs, dir, version).entries
 
   final case class ColStats(nulls: Long, min: Option[String], max: Option[String])
   final case class FileStats(bytes: Long, cols: Map[Int, ColStats],
@@ -718,7 +672,7 @@ object ManifestFiles {
 
   private def b64(s: String): String =
     java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-  private def unb64(s: String): String =
+  private[sources] def unb64(s: String): String =
     new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
 
   /** A value in the `#stats` convention — `String.valueOf` of its
@@ -738,6 +692,20 @@ object ManifestFiles {
       s"graft-manifest: no internal-value decoding for ${other.sql}")
   }
 
+  /** Per-file column statistics for one snapshot: min/max/null-count per
+    * column POSITION plus the exact file size in bytes, encoded as
+    * `#stats,<file>,<bytes>,<i>=<nulls>:<minB64>:<maxB64>;...` metadata
+    * lines riding the atomically-claimed version file. This is the seam
+    * the reference gets from parquet footer min/max + partition pruning
+    * (`sql/core/.../SparkOptimizer.scala:33-37`,
+    * `.../parquet/ParquetFileFormat.scala:51`) lifted to the FILE level —
+    * Iceberg-class manifest stats: a pushed predicate can prove a file
+    * irrelevant before it is ever opened. Keys are PHYSICAL positions
+    * (parquet `c<pos>` names), so RENAME COLUMN keeps stats valid; a
+    * column added by ALTER TABLE has no stats in pre-evolution files
+    * (never skipped); values are Base64 of the field's `String.valueOf`,
+    * so no comma/colon escaping issues arise. Files committed before
+    * this feature simply have no `#stats` line and are never skipped. */
   def statsLine(name: String, bytes: Long,
       cols: Seq[(Int, ColStats)],
       nested: Seq[(String, ColStats)] = Nil): String = {
@@ -787,19 +755,6 @@ object ManifestFiles {
   def partConfLine(colPos: Int, kind: String): String =
     s"#tableconf,part,$colPos,$kind"
 
-  /** Declared partition transforms in DECLARED ORDER — one
-    * `#tableconf,part` line per transform (round 12 extends the single
-    * time/identity transform to composite layouts like
-    * `PARTITIONED BY (days(ts), region)`); the order is the composite
-    * group-key order everywhere (writer split, SPJ report, split keys). */
-  def partConfs(lines: Array[String]): Seq[(Int, String)] =
-    lines.iterator.filter(_.startsWith("#tableconf,part,")).flatMap { l =>
-      l.split(",") match {
-        case Array(_, _, pos, kind) => pos.toIntOption.map((_, kind))
-        case _ => None
-      }
-    }.toSeq
-
   /** Named TAGS (round 12 — Iceberg refs): `_TAGS` lines `name,version`.
     * A tag pins a version for humans (`VERSION AS OF 'nightly'`) and
     * for VACUUM, which never drops a tagged version. Stored OUTSIDE the
@@ -847,23 +802,11 @@ object ManifestFiles {
   def bloomLine(positions: Seq[Int]): String =
     s"#tableconf,bloom,${positions.mkString(";")}"
 
-  def bloomFromLines(lines: Array[String]): Seq[Int] =
-    lines.find(_.startsWith("#tableconf,bloom,")).toSeq.flatMap { l =>
-      l.stripPrefix("#tableconf,bloom,").split(";").toSeq
-        .flatMap(_.toIntOption)
-    }
-
   /** Declared NDV-sketch columns (`TBLPROPERTIES('stats.ndv.columns'=
     * 'a,b')`): physical positions whose writes track a per-file
     * HyperLogLog (ManifestNdv) for the scan's CBO column statistics. */
   def ndvConfLine(positions: Seq[Int]): String =
     s"#tableconf,ndv,${positions.mkString(";")}"
-
-  def ndvFromLines(lines: Array[String]): Seq[Int] =
-    lines.find(_.startsWith("#tableconf,ndv,")).toSeq.flatMap { l =>
-      l.stripPrefix("#tableconf,ndv,").split(";").toSeq
-        .flatMap(_.toIntOption)
-    }
 
   /** Declared HISTOGRAM columns (`TBLPROPERTIES(
     * 'stats.histogram.columns'='a,b')`): physical positions whose
@@ -871,12 +814,6 @@ object ManifestFiles {
     * scan's CBO range-selectivity estimation. */
   def histConfLine(positions: Seq[Int]): String =
     s"#tableconf,hist,${positions.mkString(";")}"
-
-  def histDeclFromLines(lines: Array[String]): Seq[Int] =
-    lines.find(_.startsWith("#tableconf,hist,")).toSeq.flatMap { l =>
-      l.stripPrefix("#tableconf,hist,").split(";").toSeq
-        .flatMap(_.toIntOption)
-    }
 
   /** Declared WRITE SORT ORDER (round 12 — Iceberg's `write.sort-order`
     * table property / SortOrder spec, ASC NULLS FIRST): physical column
@@ -903,24 +840,6 @@ object ManifestFiles {
          else "")
     }.mkString(";")
 
-  def sortKeysFromLines(lines: Array[String]): Seq[SortKey] =
-    lines.find(_.startsWith("#tableconf,sortorder,")).toSeq.flatMap { l =>
-      l.stripPrefix("#tableconf,sortorder,").split(";").toSeq.flatMap { t =>
-        val parts = t.split("\\.").toSeq
-        parts.headOption.flatMap(_.toIntOption).map { pos =>
-          val desc = parts.contains("d")
-          val nullsLast =
-            if (parts.contains("nl")) true
-            else if (parts.contains("nf")) false
-            else desc
-          SortKey(pos, desc, nullsLast)
-        }
-      }
-    }
-
-  def sortOrderFromLines(lines: Array[String]): Seq[Int] =
-    sortKeysFromLines(lines).map(_.pos)
-
   /** IMPORTED data file (round 12 — `CALL add_files`, Iceberg's
     * migration path): a foreign parquet file registered into the table
     * WITHOUT a rewrite. Its columns are stored under the file's OWN
@@ -946,27 +865,6 @@ object ManifestFiles {
   final case class ImportMap(names: Map[Int, String],
       consts: Map[Int, Option[String]])
 
-  /** file → import map for one snapshot. */
-  def importsFromLines(lines: Array[String]): Map[String, ImportMap] =
-    lines.filter(_.startsWith("#import,")).flatMap { line =>
-      line.split(",", 3) match {
-        case Array(_, name, pairs) =>
-          val names = Map.newBuilder[Int, String]
-          val consts = Map.newBuilder[Int, Option[String]]
-          pairs.split(";").foreach { pr =>
-            val i = pr.indexWhere(c => c == ':' || c == '=')
-            if (i > 0) pr.substring(0, i).toIntOption.foreach { pos =>
-              val v = pr.substring(i + 1)
-              if (pr.charAt(i) == ':') names += pos -> unb64(v)
-              else consts += pos -> (if (v == "-") None else Some(unb64(v)))
-            }
-          }
-          val m = ImportMap(names.result(), consts.result())
-          if (m.names.isEmpty && m.consts.isEmpty) None else Some(name -> m)
-        case _ => None
-      }
-    }.toMap
-
   /** Declared write DISTRIBUTION MODE (Iceberg's
     * `write.distribution-mode`): `#tableconf,distmode,range` makes every
     * INSERT range-distribute on the declared `write.sort-order` columns
@@ -988,14 +886,6 @@ object ManifestFiles {
     * surviving bytes are new-typed. */
   def widenedLine(pos: Int, from: DataType): String =
     s"#tableconf,widened,$pos,${from.typeName}"
-
-  def widenedFromLines(lines: Array[String]): Map[Int, String] =
-    lines.filter(_.startsWith("#tableconf,widened,")).flatMap { l =>
-      l.split(",", 4) match {
-        case Array(_, _, pos, from) => pos.toIntOption.map(_ -> from)
-        case _ => None
-      }
-    }.toMap
 
   /** Group-key derivation from a file's decoded [min, max] stats bounds
     * under ONE declared transform — Some iff the bounds PROVE the file
@@ -1034,52 +924,21 @@ object ManifestFiles {
 
   val DistModeRangeLine = "#tableconf,distmode,range"
 
-  def distModeRange(lines: Array[String]): Boolean =
-    lines.contains(DistModeRangeLine)
-
   /** CHECK constraints: `#tableconf,check,<name>,<b64 expr>` — see
     * [[ManifestChecks]]. */
   def checkLine(name: String, exprText: String): String =
     s"#tableconf,check,$name,${ManifestChecks.encode(exprText)}"
 
-  def checksFromLines(lines: Array[String]): Seq[(String, String)] =
-    lines.filter(_.startsWith("#tableconf,check,")).toSeq.flatMap { l =>
-      l.split(",", 4) match {
-        case Array(_, _, name, b64) => Some(name -> ManifestChecks.decode(b64))
-        case _ => None
-      }
-    }
-
   /** Retired physical positions: `#tableconf,dropped,<pos>` lines, one
     * per DROP COLUMN, accumulated forever (truncate preserves #tableconf
     * lines). A retired position is never reassigned — reusing it would
     * alias the dropped column's bytes in old files into the new column. */
-  def droppedFromLines(lines: Array[String]): Set[Int] =
-    lines.filter(_.startsWith("#tableconf,dropped,"))
-      .flatMap(_.split(",", 3).lift(2)).flatMap(_.toIntOption).toSet
-
   def droppedLine(pos: Int): String = s"#tableconf,dropped,$pos"
 
   /** `#tableconf,deletemode,merge-on-read` — row-level ops on this table
     * write positional DELETE FILES (`#dels,<file>` lines referencing
     * `(dataFile, ordinal)` pair lists) instead of rewriting data files. */
   val MergeOnReadLine = "#tableconf,deletemode,merge-on-read"
-
-  def isMergeOnRead(lines: Array[String]): Boolean =
-    lines.contains(MergeOnReadLine)
-
-  /** Names of this snapshot's positional delete files. */
-  def deleteFilesFromLines(lines: Array[String]): Array[String] =
-    lines.filter(_.startsWith("#dels,")).map(_.split(",", 2)(1))
-
-  /** Names of this snapshot's EQUALITY delete files (round 12 — the
-    * Iceberg-v2 value-keyed delete flavor; see [[ManifestEqDeletes]]).
-    * Line shape: `#eqdels,<file>,<p0;p1>` — key tuple files apply to
-    * every data entry listed ABOVE them (commit order IS the line
-    * order), which is how an upsert's delete half never swallows the
-    * same commit's inserts. */
-  def eqDeleteFilesFromLines(lines: Array[String]): Array[String] =
-    lines.filter(_.startsWith("#eqdels,")).map(_.split(",", 4)(1))
 
   /** Birth version of a data entry: `#born,<name>,<version>`, written by
     * every commit route on merge-on-read tables. Equality deletes apply
@@ -1089,14 +948,6 @@ object ManifestFiles {
     * history): every equality delete applies, which is correct because
     * only post-#born writers can commit after one exists. */
   def bornLine(name: String, version: Int): String = s"#born,$name,$version"
-
-  def bornFromLines(lines: Array[String]): Map[String, Int] =
-    lines.filter(_.startsWith("#born,")).flatMap { l =>
-      l.split(",", 3) match {
-        case Array(_, n, v) => v.toIntOption.map(n -> _)
-        case _ => None
-      }
-    }.toMap
 
   // ---- ROW LINEAGE (round 14 — Iceberg v3's row-id model) -------------
   // `#tableconf,lineage` enables it; every commit then assigns each data
@@ -1124,24 +975,10 @@ object ManifestFiles {
   // are not yet table state.
 
   val LineageLine = "#tableconf,lineage"
-  private val RowIdNextPrefix = "#tableconf,rowidnext,"
-
-  def isLineage(lines: Array[String]): Boolean = lines.contains(LineageLine)
+  private[sources] val RowIdNextPrefix = "#tableconf,rowidnext,"
 
   def firstRowLine(name: String, first: Long): String = s"#firstrow,$name,$first"
   def ridColLine(name: String): String = s"#ridcol,$name"
-
-  def firstRowFromLines(lines: Array[String]): Map[String, Long] =
-    lines.filter(_.startsWith("#firstrow,")).flatMap { l =>
-      l.split(",", 3) match {
-        case Array(_, n, v) => v.toLongOption.map(n -> _)
-        case _ => None
-      }
-    }.toMap
-
-  def ridColFromLines(lines: Array[String]): Set[String] =
-    lines.filter(_.startsWith("#ridcol,"))
-      .flatMap(_.split(",", 3).lift(1)).toSet
 
   // ---- `_last_updated_version` (round 15 — Iceberg v3's SECOND lineage
   // field, last_updated_sequence_number): the commit version that last
@@ -1159,22 +996,6 @@ object ManifestFiles {
   def luvLine(name: String, v: Int): String = s"#luv,$name,$v"
   def luvColLine(name: String): String = s"#luvcol,$name"
 
-  def luvFromLines(lines: Array[String]): Map[String, Int] =
-    lines.filter(_.startsWith("#luv,")).flatMap { l =>
-      l.split(",", 3) match {
-        case Array(_, n, v) => v.toIntOption.map(n -> _)
-        case _ => None
-      }
-    }.toMap
-
-  def luvColFromLines(lines: Array[String]): Set[String] =
-    lines.filter(_.startsWith("#luvcol,"))
-      .flatMap(_.split(",", 3).lift(1)).toSet
-
-  def rowIdNextFromLines(lines: Array[String]): Long =
-    lines.find(_.startsWith(RowIdNextPrefix))
-      .flatMap(_.stripPrefix(RowIdNextPrefix).toLongOption).getOrElse(0L)
-
   /** The ONE row-id assignment point, applied by [[publishSnapshotV]] to
     * every commit closure's output: entries without a `#firstrow` rider
     * get ids from the high-water mark in DETERMINISTIC (sorted-name)
@@ -1185,9 +1006,10 @@ object ManifestFiles {
     * never reassigned, only minted. Runs inside the claim loop, so a
     * rebase re-reads the winner's high-water and never double-assigns. */
   def assignRowIds(built: Array[String], version: Int,
-      previous: Array[String] = Array.empty): Array[String] = {
-    if (!built.contains(LineageLine)) return built
-    val entries = entriesFromLines(built)
+      previous: ManifestSnapshot): Array[String] = {
+    val b = ManifestSnapshot.ofLines(built)
+    if (!b.lineage) return built
+    val entries = b.entries
     // `#luv` default: files first listed by THIS commit were written at
     // this version. A CARRIED entry lacking `#luv` is pre-existing data
     // from before lineage was enabled (round-16 advice): stamping it at
@@ -1196,17 +1018,16 @@ object ManifestFiles {
     // birth marker (merge-on-read tables) or gets NO `#luv` at all —
     // its rows read NULL, Iceberg v3's null-inheritance answer for
     // pre-lineage history.
-    val haveLuv = luvFromLines(built).keySet
-    lazy val prevEntries = entriesFromLines(previous).map(_._1).toSet
-    lazy val born = bornFromLines(built)
+    val haveLuv = b.luv.keySet
     val luvs = entries.filterNot(e => haveLuv(e._1)).flatMap { e =>
-      if (previous.isEmpty || !prevEntries(e._1)) Some(luvLine(e._1, version))
-      else born.get(e._1).map(bv => luvLine(e._1, bv))
+      if (previous.lines.isEmpty || !previous.names(e._1))
+        Some(luvLine(e._1, version))
+      else b.born.get(e._1).map(bv => luvLine(e._1, bv))
     }
-    val have = firstRowFromLines(built).keySet
+    val have = b.firstRow.keySet
     val fresh = entries.filterNot(e => have(e._1)).sortBy(_._1)
     if (fresh.isEmpty) return built ++ luvs
-    var next = rowIdNextFromLines(built)
+    var next = b.rowIdNext
     val minted = fresh.map { case (n, rows) =>
       val l = firstRowLine(n, next)
       next += math.max(0L, rows)
@@ -1215,24 +1036,6 @@ object ManifestFiles {
     built.filterNot(_.startsWith(RowIdNextPrefix)) ++ luvs ++ minted :+
       s"$RowIdNextPrefix$next"
   }
-
-  /** (bucket colPos, n, sort colPos) declared by DDL, if any. */
-  def tableConf(fs: FileSystem, dir: Path,
-      version: Option[Int]): Option[(Int, Int, Option[Int])] =
-    tableConfFromLines(linesOf(fs, dir, version))
-
-  def tableConfFromLines(
-      lines: Array[String]): Option[(Int, Int, Option[Int])] =
-    lines.find(_.startsWith("#tableconf,bucket,")).flatMap { line =>
-      line.split(",") match {
-        case Array(_, _, pos, n) =>
-          for (p <- pos.toIntOption; nn <- n.toIntOption) yield (p, nn, None)
-        case Array(_, _, pos, n, sp) =>
-          for (p <- pos.toIntOption; nn <- n.toIntOption)
-            yield (p, nn, sp.toIntOption)
-        case _ => None
-      }
-    }
 
   /** Verified per-file sort marker: `#sorted,<file>,<colPos>[,<d|a><f|l>]`
     * — the writer CHECKED rows streamed monotone in that column under
@@ -1245,30 +1048,6 @@ object ManifestFiles {
       (if (desc || nullsLast)
          "," + (if (desc) "d" else "a") + (if (nullsLast) "l" else "f")
        else "")
-
-  /** file → (sorted colPos, desc, nullsLast) for one snapshot. */
-  def sortedFromLines(lines: Array[String]): Map[String, (Int, Boolean, Boolean)] =
-    lines.filter(_.startsWith("#sorted,")).flatMap { line =>
-      line.split(",", 4) match {
-        case Array(_, name, pos) =>
-          pos.toIntOption.map(p => name -> ((p, false, false)))
-        case Array(_, name, pos, flags) if flags.length == 2 =>
-          pos.toIntOption.map(p =>
-            name -> ((p, flags(0) == 'd', flags(1) == 'l')))
-        case _ => None
-      }
-    }.toMap
-
-  /** file → (colPos, n, bucketId) for one snapshot. */
-  def bucketsFromLines(lines: Array[String]): Map[String, (Int, Int, Int)] =
-    lines.filter(_.startsWith("#bucket,")).flatMap { line =>
-        line.split(",", 5) match {
-          case Array(_, name, pos, n, id) =>
-            (for { p <- pos.toIntOption; nn <- n.toIntOption;
-                   i <- id.toIntOption } yield name -> (p, nn, i))
-          case _ => None
-        }
-      }.toMap
 
   private val nestedKey = """\d+(\.\d+)+""".r
 
@@ -1298,49 +1077,6 @@ object ManifestFiles {
       parts(1) -> FileStats(bytes, cols, nested))
   }
 
-  /** Raw lines of the newest complete snapshot of main or of `branch`
-    * (file entries AND `#`-metadata lines) — what a commit's rebase
-    * starts from. A chain with no complete version reads as empty. */
-  def latestLines(fs: FileSystem, dir: Path,
-      branch: Option[String] = None): Array[String] = {
-    val v = latestComplete(fs, dir, branch)
-    if (v <= 0) Array.empty else headLines(fs, dir, v, branch)
-  }
-
-  private def headLines(fs: FileSystem, dir: Path, v: Int,
-      branch: Option[String]): Array[String] =
-    materialize(fs, dir, readManifest(fs,
-      new Path(dir, s"_MANIFEST.${chainPrefix(branch)}v$v")))
-
-  /** The head a write commits onto: the newest complete version of main
-    * or of `branch`, its lines and its published schema. A write plans
-    * everything from this one read — layout, schema checks, write spec.
-    * A fresh directory or an absent branch is version 0 with no lines
-    * and no schema; a legacy directory without version files has no
-    * lines and its `_SCHEMA`. An unreadable table fails the read. */
-  final case class Head(version: Int, lines: Array[String],
-      schema: Option[StructType])
-
-  def head(fs: FileSystem, dir: Path, branch: Option[String]): Head = {
-    val v = latestComplete(fs, dir, branch)
-    if (v > 0) Head(v, headLines(fs, dir, v, branch), Some(readSchema(fs,
-      new Path(dir, s"_SCHEMA.${chainPrefix(branch)}v$v"))))
-    else {
-      val legacy = new Path(dir, "_SCHEMA")
-      Head(0, Array.empty,
-        if (branch.isEmpty && fs.exists(legacy)) Some(readSchema(fs, legacy))
-        else None)
-    }
-  }
-
-  /** Highest epoch a streaming query has committed into this table, read
-    * from the snapshot's `#txn` markers (the Delta SetTransaction idea:
-    * the marker rides the atomically-claimed version file, so epoch
-    * dedup survives any crash point). */
-  def committedEpoch(lines: Array[String], queryId: String): Option[Long] =
-    lines.filter(_.startsWith(s"#txn,$queryId,"))
-      .flatMap(_.split(",", 3).lift(2)).flatMap(_.toLongOption).maxOption
-
   /** Publish one snapshot with OPTIMISTIC CONCURRENCY (the Delta/Iceberg
     * commit protocol): claim version N by rename-without-overwrite of a
     * fully-written temp file (atomic putIfAbsent on HDFS-semantics
@@ -1348,13 +1084,13 @@ object ManifestFiles {
     * to microseconds), and — crucially — REBUILD the snapshot from the
     * just-lost winner's entries on every retry, so a concurrent
     * committer's files are never dropped from the merged snapshot (no
-    * lost updates). `buildEntries` receives the predecessor snapshot's
-    * lines and returns this commit's full entry list. `_SCHEMA.v<N>`
+    * lost updates). `buildEntries` receives the predecessor snapshot
+    * and returns this commit's full entry list. `_SCHEMA.v<N>`
     * lands after the claim; the latest pointers swing last via atomic
     * overwrite-rename (they are a convenience — version files are the
     * source of truth, see latestVersion). Returns the claimed version. */
   def publishSnapshot(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-      dir: Path, buildEntries: Array[String] => Array[String],
+      dir: Path, buildEntries: ManifestSnapshot => Array[String],
       schema: StructType, branch: Option[String] = None,
       basis: Option[StructType] = None): Int =
     publishSnapshotV(fs, conf, dir, (prev, _) => buildEntries(prev), schema,
@@ -1371,15 +1107,16 @@ object ManifestFiles {
     * [[encodeSnapshot]]): the closure works on full logical lines, the
     * landed bytes are O(delta). */
   def publishSnapshotV(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-      dir: Path, buildEntries: (Array[String], Int) => Array[String],
+      dir: Path, buildEntries: (ManifestSnapshot, Int) => Array[String],
       schema: StructType, branch: Option[String] = None,
       startAt: Int = 0, basis: Option[StructType] = None): Int =
     publishRawV(fs, conf, dir, (prevRaw, version) => {
-      val previous = materialize(fs, dir, prevRaw)
+      val previous =
+        ManifestSnapshot.published(fs, dir, version - 1, branch, prevRaw)
       // row-lineage choke point: EVERY snapshot commit (append, rewrite,
       // truncate, import, procedure) mints ids here, inside the claim
       encodeSnapshot(fs, dir, prevRaw,
-        carryMaint(previous,
+        carryMaint(previous.lines,
           dedupeTxn(assignRowIds(buildEntries(previous, version), version,
             previous))),
         version,
@@ -1534,13 +1271,13 @@ object ManifestFiles {
     * not pure appends — a COW rewrite inside the range would otherwise
     * surface rewritten rows as if they were new data. A two-point diff,
     * not a walk, but both ends read through the walk's expired-aware
-    * [[ManifestChangeFeed.linesAt]]. */
+    * [[ManifestChangeFeed.snapshotAt]]. */
   def addedBetween(fs: FileSystem, dir: Path, from: Int, to: Int,
       ignoreDeletes: Boolean = false): Array[String] = {
-    val beforeLines = ManifestChangeFeed.linesAt(fs, dir, from)
-    val afterLines = ManifestChangeFeed.linesAt(fs, dir, to)
-    val before = entriesFromLines(beforeLines).map(_._1).toSet
-    val after = entriesFromLines(afterLines).map(_._1).toSet
+    val beforeSnap = ManifestChangeFeed.snapshotAt(fs, dir, from)
+    val afterSnap = ManifestChangeFeed.snapshotAt(fs, dir, to)
+    val before = beforeSnap.names
+    val after = afterSnap.names
     val removed = before -- after
     if (removed.nonEmpty && !ignoreDeletes) throw new IllegalStateException(
       s"graft-manifest at $dir: versions $from..$to are not pure " +
@@ -1556,16 +1293,14 @@ object ManifestFiles {
     // skips the removals/delete vectors — rows a COW rewrite re-landed
     // surface again and MOR-deleted rows already emitted are not
     // retracted, the documented at-least-the-appends contract.
-    val newDels = deleteFilesFromLines(afterLines).toSet --
-      deleteFilesFromLines(beforeLines).toSet
+    val newDels = afterSnap.deleteFiles.toSet -- beforeSnap.deleteFiles
     if (newDels.nonEmpty && !ignoreDeletes) throw new IllegalStateException(
       s"graft-manifest at $dir: versions $from..$to apply merge-on-read " +
         s"deletes (${newDels.size} delete files, e.g. ${newDels.head}); " +
         "incremental reads require append-only history (pass " +
         "option(\"ignoreDeletes\", true) to acknowledge and skip them)")
     // equality deletes (upserts) are row removals too — same contract
-    val newEqDels = eqDeleteFilesFromLines(afterLines).toSet --
-      eqDeleteFilesFromLines(beforeLines).toSet
+    val newEqDels = afterSnap.eqDeleteFiles.toSet -- beforeSnap.eqDeleteFiles
     if (newEqDels.nonEmpty && !ignoreDeletes) throw new IllegalStateException(
       s"graft-manifest at $dir: versions $from..$to apply equality " +
         s"deletes (${newEqDels.size} delete files, e.g. ${newEqDels.head}); " +
@@ -1613,7 +1348,6 @@ object ManifestFiles {
     var rows = 0L
     var end = from
     ManifestChangeFeed.walk(fs, dir, from, head, skipMaint,
-      new ManifestChangeFeed.Listing(_),
       // a vacuumed run end is NEVER published as the admitted offset:
       // Spark would log it and the planned batch would die on the
       // expired snapshot at every replay, wedging the stream on its own
@@ -1627,10 +1361,8 @@ object ManifestFiles {
         val stepBytes =
           if (maxBytes.isEmpty) 0L
           else {
-            lazy val curStats = statsFromLines(cur.lines)
-            lazy val prevStats = statsFromLines(prev.lines)
-            added.iterator.map(bytesOf(_, curStats)).sum +
-              removed.iterator.map(bytesOf(_, prevStats)).sum
+            added.iterator.map(bytesOf(_, cur.stats)).sum +
+              removed.iterator.map(bytesOf(_, prev.stats)).sum
           }
         // entry lines carry EXACT row counts for added/unlisted entries.
         // A CDF step can ALSO carry delete state against SURVIVING
@@ -1643,7 +1375,7 @@ object ManifestFiles {
           lazy val prevRows = prev.entries.toMap
           cur.entries.iterator.filter(e => added(e._1)).map(_._2).sum +
             removed.iterator.map(n => prevRows.getOrElse(n, 0L)).sum +
-            (if (countRemovals && newDeleteState(prev.lines, cur.lines))
+            (if (countRemovals && newDeleteState(prev, cur))
               Long.MaxValue / 4 else 0L)
         }
         val wouldExceed = maxFiles.exists(files + stepFiles > _) ||
@@ -1668,12 +1400,11 @@ object ManifestFiles {
     * (admit alone; any floor is met). Shared by [[admittedEnd]] and
     * [[availableRows]] so the go/no-go probe and the pricing can never
     * disagree. */
-  private[sources] def newDeleteState(prevLines: Array[String],
-      curLines: Array[String]): Boolean =
-    (deleteFilesFromLines(curLines).toSet --
-      deleteFilesFromLines(prevLines)).nonEmpty || {
-      val prevEq = prevLines.filter(_.startsWith("#eqdels,")).toSet
-      curLines.exists(l => l.startsWith("#eqdels,") && !prevEq.contains(l))
+  private[sources] def newDeleteState(prev: ManifestSnapshot,
+      cur: ManifestSnapshot): Boolean =
+    (cur.deleteFiles.toSet -- prev.deleteFiles).nonEmpty || {
+      val prevEq = prev.raw.filter(_.startsWith("#eqdels,")).toSet
+      cur.raw.exists(l => l.startsWith("#eqdels,") && !prevEq.contains(l))
     }
 
   /** Rows AVAILABLE in `(from, head]`, stopping early once `atLeast` is
@@ -1688,8 +1419,7 @@ object ManifestFiles {
       skipMaint: Boolean = false): Long = {
     if (head <= from) return 0L
     var rows = 0L
-    ManifestChangeFeed.walk(fs, dir, from, head, skipMaint,
-      new ManifestChangeFeed.Listing(_)) { (_, prev, cur) =>
+    ManifestChangeFeed.walk(fs, dir, from, head, skipMaint) { (_, prev, cur) =>
       val added = cur.names -- prev.names
       rows += cur.entries.iterator.filter(e => added(e._1)).map(_._2).sum
       if (countRemovals) {
@@ -1697,38 +1427,14 @@ object ManifestFiles {
         rows += (prev.names -- cur.names).iterator
           .map(n => prevRows.getOrElse(n, 0L)).sum
         // un-priced delete legs (see newDeleteState): the floor is met
-        if (newDeleteState(prev.lines, cur.lines)) rows = atLeast
+        if (newDeleteState(prev, cur)) rows = atLeast
       }
       rows < atLeast
     }
     rows
   }
 
-  def schemaFor(fs: FileSystem, dir: Path, version: Option[Int]): StructType =
-    schemaFor(fs, dir, version, None)
-
-  def schemaFor(fs: FileSystem, dir: Path, version: Option[Int],
-      branch: Option[String]): StructType = {
-    val pfx = chainPrefix(branch)
-    version.foreach { v =>
-      require(fs.exists(new Path(dir, s"_MANIFEST.${pfx}v$v")),
-        s"no version $v${branch.map(b => s" on branch '$b'").getOrElse("")} " +
-          s"at $dir (have: ${versions(fs, dir, branch).sorted.mkString(",")})")
-    }
-    val p = version.map(v => new Path(dir, s"_SCHEMA.${pfx}v$v")).getOrElse {
-      val v = latestComplete(fs, dir, branch)
-      if (v > 0) new Path(dir, s"_SCHEMA.${pfx}v$v")
-      else if (branch.isDefined) throw new IllegalArgumentException(
-        s"no branch '${branch.get}' at $dir " +
-          s"(branches: ${branches(fs, dir).sorted.mkString(", ")})")
-      else new Path(dir, "_SCHEMA")
-    }
-    require(fs.exists(p), s"graft-manifest: no schema file at $p — " +
-      "was this directory written by the graft-manifest sink?")
-    readSchema(fs, p)
-  }
-
-  private def readSchema(fs: FileSystem, p: Path): StructType = {
+  private[sources] def readSchema(fs: FileSystem, p: Path): StructType = {
     val in = fs.open(p)
     val json =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -2282,18 +1988,14 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     * layout metadata disagree (and a large manifest is parsed once, not
     * five times). */
   private lazy val snapshotView:
-      (Array[String], Long, Long, Array[(String, Int)], Array[String],
+      (ManifestSnapshot, Long, Long, Array[(String, Int)], Array[String],
         Seq[(org.apache.spark.sql.sources.Filter, StructType)]) = {
     val fs = dir.getFileSystem(conf.value)
-    val pinned = changes match {
-      case Some((_, to)) =>
-        Some(to.getOrElse(ManifestFiles.latestComplete(fs, dir)))
-      case None => version.orElse {
-        val v = ManifestFiles.latestComplete(fs, dir, branch)
-        if (v > 0) Some(v) else None
-      }
+    val snap = changes match {
+      case Some((_, to)) => ManifestSnapshot.resolve(fs, dir, to)
+      case None => ManifestSnapshot.resolve(fs, dir, version, branch)
     }
-    val raw = ManifestFiles.rawLinesOf(fs, dir, pinned, branch)
+    val raw = snap.raw
     // SEGMENT-level pruning: on a plain filtered batch scan, a pushed
     // predicate disproved by a segment's `#segstats` union range skips
     // the whole segment UNREAD — plan-time metadata I/O tracks the
@@ -2306,7 +2008,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     // float→double widened columns lose stats soundness (see
     // widenedByName below); the markers are control lines, INLINE in the
     // raw list, so they are known before any segment is read
-    val widenedFloatCols: Set[String] = ManifestFiles.widenedFromLines(raw)
+    val widenedFloatCols: Set[String] = snap.widened
       .collect { case (pos, "float") => pos }
       .flatMap(p => ManifestFiles.fieldAtPhys(fullSchema, p))
       .map(fullSchema(_).name).toSet
@@ -2316,15 +2018,14 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     // round 16: lifted variant_get predicates prune against shredded
     // bounds — segment summaries carry the synthetic positions too
     val shredSegs = variantSkip.map(enc => ManifestShred.skipFilters(enc,
-      ManifestShred.fromLines(raw), fullSchema)).getOrElse(Seq.empty)
+      snap.shred, fullSchema)).getOrElse(Seq.empty)
     if (changes.isDefined || filesSubset.isDefined)
       // incremental/CDF and group-filtered scans keep the per-file
       // column-stat path (their file lists come from elsewhere)
-      (ManifestFiles.materialize(fs, dir, raw), 0L, 0L, Array.empty, raw,
-        shredSegs)
+      (snap, 0L, 0L, Array.empty, raw, shredSegs)
     else if (segSafe.isEmpty && shredSegs.isEmpty)
-      (ManifestFiles.materialize(fs, dir, raw), 0L, 0L,
-        ManifestFiles.segmentRefsFromRaw(raw).toArray, raw, shredSegs)
+      (snap, 0L, 0L, ManifestFiles.segmentRefsFromRaw(raw).toArray, raw,
+        shredSegs)
     else {
       val (lines, pruned, prunedSegs, surviving) =
         ManifestFiles.materializePruned(fs, dir, raw, (files, rows, st) =>
@@ -2332,11 +2033,15 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
             ManifestSkip.canSkip(f, fullSchema, Some(st), Some(rows))) ||
           shredSegs.exists { case (f, ss) =>
             ManifestSkip.canSkip(f, ss, Some(st), Some(rows)) })
-      (lines, pruned, prunedSegs, surviving, raw, shredSegs)
+      (ManifestSnapshot.ofLines(lines), pruned, prunedSegs, surviving, raw,
+        shredSegs)
     }
   }
 
-  private lazy val snapshotLines: Array[String] = snapshotView._1
+  /** The planned view of the snapshot: every line, less the segments
+    * the pushed predicates pruned unread. */
+  private lazy val planned: ManifestSnapshot = snapshotView._1
+  private lazy val snapshotLines: Array[String] = planned.lines
 
   /** One surviving segment's plan-time summary view: member entry
     * names plus the pre-merged sketches its raw-list lines carry. */
@@ -2377,7 +2082,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     * promotion whose text-stored bounds re-decode inexactly). CALL
     * compact / INSERT OVERWRITE clears the markers and restores both. */
   private lazy val widenedByName: Map[String, String] =
-    ManifestFiles.widenedFromLines(snapshotLines).flatMap { case (pos, from) =>
+    planned.widened.flatMap { case (pos, from) =>
       ManifestFiles.fieldAtPhys(fullSchema, pos)
         .map(i => fullSchema(i).name -> from)
     }
@@ -2403,9 +2108,9 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
 
   private lazy val staticPlan: (Array[String], Map[String, Long],
       Map[String, ManifestFiles.FileStats]) = {
-    val allEntries = ManifestFiles.entriesFromLines(snapshotLines)
+    val allEntries = planned.entries
     val rows = allEntries.toMap
-    val stats = ManifestFiles.statsFromLines(snapshotLines)
+    val stats = planned.stats
     val listed0 = changes match {
       case Some((from, to)) =>
         val fs = dir.getFileSystem(conf.value)
@@ -2491,7 +2196,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
       l.startsWith("#eqdels,") || l.startsWith("#dels,"))
     val ndvByFile = ManifestNdv.fromLines(snapshotLines)
     val histByFile = ManifestHist.fromLines(snapshotLines)
-    val rowsByFile = ManifestFiles.entriesFromLines(snapshotLines).toMap
+    val rowsByFile = planned.entries.toMap
     // SEGMENT-LEVEL assembly (round 16): a FULLY-KEPT segment's
     // pre-merged `#segndv`/`#seghist`/`#segstats` summary stands in for
     // all its members, so the fold below is O(live segments ≤ 64) on a
@@ -2750,7 +2455,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     * could observe a DIFFERENT latest snapshot under concurrent commits
     * and disagree with staticPlan's file list. */
   private lazy val bucketIds: Map[String, (Int, Int, Int)] =
-    ManifestFiles.bucketsFromLines(snapshotLines)
+    planned.buckets
 
   private lazy val bucketLayout: Option[(String, Int)] = {
     val (kept, _, _) = staticPlan
@@ -2801,7 +2506,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     if (kept.isEmpty || changes.nonEmpty || !runtimeKeyPrune || hasDeletes ||
       !org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled) None
     else {
-      val specs = ManifestFiles.partConfs(snapshotLines)
+      val specs = planned.partConfs
       // every declared transform must resolve to a live, required,
       // reportable column — any miss degrades the WHOLE layout (a
       // partial report would promise a partitioning the splits don't
@@ -2859,7 +2564,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     val (kept, _, _) = staticPlan
     if (kept.isEmpty || !runtimeKeyPrune || changes.nonEmpty) None
     else {
-      val sorted = ManifestFiles.sortedFromLines(snapshotLines)
+      val sorted = planned.sorted
       val marks = kept.map(sorted.get)
       if (marks.exists(_.isEmpty) || marks.distinct.length != 1) None
       else marks.head.flatMap { case (pos, desc, nullsLast) =>
@@ -2971,7 +2676,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     * reads each KB-scale tuple file once; applied per row in the
     * factory's wrapping filter. */
   private lazy val eqDeleteMap: Map[String, Seq[ManifestEqDeletes.EqSet]] =
-    ManifestEqDeletes.assemble(snapshotLines, fullSchema, dir, conf.value)
+    ManifestEqDeletes.assemble(planned, fullSchema, dir, conf.value)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val (kept, rows, stats) = staticPlan
@@ -3072,10 +2777,10 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
       filters = rowGroupFilters,
       defaults = ManifestChecks.existsDefaults(
         org.apache.spark.sql.SparkSession.active, required),
-      imports = ManifestFiles.importsFromLines(snapshotLines),
+      imports = planned.imports,
       eqDeletes = eqDeleteMap,
-      rowIds = ManifestReaderFactory.rowIdsOf(snapshotLines, required),
-      luvs = ManifestReaderFactory.luvsOf(snapshotLines, required),
+      rowIds = ManifestReaderFactory.rowIdsOf(planned, required),
+      luvs = ManifestReaderFactory.luvsOf(planned, required),
       luvSentinel = luvSentinel)
 
   override def toMicroBatchStream(checkpointLocation: String):
@@ -3088,9 +2793,7 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
       readers = (fs, dir) =>
         new ManifestReaderFactory(fullSchema, required, conf,
           defaults = ManifestChecks.existsDefaults(
-            org.apache.spark.sql.SparkSession.active, required),
-          imports = ManifestFiles.importsFromLines(
-            ManifestFiles.latestLines(fs, dir))))
+            org.apache.spark.sql.SparkSession.active, required)))
   }
 
   /** The plain tail's micro-batch: the entries ADDED in `(s, e]`. */
@@ -3099,30 +2802,23 @@ private[sources] class ManifestScan(path: String, version: Option[Int],
     // addedBetween runs FIRST: a vacuumed range must surface its
     // deliberate expired-version error, not a generic missing-file one
     val added = ManifestFiles.addedBetween(fs, dir, s, e, ignoreDeletes)
-    // row lineage resolves against THIS BATCH's end version — "latest"
-    // could already have compacted these files away (their ids would
-    // null out) while the batch legitimately reads their bytes; the
-    // re-read of version e is segment-cached, so the cost is memory
+    // row lineage and `add_files` import maps resolve against THIS
+    // BATCH's end version — "latest" could already have compacted these
+    // files away (their ids would null out, their imported columns read
+    // by positional names) while the batch legitimately reads their
+    // bytes; the re-read of version e is segment-cached, so the cost is
+    // memory. ignoreDeletes tails can surface COW-rewrite files, which
+    // carry materialized ids — the coalesce marker rides along
     val wantRid = required.fieldNames.contains("_row_id")
     val wantLuv = required.fieldNames.contains("_last_updated_version")
-    val ls =
-      if (wantRid || wantLuv) ManifestFiles.linesOf(fs, dir, Some(e))
-      else Array.empty[String]
-    val (rids, ridCols) =
-      if (!wantRid) (Map.empty[String, Long], Set.empty[String])
-      else
-        // ignoreDeletes tails can surface COW-rewrite files, which
-        // carry materialized ids — the coalesce marker rides along
-        (ManifestFiles.firstRowFromLines(ls), ManifestFiles.ridColFromLines(ls))
-    val (luvsM, luvCols) =
-      if (!wantLuv) (Map.empty[String, Int], Set.empty[String])
-      else (ManifestFiles.luvFromLines(ls), ManifestFiles.luvColFromLines(ls))
+    val snap = ManifestChangeFeed.snapshotAt(fs, dir, e)
     added.map(n =>
       ManifestInputPartition(new Path(dir, n).toString, n,
-        firstRow = rids.getOrElse(n, -1L),
-        ridCol = ridCols.contains(n),
-        luv = luvsM.getOrElse(n, -1),
-        luvCol = luvCols.contains(n)): InputPartition)
+        firstRow = if (wantRid) snap.firstRow.getOrElse(n, -1L) else -1L,
+        ridCol = wantRid && snap.ridCol.contains(n),
+        luv = if (wantLuv) snap.luv.getOrElse(n, -1) else -1,
+        luvCol = wantLuv && snap.luvCol.contains(n),
+        imported = snap.imports.get(n)): InputPartition)
   }
 }
 
@@ -3324,7 +3020,10 @@ private[sources] case class ManifestInputPartition(file: String, name: String,
     firstRow: Long = -1L, ridCol: Boolean = false,
     // `_last_updated_version`: the file's `#luv` default and whether it
     // carries a materialized `_luv` column
-    luv: Int = -1, luvCol: Boolean = false)
+    luv: Int = -1, luvCol: Boolean = false,
+    // the file's `add_files` import map, resolved the same way; None
+    // defers to the factory-level map
+    imported: Option[ManifestFiles.ImportMap] = None)
   extends InputPartition {
   // every read route builds its file splits here: an entry that is not
   // parquet (the one data-file payload) fails the scan by name
@@ -3372,26 +3071,16 @@ private[sources] object ManifestReaderFactory {
   /** Row-lineage resolution map for one snapshot — built only when the
     * projection actually asks for `_row_id` (every other scan pays
     * nothing). */
-  def rowIdsOf(lines: Array[String],
+  def rowIdsOf(snap: ManifestSnapshot,
       required: StructType): Map[String, (Long, Boolean)] =
     if (!required.fieldNames.contains("_row_id")) Map.empty
-    else {
-      val rid = ManifestFiles.ridColFromLines(lines)
-      ManifestFiles.firstRowFromLines(lines).map { case (n, first) =>
-        n -> (first, rid(n))
-      }
-    }
+    else snap.firstRow.map { case (n, first) => n -> (first, snap.ridCol(n)) }
 
   /** `_last_updated_version` resolution map — same shape. */
-  def luvsOf(lines: Array[String],
+  def luvsOf(snap: ManifestSnapshot,
       required: StructType): Map[String, (Int, Boolean)] =
     if (!required.fieldNames.contains("_last_updated_version")) Map.empty
-    else {
-      val lc = ManifestFiles.luvColFromLines(lines)
-      ManifestFiles.luvFromLines(lines).map { case (n, v) =>
-        n -> (v, lc(n))
-      }
-    }
+    else snap.luv.map { case (n, v) => n -> (v, snap.luvCol(n)) }
 }
 
 private[sources] class ManifestReaderFactory(fullSchema: StructType,
@@ -3446,7 +3135,7 @@ private[sources] class ManifestReaderFactory(fullSchema: StructType,
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val part = p.asInstanceOf[ManifestInputPartition]
     ManifestParquet.columnarReader(part, fullSchema, required, conf, filters,
-      imports.get(part.name).map(_.names).getOrElse(Map.empty))
+      importOf(part).names)
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -3500,10 +3189,13 @@ private[sources] class ManifestReaderFactory(fullSchema: StructType,
     * constants; when no real column remains, the footer's row count
     * drives a synthetic constant-row reader. Post-add files carry the
     * field — explicit NULLs stay NULL. */
+  private def importOf(part: ManifestInputPartition): ManifestFiles.ImportMap =
+    part.imported.orElse(imports.get(part.name))
+      .getOrElse(ManifestFiles.ImportMap(Map.empty, Map.empty))
+
   private def createFileReader(part: ManifestInputPartition,
       req: StructType): PartitionReader[InternalRow] = {
-    val im = imports.getOrElse(part.name,
-      ManifestFiles.ImportMap(Map.empty, Map.empty))
+    val im = importOf(part)
     val importedNames = im.names
     val defAt = defaultsFor(req)
     // hive-style partition-path constants of an imported file, resolved
@@ -3694,21 +3386,12 @@ class GraftManifestCatalog extends TableCatalog
     val props = new java.util.HashMap[String, String]()
     props.put("path", dir.toString)
     version.foreach(v => props.put("versionAsOf", v.toString))
-    // the latest version is one head read; time travel and a legacy
-    // directory (no version files: `_MANIFEST` is the listing) read
-    // the named snapshot
-    val head = if (version.isEmpty) Some(ManifestFiles.head(f, dir, None))
-      .filter(_.version > 0) else None
-    val schema = head.flatMap(_.schema)
-      .getOrElse(ManifestFiles.schemaFor(f, dir, version))
-    val confLines = head.map(_.lines)
-      .getOrElse(ManifestFiles.linesOf(f, dir, version))
+    val snap = ManifestSnapshot.resolve(f, dir, version)
     // declared properties and the DDL layout ride into SHOW TBLPROPERTIES
     // and the write path (positions are PHYSICAL — resolved to the
     // current field, if live)
-    ManifestTableProps.decode(schema, confLines).foreach { case (k, v) =>
-      props.put(k, v) }
-    new ManifestTable(schema, props, strictSchema = true)
+    snap.properties.foreach { case (k, v) => props.put(k, v) }
+    new ManifestTable(snap.requireSchema, props, strictSchema = true)
   }
 
   /** `t$files` / `t$snapshots` / `t$partitions` resolve to read-only
@@ -3829,7 +3512,7 @@ class GraftManifestCatalog extends TableCatalog
     props.put("requireFreshTable", "true")
     // a bucket layout clusters the CTAS write itself (the recorded
     // #tableconf line rides replaceConfLines; these drive the shuffle)
-    ManifestTableProps.decode(schema, confLines).foreach {
+    ManifestTableProps.decode(schema, ManifestSnapshot.ofLines(confLines)).foreach {
       case (k @ ("bucketBy" | "buckets"), v) => props.put(k, v)
       case _ =>
     }
@@ -3840,7 +3523,7 @@ class GraftManifestCatalog extends TableCatalog
       // `CREATE TABLE` staged without a write still publishes (empty) v1
       commitFn = () => {
         ManifestFiles.publishSnapshotV(f, hconf, dir, (previous, version) => {
-          require(previous.isEmpty && version == 1,
+          require(previous.lines.isEmpty && version == 1,
             s"graft-manifest at $dir: a concurrent committer published " +
               "a version while this CREATE was staging — aborting")
           confLines
@@ -3901,7 +3584,7 @@ class GraftManifestCatalog extends TableCatalog
         // row-id high-water mark — ids handed to readers are never
         // reused, even across CREATE OR REPLACE) survive the replacement
         ManifestFiles.publishSnapshot(f, hconf, dir, previous =>
-          previous.filter(l => l.startsWith("#branchbase,") ||
+          previous.lines.filter(l => l.startsWith("#branchbase,") ||
             l.startsWith("#tableconf,rowidnext,")) ++ confLines,
           ManifestTable.nullableSchema(schema))
       },
@@ -3932,11 +3615,11 @@ class GraftManifestCatalog extends TableCatalog
     // changes and every blocker below validate inside the claim against
     // the predecessor's lines, and the claim refuses a predecessor whose
     // schema is not this one (a concurrent schema change — retry).
-    val head = ManifestFiles.head(f, dir, None)
+    val head = ManifestSnapshot.latest(f, dir)
     val read = head.schema.getOrElse(throw new IllegalStateException(
       s"graft-manifest at $dir has no published schema"))
     var schema = read
-    var dropped = ManifestFiles.droppedFromLines(head.lines)
+    var dropped = head.dropped
     var drops = Vector.empty[(String, Int)] // (name, physical position)
     var renames = Vector.empty[String] // top-level names renamed away
     var widens = Vector.empty[(String, Int, DataType)] // (name, pos, from)
@@ -4113,8 +3796,8 @@ class GraftManifestCatalog extends TableCatalog
           s") only, got $other")
     }
     val propChanges = props.result()
-    def checkRef(lines: Array[String], col: String) =
-      ManifestFiles.checksFromLines(lines).find { case (_, txt) =>
+    def checkRef(snap: ManifestSnapshot, col: String) =
+      snap.checks.find { case (_, txt) =>
         ManifestChecks.referencedColumns(SparkSession.active, txt)
           .exists(_.equalsIgnoreCase(col)) }
     ManifestFiles.publishSnapshot(f,
@@ -4127,23 +3810,23 @@ class GraftManifestCatalog extends TableCatalog
         drops.foreach { case (name, pos) =>
           // a DDL bucket/sort/partition layout referencing the column
           // blocks the drop
-          ManifestFiles.tableConfFromLines(previous).foreach { case (bp, _, sp) =>
+          previous.tableConf.foreach { case (bp, _, sp) =>
             require(bp != pos && !sp.contains(pos),
               s"cannot drop '$name': the table's declared bucket/sort " +
                 "layout references it")
           }
-          ManifestFiles.partConfs(previous).foreach { case (pp, kind) =>
+          previous.partConfs.foreach { case (pp, kind) =>
             require(pp != pos,
               s"cannot drop '$name': the table's declared $kind() " +
                 "partition layout references it")
           }
-          require(!ManifestFiles.sortOrderFromLines(previous).contains(pos),
+          require(!previous.sortOrder.contains(pos),
             s"cannot drop '$name': the table's declared write.sort-order " +
               "references it — clear or re-declare the sort order first")
           // live equality-delete files key on physical positions: losing
           // one would make their tuples unevaluable and RESURFACE the
           // deleted rows — materialize first
-          require(!previous.exists(l => l.startsWith("#eqdels,") &&
+          require(!previous.raw.exists(l => l.startsWith("#eqdels,") &&
               l.split(",", 4)(2).split(";").flatMap(_.toIntOption)
                 .contains(pos)),
             s"cannot drop '$name': live equality-delete files key on it " +
@@ -4157,13 +3840,13 @@ class GraftManifestCatalog extends TableCatalog
         // one would silently re-key the layout (bucket demands BIGINT at
         // DDL, so this is belt and braces)
         widens.foreach { case (name, pos, _) =>
-          ManifestFiles.tableConfFromLines(previous).foreach { case (bp, _, _) =>
+          previous.tableConf.foreach { case (bp, _, _) =>
             require(bp != pos,
               s"cannot widen '$name': the declared bucket layout hashes it")
           }
         }
-        val widened = ManifestFiles.widenedFromLines(previous)
-        val base = ManifestTableProps.alter(schema, previous, propChanges) ++
+        val widened = previous.widened
+        val base = ManifestTableProps.alter(schema, previous.lines, propChanges) ++
           widens.collect { case (_, pos, from) if !widened.contains(pos) =>
             ManifestFiles.widenedLine(pos, from) }
         base ++ drops.map(d => ManifestFiles.droppedLine(d._2))
@@ -4842,15 +4525,15 @@ private[sources] object ManifestProcedures {
       val fs = dir.getFileSystem(conf)
       var before = 0
       var pairs = 0L
-      val schema = ManifestFiles.schemaFor(fs, dir, None)
+      val schema = ManifestSnapshot.latest(fs, dir).requireSchema
       ManifestFiles.publishSnapshotV(fs, conf, dir, (previous, version) => {
-        val dels = ManifestFiles.deleteFilesFromLines(previous)
+        val dels = previous.deleteFiles
         before = dels.length
         // both branches preserve the logical row multiset exactly (a
         // delete-file fold changes which files carry the pairs, never
         // which rows are deleted) — mark the commit row-preserving
         if (dels.length <= 1)
-          previous :+ ManifestFiles.maintLine(version) // no-op version
+          previous.lines :+ ManifestFiles.maintLine(version) // no-op version
         else {
           val all = dels.flatMap(dn =>
             ManifestFiles.readManifest(fs, new Path(dir, dn)))
@@ -4868,7 +4551,7 @@ private[sources] object ManifestProcedures {
           finally out.close()
           require(fs.rename(tmp, new Path(dir, merged)),
             s"could not land merged delete file $merged")
-          previous.filterNot(_.startsWith("#dels,")) ++
+          previous.lines.filterNot(_.startsWith("#dels,")) ++
             Array(s"#dels,$merged", ManifestFiles.maintLine(version))
         }
       }, schema, basis = Some(schema))
@@ -4916,20 +4599,15 @@ private[sources] object ManifestProcedures {
       // every BRANCH version is a live root too: its chain files are
       // `_`-prefixed (never swept here) and the data files it references
       // must survive until drop_branch releases them
+      // data files, MOR delete files and equality delete files
+      def refs(snap: ManifestSnapshot): Seq[String] =
+        snap.entries.map(_._1).toSeq ++ snap.deleteFiles ++ snap.eqDeleteFiles
       val branchRefs = ManifestFiles.branches(fs, dir).flatMap { b =>
-        ManifestFiles.versions(fs, dir, Some(b)).flatMap { v =>
-          val lines = ManifestFiles.linesOf(fs, dir, Some(v), Some(b))
-          ManifestFiles.entriesFromLines(lines).map(_._1) ++
-            ManifestFiles.deleteFilesFromLines(lines) ++
-            ManifestFiles.eqDeleteFilesFromLines(lines)
-        }
+        ManifestFiles.versions(fs, dir, Some(b)).flatMap(v =>
+          refs(ManifestSnapshot.at(fs, dir, v, Some(b))))
       }
-      val referenced = (kept.flatMap { v =>
-        val lines = ManifestFiles.linesOf(fs, dir, Some(v))
-        ManifestFiles.entriesFromLines(lines).map(_._1) ++
-          ManifestFiles.deleteFilesFromLines(lines) ++ // MOR dels live too
-          ManifestFiles.eqDeleteFilesFromLines(lines)  // equality dels too
-      } ++ branchRefs).toSet
+      val referenced = (kept.flatMap(v => refs(ManifestSnapshot.at(fs, dir, v))) ++
+        branchRefs).toSet
       dropped.foreach { v =>
         fs.delete(new Path(dir, s"_MANIFEST.v$v"), false)
         fs.delete(new Path(dir, s"_SCHEMA.v$v"), false)
@@ -4957,11 +4635,10 @@ private[sources] object ManifestProcedures {
       // claimed after the liveness snapshot above was taken, so a
       // commit landing mid-vacuum keeps its segment even past the
       // horizon. Not counted as data files.
-      val liveSegs = (kept.map(v =>
-          ManifestFiles.rawLinesOf(fs, dir, Some(v))) ++
+      val liveSegs = (kept.map(v => ManifestSnapshot.at(fs, dir, v).raw) ++
         ManifestFiles.branches(fs, dir).flatMap(b =>
           ManifestFiles.versions(fs, dir, Some(b)).map(v =>
-            ManifestFiles.rawLinesOf(fs, dir, Some(v), Some(b)))) :+
+            ManifestSnapshot.at(fs, dir, v, Some(b)).raw)) :+
         ManifestFiles.readManifest(fs, new Path(dir, "_MANIFEST")))
         .flatMap(ManifestFiles.segmentRefsFromRaw).map(_._1).toSet
       val segHorizon = System.currentTimeMillis() - math.max(24L * 3600000L,
@@ -4975,10 +4652,10 @@ private[sources] object ManifestProcedures {
         // liveness re-check at delete time: any list claimed since the
         // first pass (main, branch, or pointer) pins its segments
         val liveNow = (ManifestFiles.versions(fs, dir).map(v =>
-            ManifestFiles.rawLinesOf(fs, dir, Some(v))) ++
+            ManifestSnapshot.at(fs, dir, v).raw) ++
           ManifestFiles.branches(fs, dir).flatMap(b =>
             ManifestFiles.versions(fs, dir, Some(b)).map(v =>
-              ManifestFiles.rawLinesOf(fs, dir, Some(v), Some(b)))) :+
+              ManifestSnapshot.at(fs, dir, v, Some(b)).raw)) :+
           ManifestFiles.readManifest(fs, new Path(dir, "_MANIFEST")))
           .flatMap(ManifestFiles.segmentRefsFromRaw).map(_._1).toSet
         segCandidates.foreach { st =>
@@ -5341,20 +5018,19 @@ private[sources] object ManifestProcedures {
       val from = ManifestFiles.latestComplete(fs, dir)
       // RAW copy — "make the table exactly version N again" re-references
       // version N's segments; rollback of any table size is O(1) metadata
-      val raw = ManifestFiles.rawLinesOf(fs, dir, Some(to))
-      val schema = ManifestFiles.schemaFor(fs, dir, Some(to))
+      val target = ManifestSnapshot.at(fs, dir, to)
+      val raw = target.raw
       val v = ManifestFiles.publishRawV(fs, conf, dir, (prevRaw, _) => {
         // ROW LINEAGE: the high-water mark NEVER rewinds — replaying
         // version N's (smaller) mark would re-mint ids the disavowed
         // versions already handed to readers, for DIFFERENT rows.
         // `#tableconf,rowidnext` is an inline control line in both the
         // list and legacy encodings, so raw-level patching is exact.
-        val cur = ManifestFiles.rowIdNextFromLines(prevRaw)
-        val tgt = ManifestFiles.rowIdNextFromLines(raw)
-        (if (cur <= tgt) raw
+        val cur = ManifestSnapshot.ofLines(prevRaw).rowIdNext
+        (if (cur <= target.rowIdNext) raw
          else raw.filterNot(_.startsWith("#tableconf,rowidnext,")) :+
            s"#tableconf,rowidnext,$cur", Nil)
-      }, schema)
+      }, target.requireSchema)
       result(new StructType().add("from_version", IntegerType)
           .add("rolled_back_to", IntegerType).add("new_version", IntegerType),
         Array(from, to, v))
@@ -5438,11 +5114,10 @@ private[sources] object ManifestProcedures {
       // RAW copy: the fork twin re-references the source snapshot's
       // segments verbatim — branching a million-file table writes one
       // small list file, no relisting
-      val branchRaw = ManifestFiles.rawLinesOf(fs, dir, Some(v)) :+
-        s"#branchbase,$v"
-      val schema = ManifestFiles.schemaFor(fs, dir, Some(v))
+      val source = ManifestSnapshot.at(fs, dir, v)
+      val branchRaw = source.raw :+ s"#branchbase,$v"
       ManifestFiles.publishRawV(fs, conf, dir, (_, _) => (branchRaw, Nil),
-        schema, Some(b), startAt = v)
+        source.requireSchema, Some(b), startAt = v)
       result(new StructType().add("branch", StringType)
           .add("forked_from", IntegerType),
         Array(UTF8String.fromString(b), v))
@@ -5525,8 +5200,8 @@ private[sources] object ManifestProcedures {
       // chain also carries with IDENTICAL payload — i.e. every main
       // advance since the fork came from THIS branch.
       val twin = branchVs.contains(mainHead) &&
-        norm(ManifestFiles.linesOf(fs, dir, Some(mainHead), Some(b))) ==
-          norm(ManifestFiles.linesOf(fs, dir, Some(mainHead)))
+        norm(ManifestSnapshot.at(fs, dir, mainHead, Some(b)).lines) ==
+          norm(ManifestSnapshot.at(fs, dir, mainHead).lines)
       require(twin,
         s"cannot fast-forward: main is at version $mainHead, which did " +
           s"not come from branch '$b' — main has advanced (diverged); " +
@@ -5538,10 +5213,9 @@ private[sources] object ManifestProcedures {
         // verbatim (#branchbase is always an inline control line, so the
         // filter never touches a segment) — each replayed publish is one
         // small list write regardless of table size
-        val wRaw = ManifestFiles.rawLinesOf(fs, dir, Some(w), Some(b))
-          .filterNot(_.startsWith("#branchbase,"))
-        val prevTwin = norm(ManifestFiles.linesOf(fs, dir, Some(w - 1), Some(b)))
-        val wSchema = ManifestFiles.schemaFor(fs, dir, Some(w), Some(b))
+        val staged = ManifestSnapshot.at(fs, dir, w, Some(b))
+        val wRaw = staged.raw.filterNot(_.startsWith("#branchbase,"))
+        val prevTwin = norm(ManifestSnapshot.at(fs, dir, w - 1, Some(b)).lines)
         ManifestFiles.publishRawV(fs, conf, dir, (prevRaw, version) => {
           require(version == w &&
               norm(ManifestFiles.materialize(fs, dir, prevRaw)) == prevTwin,
@@ -5550,7 +5224,7 @@ private[sources] object ManifestProcedures {
               s"version $w; published through ${w - 1}) — cherry_pick " +
               "the remaining staged commits or re-branch")
           (wRaw, Nil)
-        }, wSchema)
+        }, staged.requireSchema)
         published = w
       }
       result(new StructType().add("branch", StringType)
@@ -5579,9 +5253,9 @@ private[sources] object ManifestProcedures {
       require(ManifestFiles.versions(fs, dir, br).contains(v),
         s"no version $v${br.map(b => s" on branch '$b'").getOrElse("")} " +
           s"(have: ${ManifestFiles.versions(fs, dir, br).sorted.mkString(",")})")
-      val cur = ManifestFiles.linesOf(fs, dir, Some(v), br)
+      val cur = ManifestSnapshot.at(fs, dir, v, br).lines
       val prev = if (v <= 1) Array.empty[String]
-        else ManifestFiles.linesOf(fs, dir, Some(v - 1), br)
+        else ManifestSnapshot.at(fs, dir, v - 1, br).lines
       def payload(ls: Array[String]) = ls.filterNot(l =>
         l.startsWith("#txn,") || l.startsWith("#branchbase,") ||
           // maintenance markers are per-chain commit metadata: main's
@@ -5605,8 +5279,12 @@ private[sources] object ManifestProcedures {
         require(fs.exists(new Path(dir, n)),
           s"data file $n of version $v was vacuumed — nothing to graft")
       }
+      // the main head the graft is planned against: its schema is
+      // published again, so the claim refuses a concurrent schema change
+      val schema = ManifestSnapshot.latest(fs, dir).requireSchema
       val newV = ManifestFiles.publishSnapshotV(fs, conf, dir,
-        (previous, version) => {
+        (previousSnap, version) => {
+        val previous = previousSnap.lines
         val mainNames = previous.flatMap(ManifestSink.entryName).toSet
         require(addedNames.forall(!mainNames.contains(_)),
           s"main already lists ${addedNames.count(mainNames.contains)} of " +
@@ -5621,10 +5299,10 @@ private[sources] object ManifestProcedures {
             l.startsWith("#born,") || l.startsWith("#firstrow,") ||
             l.startsWith("#ridcol,") || l.startsWith("#luv,") ||
             l.startsWith("#luvcol,")) ++
-          (if (ManifestFiles.isMergeOnRead(previous))
+          (if (previousSnap.mergeOnRead)
              addedNames.map(n => ManifestFiles.bornLine(n, version))
            else Seq.empty[String])
-      }, ManifestFiles.schemaFor(fs, dir, None))
+      }, schema, basis = Some(schema))
       result(new StructType().add("picked_version", IntegerType)
           .add("files_grafted", IntegerType).add("new_version", IntegerType),
         Array(v, addedNames.length, newV))
@@ -5706,20 +5384,17 @@ private[sources] object ManifestProcedures {
       require(!srcStr.contains(",") && !srcStr.contains(";") &&
           !srcStr.contains("\n"),
         s"source path '$srcStr' contains manifest delimiter characters")
-      // ONE pinned version for lines AND schema: two independent
-      // "latest" resolutions could pair version-N lines with a racing
-      // DDL's N+1 schema (a dropped/widened column's files would then
-      // read without their markers) — and unlike other procedures the
-      // clone's claim targets the EMPTY destination, so the mismatch
-      // would never conflict its way to an abort
-      val srcV = ManifestFiles.latestComplete(fs, src)
-      val lines = ManifestFiles.linesOf(fs, src, Some(srcV))
-      require(ManifestFiles.deleteFilesFromLines(lines).isEmpty &&
-          ManifestFiles.eqDeleteFilesFromLines(lines).isEmpty,
+      // ONE snapshot for lines AND schema: unlike other procedures the
+      // clone's claim targets the EMPTY destination, so a version-N
+      // listing paired with a racing DDL's N+1 schema would never
+      // conflict its way to an abort
+      val source = ManifestSnapshot.latest(fs, src)
+      val lines = source.lines
+      require(source.deleteFiles.isEmpty && source.eqDeleteFiles.isEmpty,
         "clone needs a materialized snapshot — the source carries live " +
           "row-level delete state (positional vectors or equality " +
           "sets); CALL compact on the source first")
-      val schema = ManifestFiles.schemaFor(fs, src, Some(srcV))
+      val schema = source.requireSchema
       // absolute entries pass through verbatim: a clone of a clone
       // keeps referencing the ORIGINAL files (same caveat, same owner)
       def abs(n: String): String =
@@ -5756,9 +5431,9 @@ private[sources] object ManifestProcedures {
             Some(l) // declarative conf: carried verbatim
         }
       }
-      val entries = ManifestFiles.entriesFromLines(lines)
+      val entries = source.entries
       ManifestFiles.publishSnapshotV(fs, hconf, dst, (previous, _) => {
-        require(previous.isEmpty,
+        require(previous.lines.isEmpty,
           s"clone target $dst gained a commit mid-clone — aborting")
         cloned
       }, schema)
@@ -5805,11 +5480,12 @@ private[sources] object ManifestProcedures {
       val fs = dir.getFileSystem(hconf)
       require(fs.exists(new Path(dir, "_MANIFEST")),
         s"no graft-manifest table at $dir")
-      require(ManifestFiles.tableConf(fs, dir, None).isEmpty,
+      val head = ManifestSnapshot.latest(fs, dir)
+      require(head.tableConf.isEmpty,
         "add_files into a bucket-laid table is not supported — the " +
           "bucket layout cannot be verified on foreign files " +
           "(INSERT ... SELECT re-clusters)")
-      val schema = ManifestFiles.schemaFor(fs, dir, None)
+      val schema = head.requireSchema
       schema.fields.foreach { f =>
         require(ManifestSkip.statsCapable(f.dataType),
           s"add_files supports primitive-typed tables — column " +
@@ -5865,8 +5541,8 @@ private[sources] object ManifestProcedures {
           s"could not move $src into $dir (filesystem refused)")
       }
       try ManifestFiles.publishSnapshotV(fs, hconf, dir,
-        (previous, version) => previous ++ prepared.flatMap(_._3) ++
-          (if (ManifestFiles.isMergeOnRead(previous))
+        (previous, version) => previous.lines ++ prepared.flatMap(_._3) ++
+          (if (previous.mergeOnRead)
              prepared.map(pr => ManifestFiles.bornLine(pr._2, version))
            else Array.empty[String]), schema, basis = Some(schema))
       catch { case t: Throwable =>

@@ -27,7 +27,7 @@ private[sources] object ManifestTableProps {
 
   private final case class Key(name: String, owns: String => Boolean,
       encode: (StructType, Array[String], Option[String]) => Seq[String],
-      decode: (StructType, Array[String]) => Option[String])
+      decode: (StructType, ManifestSnapshot) => Option[String])
 
   private val CheckPrefix = "check."
 
@@ -41,7 +41,7 @@ private[sources] object ManifestTableProps {
   /** A column-list key (bloom, NDV, histogram columns): one line of
     * physical positions; `why(dt)` names why a type is refused. */
   private def columnList(name: String, line: Seq[Int] => String,
-      read: Array[String] => Seq[Int], why: DataType => Option[String]): Key = {
+      read: ManifestSnapshot => Seq[Int], why: DataType => Option[String]): Key = {
     val prefix = line(Nil)
     Key(name, _.startsWith(prefix),
       (schema, _, v) => cleared(v).toSeq.flatMap { cs =>
@@ -55,7 +55,7 @@ private[sources] object ManifestTableProps {
         }
         if (positions.isEmpty) Nil else Seq(line(positions.toSeq))
       },
-      (schema, lines) => joined(read(lines)
+      (schema, snap) => joined(read(snap)
         .flatMap(ManifestFiles.fieldAtPhys(schema, _)).map(schema(_).name)))
   }
 
@@ -69,18 +69,18 @@ private[sources] object ManifestTableProps {
         case other => throw new IllegalArgumentException(
           s"$name must be '$off' or '$on', got '$other'")
       },
-      (_, lines) => if (lines.contains(line)) Some(on) else None)
+      (_, snap) => if (snap.raw.contains(line)) Some(on) else None)
 
   private val Keys: Seq[Key] = Seq(
     switch("delete.mode", ManifestFiles.MergeOnReadLine,
       on = "merge-on-read", off = "copy-on-write"),
     columnList("bloom.columns", ManifestFiles.bloomLine,
-      ManifestFiles.bloomFromLines, _ => None),
+      _.bloom, _ => None),
     columnList("stats.ndv.columns", ManifestFiles.ndvConfLine,
-      ManifestFiles.ndvFromLines, dt =>
+      _.ndv, dt =>
         if (ManifestNdv.capable(dt)) None else Some("which has no stable sketch identity")),
     columnList("stats.histogram.columns", ManifestFiles.histConfLine,
-      ManifestFiles.histDeclFromLines, dt =>
+      _.hist, dt =>
         if (ManifestHist.capable(dt)) None
         else Some("which has no histogram domain (numeric/temporal only)")),
     // surviving paths keep their synthetic #stats index across
@@ -94,7 +94,7 @@ private[sources] object ManifestTableProps {
         if (specs.isEmpty && next == 0) Nil
         else ManifestShred.confLines(specs) :+ ManifestShred.nextLine(next)
       },
-      (schema, lines) => joined(ManifestShred.fromLines(lines).flatMap { sp =>
+      (schema, snap) => joined(snap.shred.flatMap { sp =>
         ManifestFiles.fieldAtPhys(schema, sp.pos).map(i =>
           s"${schema(i).name}:${sp.path}:" + ManifestShred.typeName(sp.dt))
       })),
@@ -102,7 +102,7 @@ private[sources] object ManifestTableProps {
     Key("write.sort-order", _.startsWith("#tableconf,sortorder,"),
       (schema, _, v) => cleared(v).toSeq.map(cs =>
         ManifestFiles.sortOrderLine(parseSortOrder(schema, cs))),
-      (schema, lines) => joined(ManifestFiles.sortKeysFromLines(lines).flatMap { k =>
+      (schema, snap) => joined(snap.sortKeys.flatMap { k =>
         ManifestFiles.fieldAtPhys(schema, k.pos).map { i =>
           schema(i).name + (if (k.desc) " DESC" else "") +
             (if (k.nullsLast != k.desc)
@@ -117,14 +117,13 @@ private[sources] object ManifestTableProps {
         case other => throw new IllegalArgumentException(
           s"write.distribution-mode must be 'none' or 'range', got '$other'")
       },
-      (_, lines) =>
-        if (ManifestFiles.distModeRange(lines)) Some("range") else None),
+      (_, snap) => if (snap.distModeRange) Some("range") else None),
     Key("partition.layout", _.startsWith("#tableconf,part,"),
       (schema, _, v) => partLines(schema,
         cleared(v).toSeq.flatMap(layoutTokens).map { case (kind, c) =>
           partSpec(schema, kind, c) }),
-      (schema, lines) => {
-        val specs = ManifestFiles.partConfs(lines)
+      (schema, snap) => {
+        val specs = snap.partConfs
         val named = specs.flatMap { case (pos, kind) =>
           ManifestFiles.fieldAtPhys(schema, pos).map(i =>
             GraftTruncateFunction.widthOf(kind) match {
@@ -143,7 +142,7 @@ private[sources] object ManifestTableProps {
         ManifestChecks.validate(SparkSession.active, schema, n, txt)
         ManifestFiles.checkLine(n, txt)
       },
-      (_, lines) => ManifestFiles.checksFromLines(lines).collectFirst {
+      (_, snap) => snap.checks.collectFirst {
         case (`n`, txt) => txt })
 
   private def keyOf(k: String): Option[Key] =
@@ -180,8 +179,8 @@ private[sources] object ManifestTableProps {
     val checks = props.keys.filter(_.startsWith(CheckPrefix)).toSeq.sorted
     val lines = alter(schema, layout, (Keys.map(_.name) ++ checks)
       .flatMap(k => props.get(k).map(v => k -> Some(v))))
-    val declared = ManifestFiles.partConfs(layout)
-    require(declared.isEmpty || ManifestFiles.partConfs(lines) == declared,
+    val declared = ManifestSnapshot.ofLines(layout).partConfs
+    require(declared.isEmpty || ManifestSnapshot.ofLines(lines).partConfs == declared,
       "PARTITIONED BY and TBLPROPERTIES('partition.layout') declare " +
         "different partition layouts")
     lines
@@ -197,12 +196,12 @@ private[sources] object ManifestTableProps {
     create(schema, partitions, properties)
   }
 
-  /** The properties `load` surfaces for `lines`, plus the bucket layout
+  /** The properties `load` surfaces for `snap`, plus the bucket layout
     * the write path clusters on (`bucketBy`/`buckets`/`sortedBy`). */
-  def decode(schema: StructType, lines: Array[String]): Seq[(String, String)] =
-    (Keys ++ ManifestFiles.checksFromLines(lines).map(c => checkKey(c._1)))
-      .flatMap(k => k.decode(schema, lines).map(k.name -> _)) ++
-      ManifestFiles.tableConfFromLines(lines).toSeq.flatMap { case (pos, n, sp) =>
+  def decode(schema: StructType, snap: ManifestSnapshot): Seq[(String, String)] =
+    (Keys ++ snap.checks.map(c => checkKey(c._1)))
+      .flatMap(k => k.decode(schema, snap).map(k.name -> _)) ++
+      snap.tableConf.toSeq.flatMap { case (pos, n, sp) =>
         ManifestFiles.fieldAtPhys(schema, pos).toSeq.flatMap { i =>
           Seq("bucketBy" -> schema(i).name, "buckets" -> n.toString) ++
             sp.flatMap(ManifestFiles.fieldAtPhys(schema, _))
@@ -219,19 +218,19 @@ private[sources] object ManifestTableProps {
     *   - row lineage can only be enabled. */
   private def crossCheck(before: Array[String], after: Array[String],
       touched: Set[String]): Array[String] = {
-    val bucketLaid = ManifestFiles.tableConfFromLines(after).isDefined
-    require(!bucketLaid || ManifestFiles.sortKeysFromLines(after).isEmpty,
+    val (was, now) = (ManifestSnapshot.ofLines(before), ManifestSnapshot.ofLines(after))
+    val bucketLaid = now.tableConf.isDefined
+    require(!bucketLaid || now.sortKeys.isEmpty,
       "write.sort-order conflicts with a bucket layout — sorted " +
         "buckets are declared via the layout's own sort slot " +
         "(option(\"sortedBy\", col))")
     require(!bucketLaid || !touched("partition.layout"),
       "partition.layout cannot be set on a bucket-laid table " +
         "(bucket and time/identity layouts are exclusive)")
-    require(!ManifestFiles.isLineage(before) || ManifestFiles.isLineage(after),
+    require(!was.lineage || now.lineage,
       "row.lineage can only be enabled ('true'); ids already handed " +
         "to readers cannot be revoked")
-    if (!ManifestFiles.distModeRange(after) ||
-        ManifestFiles.sortKeysFromLines(after).nonEmpty) after
+    if (!now.distModeRange || now.sortKeys.nonEmpty) after
     else {
       require(!touched("write.distribution-mode"),
         "write.distribution-mode=range needs a declared " +

@@ -544,7 +544,7 @@ object Sources extends QueryModule {
       GROUP BY 1 ORDER BY 1"""))
 
   /** Manifest-format DATA SKIPPING end to end (round 10 — per-file column
-    * min/max stats in the snapshot, `ManifestFiles.statsFromLines` +
+    * min/max stats in the snapshot, `ManifestSnapshot.stats` +
     * `ManifestSkip`): orders land range-partitioned by date into a
     * manifest table (the layout time-keyed appends produce), and a
     * one-year range query opens ONLY the files whose stats overlap —

@@ -158,8 +158,7 @@ class ManifestAddFilesSpec extends AnyFunSuite {
     assert(spark.table(s"$cat.t").agg(sum($"id")).head().getLong(0) ==
       before - delSum)
     val dir = new Path(root, "t")
-    assert(ManifestFiles.importsFromLines(
-      ManifestFiles.latestLines(fsOf(dir), dir)).isEmpty,
+    assert(ManifestSnapshot.latest(fsOf(dir), dir).imports.isEmpty,
       "COW rewrite must retire the #import maps with their entries")
   }
 
@@ -280,9 +279,9 @@ class ManifestAddFilesSpec extends AnyFunSuite {
     val entriesBefore =
       ManifestFiles.entries(fsOf(dir), dir, None).map(_._1).toSet
     spark.sql(s"DELETE FROM $cat.lake WHERE day < DATE'2024-05-02'")
-    val after = ManifestFiles.latestLines(fsOf(dir), dir)
-    assert(!after.exists(_.startsWith("#dels,")))
-    assert(ManifestFiles.entriesFromLines(after).map(_._1).toSet
+    val after = ManifestSnapshot.latest(fsOf(dir), dir)
+    assert(!after.lines.exists(_.startsWith("#dels,")))
+    assert(after.entries.map(_._1).toSet
       .subsetOf(entriesBefore))
     assert(spark.table(s"$cat.lake").filter($"day".isNotNull)
       .agg(min($"day")).head().getDate(0).toString == "2024-05-02")
@@ -370,10 +369,10 @@ class ManifestAddFilesSpec extends AnyFunSuite {
     val dir = new Path(root, "days")
     val entriesBefore = ManifestFiles.entries(fsOf(dir), dir, None).map(_._1).toSet
     spark.sql(s"DELETE FROM $cat.days WHERE day < DATE'2024-01-02'")
-    val after = ManifestFiles.latestLines(fsOf(dir), dir)
-    assert(!after.exists(_.startsWith("#dels,")),
+    val after = ManifestSnapshot.latest(fsOf(dir), dir)
+    assert(!after.lines.exists(_.startsWith("#dels,")),
       "aligned delete must not write delete vectors")
-    val entriesAfter = ManifestFiles.entriesFromLines(after).map(_._1).toSet
+    val entriesAfter = after.entries.map(_._1).toSet
     assert(entriesAfter.subsetOf(entriesBefore),
       "metadata delete must only UNLIST files, never write new ones")
     assert(spark.table(s"$cat.days").agg(min($"day")).head()

@@ -227,7 +227,7 @@ class ManifestAdmissionSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("expired"))
     // ...from every reader of the version walk, not just admission
-    val schema = ManifestFiles.schemaFor(fs, dir, None)
+    val schema = ManifestSnapshot.latest(fs, dir).requireSchema
     Seq[(String, () => Any)](
       "addedBetween" -> (() => ManifestFiles.addedBetween(fs, dir, 2, 8)),
       "availableRows" -> (() =>

@@ -45,7 +45,7 @@ class ManifestAdviceFixesSpec extends AnyFunSuite {
     val victim = dataFiles(dir).head
     val hconf = spark.sessionState.newHadoopConf()
     val fs = new Path(dir).getFileSystem(hconf)
-    val schema = ManifestFiles.schemaFor(fs, new Path(dir), None)
+    val schema = ManifestSnapshot.latest(fs, new Path(dir)).requireSchema
 
     // Stage a delete vector against the current file the way a MOR task
     // would, then COMPACT the table before the commit lands — the race
@@ -59,7 +59,7 @@ class ManifestAdviceFixesSpec extends AnyFunSuite {
       try out.write(s"$target,0\n".getBytes("UTF-8")) finally out.close()
       new ManifestDeltaBatchWrite(dir, queryId, schema,
         new SerializableHadoopConf(hconf),
-        WriteSpec.of(ManifestFiles.latestLines(fs, new Path(dir)), schema,
+        WriteSpec.of(ManifestSnapshot.latest(fs, new Path(dir)), schema,
           hconf, maintenance = false))
     }
 
@@ -140,7 +140,7 @@ class ManifestAdviceFixesSpec extends AnyFunSuite {
     val dir = new Path(s"$root/t")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val dead = ManifestFiles.segmentRefsFromRaw(
-      ManifestFiles.rawLinesOf(fs, dir, Some(2))).map(_._1)
+      ManifestSnapshot.at(fs, dir, 2).raw).map(_._1)
     assert(dead.nonEmpty)
     // 2 hours old: past the ROUND-13 horizon (1h), inside the new one
     fs.listStatus(dir).foreach { st =>

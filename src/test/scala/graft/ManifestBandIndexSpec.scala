@@ -80,7 +80,7 @@ class ManifestBandIndexSpec extends AnyFunSuite {
         spark.conf.get(s"spark.sql.catalog.$cat.root"), "bidx")
       val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
       (ManifestFiles.latestComplete(fs, d),
-        ManifestFiles.entriesFromLines(ManifestFiles.latestLines(fs, d))
+        ManifestSnapshot.latest(fs, d).entries
           .map(_._1).toSet)
     }
     val before = idxState()

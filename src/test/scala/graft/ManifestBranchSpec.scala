@@ -149,9 +149,9 @@ class ManifestBranchSpec extends AnyFunSuite {
     val dir = new Path(s"$root/t")
     val hconf = spark.sessionState.newHadoopConf()
     val fs = dir.getFileSystem(hconf)
-    val wRaw = ManifestFiles.rawLinesOf(fs, dir, Some(3), Some("audit"))
+    val wRaw = ManifestSnapshot.at(fs, dir, 3, Some("audit")).raw
       .filterNot(_.startsWith("#branchbase,"))
-    val wSchema = ManifestFiles.schemaFor(fs, dir, Some(3), Some("audit"))
+    val wSchema = ManifestSnapshot.at(fs, dir, 3, Some("audit")).requireSchema
     ManifestFiles.publishRawV(fs, hconf, dir,
       (_, v) => { require(v == 3, s"claimed $v"); (wRaw, Nil) }, wSchema)
     // the intermediate state is a CONSISTENT audited prefix, never torn

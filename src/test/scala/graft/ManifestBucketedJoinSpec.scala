@@ -145,7 +145,7 @@ class ManifestBucketedJoinSpec extends AnyFunSuite {
     writeBucketed(root, "chk", 500, "k", 4)
     val dir = new org.apache.hadoop.fs.Path(s"$root/chk")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val buckets = ManifestFiles.bucketsFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val buckets = ManifestSnapshot.latest(fs, dir).buckets
     assert(buckets.nonEmpty)
     assert(buckets.values.forall { case (pos, n, id) =>
       pos == 0 && n == 4 && id >= 0 && id < 4 })

@@ -318,7 +318,7 @@ class ManifestChangeFeedSpec extends AnyFunSuite {
     val many = (1 to ManifestFiles.MaintKeep + 88)
       .map(ManifestFiles.maintLine).toArray
     val carried = ManifestFiles.carryMaint(many, Array("entry.parquet,10"))
-    val kept = ManifestFiles.maintFromLines(carried)
+    val kept = ManifestSnapshot.ofLines(carried).maint
     assert(kept.size == ManifestFiles.MaintKeep)
     assert(kept.min == 89 && kept.max == ManifestFiles.MaintKeep + 88,
       "the cap must retire the OLDEST markers")

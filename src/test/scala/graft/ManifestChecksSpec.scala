@@ -146,10 +146,10 @@ class ManifestChecksSpec extends AnyFunSuite {
     assert(msg.contains("positive"), msg)
     append(Seq((2L, 1.0)).toDF("k", "v"))
     val dir = new org.apache.hadoop.fs.Path(root, "t")
-    val lines = ManifestFiles.latestLines(
+    val snap = ManifestSnapshot.latest(
       dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
-    assert(!lines.exists(_.startsWith("#maint,")),
-      s"a row-bringing write is no maintenance step: ${lines.toSeq}")
+    assert(!snap.lines.exists(_.startsWith("#maint,")),
+      s"a row-bringing write is no maintenance step: ${snap.lines.toSeq}")
     assert(spark.table(s"$cat.t").count() == 1L)
   }
 

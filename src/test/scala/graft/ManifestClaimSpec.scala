@@ -40,7 +40,7 @@ class ManifestClaimSpec extends AnyFunSuite {
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     // plan and stage the append against the one-column schema
     val write = new ManifestBatchWrite(s"$root/t", "stale-append", -1, schema,
-      truncate = false, conf, WriteSpec.of(ManifestFiles.latestLines(fsOf(dir), dir),
+      truncate = false, conf, WriteSpec.of(ManifestSnapshot.latest(fsOf(dir), dir),
         schema, conf.value, maintenance = false))
     val factory = write.createBatchWriterFactory(new PhysicalWriteInfo {
       override def numPartitions(): Int = 1
@@ -77,11 +77,11 @@ class ManifestClaimSpec extends AnyFunSuite {
           false
         else super.rename(src, dst)
     }
-    val schema = ManifestFiles.schemaFor(real, dir, None)
+    val schema = ManifestSnapshot.latest(real, dir).requireSchema
     val conf = spark.sessionState.newHadoopConf()
     flaky.setConf(conf)
     val attempt = scala.util.Try(ManifestFiles.publishSnapshot(flaky, conf, dir,
-      prev => prev :+ "part-extra.parquet,1", schema))
+      prev => prev.lines :+ "part-extra.parquet,1", schema))
     assert(failed.get())
     assert(attempt.isFailure, s"landed version ${attempt.toOption}")
     assert(ManifestFiles.versions(real, dir).max == head,

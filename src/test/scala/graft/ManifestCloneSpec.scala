@@ -38,7 +38,7 @@ class ManifestCloneSpec extends AnyFunSuite {
   private def entries(root: String, t: String): Seq[String] = {
     val dir = new org.apache.hadoop.fs.Path(root, t)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestFiles.entriesFromLines(ManifestFiles.latestLines(fs, dir))
+    ManifestSnapshot.latest(fs, dir).entries
       .map(_._1).toSeq
   }
 
@@ -60,10 +60,10 @@ class ManifestCloneSpec extends AnyFunSuite {
       n.contains(":/")), es.mkString(","))
     val dir = new org.apache.hadoop.fs.Path(root, "dev")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = ManifestFiles.latestLines(fs, dir)
-    assert(ManifestFiles.statsFromLines(lines).keySet == es.toSet,
+    val snap = ManifestSnapshot.latest(fs, dir)
+    assert(snap.stats.keySet == es.toSet,
       "per-file #stats must carry, re-keyed to the absolute names")
-    assert(ManifestNdv.fromLines(lines).keySet == es.toSet,
+    assert(ManifestNdv.fromLines(snap.lines).keySet == es.toSet,
       "per-file #ndv sketches must carry too")
     // identical content
     assert(spark.table(s"$cat.dev").orderBy($"k").collect().toSeq ==

@@ -59,10 +59,10 @@ class ManifestEqDeleteSpec extends AnyFunSuite {
     assert(t.filter($"k" >= 50 && !$"v".startsWith("up1-")).count() == 0L)
     // no data rewrite: every original entry is still listed, the new
     // lines are the upsert's own files + a KB-scale eqdel file
-    val lines = ManifestFiles.latestLines(fs, dir)
+    val snap = ManifestSnapshot.latest(fs, dir)
     assert(baseEntries.subsetOf(
-      ManifestFiles.entriesFromLines(lines).map(_._1).toSet))
-    assert(ManifestFiles.eqDeleteFilesFromLines(lines).length >= 1)
+      snap.entries.map(_._1).toSet))
+    assert(snap.eqDeleteFiles.length >= 1)
     // time travel reads the pre-upsert image
     assert(spark.read.format("graft-manifest").option("path", dir.toString)
       .option("versionAsOf", "2").load()
@@ -104,9 +104,9 @@ class ManifestEqDeleteSpec extends AnyFunSuite {
     // compact MATERIALIZES: eqdels gone, values identical
     val before = spark.table(s"$cat.state").orderBy($"k").collect().toSeq
     spark.sql(s"CALL $cat.system.compact('state', 2)").collect()
-    val after = ManifestFiles.latestLines(fs, dir)
-    assert(ManifestFiles.eqDeleteFilesFromLines(after).isEmpty)
-    assert(!after.exists(_.startsWith("#eqdels,")))
+    val after = ManifestSnapshot.latest(fs, dir)
+    assert(after.eqDeleteFiles.isEmpty)
+    assert(!after.lines.exists(_.startsWith("#eqdels,")))
     assert(spark.table(s"$cat.state").orderBy($"k").collect().toSeq == before)
   }
 
@@ -266,7 +266,7 @@ class ManifestEqDeleteSpec extends AnyFunSuite {
     assert(state == Set(0L -> "a0", 1L -> "b1", 5L -> "a5", 6L -> "b6"))
 
     // the published schema never holds the marker
-    assert(ManifestFiles.schemaFor(fs, dir, None).fieldNames.toSeq ==
+    assert(ManifestSnapshot.latest(fs, dir).requireSchema.fieldNames.toSeq ==
       Seq("k", "v", "n"))
     assert(spark.table(s"$cat.g").columns.toSeq == Seq("k", "v", "n"))
 

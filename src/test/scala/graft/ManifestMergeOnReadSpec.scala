@@ -134,9 +134,9 @@ class ManifestMergeOnReadSpec extends AnyFunSuite {
     assert(rowsBefore == rowsAfter)
     val fs = new org.apache.hadoop.fs.Path(s"$root/t")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = ManifestFiles.latestLines(fs,
+    val snap = ManifestSnapshot.latest(fs,
       new org.apache.hadoop.fs.Path(s"$root/t"))
-    assert(ManifestFiles.deleteFilesFromLines(lines).isEmpty,
+    assert(snap.deleteFiles.isEmpty,
       "compaction must drop the #dels lines")
     // vacuum now reclaims the orphaned delete files and old data files
     spark.sql(s"CALL $cat.system.vacuum('t', 1)").collect()
@@ -162,9 +162,9 @@ class ManifestMergeOnReadSpec extends AnyFunSuite {
     assert(dataFiles(s"$root/t") == data, "data files must be untouched")
     val fs = new org.apache.hadoop.fs.Path(s"$root/t")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = ManifestFiles.latestLines(fs,
+    val snap = ManifestSnapshot.latest(fs,
       new org.apache.hadoop.fs.Path(s"$root/t"))
-    assert(ManifestFiles.deleteFilesFromLines(lines).length == 1)
+    assert(snap.deleteFiles.length == 1)
     assert(spark.sql(s"SELECT count(*), sum(k) FROM $cat.t").head() == expect)
     // old delete files age out once no retained version references them
     spark.sql(s"CALL $cat.system.vacuum('t', 1)").collect()
@@ -202,9 +202,9 @@ class ManifestMergeOnReadSpec extends AnyFunSuite {
       .head().getLong(0) == 0L)
     val hfs = new org.apache.hadoop.fs.Path(s"$root/t")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = ManifestFiles.latestLines(hfs,
+    val snap = ManifestSnapshot.latest(hfs,
       new org.apache.hadoop.fs.Path(s"$root/t"))
-    assert(ManifestFiles.deleteFilesFromLines(lines).length >= 2,
+    assert(snap.deleteFiles.length >= 2,
       "both committers' delete files must be in the merged snapshot")
   }
 

@@ -53,10 +53,10 @@ class ManifestMetadataDeleteSpec extends AnyFunSuite {
       .toSeq == Seq(500L, 300L))
     val fs = new org.apache.hadoop.fs.Path(s"$root/t")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = ManifestFiles.latestLines(fs,
+    val snap = ManifestSnapshot.latest(fs,
       new org.apache.hadoop.fs.Path(s"$root/t"))
-    assert(ManifestFiles.entriesFromLines(lines).length == 5)
-    assert(ManifestFiles.deleteFilesFromLines(lines).isEmpty)
+    assert(snap.entries.length == 5)
+    assert(snap.deleteFiles.isEmpty)
     // a second aligned delete with a compound predicate
     spark.sql(s"DELETE FROM $cat.t WHERE k >= 700 AND s IS NOT NULL")
     assert(spark.sql(s"SELECT count(*), max(k) FROM $cat.t").head()
@@ -91,18 +91,18 @@ class ManifestMetadataDeleteSpec extends AnyFunSuite {
     assert(dataFiles(root) == before)
     val fs = new org.apache.hadoop.fs.Path(s"$root/t")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = ManifestFiles.latestLines(fs,
+    val snap = ManifestSnapshot.latest(fs,
       new org.apache.hadoop.fs.Path(s"$root/t"))
-    assert(ManifestFiles.deleteFilesFromLines(lines).isEmpty,
+    assert(snap.deleteFiles.isEmpty,
       "aligned delete on a MOR table needs no delete file either")
     assert(spark.sql(s"SELECT count(*) FROM $cat.t").head().getLong(0) == 200L)
     // misaligned on MOR → positional delete file, still no rewrite
     spark.sql(s"DELETE FROM $cat.t WHERE k >= 150")
     assert(dataFiles(root) == before -- // dropped entries still on disk
       Set.empty)
-    val lines2 = ManifestFiles.latestLines(fs,
+    val lines2 = ManifestSnapshot.latest(fs,
       new org.apache.hadoop.fs.Path(s"$root/t"))
-    assert(ManifestFiles.deleteFilesFromLines(lines2).nonEmpty)
+    assert(lines2.deleteFiles.nonEmpty)
     assert(spark.sql(s"SELECT count(*), max(k) FROM $cat.t").head()
       .toSeq == Seq(150L, 149L))
   }

@@ -85,8 +85,7 @@ class ManifestNestedStatsSpec extends AnyFunSuite {
       .option("path", path).save()
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = ManifestFiles.statsFromLines(ManifestFiles.linesOf(fs,
-      new org.apache.hadoop.fs.Path(path), None))
+    val stats = ManifestSnapshot.latest(fs, new org.apache.hadoop.fs.Path(path)).stats
     assert(stats.size == 2)
     // long string bounds are truncated (16 cp + increment headroom)
     val bounds = stats.values.flatMap(_.nested.get("1.0")).toSeq

@@ -76,9 +76,9 @@ class ManifestParquetOnlySpec extends AnyFunSuite {
     assert(spark.table(s"$cat.t").count() == 20L)
     val dir = new Path(root, "t")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = ManifestFiles.latestLines(fs, dir)
-    assert(!lines.exists(_.startsWith("#tableconf,format")))
-    assert(ManifestFiles.entriesFromLines(lines).map(_._1)
+    val snap = ManifestSnapshot.latest(fs, dir)
+    assert(!snap.lines.exists(_.startsWith("#tableconf,format")))
+    assert(snap.entries.map(_._1)
       .forall(_.endsWith(".parquet")))
   }
 
@@ -92,7 +92,7 @@ class ManifestParquetOnlySpec extends AnyFunSuite {
     val hconf = spark.sessionState.newHadoopConf()
     val fs = dir.getFileSystem(hconf)
     ManifestFiles.publishSnapshotV(fs, hconf, dir,
-      (prev, _) => prev :+ "part-00000-legacy,3",
+      (prev, _) => prev.lines :+ "part-00000-legacy,3",
       new StructType().add("k", LongType))
     val e = intercept[Exception](spark.read.format("graft-manifest")
       .option("path", path).load().collect())

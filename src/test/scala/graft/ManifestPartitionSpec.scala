@@ -74,8 +74,8 @@ class ManifestPartitionSpec extends AnyFunSuite {
       "aligned retention delete must not write or rewrite any file")
     val fs = new Path(s"$root/ev")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = ManifestFiles.latestLines(fs, new Path(s"$root/ev"))
-    assert(ManifestFiles.deleteFilesFromLines(lines).isEmpty)
+    val snap = ManifestSnapshot.latest(fs, new Path(s"$root/ev"))
+    assert(snap.deleteFiles.isEmpty)
     val expected = (0 until 1000).count(i => i * 7919 % 10 >= 3)
     assert(spark.sql(s"SELECT count(*) FROM $cat.ev").head().getLong(0)
       == expected.toLong)

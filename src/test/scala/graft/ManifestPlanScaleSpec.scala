@@ -37,7 +37,7 @@ class ManifestPlanScaleSpec extends AnyFunSuite {
               Some((lo + 9).toString)))))
       }.toArray
       ManifestFiles.publishSnapshotV(fs, hconf, dir,
-        (prev, _) => prev ++ lines, schema)
+        (prev, _) => prev.lines ++ lines, schema)
     }
   }
 
@@ -66,7 +66,7 @@ class ManifestPlanScaleSpec extends AnyFunSuite {
     val dirB = new Path(rootB)
     val fsB = dirB.getFileSystem(spark.sessionState.newHadoopConf())
     val totalSegsB = ManifestFiles.segmentRefsFromRaw(
-      ManifestFiles.rawLinesOf(fsB, dirB, None)).size
+      ManifestSnapshot.latest(fsB, dirB).raw).size
     val totalEntriesB = ManifestFiles.entries(fsB, dirB, None).length
     assert(totalEntriesB == 20000)
     assert(totalSegsB >= 10, s"expected a segmented big table, " +
@@ -114,7 +114,7 @@ class ManifestPlanScaleSpec extends AnyFunSuite {
           ManifestHist.line(name, Seq(0 -> ((sample, 10L)))))
       }.toArray
       ManifestFiles.publishSnapshotV(fs, hconf, dir,
-        (prev, _) => prev ++ lines, schema)
+        (prev, _) => prev.lines ++ lines, schema)
     }
   }
 

@@ -54,8 +54,7 @@ class ManifestReplaceTableSpec extends AnyFunSuite {
         .writeTo(s"$cat.t").append()
       val dir = new Path(root, "t")
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      assert(ManifestFiles.sortedFromLines(
-        ManifestFiles.linesOf(fs, dir, None)).nonEmpty)
+      assert(ManifestSnapshot.latest(fs, dir).sorted.nonEmpty)
       // time travel still reads the pre-replace image with ITS schema
       val old = spark.read.format("graft-manifest")
         .option("path", dir.toString).option("versionAsOf", "2").load()

@@ -88,8 +88,8 @@ class ManifestRowLineageSpec extends AnyFunSuite {
     assert(updated == before.keys.count(_ % 3 == 0))
     // and the rewrite files are marked #ridcol
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = ManifestFiles.latestLines(fs, new Path(s"$root/t"))
-    assert(ManifestFiles.ridColFromLines(lines).nonEmpty,
+    val snap = ManifestSnapshot.latest(fs, new Path(s"$root/t"))
+    assert(snap.ridCol.nonEmpty,
       "COW rewrite files must carry the materialized _rid marker")
   }
 
@@ -134,9 +134,9 @@ class ManifestRowLineageSpec extends AnyFunSuite {
     val after = idsOf(withIds(cat))
     assert(after == before, "compaction re-minted row identities")
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = ManifestFiles.latestLines(fs, new Path(s"$root/t"))
-    val entries = ManifestFiles.entriesFromLines(lines).map(_._1).toSet
-    assert(entries.subsetOf(ManifestFiles.ridColFromLines(lines)),
+    val snap = ManifestSnapshot.latest(fs, new Path(s"$root/t"))
+    val entries = snap.entries.map(_._1).toSet
+    assert(entries.subsetOf(snap.ridCol),
       "every compacted file must be #ridcol-marked")
     // observability: t$files surfaces the lineage columns
     val meta = spark.sql(
@@ -287,8 +287,8 @@ class ManifestRowLineageSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT count(*) FROM $cat.t WHERE v >= 7000.0")
       .collect()(0).getLong(0) == 125)
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = ManifestFiles.latestLines(fs, new Path(s"$root/t"))
-    assert(ManifestFiles.ridColFromLines(lines).nonEmpty,
+    val snap = ManifestSnapshot.latest(fs, new Path(s"$root/t"))
+    assert(snap.ridCol.nonEmpty,
       "the MOR update's replacement file must carry the materialized ids")
     // and the CDF pairs the update legs on PURE identity
     val feed = spark.read.format("graft-manifest")
@@ -333,8 +333,8 @@ class ManifestRowLineageSpec extends AnyFunSuite {
       s"REPLACE TABLE rewound the mark: min=${afterEmpty.values.min} " +
         s"< $markAfterRtas")
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = ManifestFiles.latestLines(fs, new Path(s"$root/t"))
-    assert(ManifestFiles.rowIdNextFromLines(lines) >= markAfterRtas + 50)
+    val snap = ManifestSnapshot.latest(fs, new Path(s"$root/t"))
+    assert(snap.rowIdNext >= markAfterRtas + 50)
   }
 
   // ---- `_last_updated_version` (round 15 — Iceberg v3's second

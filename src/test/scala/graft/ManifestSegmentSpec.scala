@@ -40,14 +40,14 @@ class ManifestSegmentSpec extends AnyFunSuite {
     append(path, 0, 64000, parts = 64)                            // v1: 64 files
     val dir = new Path(path)
     val fs = fsOf(dir)
-    val raw1 = ManifestFiles.rawLinesOf(fs, dir, Some(1))
+    val raw1 = ManifestSnapshot.at(fs, dir, 1).raw
     assert(ManifestFiles.isListFormat(raw1))
     val segs1 = ManifestFiles.segmentRefsFromRaw(raw1)
     assert(segs1.nonEmpty, "64 files must spill into a segment")
     val bulkBytes = segs1.map(s => rawBytes(fs, new Path(dir, s._1))).sum
 
     append(path, 64000, 64010, parts = 1)                         // v2: 1 file
-    val raw2 = ManifestFiles.rawLinesOf(fs, dir, Some(2))
+    val raw2 = ManifestSnapshot.at(fs, dir, 2).raw
     val segs2 = ManifestFiles.segmentRefsFromRaw(raw2)
     // v1's segments are re-referenced verbatim — never rewritten
     assert(segs1.map(_._1).toSet.subsetOf(segs2.map(_._1).toSet),
@@ -71,7 +71,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     (0 until 80).foreach(i => append(path, i * 10, i * 10 + 10))
     val dir = new Path(path)
     val fs = fsOf(dir)
-    val raw = ManifestFiles.rawLinesOf(fs, dir, Some(80))
+    val raw = ManifestSnapshot.at(fs, dir, 80).raw
     assert(ManifestFiles.isListFormat(raw))
     val segs = ManifestFiles.segmentRefsFromRaw(raw)
     assert(segs.length <= ManifestFiles.MaxSegments,
@@ -97,7 +97,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     try out.write(legacy.sorted.mkString("\n").getBytes("UTF-8"))
     finally out.close()
     assert(!ManifestFiles.isListFormat(
-      ManifestFiles.rawLinesOf(fs, dir, Some(1))))
+      ManifestSnapshot.at(fs, dir, 1).raw))
     // reads pass through
     assert(spark.read.format("graft-manifest").option("path", path)
       .load().count() == 100L)
@@ -106,7 +106,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     // the next commit converts: v2 is a list and the table stays exact
     append(path, 100, 120)
     assert(ManifestFiles.isListFormat(
-      ManifestFiles.rawLinesOf(fs, dir, Some(2))))
+      ManifestSnapshot.at(fs, dir, 2).raw))
     assert(spark.read.format("graft-manifest").option("path", path)
       .load().count() == 120L)
   }
@@ -123,11 +123,11 @@ class ManifestSegmentSpec extends AnyFunSuite {
     val dir = new Path(root, "t")
     val fs = fsOf(dir)
     val mainSegs = ManifestFiles.segmentRefsFromRaw(
-      ManifestFiles.rawLinesOf(fs, dir, Some(2))).map(_._1).toSet
+      ManifestSnapshot.at(fs, dir, 2).raw).map(_._1).toSet
     assert(mainSegs.nonEmpty)
     // branch fork: same segments, tiny list
     spark.sql(s"CALL $cat.system.create_branch('t', 'b')")        // b v2
-    val branchRaw = ManifestFiles.rawLinesOf(fs, dir, Some(2), Some("b"))
+    val branchRaw = ManifestSnapshot.at(fs, dir, 2, Some("b")).raw
     assert(ManifestFiles.segmentRefsFromRaw(branchRaw).map(_._1).toSet
       == mainSegs)
     assert(branchRaw.length < 20)
@@ -137,12 +137,12 @@ class ManifestSegmentSpec extends AnyFunSuite {
       .option("path", dir.toString).option("branch", "b").save()  // b v3
     spark.sql(s"CALL $cat.system.fast_forward('t', 'b')")         // main v3
     val ffSegs = ManifestFiles.segmentRefsFromRaw(
-      ManifestFiles.rawLinesOf(fs, dir, Some(3))).map(_._1).toSet
+      ManifestSnapshot.at(fs, dir, 3).raw).map(_._1).toSet
     assert(mainSegs.subsetOf(ffSegs))
     assert(spark.table(s"$cat.t").count() == 50010L)
     // rollback: re-references version 2's segments verbatim
     spark.sql(s"CALL $cat.system.rollback('t', 2)")               // v4
-    val rbRaw = ManifestFiles.rawLinesOf(fs, dir, Some(4))
+    val rbRaw = ManifestSnapshot.at(fs, dir, 4).raw
     assert(ManifestFiles.segmentRefsFromRaw(rbRaw).map(_._1).toSet == mainSegs)
     assert(spark.table(s"$cat.t").count() == 50000L)
   }
@@ -162,9 +162,9 @@ class ManifestSegmentSpec extends AnyFunSuite {
     val dir = new Path(path)
     val fs = fsOf(dir)
     val deadSegs = ManifestFiles.segmentRefsFromRaw(
-      ManifestFiles.rawLinesOf(fs, dir, Some(1))).map(_._1)
+      ManifestSnapshot.at(fs, dir, 1).raw).map(_._1)
     val liveSegs = ManifestFiles.segmentRefsFromRaw(
-      ManifestFiles.rawLinesOf(fs, dir, Some(2))).map(_._1)
+      ManifestSnapshot.at(fs, dir, 2).raw).map(_._1)
     assert(deadSegs.nonEmpty && liveSegs.nonEmpty)
     // age every segment past the safety window (>= 24h since round 14 —
     // a stalled claim loop must never lose its segment), then expire v1
@@ -190,7 +190,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     append(path, 0, 64000, parts = 48)                            // v1
     val dir = new Path(path)
     val fs = fsOf(dir)
-    val raw1 = ManifestFiles.rawLinesOf(fs, dir, Some(1))
+    val raw1 = ManifestSnapshot.at(fs, dir, 1).raw
     // the segment carries an aggregate summary whose union covers the
     // member files' ranges
     val sums = raw1.filter(_.startsWith("#segstats,"))
@@ -293,8 +293,8 @@ class ManifestSegmentSpec extends AnyFunSuite {
     }
     val dir = new Path(path)
     val fs = fsOf(dir)
-    val lines = ManifestFiles.latestLines(fs, dir)
-    val txns = lines.filter(_.startsWith("#txn,"))
+    val snap = ManifestSnapshot.latest(fs, dir)
+    val txns = snap.lines.filter(_.startsWith("#txn,"))
     assert(txns.length == 1, s"expected 1 deduped #txn, got: ${txns.toSeq}")
     // exactly-once still holds: a no-op re-drain adds nothing
     val before = spark.read.format("graft-manifest").option("path", path)

@@ -280,7 +280,7 @@ class ManifestSkippingSpec extends AnyFunSuite {
     val dir = new org.apache.hadoop.fs.Path(s"$root/t")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries = ManifestFiles.entries(fs, dir, None).map(_._1).toSet
-    val stats = ManifestFiles.statsFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val stats = ManifestSnapshot.latest(fs, dir).stats
     assert(stats.keySet == entries,
       s"stats lines out of sync with entries: ${stats.keySet} vs $entries")
     // post-delete global max must reflect the rewrite
@@ -365,7 +365,7 @@ class ManifestSkippingSpec extends AnyFunSuite {
     assert(remaining.agg(max($"k")).collect()(0).getLong(0) == 749L)
     val dir = new org.apache.hadoop.fs.Path(s"$root/t")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = ManifestFiles.statsFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val stats = ManifestSnapshot.latest(fs, dir).stats
     assert(stats.values.flatMap(_.cols(0).max).map(_.toLong).max == 749L)
   }
 }

@@ -76,7 +76,7 @@ class ManifestSortOrderSpec extends AnyFunSuite {
     val fs = fsOf(dir)
     val entries = ManifestFiles.entries(fs, dir, None).map(_._1)
     assert(entries.length == 6, s"3 appends × 2 tasks, got ${entries.length}")
-    val sorted = ManifestFiles.sortedFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val sorted = ManifestSnapshot.latest(fs, dir).sorted
     // EVERY file earned its verified mark on the leading column (phys 0)
     assert(entries.forall(f => sorted.get(f).map(_._1).contains(0)),
       s"files missing #sorted marks: ${entries.filterNot(sorted.contains).toSeq}")
@@ -95,8 +95,7 @@ class ManifestSortOrderSpec extends AnyFunSuite {
     val res = spark.sql(s"CALL $cat.system.compact('ev', 6)").collect()(0)
     assert(res.getInt(2) == 6, s"expected 6 files after compact, got $res")
     val after = ManifestFiles.entries(fs, dir, None).map(_._1)
-    val sorted2 = ManifestFiles.sortedFromLines(
-      ManifestFiles.linesOf(fs, dir, None))
+    val sorted2 = ManifestSnapshot.latest(fs, dir).sorted
     assert(after.forall(f => sorted2.get(f).map(_._1).contains(0)),
       "compacted files must keep verified #sorted marks")
     // now range-disjoint: the same slice skips most files
@@ -125,7 +124,7 @@ class ManifestSortOrderSpec extends AnyFunSuite {
     val dir = new Path(root, "logs")
     val fs = fsOf(dir)
     val entries = ManifestFiles.entries(fs, dir, None).map(_._1)
-    val sorted = ManifestFiles.sortedFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val sorted = ManifestSnapshot.latest(fs, dir).sorted
     // every day-pure file is ALSO verified-sorted on k (phys 1): the
     // required ordering is (partition cols, sort cols), and each split
     // file holds one day
@@ -135,7 +134,7 @@ class ManifestSortOrderSpec extends AnyFunSuite {
     // day-purity intact (the partition layout still governs splitting):
     // one file per day per task; with the ordered distribution the day
     // dimension arrives clustered, so the count stays near one per day
-    val stats = ManifestFiles.statsFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val stats = ManifestSnapshot.latest(fs, dir).stats
     entries.foreach { f =>
       val cs = stats(f).cols(0)
       assert(cs.min == cs.max, s"file $f spans days ${cs.min}..${cs.max}")
@@ -172,7 +171,7 @@ class ManifestSortOrderSpec extends AnyFunSuite {
     val dir = new Path(root, "ev")
     val fs = fsOf(dir)
     val entries = ManifestFiles.entries(fs, dir, None).map(_._1)
-    val sorted = ManifestFiles.sortedFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val sorted = ManifestSnapshot.latest(fs, dir).sorted
     assert(entries.nonEmpty)
     // every file carries a DIRECTION-stamped verified mark (desc, nl)
     assert(entries.forall(f => sorted.get(f).contains((0, true, true))),
@@ -203,7 +202,7 @@ class ManifestSortOrderSpec extends AnyFunSuite {
       .write.mode("append").format("graft-manifest")
       .option("path", dir.toString).save()
     val after = ManifestFiles.entries(fs, dir, None).map(_._1)
-    val marks2 = ManifestFiles.sortedFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val marks2 = ManifestSnapshot.latest(fs, dir).sorted
     val fresh = after.filterNot(entries.contains)
     assert(fresh.nonEmpty)
     // the writer re-sorts per task under the declared order, so even
@@ -226,13 +225,12 @@ class ManifestSortOrderSpec extends AnyFunSuite {
       .coalesce(1).writeTo(s"$cat.t").append()
     val dir = new Path(root, "t")
     val fs = fsOf(dir)
-    assert(ManifestFiles.sortedFromLines(
-      ManifestFiles.linesOf(fs, dir, None)).values.map(_._1).toSet == Set(0))
+    assert(ManifestSnapshot.latest(fs, dir).sorted.values.map(_._1).toSet == Set(0))
 
     spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES('write.sort-order'='b')")
     spark.range(100).select(($"id" * 7 % 100).as("a"), $"id".as("b"))
       .coalesce(1).writeTo(s"$cat.t").append()
-    val marks1 = ManifestFiles.sortedFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val marks1 = ManifestSnapshot.latest(fs, dir).sorted
     assert(marks1.values.map(_._1).toSet == Set(0, 1),
       "old files keep their marks; the new file marks the new order")
 
@@ -242,8 +240,7 @@ class ManifestSortOrderSpec extends AnyFunSuite {
     assert(!show1.contains("write.sort-order"))
     spark.range(10).select($"id".as("a"), $"id".as("b"))
       .coalesce(1).writeTo(s"$cat.t").append()
-    assert(ManifestFiles.sortedFromLines(
-      ManifestFiles.linesOf(fs, dir, None)).size == marks1.size,
+    assert(ManifestSnapshot.latest(fs, dir).sorted.size == marks1.size,
       "a cleared order must not mark new files")
   }
 
@@ -339,7 +336,6 @@ class ManifestSortOrderSpec extends AnyFunSuite {
     val entries = ManifestFiles.entries(fsOf(dir), dir, None)
     assert(entries.length == 3,
       s"per-task sort must keep 3 input partitions → 3 files, got ${entries.length}")
-    assert(ManifestFiles.sortedFromLines(
-      ManifestFiles.linesOf(fsOf(dir), dir, None)).size == 3)
+    assert(ManifestSnapshot.latest(fsOf(dir), dir).sorted.size == 3)
   }
 }

@@ -87,7 +87,7 @@ class ManifestSortedJoinSpec extends AnyFunSuite {
     writeSorted(root, "t", 2000)
     val dir = new org.apache.hadoop.fs.Path(s"$root/t")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sorted1 = ManifestFiles.sortedFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val sorted1 = ManifestSnapshot.latest(fs, dir).sorted
     val entries1 = ManifestFiles.entries(fs, dir, None).map(_._1)
     assert(entries1.nonEmpty && entries1.forall(sorted1.contains),
       "every first-commit file must be verified sorted")
@@ -123,6 +123,6 @@ class ManifestSortedJoinSpec extends AnyFunSuite {
       .option("bucketBy", "k").option("buckets", 4).save()
     val dir = new org.apache.hadoop.fs.Path(s"$root/u")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(ManifestFiles.sortedFromLines(ManifestFiles.linesOf(fs, dir, None)).isEmpty)
+    assert(ManifestSnapshot.latest(fs, dir).sorted.isEmpty)
   }
 }

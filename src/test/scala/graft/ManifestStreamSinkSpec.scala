@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.ManifestFiles
+import graft.sources.{ManifestFiles, ManifestSnapshot}
 
 /** Native streaming WRITES into the manifest table format
   * (`writeStream.format("graft-manifest")` — ManifestStreamingWrite):
@@ -58,8 +58,8 @@ class ManifestStreamSinkSpec extends AnyFunSuite {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     assert(ManifestFiles.versions(fs, p).sorted == Seq(1, 2))
     // The txn marker rides the snapshot and names the last epoch.
-    val lines = ManifestFiles.latestLines(fs, p)
-    assert(lines.count(_.startsWith("#txn,")) == 1, lines.mkString("|"))
+    val snap = ManifestSnapshot.latest(fs, p)
+    assert(snap.lines.count(_.startsWith("#txn,")) == 1, snap.lines.mkString("|"))
 
     // Restart replay: drop the checkpoint's newest commit record so the
     // engine re-runs the last batch, then redeliver its data.

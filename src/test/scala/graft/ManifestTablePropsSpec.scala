@@ -30,8 +30,8 @@ class ManifestTablePropsSpec extends AnyFunSuite {
     * (a counter, not a declaration). */
   private def conf(root: String, t: String): Seq[String] = {
     val dir = new Path(s"$root/$t")
-    ManifestFiles.latestLines(dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
-      .filter(_.startsWith("#tableconf,"))
+    ManifestSnapshot.latest(dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
+      .lines.filter(_.startsWith("#tableconf,"))
       .filterNot(_.startsWith("#tableconf,rowidnext,")).toSeq.sorted
   }
 

@@ -239,9 +239,9 @@ class ManifestTransformSpec extends AnyFunSuite {
     spans.foreach(r => assert(r.getLong(1) == 1L, "file spans several days"))
     val dir = new org.apache.hadoop.fs.Path(s"$root/f")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = ManifestFiles.latestLines(fs, dir)
-    val entries = ManifestFiles.entriesFromLines(lines).map(_._1).toSet
-    val bucketed = ManifestFiles.bucketsFromLines(lines).keySet
+    val snap = ManifestSnapshot.latest(fs, dir)
+    val entries = snap.entries.map(_._1).toSet
+    val bucketed = snap.buckets.keySet
     assert(entries.subsetOf(bucketed), "every split file records its bucket")
     // bucket SPJ still holds on the mixed table
     noBroadcast {

@@ -127,7 +127,7 @@ class ManifestVariantSpec extends AnyFunSuite {
     // no stats bounds recorded for the variant slot (non-orderable)
     val dir = new Path(root, "docs")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val stats = ManifestFiles.statsFromLines(ManifestFiles.latestLines(fs, dir))
+    val stats = ManifestSnapshot.latest(fs, dir).stats
     assert(stats.nonEmpty)
     stats.values.foreach(s => assert(!s.cols.contains(1),
       s"variant slot must carry no stats bounds, got ${s.cols.get(1)}"))

@@ -86,7 +86,7 @@ class ManifestVectorSpec extends AnyFunSuite {
     // non-orderable columns have NO ColStats entry at all
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val stats = ManifestFiles.statsFromLines(ManifestFiles.linesOf(fs, dir, None))
+    val stats = ManifestSnapshot.latest(fs, dir).stats
     assert(stats.nonEmpty)
     stats.values.foreach { fsStats =>
       assert(fsStats.cols.keySet == Set(0),

@@ -112,8 +112,7 @@ class ManifestWidenSpec extends AnyFunSuite {
     spark.sql(s"CALL $cat.system.compact('m', 2, 'g')")
     val dir = new Path(root, "m")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(ManifestFiles.widenedFromLines(
-      ManifestFiles.latestLines(fs, dir)).isEmpty,
+    assert(ManifestSnapshot.latest(fs, dir).widened.isEmpty,
       "truncating rewrite must clear the widened marker")
     val q2 = spark.table(s"$cat.m").filter($"x" > lit(1e9d)).agg(count(lit(1)))
     assert(q2.collect()(0).getLong(0) == 0L)

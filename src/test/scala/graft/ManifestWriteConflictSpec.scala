@@ -43,7 +43,7 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
   /** The table's write spec from its head, as the planner derives it. */
   private def specOf(path: String, conf: SerializableHadoopConf): WriteSpec = {
     val dir = new Path(path)
-    WriteSpec.of(ManifestFiles.latestLines(dir.getFileSystem(conf.value), dir),
+    WriteSpec.of(ManifestSnapshot.latest(dir.getFileSystem(conf.value), dir),
       schema, conf.value, maintenance = false)
   }
 
@@ -82,7 +82,7 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
 
   private def deleteState(fs: org.apache.hadoop.fs.FileSystem,
       dir: Path): Set[String] =
-    ManifestFiles.latestLines(fs, dir).filter(l =>
+    ManifestSnapshot.latest(fs, dir).lines.filter(l =>
       l.startsWith("#dels,") || l.startsWith("#eqdels,")).toSet
 
   test("a replacing commit whose target file a concurrent commit " +
@@ -228,15 +228,15 @@ class ManifestWriteConflictSpec extends AnyFunSuite {
     spark.range(5000, 5010).select($"id".as("k"))
       .writeTo(s"$cat.t").append() // v3, the blind append
     staged.commit() // v4, the compaction
-    val lines = ManifestFiles.latestLines(fs, dir)
-    val appendFile = ManifestFiles.luvFromLines(lines)
+    val snap = ManifestSnapshot.latest(fs, dir)
+    val appendFile = snap.luv
       .collectFirst { case (n, 3) => n }
     assert(appendFile.isDefined,
       s"the append's #luv,<file>,3 must survive the compaction " +
-        s"verbatim; luvs now: ${ManifestFiles.luvFromLines(lines)}")
-    assert(ManifestHist.fromLines(lines).contains(appendFile.get),
+        s"verbatim; luvs now: ${snap.luv}")
+    assert(ManifestHist.fromLines(snap.lines).contains(appendFile.get),
       "the append's #hist sample must survive too")
-    assert(ManifestFiles.firstRowFromLines(lines).contains(appendFile.get))
+    assert(snap.firstRow.contains(appendFile.get))
     // row-level truth: appended rows still read luv = 3, and the
     // compacted rows keep theirs (2) — maintenance never reads as an
     // update

@@ -47,13 +47,13 @@ class ManifestWriteRoutesSpec extends AnyFunSuite {
     * (and the byte size, which depends on the row order) cut out. */
   private def riders(root: String, table: String): (String, Seq[String]) = {
     val dir = new Path(root, table)
-    val lines = ManifestFiles.latestLines(
+    val snap = ManifestSnapshot.latest(
       dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
-    val names = ManifestFiles.entriesFromLines(lines).map(_._1).toSeq
+    val names = snap.entries.map(_._1).toSeq
     assert(names.length == 1, s"$table: expected one data file, got $names")
     val name = names.head
     def rider(kind: String, drop: Int): String = {
-      val l = lines.find(_.startsWith(s"#$kind,$name,")).getOrElse(
+      val l = snap.lines.find(_.startsWith(s"#$kind,$name,")).getOrElse(
         fail(s"$table: no #$kind line for $name"))
       l.split(",", drop + 1).last
     }
