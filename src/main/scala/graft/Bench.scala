@@ -15,6 +15,8 @@ import org.apache.spark.sql.SparkSession
   * rounds 6-8 against co-located machine load:
   *
   *   - per-query untimed warmup (codegen compile + parquet footer caches),
+  *     whose seconds are reported apart under `"cold"` (a first run also
+  *     pays one-off session costs such as `Tables`' schema inference),
   *     then MIN of 3 timed runs — timing noise is strictly additive, so
   *     the minimum is the stablest estimator of true plan cost;
   *   - the 3 timed passes run ROUND-ROBIN across the whole query set
@@ -168,8 +170,9 @@ object Bench {
       java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
 
-    // --- warmup pass (untimed) -------------------------------------------
-    val warmed = selected.map(n => n -> (runOnce(n) >= 0)).toMap
+    // --- warmup pass (untimed; each query's first, cold run -> "cold") ----
+    val cold = selected.map(n => n -> runOnce(n))
+    val warmed = cold.map { case (n, t) => n -> (t >= 0) }.toMap
 
     // --- 3 timed passes, round-robin, calibration at start/middle/end ----
     val cal = ArrayBuffer[Double]()
@@ -223,8 +226,9 @@ object Bench {
     val drift = if (calOk.size >= 2) calOk.max / math.max(calOk.min, 1e-3) else -1.0
     val contaminated = drift > 1.5
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def secondsJson(xs: Seq[(String, Double)]): String =
+      xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = secondsJson(results)
     val total = results.map(_._2).filter(_ >= 0).sum
     val calJson = cal.mkString("[", ",", "]")
     val loadJson = loads.mkString("[", ",", "]")
@@ -234,7 +238,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""calibration":$calJson,"calibration_drift":$drift,""" +
         s""""contaminated":$contaminated,"load_avg":$loadJson,""" +
-        s""""stragglers":$stragglerJson,"sf":"$sfDir"}"""
+        s""""stragglers":$stragglerJson,"cold":${secondsJson(cold)},"sf":"$sfDir"}"""
     // The canonical artifact goes to a FILE: sbt log prefixes and tail-capture
     // limits have repeatedly mangled the stdout line (every recorded
     // BENCH_r*.json through r09 had "parsed": null, r09 truncated mid-number).

@@ -1,14 +1,43 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
-/** Catalog of the driver-generated parquet tables (TESTDATA.md).
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** Session catalog of the generated parquet test tables (TESTDATA.md).
   *
   * Every query receives `(spark, sfDir)`; this object is the single place
   * that maps logical table names to files and registers temp views so both
   * the DataFrame-DSL and `spark.sql` entry points see the same relations
   * (mirrors the reference's `SessionCatalog` role for our fixed schema,
   * reference `sql/catalyst/.../catalog/SessionCatalog.scala`).
+  *
+  * What is cached: per `(session, dir, table)`, the schema parquet infers
+  * for the table's files and the listing it was inferred from (every leaf
+  * file's path, length and modification time). Inference costs a Spark
+  * job per read; a cached schema turns every later read into
+  * `spark.read.schema(cached).parquet(path)`, which runs none and still
+  * builds a fresh relation (new attribute ids, so self-joins behave as
+  * with an uncached read). `registerAll` re-registers all ten views on
+  * every call from those schemas, which runs no job either.
+  *
+  * What invalidates an entry: every call re-lists the table's path (a few
+  * microseconds on a local file) and re-infers when the listing differs,
+  * so a file rewritten on disk is seen by the next read. The entry is also
+  * keyed on the session's parquet-inference confs (`spark.sql.parquet.*`,
+  * `spark.sql.legacy.parquet.*`, `spark.sql.caseSensitive`), so changing
+  * one re-infers. Every resolve first sets
+  * `spark.sql.legacy.parquet.nanosAsLong` (which `events` needs), so a
+  * table read inside or outside `registerAll` carries the same conf key.
+  *
+  * Why entries are weakly keyed: the map is process-wide and keyed weakly
+  * on the `SparkSession`, and its values hold only schemas and listings —
+  * never a `DataFrame`, plan or session — so a stopped session stays
+  * collectable. All access to the map holds its lock; inference runs
+  * outside it.
   *
   * Scans stay fully declarative (`spark.read.parquet`) so Catalyst applies
   * partition pruning / filter pushdown / column pruning — at 100 TB these
@@ -20,9 +49,74 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Every leaf file under a table's path: (path, length, mtime), sorted. */
+  private type Listing = Seq[(String, Long, Long)]
+
+  private final case class Resolved(listing: Listing, schema: StructType)
+
+  private type SessionTables =
+    mutable.HashMap[(String, String, Seq[(String, String)]), Resolved]
+
+  private val sessions = new java.util.WeakHashMap[SparkSession, SessionTables]()
+
+  private def tablesOf(spark: SparkSession): SessionTables = sessions.synchronized {
+    var t = sessions.get(spark)
+    if (t == null) { t = new SessionTables; sessions.put(spark, t) }
+    t
+  }
+
   def df(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") eventsDf(spark, dir) else
-      spark.read.parquet(s"$dir/$name.parquet")
+    relation(spark, dir, name, resolve(spark, dir, name))
+
+  /** The schema parquet infers for `name`'s files — for `events`, before
+    * `normalizeEventTs` — as the table's streaming readers declare it. */
+  def schema(spark: SparkSession, dir: String, name: String): StructType =
+    resolve(spark, dir, name).fold(spark.read.parquet(pathOf(dir, name)).schema)(_.schema)
+
+  private def pathOf(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** The table's cached schema, re-inferred when its listing or the
+    * session's inference confs changed; None when the path cannot be
+    * listed (missing, a glob), where the uncached read reports as before. */
+  private def resolve(spark: SparkSession, dir: String, name: String): Option[Resolved] = {
+    // Harmless on current micros files; lets older nanos events load as long.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = pathOf(dir, name)
+    listing(spark, path).map { files =>
+      val key = (dir, name, inferenceConfs(spark))
+      val tables = tablesOf(spark)
+      sessions.synchronized(tables.get(key)).filter(_.listing == files)
+        .getOrElse {
+          val r = Resolved(files, spark.read.parquet(path).schema)
+          sessions.synchronized(tables(key) = r)
+          r
+        }
+    }
+  }
+
+  private def listing(spark: SparkSession, path: String): Option[Listing] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves) else Seq(st)
+      Some(leaves(fs.getFileStatus(p))
+        .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).sortBy(_._1))
+    } catch { case NonFatal(_) => None }
+
+  private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.sorted
+
+  private def relation(spark: SparkSession, dir: String, name: String,
+      r: Option[Resolved]): DataFrame = {
+    val path = pathOf(dir, name)
+    val raw = r.fold(spark.read.parquet(path))(t => spark.read.schema(t.schema).parquet(path))
+    if (name != "events") raw
+    else normalizeEventTs(raw).select("event_id", "ts", "user_id", "event_type", "value", "props")
+  }
 
   /** Normalize `events.ts` across testdata generations so every consumer
     * (batch, streaming, tests) sees one engine-visible type: session-tz
@@ -52,13 +146,6 @@ object Tables {
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
-  }
-
-  private def eventsDf(spark: SparkSession, dir: String): DataFrame = {
-    // Harmless on current micros files; lets older nanos files load as long.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 
   /** Register all tables as temp views for `spark.sql` queries. */

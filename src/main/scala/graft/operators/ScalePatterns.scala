@@ -202,13 +202,12 @@ object ScalePatterns extends QueryModule {
     "q158_stream_foreachbatch_upsert",
     (s, d) => {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val store = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir"),
         s"graft_upsert_${d.replaceAll("[^A-Za-z0-9]", "_")}")
       store.getFileSystem(s.sparkContext.hadoopConfiguration)
         .delete(store, true)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val counts = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
         .groupBy($"event_type").agg(count(lit(1)).as("n"))

@@ -28,8 +28,7 @@ object SurfaceExtras extends QueryModule {
     "q152_stream_stream_join",
     (s, d) => {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       def stream() = Tables.normalizeEventTs(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))

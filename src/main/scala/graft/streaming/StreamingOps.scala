@@ -29,10 +29,8 @@ object StreamingOps extends QueryModule {
   /** events replayed as a stream: same ts normalization as the batch
     * reader (Tables.normalizeEventTs). */
   private def eventStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = s.read.parquet(s"$d/events.parquet").schema
     Tables.normalizeEventTs(
-      s.readStream.schema(batchSchema)
+      s.readStream.schema(Tables.schema(s, d, "events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(d))
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
   OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TimeMode,
   TimerValues, TTLConfig, ValueState}
 
-import graft.{Confs, QueryDef, QueryModule}
+import graft.{Confs, QueryDef, QueryModule, Tables}
 
 /** `transformWithState` — Spark 4's arbitrary-stateful-processing API
   * (the successor of q92/q173's `mapGroupsWithState`/
@@ -153,8 +153,7 @@ object TransformWithStateOps extends QueryModule {
     "q212_stream_transform_with_state",
     (s, d) => {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val batchSchema = s.read.parquet(s"$d/events.parquet").schema
+      val batchSchema = Tables.schema(s, d, "events")
       Confs.withValues(s,
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
